@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registered query on
   * `SPARK_GRAFT_SF_DIR`, forcing FULL materialization of every output
@@ -42,56 +42,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val repeats = sys.env.get("SPARK_GRAFT_REPEATS").map(_.toInt)
-      .getOrElse(3).max(1)
+    val cpus = Session.cpus()
+    val repeats = Bench.repeats()
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's coalescing floor (minPartitionSize) stays at its 1 MB
-      // default DELIBERATELY: a round-17 A/B at 16 KB spread every
-      // small post-shuffle stage cores-wide and made a 20-row mixed
-      // subset 1.8× SLOWER (e.g. sim_matryoshka_eval 2.14 → 6.67 s) —
-      // per-task launch overhead across every widened stage swamps
-      // the single-task CPU it recovers. Compute-dense stages that
-      // genuinely need width get a TARGETED spread instead
-      // (graft.Spread, Multimodal.ParallelismConf); see
-      // OPTIMIZATION_r17.md.
-      .config("spark.sql.session.timeZone", "UTC")
-      // saveAsTable queries (bucketed_join) must not drop a
-      // spark-warehouse dir in whatever cwd the harness launched from
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      // SPARK_GRAFT_RELIABLE_CKPT=true prices reliable (checkpoint-dir)
-      // scratch checkpoints instead of localCheckpoint — the
-      // preemptible-fleet deployment shape (see graft.Scratch)
-      .config(Scratch.ReliableConf,
-        sys.env.getOrElse("SPARK_GRAFT_RELIABLE_CKPT", "false"))
-      // reliable mode writes real checkpoint files; released cuts are
-      // cleaned deterministically (CheckpointBridge.release), and this
-      // lets the ContextCleaner reclaim any cut that outlives its
-      // Dataset so a full-registry run's checkpoint dir stays bounded
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints",
-        sys.env.getOrElse("SPARK_GRAFT_RELIABLE_CKPT", "false"))
-      // Streaming state snapshot files are written without checksum
-      // side-files, so the read-side verification can never succeed —
-      // it WARNs "No checksum file found" once per state file per
-      // attempt, hundreds of lines in the round-15 driver tail. Local
-      // temp checkpoints gain nothing from corruption detection;
-      // disable the feature rather than filter its noise.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Drop the two known-benign WARN flood classes BY MESSAGE REGEX —
-    // not by logger level, which also swallowed real warnings those
-    // loggers might emit (round-15 advice). Rationale per line lives
-    // in LogNoise's scaladoc.
-    LogNoise.suppressKnownBenign()
+    def wanted(name: String) = only.forall(_.contains(name))
+    val spark = Session.local(cpus)
     // Warmup: JIT + codegen + parquet footer/file-listing caches, so
     // per-query timings measure the queries, not first-touch JVM costs.
     try {
@@ -124,8 +80,7 @@ object Bench {
         Queries.all.find(_.name == name).foreach { q =>
           val t0 = System.nanoTime()
           try {
-            q.run(spark, sfDir).write.format("noop").mode("overwrite")
-              .save()
+            drain(q.run(spark, sfDir))
             // stderr, not the artifact: the untimed staging pass IS the
             // build cost — rehearsal logs record it as its own line
             System.err.println(f"[bench] prestage $name: " +
@@ -135,35 +90,8 @@ object Bench {
           }
         }
       }
-    val results = Queries.all
-      .filter(q => only.forall(_.contains(q.name)))
-      .map { q =>
-      // A thrown attempt contributes NO wall-clock: folding a partial
-      // run's time into min/max would let a failure masquerade as a
-      // speedup (min) or noise (max). It is counted on the row's
-      // `errs` field instead — the artifact schema makes failure
-      // visible, never averaged (round-11 verdict item 1).
-      val attempts = (1 to repeats).map { _ =>
-        // settle: drain garbage from the PREVIOUS query/attempt so its
-        // collection cost cannot land inside this timing window
-        System.gc()
-        Thread.sleep(100)
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            q.run(spark, sfDir).write.format("noop").mode("overwrite")
-              .save()
-            true
-          } catch { case e: Throwable =>
-            // full toString (class + message): a bare getMessage hid
-            // the exception CLASS and cost a root-cause session
-            System.err.println(s"[bench] ${q.name} attempt failed: $e")
-            false
-          }
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-      }
-      BenchFormat.Row(q.name, attempts.flatten, attempts.count(_.isEmpty))
-    }
+    val results = Queries.all.filter(q => wanted(q.name))
+      .map(q => timeAttempts(q.name, repeats)(drain(q.run(spark, sfDir))))
     // pipeline_e2e: entry point A (ingest → silver → gold) over a
     // canned deterministic fetcher and a throwaway temp root — a
     // WALL-CLOCK orchestration row (no oracle; the semantics are
@@ -171,22 +99,9 @@ object Bench {
     // accidental extra action in the observe path shows up in the
     // artifact like any query regression would.
     val pipelineRow =
-      if (only.forall(_.contains("pipeline_e2e"))) {
-        val attempts = (1 to repeats).map { _ =>
-          System.gc()
-          Thread.sleep(100)
-          val t0 = System.nanoTime()
-          val ok =
-            try { runPipelineE2e(spark); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] pipeline_e2e attempt failed: $e")
-              false
-            }
-          if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-        }
-        Seq(BenchFormat.Row("pipeline_e2e", attempts.flatten,
-          attempts.count(_.isEmpty)))
-      } else Nil
+      if (wanted("pipeline_e2e"))
+        Seq(timeAttempts("pipeline_e2e", repeats)(runPipelineE2e(spark)))
+      else Nil
     // Calibration rows: FIXED data-independent computations present in
     // every artifact so host-condition skew (the BASELINE.md step-5
     // "everything regressed, nothing changed" signature) is readable
@@ -208,27 +123,11 @@ object Bench {
     // a single-query debug run at CPUS=4 shouldn't pay seconds of
     // canary per invocation.
     def calibrationRow(name: String)(body: => Unit): Option[BenchFormat.Row] =
-      if (!only.forall(_.contains(name))) None
-      else {
-        val attempts = (1 to repeats).map { _ =>
-          System.gc()
-          Thread.sleep(100)
-          val t0 = System.nanoTime()
-          val ok =
-            try { body; true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name attempt failed: $e")
-              false
-            }
-          if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-        }
-        Some(BenchFormat.Row(name, attempts.flatten,
-          attempts.count(_.isEmpty)))
-      }
+      if (wanted(name)) Some(timeAttempts(name, repeats)(body)) else None
     val canaryRows = Seq(
       calibrationRow("_canary_host") {
         // bit_xor, not sum: ANSI mode would overflow a 3.2B-long sum
-        spark.range(0L, CanaryRows, 1L, cpus.toInt)
+        spark.range(0L, CanaryRows, 1L, cpus)
           .selectExpr("bit_xor(xxhash64(id)) as h").collect()
       },
       calibrationRow("_canary_io") {
@@ -238,9 +137,9 @@ object Bench {
           // md5 hex payload widens rows to ~80 B so the round-trip
           // moves real bytes: full shuffle (hash repartition), parquet
           // encode + fsync, then a scan + hash back. Deterministic.
-          spark.range(0L, CanaryIoRows, 1L, cpus.toInt)
+          spark.range(0L, CanaryIoRows, 1L, cpus)
             .selectExpr("id", "md5(cast(id as string)) as payload")
-            .repartition(cpus.toInt, org.apache.spark.sql.functions.col("id"))
+            .repartition(cpus, org.apache.spark.sql.functions.col("id"))
             .write.mode("overwrite").parquet(dir.toString)
           spark.read.parquet(dir.toString)
             .selectExpr("bit_xor(xxhash64(id, payload)) as h").collect()
@@ -304,10 +203,47 @@ object Bench {
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(f), fullLine)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $f: ${e.getMessage}")
+        System.err.println(s"[bench] could not write $f: $e")
       }
     }
     spark.stop()
+  }
+
+  /** `SPARK_GRAFT_REPEATS`: timed attempts per row (default 3). */
+  private[graft] def repeats(env: collection.Map[String, String] = sys.env)
+  : Int = Session.positiveInt(env, "SPARK_GRAFT_REPEATS", 3)
+
+  /** Full materialization of every output column through the noop
+    * sink — a bare `count()` would let Catalyst prune the computed
+    * columns and time an empty projection. */
+  private[graft] def drain(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The one attempt timer (bench rows, canaries, `Debug profile`,
+    * `Microbench`): `repeats` attempts of `body`, each after a GC +
+    * settle that drains garbage from the PREVIOUS attempt so its
+    * collection cost cannot land inside this timing window.
+    *
+    * A thrown attempt contributes NO wall-clock: folding a partial
+    * run's time into min/max would let a failure masquerade as a
+    * speedup (min) or noise (max). It is counted on the row's `errs`
+    * field instead — the artifact schema makes failure visible, never
+    * averaged (round-11 verdict item 1). The failure prints its full
+    * toString (class + message): a bare getMessage hid the exception
+    * CLASS and cost a root-cause session. */
+  private[graft] def timeAttempts(name: String, repeats: Int)(body: => Unit)
+  : BenchFormat.Row = {
+    val attempts = (1 to repeats).map { _ =>
+      System.gc()
+      Thread.sleep(100)
+      val t0 = System.nanoTime()
+      try { body; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name attempt failed: $e")
+        None
+      }
+    }
+    BenchFormat.Row(name, attempts.flatten, attempts.count(_.isEmpty))
   }
 
   /** One deterministic entry-point-A run: 8 media ids × 3 visitor
@@ -344,7 +280,7 @@ object Bench {
         java.time.Instant.parse("2024-06-01T00:00:00Z"))
       // run() materializes silver + the observe metrics; the gold cast
       // is returned lazy — force it so the row covers the full DAG
-      res.goldFact.write.format("noop").mode("overwrite").save()
+      drain(res.goldFact)
     } finally {
       import java.nio.file.{Files => JFiles}
       import scala.jdk.CollectionConverters._

@@ -6,8 +6,9 @@ import org.apache.logging.log4j.core.LoggerContext
 import org.apache.logging.log4j.core.config.LoggerConfig
 import org.apache.logging.log4j.core.filter.RegexFilter
 
-/** Targeted suppression of KNOWN-BENIGN warn lines in the two driver
-  * mains' tails — by message REGEX, not by logger level.
+/** Targeted suppression of KNOWN-BENIGN warn lines in the mains'
+  * tails — by message REGEX, not by logger level. [[Session]] applies
+  * it to every session it builds.
   *
   * Rounds 11/15 silenced the two flood classes by setting whole
   * loggers (`...execution.window`, `...rdd.MapPartitionsRDD`) to
@@ -33,7 +34,7 @@ import org.apache.logging.log4j.core.filter.RegexFilter
   *
   * (The third historical flood class — ChecksumCheckpointFileManager
   * "No checksum file found" from streaming state snapshots — is fixed
-  * at the SOURCE instead: Bench/Verify set
+  * at the SOURCE instead: [[Session]] sets
   * `spark.sql.streaming.checkpoint.fileChecksum.enabled=false`, so
   * the verification that could never succeed on checksum-less state
   * snapshot files is not attempted at all.)
@@ -64,7 +65,7 @@ object LogNoise {
     ctx.updateLoggers()
   }
 
-  /** The benign-flood filters both driver mains apply (rationale in
+  /** The benign-flood filters every [[Session]] applies (rationale in
     * the object scaladoc). */
   def suppressKnownBenign(): Unit = {
     denyMatching("org.apache.spark.sql.execution.window",

@@ -1,23 +1,35 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Expression-throughput micro-benchmark — the harness behind the
-  * SCALE.md numbers for the custom Catalyst expressions, where the
-  * registered sf0.1 queries are too overhead-dominated to resolve a
-  * per-row-loop change (a 5k×64-dim corpus scores in milliseconds;
-  * plan/shuffle setup is the measurement).
+/** Micro-benchmarks that pin two live design decisions, where the
+  * registered sf0.1 queries are too overhead-dominated to resolve the
+  * trade (plan/shuffle setup is the measurement there). Both run at
+  * local[8], min-of-3 through [[Bench.timeAttempts]]:
   *
-  * Builds a deterministic wide synthetic scan (`--rows N --dims D`,
-  * default 2M×256: arrays derived from the row id, no data files, no
-  * shuffle) and times `sum(cosine_sim)` + `sum(dot_long)` full scans,
-  * min-of-3 with GC settling (the [[Bench]] discipline). Usage:
-  * `scripts/run_class.sh graft.Microbench [rows] [dims]`. */
+  *  - default mode, `graft.Microbench [rows] [dims]`: expression
+  *    throughput of the custom `cosine_sim` / `dot_long` Catalyst
+  *    expressions over a deterministic wide synthetic scan (default
+  *    2M×256: arrays derived from the row id, no data files, no
+  *    shuffle) — pins [[graft.functions.HashExprs]]' CodegenFallback
+  *    choice.
+  *  - `graft.Microbench kcore [hubDegree] [distinctScores] [bgRows]`:
+  *    the k-core h-index histogram-vs-window crossover — pins
+  *    [[graft.etl.Graph.coreness]]' histogram round.
+  *
+  * Usage: `scripts/run_class.sh graft.Microbench ...`. */
 object Microbench {
 
-  /** Hub-heavy pin of the k-core h-index HISTOGRAM-vs-WINDOW trade
-    * (`graft.Microbench kcore [hubDegree] [distinctScores] [bgRows]`).
+  /** Min-of-3 timing of `body`, printed as one line. */
+  private def time(label: String, detail: Double => String)
+                  (body: => Unit): Unit = {
+    val row = Bench.timeAttempts(label, 3)(body)
+    if (row.ok) println(f"$label%-12s ${row.min}%.3f s  ${detail(row.min)}")
+    else println(f"$label%-12s FAILED")
+  }
+
+  /** Hub-heavy pin of the k-core h-index HISTOGRAM-vs-WINDOW trade.
     * The in-code ~6% price in [[graft.etl.Graph.coreness]] was measured
     * at sf0.1 (~30 distinct scores over ≤5000-neighbor nodes); this
     * mode re-measures ONE contraction round on a synthetic fixture
@@ -44,34 +56,26 @@ object Microbench {
       .select(col("node"), (col("node") % distinctScores + 1).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     und.count(); c.count()
-    def time(label: String, round: () => org.apache.spark.sql.DataFrame)
-    : Unit = {
-      val t = (1 to 3).map { _ =>
-        System.gc(); Thread.sleep(100)
-        val t0 = System.nanoTime()
-        round().agg(sum(col("c"))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"$label%-12s $t%.3f s  (hub=$hubDegree%d, " +
-        f"scores=$distinctScores%d, bg=$bgRows%d)")
-    }
-    time("histogram", () => graft.etl.Graph.hIndexRound(und, c))
+    def round(label: String)(df: => DataFrame): Unit =
+      time(label, _ => f"(hub=$hubDegree%d, scores=$distinctScores%d, " +
+        f"bg=$bgRows%d)")(df.agg(sum(col("c"))).collect())
+    round("histogram")(graft.etl.Graph.hIndexRound(und, c))
     // the rejected alternative: row_number over the RAW neighbor list —
     // the window partition is the node's DEGREE, so the hub's rows sort
     // in one task
-    time("window", () => {
+    round("window") {
       val w = Window.partitionBy("src")
         .orderBy(col("c").desc, col("dst"))
       und.join(c.withColumnRenamed("node", "dst"), "dst")
         .withColumn("rn", row_number().over(w))
         .groupBy(col("src").as("node"))
         .agg(max(least(col("c"), col("rn"))).as("c"))
-    })
+    }
     // single-exchange candidate: per-node histogram collected into a
     // bounded array (≤ distinct scores) and folded with aggregate() —
     // trades the histogram's second exchange + window sort for an
     // interpreted HOF over ~30 elements
-    time("hof", () => {
+    round("hof") {
       val hist = und.join(c.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src"), col("c").as("cv"))
         .agg(count(lit(1)).as("k"))
@@ -85,587 +89,12 @@ object Microbench {
                  'best', greatest(acc.best,
                    least(e.cv, acc.cum + e.k))),
                acc -> acc.best)""").as("c"))
-    })
-  }
-
-  /** BUILD/SERVE decoupling rehearsal for the graph edge artifact
-    * (`graft.Microbench kcore_serve <sfDir>`): times the edge-artifact
-    * BUILD (symmetrize→distinct→range-cluster→commit, fact-sized) and
-    * the 6-round k-core SERVE from the pinned snapshot (node/edge-
-    * sized) separately, min-of-3 each. Across the 1×/10×/100×
-    * file-replicating layouts the build grows with the fact while the
-    * serve holds flat — the artifact is the collapsed graph, so kernel
-    * cost is decoupled from fact size, which is the entire argument
-    * for committing the graph once per corpus version at 100 TB. */
-  private def kcoreServeMode(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.graft.CheckpointBridge
-    val edges = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select((col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-    def time(label: String, run: () => Unit): Unit = {
-      val t = (1 to 3).map { _ =>
-        System.gc(); Thread.sleep(100)
-        val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"$label%-12s $t%.3f s  ($sfDir%s)")
-    }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_kcore_serve").toString
-    var i = 0
-    time("build", () => {
-      i += 1
-      graft.etl.Graph.commitEdges(spark, s"$root/edges_$i", edges)
-    })
-    val tbl = s"$root/edges_serve"
-    val v = graft.etl.Graph.commitEdges(spark, tbl, edges)
-    time("serve", () => {
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val c = graft.etl.Graph.corenessOfUndirected(
-        graft.etl.Graph.edgesFromManifest(spark, tbl, Some(v)),
-        iterations = 6, onCheckpoint = superseded += _)
-      try c.agg(sum(col("c"))).collect()
-      finally superseded.foreach(CheckpointBridge.release)
-    })
-  }
-
-  /** `graft.Microbench contrastive <sfDir>` — the contrastive-negatives
-    * DENSE-ID rehearsal (SCALE.md round-11 third-wave caveat): the
-    * file-replicating layout duplicates doc_ids, so the draw's
-    * `mod n` arithmetic (n counts copies) lands mostly outside the id
-    * domain and the 100× tier measured plan shape only. This mode runs
-    * the SAME draw twice — raw ids verbatim, then after
-    * [[graft.llmops.Preference.densifyIds]]'s one-off zipWithIndex —
-    * and prints, per variant, the min-of-3 wall plus the JOIN HIT
-    * RATE (distinct draws that matched a negative / draws issued).
-    * Dense must read 1.000 at every tier: that is the measured proof
-    * the contract (not just the plan) survives 100×. */
-  private def contrastiveMode(spark: SparkSession, sfDir: String): Unit = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("source"), col("lang"))
-    def draw(ds: org.apache.spark.sql.DataFrame, idCol: String): Long = {
-      val n = ds.agg(count(lit(1)).as("n"))
-      val anchors = ds.crossJoin(broadcast(n))
-        .select(col(idCol).as("aid"),
-          explode(expr("sequence(1, 3)")).as("neg_rank"), col("n"))
-        .withColumn("h",
-          conv(substring(md5(concat(lit("neg:"), col("neg_rank"),
-            lit(":"), col("aid"))), 1, 8), 16, 10).cast("long"))
-        .select(col("aid"), col("neg_rank"),
-          pmod(col("aid") + 1 + pmod(col("h"), col("n") - 1),
-            col("n")).as("neg_id"))
-      anchors.join(ds.select(col(idCol).as("neg_id")), "neg_id")
-        .select(col("aid"), col("neg_rank")).distinct().count()
-    }
-    def run(label: String, ds: org.apache.spark.sql.DataFrame,
-            idCol: String): Unit = {
-      val draws = ds.count() * 3
-      var hits = 0L
-      val t = (1 to 3).map { _ =>
-        System.gc(); Thread.sleep(100)
-        val t0 = System.nanoTime()
-        hits = draw(ds, idCol)
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"$label%-12s $t%.3f s  hit_rate=${hits.toDouble / draws}%.3f" +
-        f"  (draws=$draws%d, $sfDir%s)")
-    }
-    run("raw_ids", docs, "doc_id")
-    val dense = graft.llmops.Preference.densifyIds(docs, "did")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dense.count() // the one-off mapping job, outside the timed draws
-    run("densified", dense, "did")
-    dense.unpersist()
-  }
-
-  /** `graft.Microbench stream_attr <sfDir>` — profile of the
-    * `stream_attribution_daily` chained-stateful replay (the confirmed
-    * round-11 min movement). Runs the row's operator chain straight
-    * off the source events parquet (no sentinel staging — the
-    * flush-at-end rows don't move the wall-clock profile) in three
-    * cuts: the full 4-stateful chain (dedup×2 → join → windowed agg),
-    * the chain without the dedup stages, and the join alone; then
-    * prints the full chain's per-phase durationMs from the streaming
-    * progress so "where does the time go" is measured (addBatch vs
-    * state commit vs planning), not guessed. */
-  private def streamAttrMode(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.DataFrame
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // FileStreamSource wants a directory: stage the source file(s) once
-    val inDir = java.nio.file.Files.createTempDirectory("graft_sattr_in")
-    val src = new java.io.File(s"$sfDir/events.parquet")
-    val files = if (src.isDirectory) src.listFiles().toSeq else Seq(src)
-    files.filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach {
-      case (f, i) => java.nio.file.Files.copy(f.toPath,
-        inDir.resolve(f"part-$i%03d.parquet"))
-    }
-    def stream() = {
-      val raw = spark.readStream.schema(schema)
-        .parquet(inDir.toString)
-      graft.Qdsl.normalizeTs(raw)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"))
-    }
-    def branches(dedup: Boolean): (DataFrame, DataFrame) = {
-      val st = stream()
-      val p0 = st.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"),
-          col("event_id").as("purchase_event_id"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 day")
-      val s0 = st.filter(col("event_type") === "signup")
-        .select(col("user_id").as("s_user"),
-          col("event_id").as("signup_event_id"), col("ts").as("s_ts"))
-        .withWatermark("s_ts", "1 day")
-      if (dedup)
-        (p0.dropDuplicatesWithinWatermark("purchase_event_id"),
-          s0.dropDuplicatesWithinWatermark("signup_event_id"))
-      else (p0, s0)
-    }
-    def joined(dedup: Boolean): DataFrame = {
-      val (p, sg) = branches(dedup)
-      p.join(sg, expr("""p_user = s_user AND p_ts >= s_ts AND
-        p_ts < s_ts + interval 7 days"""))
-    }
-    def agg(j: DataFrame): DataFrame = j
-      .groupBy(window(col("p_ts"), "1 day"))
-      .agg(count(when(col("p_user") >= 0, 1)).as("n_attributed"))
-    def run(label: String, df: () => DataFrame,
-            dumpProgress: Boolean = false): Unit = {
-      var progress: Array[org.apache.spark.sql.streaming
-        .StreamingQueryProgress] = Array.empty
-      val t = (1 to 3).map { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_sattr").toString
-        System.gc(); Thread.sleep(100)
-        val t0 = System.nanoTime()
-        val q = df().writeStream.outputMode("append").format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        progress = q.recentProgress
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"$label%-16s $t%.3f s  ($sfDir%s)")
-      if (dumpProgress) {
-        val phases = scala.collection.mutable
-          .LinkedHashMap[String, Long]().withDefaultValue(0L)
-        progress.foreach { p =>
-          p.durationMs.forEach((k, v) => phases(k) += v.longValue())
-        }
-        println(s"  micro-batches=${progress.length}")
-        phases.foreach { case (k, v) => println(f"  $k%-24s $v%5d ms") }
-      }
-    }
-    run("full_chain", () => agg(joined(dedup = true)), dumpProgress = true)
-    run("no_dedup", () => agg(joined(dedup = false)))
-    run("join_only", () => joined(dedup = true))
-    run("join_only_raw", () => joined(dedup = false))
-  }
-
-  /** `graft.Microbench hits_serve <sfDir>` — the [[kcoreServeMode]]
-    * twin for the WEIGHTED artifact: BUILD = the 3-join fact→trade-
-    * graph aggregation + commit (the cost SCALE.md's 100× rehearsals
-    * show dominating hits at 35.96 s and ppr at 16.87 s), SERVE = the
-    * 4-round HITS kernel from the pinned snapshot. The flat serve line
-    * across tiers is the amortization argument for
-    * [[graft.etl.Graph.commitWeightedEdges]]. */
-  private def hitsServeMode(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.graft.CheckpointBridge
-    def tbl(n: String) = spark.read.parquet(s"$sfDir/$n.parquet")
-    def trade() = tbl("lineitem")
-      .join(tbl("orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(tbl("customer"), col("o_custkey") === col("c_custkey"))
-      .join(tbl("supplier"), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"),
-        col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val nodes = tbl("nation").select("n_nationkey")
-    def time(label: String, run: () => Unit): Unit = {
-      val t = (1 to 3).map { _ =>
-        System.gc(); Thread.sleep(100)
-        val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"$label%-12s $t%.3f s  ($sfDir%s)")
-    }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_hits_serve").toString
-    var i = 0
-    time("build", () => {
-      i += 1
-      graft.etl.Graph.commitWeightedEdges(spark, s"$root/e_$i", trade())
-    })
-    val tblServe = s"$root/e_serve"
-    val v = graft.etl.Graph.commitWeightedEdges(spark, tblServe, trade())
-    time("serve", () => {
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val scores = graft.etl.Graph.hits(
-        graft.sources.ManifestTable.read(spark, tblServe, Some(v)),
-        nodes, iterations = 4, onCheckpoint = superseded += _)
-      try scores.agg(sum(col("hub_micro")), sum(col("auth_micro")))
-        .collect()
-      finally superseded.foreach(CheckpointBridge.release)
-    })
-  }
-
-  /** `graft.Microbench kcore_conv <sfDir>` — per-round changed-node
-    * counts of the supplier–part k-core at the registry's budget, to
-    * locate the fixed point (an early-exit past it is equality-
-    * preserving: the h-index sequence is monotone to its fixed point,
-    * so a converged round leaves scores bit-identical). */
-  /** Incremental-vs-full coreness rehearsal (`graft.Microbench
-    * kcore_incr <sfDir> [empty|sliver|supplier|class64]`): withholds
-    * a chosen cut from the layout's lineitem graph (the "batch"
-    * re-inserts it), prices (a) the base kernel, (b) the from-scratch
-    * recompute of the grown graph — what a rebuild-per-batch
-    * deployment pays — and (c) [[graft.etl.Graph.incrementalCoreness]]
-    * seeded from the base scores, printing each wall-clock, the
-    * incremental round count implied by its convergence, and an
-    * equality check against (b). The claim under test (round-15
-    * verdict item 5): (c) tracks the BATCH where (b) tracks the
-    * GRAPH — in the regime where it holds. Seed inflation per node is
-    * min(deg − old_core, B), so the incremental path wins when B is
-    * below typical degree-core slack (streaming/CDC batches) and
-    * degrades gracefully to ≈ the full kernel plus convergence
-    * detection when B is bulk-sized (seed ≈ degree-init); the batch
-    * argument sweeps the crossover. */
-  private def kcoreIncrMode(spark: SparkSession, sfDir: String,
-                            batch: String): Unit = {
-    import graft.Scratch.ScratchOps
-    val fwd = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select((col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-    // what the base cut WITHHOLDS (the batch re-inserts it):
-    //   empty    — nothing (B=0, the pure-confirm floor)
-    //   sliver   — 1/64 of ONE supplier's parts (CDC-sized, B≈10)
-    //   supplier — one whole supplier (B≈ its degree)
-    //   class64  — every supplier ≡ 3 mod 64 (bulk-backfill-sized)
-    // DELETION kinds (del_*): base = FULL graph, batch RETRACTS the
-    // named cut (B = 0 — deletions need no seed allowance), so the
-    // measured path is the round-17 deletion-maintenance serve:
-    //   del_sliver   — retract the CDC-sized sliver
-    //   del_supplier — retract one whole supplier (node removal)
-    val isDel = batch.startsWith("del_")
-    val cutName = if (isDel) batch.stripPrefix("del_") else batch
-    val withheld: org.apache.spark.sql.Column = cutName match {
-      case "empty"    => lit(false)
-      case "sliver"   => col("src") === 6 && col("dst") % 128 === 1
-      case "supplier" => col("src") === 6
-      case "class64"  => col("src") % 128 === 6
-      case other => throw new IllegalArgumentException(
-        s"unknown batch '$other' " +
-          "(empty|sliver|supplier|class64|del_sliver|del_supplier|del_class64)")
-    }
-    // insertion kinds: base = fact minus cut, target = full fact.
-    // deletion kinds: base = full fact, target = fact minus cut.
-    val baseUnd = graft.etl.Graph
-      .symmetrize(if (isDel) fwd else fwd.filter(!withheld))
-      .scratchCheckpoint(eager = true)
-    val allUnd = graft.etl.Graph
-      .symmetrize(if (isDel) fwd.filter(!withheld) else fwd)
-      .scratchCheckpoint(eager = true)
-    val nBase = baseUnd.count(); val nAll = allUnd.count()
-    val b = math.max(0L, (nAll - nBase) / 2)
-    println(f"base und rows=$nBase%d  grown und rows=$nAll%d  " +
-      f"batch B=$b%d undirected inserts")
-    def timed[A](label: String)(body: => A): A = {
-      System.gc(); Thread.sleep(100)
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val old = timed("base kernel (6 rounds)") {
-      val c = graft.etl.Graph.corenessOfUndirected(baseUnd, 6)
-        .scratchCheckpoint(eager = true)
-      c.count(); c
-    }
-    val full = timed("full recompute (6 rounds)") {
-      val c = graft.etl.Graph.corenessOfUndirected(allUnd, 6)
-        .scratchCheckpoint(eager = true)
-      c.count(); c
-    }
-    val incr = timed("incremental re-converge") {
-      val c = graft.etl.Graph
-        .incrementalCoreness(allUnd, old, batchEdges = b)
-        .scratchCheckpoint(eager = true)
-      c.count(); c
-    }
-    val diff = incr.withColumnRenamed("c", "ci")
-      .join(full.withColumnRenamed("c", "cf"), "node")
-      .filter(col("ci") =!= col("cf")).count()
-    println(s"incremental vs full recompute: $diff differing nodes" +
-      (if (diff == 0) " (EXACT)" else " (MISMATCH!)"))
-  }
-
-  private def kcoreConvMode(spark: SparkSession, sfDir: String): Unit = {
-    val edges = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select((col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-    val und = graft.etl.Graph.symmetrize(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var c = und.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    c.count()
-    for (i <- 1 to 6) {
-      val t0 = System.nanoTime()
-      val next = graft.etl.Graph.hIndexRound(und, c)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val changed = next.withColumnRenamed("c", "c2").join(c, "node")
-        .filter(col("c") =!= col("c2")).count()
-      println(f"round $i%d changed=$changed%d " +
-        f"(${(System.nanoTime() - t0) / 1e9}%.2f s)")
-      c.unpersist(); c = next
     }
   }
 
-  /** `hrw` mode: per-row cost of the scan-side rendezvous-shard
-    * argmax as the FLEET grows (8 / 64 / 256 shards over a fixed row
-    * count) — pins that [[QueriesText.hrwShard]]'s cost is linear in
-    * fleet size (n md5s per row riding the scan, no exchange, no
-    * generator), so at 100 TB the only knob that prices the shard
-    * column is how many shards the fleet runs, never the corpus.
-    * Usage: `Microbench hrw [rows]`. */
-  private def hrwMode(spark: SparkSession, rows: Long): Unit = {
-    import org.apache.spark.sql.functions.col
-    // warm the range scan + noop sink so fleet=8 doesn't pay first-touch
-    spark.range(rows).select(col("id").as("doc_id"))
-      .write.format("noop").mode("overwrite").save()
-    Seq(8, 64, 256).foreach { n =>
-      val t0 = System.nanoTime()
-      spark.range(rows).select(col("id").as("doc_id"))
-        .select(QueriesText.hrwShard(n).as("s"))
-        .write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"hrw fleet=$n%3d rows=$rows%d  $s%6.2f s  " +
-        f"${s * 1e9 / rows / n}%6.1f ns/(row*shard)")
-    }
-  }
-
-  /** Scale-path rehearsal for the embedding LSH near-dup family
-    * (`graft.Microbench embedding_lsh <sfDir> [targetBucketPop]
-    * [numTables]`): reads the layout's embeddings, derives numPlanes
-    * from the corpus count ([[graft.llmops.Similarity.planesFor]] —
-    * the rule a deployment applies at planning time), runs
-    * lshNearDupPairs at threshold 0.4 and prints corpus size, derived
-    * planes, verified pair count and wall-clock. The REGISTRY row
-    * (dedup_embedding_lsh) pins semantics at numPlanes=6 against a
-    * frozen oracle — correct at the bench tier, quadratic by
-    * construction at 1000x (2^6 buckets for 2M vectors); this mode
-    * measures the OPERATOR at the parameters the tier calls for. */
-  /** `embedding_lsh_cand` — candidate-MASS diagnostic for the LSH
-    * near-dup plan, separating the two ways the pairs row can go
-    * superlinear at a tier: (a) bucket skew — Σ pop·(pop−1)/2 growing
-    * faster than the corpus (clustered data concentrating in few
-    * buckets, which planesFor's uniform-hash expectation cannot see),
-    * vs (b) the exchange — candidate mass linear but the wide
-    * (vector-carrying) shuffle/sort spilling. Computes the signature
-    * build and the per-(table, bucket) histogram WITHOUT carrying
-    * vectors, so its cost is the slim half of the plan only; the gap
-    * between this and the full pairs row is the vector-exchange +
-    * verify share. Prints n, derived planes, per-table candidate mass
-    * sum, max bucket population, and the p99.9 population. */
-  private def embeddingLshCandMode(spark: SparkSession, sfDir: String,
-                                   targetBucketPop: Int,
-                                   numTables: Int): Unit = {
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .dropDuplicates("vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = e.count()
-    val planes = llmops.Similarity.planesFor(n, targetBucketPop)
-    System.gc(); Thread.sleep(100)
-    val t0 = System.nanoTime()
-    val b = e.select(col("vec_id"),
-      explode(array((0 until numTables).map(t => struct(
-        lit(t).as("table_id"),
-        graft.functions.HashExprs.randomProjectionBits(col("embedding"),
-          planes, t * planes).as("bucket"))): _*)).as("tb"))
-      .select(col("tb.table_id"), col("tb.bucket"))
-      .groupBy("table_id", "bucket").agg(count(lit(1)).as("pop"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r = b.agg(
-      sum(col("pop") * (col("pop") - 1) / 2).as("mass"),
-      max(col("pop")).as("max_pop"),
-      expr("approx_percentile(pop, 0.999)").as("p999"),
-      count(lit(1)).as("n_buckets")).head()
-    val dt = (System.nanoTime() - t0) / 1e9
-    println(f"embedding_lsh_cand: n=$n%d planes=$planes%d " +
-      f"tables=$numTables%d buckets=${r.getLong(3)}%d " +
-      f"cand_mass=${r.getAs[java.math.BigDecimal]("mass")}%s " +
-      f"max_pop=${r.getLong(1)}%d p999_pop=${r.getLong(2)}%d " +
-      f"slim_path=$dt%.3f s")
-    // Identical-FULL-SIGNATURE groups: vectors agreeing on every plane
-    // of every table. Their within-group pairs are generated by ALL
-    // numTables per-table joins (the join can't tell tables apart for
-    // them), so their mass share bounds what a group-level
-    // decomposition can save: per-table mass counts them numTables
-    // times, a full-signature join counts them once.
-    val g = e.select(col("vec_id"),
-        array((0 until numTables).map(t => struct(
-          graft.functions.HashExprs.randomProjectionBits(col("embedding"),
-            planes, t * planes).as("b"))): _*).as("sig"))
-      .groupBy("sig").agg(count(lit(1)).as("m"))
-      .agg(sum(col("m") * (col("m") - 1) / 2).as("gmass"),
-        max(col("m")).as("gmax"),
-        count(lit(1)).as("n_groups")).head()
-    println(f"embedding_lsh_cand: identical-sig groups=" +
-      f"${g.getLong(2)}%d gmax=${g.getLong(1)}%d " +
-      f"within_group_mass=${g.getAs[java.math.BigDecimal]("gmass")}%s " +
-      f"(counted ${numTables}%dx in per-table cand_mass)")
-    b.unpersist(); e.unpersist()
-  }
-
-  private def embeddingLshMode(spark: SparkSession, sfDir: String,
-                               targetBucketPop: Int, numTables: Int,
-                               threshold: Double,
-                               megaCap: Option[Int]): Unit = {
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .dropDuplicates("vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = e.count()
-    val planes = llmops.Similarity.planesFor(n, targetBucketPop)
-    System.gc(); Thread.sleep(100)
-    val t0 = System.nanoTime()
-    // optional 5th arg = mega-bucket tiling cap OVERRIDE (diagnostic
-    // A/B only: <= 0 disables tiling entirely, reproducing the
-    // round-16 single-task-per-bucket loop); absent = engine default
-    val pairs = megaCap match {
-      case None => llmops.Similarity.lshNearDupPairs(
-        e, "vec_id", "embedding", threshold = threshold,
-        numPlanes = planes, numTables = numTables).count()
-      case Some(cap) => llmops.Similarity.lshNearDupPairsBucketLoop(
-        e, "vec_id", "embedding", threshold = threshold,
-        numPlanes = planes, numTables = numTables,
-        castIdsBackTo = None,
-        megaBucketCap = if (cap <= 0) Int.MaxValue else cap).count()
-    }
-    println(f"embedding_lsh: n=$n%d planes=$planes%d " +
-      f"(target bucket pop $targetBucketPop%d) tables=$numTables%d " +
-      f"threshold=$threshold%.2f cap=${megaCap.getOrElse(-1)}%d " +
-      f"pairs=$pairs%d  ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    e.unpersist()
-  }
-
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("embedding_lsh")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      // AQE + skew-join split, matching the Bench session: LSH bucket
-      // population is power-law-ish, and without the skew split the
-      // join's hot (table, bucket) partitions serialize onto a handful
-      // of cores (observed: 6 of 32 busy through a 20-minute tail)
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      embeddingLshMode(spark, args(1),
-        args.lift(2).map(_.toInt).getOrElse(32),
-        args.lift(3).map(_.toInt).getOrElse(8),
-        args.lift(4).map(_.toDouble).getOrElse(0.4),
-        args.lift(5).map(_.toInt))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("embedding_lsh_cand")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      embeddingLshCandMode(spark, args(1),
-        args.lift(2).map(_.toInt).getOrElse(32),
-        args.lift(3).map(_.toInt).getOrElse(8))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("kcore_incr")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      kcoreIncrMode(spark, args(1),
-        args.lift(2).getOrElse("sliver"))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("kcore_conv")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      kcoreConvMode(spark, args(1))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("hits_serve")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      hitsServeMode(spark, args(1))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("stream_attr")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      streamAttrMode(spark, args(1))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("contrastive")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      contrastiveMode(spark, args(1))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("kcore_serve")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-      val spark = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      kcoreServeMode(spark, args(1))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("hrw")) {
-      val spark = SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      hrwMode(spark, args.lift(1).map(_.toLong).getOrElse(4L * 1000 * 1000))
-      spark.stop(); return
-    }
-    if (args.headOption.contains("kcore")) {
-      val spark = SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      kcoreMode(spark,
-        hubDegree = args.lift(1).map(_.toLong).getOrElse(2L * 1000 * 1000),
-        distinctScores = args.lift(2).map(_.toInt).getOrElse(30),
-        bgRows = args.lift(3).map(_.toLong).getOrElse(2L * 1000 * 1000))
-      spark.stop(); return
-    }
-    val rows = args.lift(0).map(_.toLong).getOrElse(2L * 1000 * 1000)
-    val dims = args.lift(1).map(_.toInt).getOrElse(256)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** `cosine_sim` / `dot_long` full-scan throughput over `rows` ×
+    * `dims` deterministic arrays. */
+  private def exprMode(spark: SparkSession, rows: Long, dims: Int): Unit = {
     // deterministic per-row arrays: a_i = ((id*dims+i) % 97) / 10.0
     val base = spark.range(rows).select(col("id"),
       expr(s"transform(sequence(0, ${dims - 1}), " +
@@ -683,18 +112,26 @@ object Microbench {
     // swamp the scoring loop under measure
     base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     base.count()
-    def time(label: String, run: () => Unit): Unit = {
-      val t = (1 to 3).map { _ =>
-        System.gc(); Thread.sleep(100)
-        val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"$label%-12s $t%.3f s  (${rows / t / 1e6}%.1f M rows/s)")
-    }
+    def rate(t: Double) = f"(${rows / t / 1e6}%.1f M rows/s)"
     import graft.functions.HashExprs
-    time("cosine_sim", () => base
+    time("cosine_sim", rate)(base
       .agg(sum(HashExprs.cosineF(col("a"), col("b")))).collect())
-    time("dot_long", () => base
+    time("dot_long", rate)(base
       .agg(sum(HashExprs.dotLong(col("qa"), col("qb")))).collect())
-    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = Session.local(8)
+    try {
+      if (args.headOption.contains("kcore"))
+        kcoreMode(spark,
+          hubDegree = args.lift(1).map(_.toLong).getOrElse(2L * 1000 * 1000),
+          distinctScores = args.lift(2).map(_.toInt).getOrElse(30),
+          bgRows = args.lift(3).map(_.toLong).getOrElse(2L * 1000 * 1000))
+      else
+        exprMode(spark,
+          rows = args.lift(0).map(_.toLong).getOrElse(2L * 1000 * 1000),
+          dims = args.lift(1).map(_.toInt).getOrElse(256))
+    } finally spark.stop()
   }
 }

@@ -16,7 +16,7 @@ private[graft] object Qdsl {
 
   /** Schema cache for [[t]]: every bare `spark.read.parquet` runs a
     * footer-inference JOB before the query proper (visible in
-    * `graft.Profile` as the `parquet at Qdsl.scala` job, ~50–100 ms of
+    * `graft.Debug profile` as the `parquet at Qdsl.scala` job, ~50–100 ms of
     * scheduling + driver latency per read site) — and the registry has
     * ~275 read sites re-created on every run/attempt. The inputs are
     * immutable per (dir, table) for a process lifetime (bench/verify
@@ -39,9 +39,9 @@ private[graft] object Qdsl {
 
   /** events.parquet has shipped ts as TIMESTAMP(NANOS) in some data
     * drops (Spark 4's parquet reader rejects it unless read as long
-    * via the legacy conf) and TIMESTAMP(MICROS) in others. Normalize
-    * whatever arrived to a session-zoned TimestampType column so every
-    * consumer sees one type. Schema-dispatch, not config: the same
+    * via the legacy conf, which [[Session]] sets) and TIMESTAMP(MICROS)
+    * in others. Normalize whatever arrived to a session-zoned
+    * TimestampType column so every consumer sees one type. Schema-dispatch, not config: the same
     * engine build must read both layouts. */
   private[graft] def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
@@ -52,10 +52,8 @@ private[graft] object Qdsl {
       case _ => df
     }
 
-  private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private[graft] def events(s: SparkSession, dir: String): DataFrame =
     normalizeTs(t(s, dir, "events"))
-  }
 
   /** Exact, order-independent sum of a 2-decimal double measure. */
   private[graft] def dsum(c: Column): Column =

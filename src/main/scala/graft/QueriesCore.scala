@@ -812,9 +812,7 @@ private[graft] object QueriesCore {
   private[graft] def bucketedJoinFrame(s: SparkSession,
                                        dir: String): DataFrame = {
     val (ot, lt) = BucketedStage.tables(s, dir)
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Session.withConf(s, "spark.sql.autoBroadcastJoinThreshold", "-1") {
       val joined = s.table(ot)
         .join(s.table(lt), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderkey"))
@@ -822,8 +820,7 @@ private[graft] object QueriesCore {
           dsum(col("l_extendedprice")).as("revenue"))
       joined.queryExecution.executedPlan // pin SMJ inside the scope
       joined
-    } finally
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** Bucketed (pre-shuffled) join: orders ⋈ lineitem on the bucket key

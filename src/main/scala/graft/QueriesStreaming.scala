@@ -75,7 +75,6 @@ private[graft] object QueriesStreaming {
     def apply(s: SparkSession, dir: String): Staged =
       StreamTemp.synchronized {
       cache.getOrElseUpdate(dir, {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
         // far-future sentinel ts = max(ts) + 30 days, built in whatever
         // physical type the source shipped (nanos-as-long or micros ntz)
@@ -139,24 +138,18 @@ private[graft] object QueriesStreaming {
     * the scale rehearsal can measure the backends); both confs are
     * restored on exit, so a failed stream cannot leak session state
     * into the batch queries. */
-  private def withStreamConf[T](s: SparkSession)(body: => T): T = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-      s.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-        ".state.RocksDBStateStoreProvider")
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
-      }
+  private def withStreamConf[T](s: SparkSession)(body: => T): T =
+    Session.withConf(s, "spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")) {
+      if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
+        Session.withConf(s, StateStoreProviderKey, RocksDbProvider)(body)
+      else body
     }
-  }
+
+  private val StateStoreProviderKey =
+    "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   // ======================================================================
   // Streaming: the daily engagement aggregate over a bounded stream,
@@ -165,7 +158,6 @@ private[graft] object QueriesStreaming {
 
   private[graft] val streamDaily = Q("stream_daily_engagement",
     (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the shared staged input (not pathGlobFilter over the source
       // dir: a glob on the FILE name silently matches nothing when the
       // table is a directory of part files, as rehearsal layouts are —
@@ -217,7 +209,6 @@ private[graft] object QueriesStreaming {
     * maintained store must equal the batch daily aggregate exactly. */
   private[graft] val streamAnomaly = Q("stream_anomaly",
     (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       withStreamConf(s) {
         val staged = StreamStage(s, dir)
         val stream = s.readStream.schema(staged.schema)
@@ -457,11 +448,7 @@ private[graft] object QueriesStreaming {
   private[graft] val streamSessionsTws = Q("stream_sessions_tws",
     (s, dir) => {
       withStreamConf(s) {
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = s.conf.getOption(provKey)
-        s.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-          ".state.RocksDBStateStoreProvider")
-        try {
+        Session.withConf(s, StateStoreProviderKey, RocksDbProvider) {
           import s.implicits._
           val staged = StreamStage(s, dir)
           val root = StreamTemp.dir("graft_stream_tws")
@@ -488,9 +475,6 @@ private[graft] object QueriesStreaming {
               unix_millis(col("session_end")).as("session_end_ms"),
               col("n_events"))
             .orderBy("user_id", "session_start_ms")
-        } finally prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None    => s.conf.unset(provKey)
         }
       }
     },
@@ -946,7 +930,6 @@ private[graft] object QueriesStreaming {
 
   private[graft] val streamMvRefresh = Q("stream_mv_refresh",
     (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       withStreamConf(s) {
         val staged = StreamStage(s, dir)
         val stream = s.readStream.schema(staged.schema)

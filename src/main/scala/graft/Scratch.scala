@@ -36,11 +36,11 @@ import org.apache.spark.sql.DataFrame
   * with the cache blocks), so the checkpoint directory stays bounded
   * by the release-one-round-behind discipline; cuts that are never
   * released fall back to the ContextCleaner when
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (Bench
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` ([[Session]]
   * sets it in reliable mode) or JVM exit.
   *
-  * `Bench` exposes the knob as `SPARK_GRAFT_RELIABLE_CKPT=true` so the
-  * constrained-heap gate can price reliable mode at the 100x tier.
+  * [[Session]] exposes the knob as `SPARK_GRAFT_RELIABLE_CKPT=true` so
+  * the constrained-heap gate can price reliable mode at the 100x tier.
   */
 object Scratch {
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** SQL-facing surface: registers the testdata tables as temp views
   * (with the events timestamp normalization applied — see
@@ -13,11 +12,10 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One table through the registry's readers: [[Qdsl.events]] for
+    * `events`, the schema-cached [[Qdsl.t]] for the rest. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      Qdsl.normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") Qdsl.events(spark, dir) else Qdsl.t(spark, dir, name)
 
   /** Register every table as a temp view + the custom SQL functions.
     * After this, `spark.sql("SELECT simhash64(...) FROM documents")`

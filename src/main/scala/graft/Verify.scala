@@ -1,31 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // saveAsTable queries (bucketed_join) must not drop a
-      // spark-warehouse dir in whatever cwd the harness launched from
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      // streaming state snapshots carry no checksum side-files, so
-      // read-side verification can only WARN-flood; see Bench
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same two benign-noise MESSAGE filters Bench applies (rationale
-    // in LogNoise's scaladoc): regex-targeted DENY, not whole-logger
-    // ERROR, so any other warning those loggers emit stays visible.
-    LogNoise.suppressKnownBenign()
+  def main(args: Array[String]): Unit = args match {
+    case Array(sfDir, outDir) => run(sfDir, outDir)
+    case _ =>
+      System.err.println("usage: graft.Verify <sfDir> <outDir>")
+      sys.exit(2)
+  }
+
+  private def run(sfDir: String, outDir: String): Unit = {
+    val spark = Session.local(Session.cpus())
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=name1,name2 dumps a subset — targeted re-checks
     // while iterating on one query (mirrors Bench's flag; unset = all)
@@ -37,7 +23,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: $e")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

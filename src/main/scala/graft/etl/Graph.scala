@@ -516,9 +516,6 @@ object Graph {
       val changed = step.filter(col("c") =!= col("c_prev"))
         .select(col("node"))
       val nChanged = changed.count()
-      if (sys.env.contains("SPARK_GRAFT_KCORE_DEBUG"))
-        System.err.println(s"[incrementalCoreness] round ${round + 1}: " +
-          s"$nChanged changed")
       c = step.select(col("node"), col("c"))
       if (nChanged == 0) converged = true
       // wide-frontier shortcut: when more than 1/8 of nodes changed,

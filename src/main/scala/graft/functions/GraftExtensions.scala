@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions wiring: makes graft's functions available in
-  * ANY session built with
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * ANY session whose builder calls
+  * `.withExtensions(new GraftExtensions)`, or that is launched with
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` —
   * the deployment path for clusters where sessions are built by the
   * platform, not the user (vs [[GraftFunctions.register]] for an

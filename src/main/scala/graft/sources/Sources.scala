@@ -144,15 +144,11 @@ object Sources {
     * the streaming foreachBatch upsert; replays converge. */
   def upsertByPartition(df: DataFrame, path: String,
                         partitionCol: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf
-      .get("spark.sql.sources.partitionOverwriteMode", "static")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    graft.Session.withConf(df.sparkSession,
+      "spark.sql.sources.partitionOverwriteMode", "dynamic") {
       df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
         .parquet(path)
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    }
   }
 
   /** Targeted key deletion from a partitioned parquet table — the
@@ -205,10 +201,8 @@ object Sources {
         col(partitionCol).isin(touchedNonNull: _*) else lit(false)
       if (touched.contains(null)) in || col(partitionCol).isNull else in
     }
-    val prev = spark.conf
-      .get("spark.sql.sources.partitionOverwriteMode", "static")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    graft.Session.withConf(spark,
+      "spark.sql.sources.partitionOverwriteMode", "dynamic") {
       val kept = table
         .filter(partPred)
         .filter(not(coalesce(col(keyCol).isin(keys: _*), lit(false))))
@@ -232,8 +226,7 @@ object Sources {
               s"deleteKeys: failed to remove emptied partition dir $dir")
         }
       }
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    }
     touched.size
   }
 

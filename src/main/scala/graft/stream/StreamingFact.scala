@@ -289,47 +289,45 @@ object StreamingFact {
   private[stream] def upsertBatch(batch: DataFrame, path: String,
                                   keyCols: Seq[String]): Unit = {
     val ss = batch.sparkSession
-    // dynamic overwrite is scoped to this batch write: restore the
-    // session's previous mode so later mode(overwrite) writes elsewhere
-    // keep full-table semantics (same pattern as Sources.upsertByPartition)
-    val prevMode = ss.conf
-      .get("spark.sql.sources.partitionOverwriteMode", "static")
-    ss.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    // dynamic overwrite is scoped to this batch write, so later
+    // mode(overwrite) writes elsewhere keep full-table semantics (same
+    // pattern as Sources.upsertByPartition)
+    graft.Session.withConf(ss,
+      "spark.sql.sources.partitionOverwriteMode", "dynamic") {
       val fresh = batch
         .withColumn("date", to_date(col("day.start")))
         .drop("day")
         .dropDuplicates("date" +: keyCols)
-      if (fresh.isEmpty) return
-      val target = new org.apache.hadoop.fs.Path(path)
-      val fs = target.getFileSystem(ss.sparkContext.hadoopConfiguration)
-      val merged =
-        if (!fs.exists(target)) fresh
-        else {
-          val touched = fresh.select("date").distinct()
-            .collect().map(_.getDate(0)).toSeq
-          val prior = ss.read.parquet(path)
-            .filter(col("date").isin(touched: _*))
-            .join(fresh.select("date", keyCols: _*),
-              "date" +: keyCols, "left_anti")
-          fresh.unionByName(prior)
-        }
-      // cluster the write by (date, small key-hash bucket): without
-      // this, every shuffle partition contributes a file to every
-      // touched date dir — the key-growth rehearsal measured the
-      // daily upsert at 68 s (vs 16 s at 10x) once 32 state
-      // partitions × touched dates amplified into thousands of tiny
-      // files. Hash-bucketing bounds files-per-date at 4 while
-      // keeping >1 writer per hot date (pure repartition('date')
-      // would serialize a skewed date through one task).
-      merged.scratchCheckpoint(eager = true)
-        .repartition(col("date"),
-          pmod(xxhash64(keyCols.map(col): _*), lit(4)))
-        .write.mode("overwrite")
-        .partitionBy("date")
-        .parquet(path)
-    } finally
-      ss.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+      if (!fresh.isEmpty) {
+        val target = new org.apache.hadoop.fs.Path(path)
+        val fs = target.getFileSystem(ss.sparkContext.hadoopConfiguration)
+        val merged =
+          if (!fs.exists(target)) fresh
+          else {
+            val touched = fresh.select("date").distinct()
+              .collect().map(_.getDate(0)).toSeq
+            val prior = ss.read.parquet(path)
+              .filter(col("date").isin(touched: _*))
+              .join(fresh.select("date", keyCols: _*),
+                "date" +: keyCols, "left_anti")
+            fresh.unionByName(prior)
+          }
+        // cluster the write by (date, small key-hash bucket): without
+        // this, every shuffle partition contributes a file to every
+        // touched date dir — the key-growth rehearsal measured the
+        // daily upsert at 68 s (vs 16 s at 10x) once 32 state
+        // partitions × touched dates amplified into thousands of tiny
+        // files. Hash-bucketing bounds files-per-date at 4 while
+        // keeping >1 writer per hot date (pure repartition('date')
+        // would serialize a skewed date through one task).
+        merged.scratchCheckpoint(eager = true)
+          .repartition(col("date"),
+            pmod(xxhash64(keyCols.map(col): _*), lit(4)))
+          .write.mode("overwrite")
+          .partitionBy("date")
+          .parquet(path)
+      }
+    }
   }
 
   /** STREAMING INCREMENTAL MV MAINTENANCE — the streaming twin of

@@ -26,4 +26,21 @@ class TablesSpec extends AnyFunSuite {
     val ts = spark.sql("SELECT ts FROM events LIMIT 1").schema
     assert(ts("ts").dataType.typeName == "timestamp")
   }
+
+  test("reading every table and running the streaming queries leaves " +
+    "the session conf unchanged") {
+    // a fresh session on the shared context: starts from the built
+    // engine's conf, whatever earlier suites did to the shared session
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    Tables.names.foreach(n => Tables.load(s, dir, n).count())
+    Seq("stream_daily_engagement", "stream_anomaly").foreach { n =>
+      Queries.all.find(_.name == n).get.run(s, dir).collect()
+    }
+    val after = s.conf.getAll
+    val changed = (before.keySet ++ after.keySet)
+      .filter(k => before.get(k) != after.get(k)).toSeq.sorted
+      .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}")
+    assert(changed.isEmpty, changed.mkString("\n"))
+  }
 }

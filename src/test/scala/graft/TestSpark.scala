@@ -3,18 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (lazy, never stopped —
-  * stopping between suites costs more than it saves). */
+  * stopping between suites costs more than it saves), built by
+  * [[Session.local]] so the specs check the engine the mains run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
