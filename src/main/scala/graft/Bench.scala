@@ -65,7 +65,7 @@ object Bench {
     } catch { case _: Throwable => () }
     // SPARK_GRAFT_PRESTAGE=name1,name2 — run the named queries ONCE,
     // untimed, before any timing starts. The min-of-3 protocol already
-    // keeps one-time artifact builds (EdgeStage, StreamStage) out of a
+    // keeps one-time artifact builds (Scratch.memo) out of a
     // row's min, but single-attempt rehearsal tiers (REPEATS=1 at
     // 1000x) have no second attempt: without prestaging, a serve row's
     // only attempt pays the build and the tier records the build cost
@@ -131,24 +131,16 @@ object Bench {
           .selectExpr("bit_xor(xxhash64(id)) as h").collect()
       },
       calibrationRow("_canary_io") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_canary_io")
-        try {
+        Scratch.withTempDir("graft_canary_io") { dir =>
           // md5 hex payload widens rows to ~80 B so the round-trip
           // moves real bytes: full shuffle (hash repartition), parquet
           // encode + fsync, then a scan + hash back. Deterministic.
           spark.range(0L, CanaryIoRows, 1L, cpus)
             .selectExpr("id", "md5(cast(id as string)) as payload")
             .repartition(cpus, org.apache.spark.sql.functions.col("id"))
-            .write.mode("overwrite").parquet(dir.toString)
-          spark.read.parquet(dir.toString)
+            .write.mode("overwrite").parquet(dir)
+          spark.read.parquet(dir)
             .selectExpr("bit_xor(xxhash64(id, payload)) as h").collect()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(dir)
-          try walk.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
         }
       }).flatten
     val allResults = canaryRows ++ results ++ pipelineRow
@@ -254,8 +246,7 @@ object Bench {
     * and nothing else. */
   private def runPipelineE2e(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions.{lit, to_timestamp}
-    val root = java.nio.file.Files.createTempDirectory("graft_bench_pipe")
-    try {
+    Scratch.withTempDir("graft_bench_pipe") { root =>
       val fetcher = new graft.ingest.Ingest.Fetcher {
         def fetchPage(id: String, endpoint: String, page: Int,
                       since: Option[String]): Option[String] =
@@ -281,13 +272,6 @@ object Bench {
       // run() materializes silver + the observe metrics; the gold cast
       // is returned lazy — force it so the row covers the full DAG
       drain(res.goldFact)
-    } finally {
-      import java.nio.file.{Files => JFiles}
-      import scala.jdk.CollectionConverters._
-      val walk = JFiles.walk(root) // must-close: leaks a dir handle per repeat
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(p => JFiles.deleteIfExists(p))
-      finally walk.close()
     }
   }
 }

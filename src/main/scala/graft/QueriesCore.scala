@@ -164,7 +164,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestChanges = Q("manifest_changes",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_cdc")
+      val root = Scratch.dir("graft_manifest_cdc")
       val tbl = s"$root/cust_tbl"
       graft.sources.ManifestTable.commitOverwrite(s, tbl,
         c.filter(col("c_mktsegment") === "BUILDING"))
@@ -385,7 +385,7 @@ private[graft] object QueriesCore {
         lit(-1).as("c_nationkey"),
         lit(-0.5).as("c_acctbal"),
         lit("STRESS").as("c_mktsegment"))
-      val root = QueriesStreaming.StreamTemp.dir("graft_fmt_csv")
+      val root = Scratch.dir("graft_fmt_csv")
       base.union(hostile).write.option("header", "true")
         .mode("overwrite").csv(s"$root/customer_csv")
       s.read.schema(base.schema).option("header", "true")
@@ -410,7 +410,7 @@ private[graft] object QueriesCore {
   private[graft] val orcRoundtrip = Q("orc_roundtrip",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val root = QueriesStreaming.StreamTemp.dir("graft_fmt_orc")
+      val root = Scratch.dir("graft_fmt_orc")
       docs.write.mode("overwrite").orc(s"$root/documents_orc")
       s.read.orc(s"$root/documents_orc").orderBy("doc_id")
     },
@@ -430,7 +430,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestSnapshot = Q("manifest_snapshot",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_q")
+      val root = Scratch.dir("graft_manifest_q")
       val tbl = s"$root/cust_tbl"
       graft.sources.ManifestTable.commitOverwrite(s, tbl,
         c.filter(col("c_mktsegment") === "BUILDING").repartition(8))
@@ -468,7 +468,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestCountPushdown = Q("manifest_count_pushdown",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_cnt")
+      val root = Scratch.dir("graft_manifest_cnt")
       val tbl = s"$root/cust_tbl"
       val v1 = graft.sources.ManifestTable.commitOverwrite(s, tbl,
         c.filter(col("c_mktsegment") === "BUILDING").repartition(4))
@@ -510,7 +510,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestDeleteRows = Q("manifest_delete_rows",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_del")
+      val root = Scratch.dir("graft_manifest_del")
       val tbl = s"$root/cust_tbl"
       val v1 = graft.sources.ManifestTable.commitOverwrite(s, tbl,
         c.repartitionByRange(3, col("c_custkey"))
@@ -556,7 +556,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestMergeRows = Q("manifest_merge_rows",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_mrg")
+      val root = Scratch.dir("graft_manifest_mrg")
       val tbl = s"$root/cust_tbl"
       val v1 = graft.sources.ManifestTable.commitOverwrite(s, tbl,
         c.repartitionByRange(3, col("c_custkey"))
@@ -612,7 +612,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestMetaQ = Q("manifest_meta_source",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_meta_q")
+      val root = Scratch.dir("graft_meta_q")
       val tbl = s"$root/tbl"
       graft.sources.ManifestTable.commitAppend(s, tbl,
         c.filter(col("c_mktsegment") === "BUILDING").repartition(4)
@@ -652,7 +652,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestEvolutionQ = Q("manifest_schema_evolution",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_evo_q")
+      val root = Scratch.dir("graft_evo_q")
       val tbl = s"$root/tbl"
       graft.sources.ManifestTable.commitAppend(s, tbl,
         c.filter(col("c_mktsegment") === "BUILDING")
@@ -687,7 +687,7 @@ private[graft] object QueriesCore {
   private[graft] val deleteKeysQ = Q("delete_keys",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_delete_keys")
+      val root = Scratch.dir("graft_delete_keys")
       val path = s"$root/cust"
       graft.sources.Sources.writeSilverParquet(c, path,
         partitionCol = Some("c_mktsegment"))
@@ -714,7 +714,7 @@ private[graft] object QueriesCore {
   private[graft] val schemaMerge = Q("schema_merge",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_schema_merge")
+      val root = Scratch.dir("graft_schema_merge")
       val path = s"$root/cust"
       c.filter(col("c_custkey") % 2 === 0)
         .select("c_custkey", "c_name")
@@ -739,7 +739,7 @@ private[graft] object QueriesCore {
     * rows, full-table overwrite would drop the unpatched dates. */
   private[graft] val upsertPartition = Q("upsert_partition",
     (s, dir) => {
-      val root = QueriesStreaming.StreamTemp.dir("graft_upsert_q")
+      val root = Scratch.dir("graft_upsert_q")
       val path = s"$root/fact"
       val base = events(s, dir)
         .select(to_date(col("ts")).as("date"), col("event_id"),
@@ -773,35 +773,34 @@ private[graft] object QueriesCore {
     * query runs in a bench/verify session (the write is the amortized
     * cost the strategy exists to pay once; re-paying it per repeat
     * would benchmark the write, not the join). Data lands in a
-    * [[QueriesStreaming.StreamTemp]]-swept scratch dir (external
-    * tables — only bucket metadata in the in-memory catalog); table
-    * names are dir-tagged so rehearsal layouts don't collide. */
-  private object BucketedStage {
-    private val staged = scala.collection.mutable.Map[String, (String, String)]()
-    def tables(s: SparkSession, dir: String): (String, String) =
-      synchronized {
-        // cache key includes the session identity: catalog entries are
-        // per-session, so a second session in the same JVM must
-        // re-stage rather than inherit a hit it cannot resolve
-        staged.getOrElseUpdate(s"${System.identityHashCode(s)}:$dir", {
-          val tag = java.lang.Long.toHexString(
-            scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-          val (ot, lt) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
-          val root = QueriesStreaming.StreamTemp.dir("graft_bucketed")
-          graft.sources.Sources.writeBucketedTable(
-            t(s, dir, "orders"), ot, "o_orderkey", 8, "o_orderkey",
-            Some(s"$root/orders"))
-          graft.sources.Sources.writeBucketedTable(
-            t(s, dir, "lineitem"), lt, "l_orderkey", 8, "l_orderkey",
-            Some(s"$root/lineitem"))
-          (ot, lt)
-        })
-      }
-  }
+    * [[Scratch.dir]] (external tables — only bucket metadata in the
+    * in-memory catalog), so [[Scratch.cleanup]] drops the memo with
+    * the data; table names are dir-tagged so rehearsal layouts don't
+    * collide. The memo key includes the session identity: catalog
+    * entries are per-session, so a second session in the same JVM
+    * must re-stage rather than inherit a hit it cannot resolve. */
+  private val bucketedTables = Scratch.memo[(Int, String), (String, String)]()
+  private def stageBucketedTables(s: SparkSession,
+                                  dir: String): (String, String) =
+    bucketedTables((System.identityHashCode(s), dir)) {
+      val tag = java.lang.Long.toHexString(
+        scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
+      val (ot, lt) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
+      val root = Scratch.dir("graft_bucketed")
+      graft.sources.Sources.writeBucketedTable(
+        t(s, dir, "orders"), ot, "o_orderkey", 8, "o_orderkey",
+        Some(s"$root/orders"))
+      graft.sources.Sources.writeBucketedTable(
+        t(s, dir, "lineitem"), lt, "l_orderkey", 8, "l_orderkey",
+        Some(s"$root/lineitem"))
+      (ot, lt)
+    }
 
   /** The zero-Exchange plan itself, shared by the registered query and
     * PlanGuardrailSpec's shuffle assertion: join + per-key aggregate
-    * over the two bucketed tables, planned with broadcast DISABLED (at
+    * over the two bucketed tables ([[stageBucketedTables]], a
+    * [[Scratch.memo]] that re-stages after [[Scratch.cleanup]]),
+    * planned with broadcast DISABLED (at
     * 100 TB neither side broadcasts — sort-merge over co-bucketed
     * scans IS the plan) and the plan PINNED inside the conf scope
     * (queryExecution is lazy; without the touch the restored threshold
@@ -811,7 +810,7 @@ private[graft] object QueriesCore {
     * because the join output inherits that clustering. */
   private[graft] def bucketedJoinFrame(s: SparkSession,
                                        dir: String): DataFrame = {
-    val (ot, lt) = BucketedStage.tables(s, dir)
+    val (ot, lt) = stageBucketedTables(s, dir)
     Session.withConf(s, "spark.sql.autoBroadcastJoinThreshold", "-1") {
       val joined = s.table(ot)
         .join(s.table(lt), col("o_orderkey") === col("l_orderkey"))
@@ -852,7 +851,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestSync = Q("manifest_sync",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_sync")
+      val root = Scratch.dir("graft_manifest_sync")
       val tbl = s"$root/cust_tbl"
       val sink = s"$root/sink"
       val state = s"$root/consumer_state.txt"
@@ -906,7 +905,7 @@ private[graft] object QueriesCore {
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast(DecimalType(18, 2)))
               .cast(DecimalType(18, 2)).as("sum_value"))
-      val root = QueriesStreaming.StreamTemp.dir("graft_mv_daily")
+      val root = Scratch.dir("graft_mv_daily")
       val mvPath = s"$root/mv_daily"
       partials(ev.filter(dayofmonth(col("date")) <= 25))
         .write.parquet(mvPath) // the persisted view state
@@ -997,7 +996,7 @@ private[graft] object QueriesCore {
   private[graft] val manifestCompact = Q("manifest_compact",
     (s, dir) => {
       val c = t(s, dir, "customer")
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_compact")
+      val root = Scratch.dir("graft_manifest_compact")
       val tbl = s"$root/tbl"
       (0 until 5).foreach { i =>
         graft.sources.ManifestTable.commitAppend(s, tbl,
@@ -1035,7 +1034,7 @@ private[graft] object QueriesCore {
       // probe range sits strictly inside commit 2 at every SF
       val mx = o.agg(max(col("o_orderkey"))).head().getLong(0)
       val w = mx / 5 + 1
-      val root = QueriesStreaming.StreamTemp.dir("graft_manifest_prune")
+      val root = Scratch.dir("graft_manifest_prune")
       val tbl = s"$root/orders_tbl"
       (0L until 5L).foreach { i =>
         graft.sources.ManifestTable.commitAppend(s, tbl,
@@ -1075,8 +1074,7 @@ private[graft] object QueriesCore {
       val o = t(s, dir, "orders")
       val mx = o.agg(max(col("o_orderkey"))).head().getLong(0)
       val w = mx / 5 + 1 // fixture-scaled ranges, as in manifestPrune
-      val root = QueriesStreaming.StreamTemp
-        .dir("graft_manifest_compact_sorted")
+      val root = Scratch.dir("graft_manifest_compact_sorted")
       val tbl = s"$root/orders_tbl"
       (0L until 5L).foreach { i =>
         graft.sources.ManifestTable.commitAppend(s, tbl,
@@ -1114,7 +1112,7 @@ private[graft] object QueriesCore {
     * were dropped that the filter says shouldn't be (or vice versa). */
   private[graft] val retentionExpire = Q("retention_expire",
     (s, dir) => {
-      val root = QueriesStreaming.StreamTemp.dir("graft_retention")
+      val root = Scratch.dir("graft_retention")
       val path = s"$root/fact"
       val ev = events(s, dir)
         .select(to_date(col("ts")).as("date"), col("event_id"),

@@ -823,7 +823,7 @@ private[graft] object QueriesDedupSim {
       // partition counts — are untouched: they are the certificate,
       // and they now audit the artifact bytes rather than a throwaway
       // in-memory twin.
-      val st = QueriesRelational.EdgeStage(s, dir, "semdedup_scores") {
+      val st = QueriesRelational.stagedArtifact(dir, "semdedup_scores") {
         tbl =>
           graft.sources.ManifestTable.commitAppend(s, tbl,
             Similarity.semanticDedup(e, "vec_id", "embedding",
@@ -1781,7 +1781,7 @@ private[graft] object QueriesDedupSim {
   private[graft] val simTopkPqServed = Q("sim_topk_pq_served",
     (s, dir) => {
       val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
-      val root = QueriesStreaming.StreamTemp.dir("graft_pq_index")
+      val root = Scratch.dir("graft_pq_index")
       Similarity.buildPqIndex(e, "vec_id", "embedding", s"$root/idx")
       Similarity.pqTopKFromIndex(s"$root/idx", e,
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 5)
@@ -1812,7 +1812,7 @@ private[graft] object QueriesDedupSim {
       val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
         .scratchCheckpoint(true)
       try {
-        val tbl = s"${QueriesStreaming.StreamTemp.dir("graft_pq_mt")}/idx"
+        val tbl = s"${Scratch.dir("graft_pq_mt")}/idx"
         val v1 = Similarity.commitPqIndex(e, "vec_id", "embedding", tbl)
         // rebuild-then-swap: a new index over a different corpus cut
         // lands as head+1 while version 1 is being served below. The
@@ -1850,7 +1850,7 @@ private[graft] object QueriesDedupSim {
     (s, dir) => {
       val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
       val qs = e.filter(col("vec_id") < 5)
-      val tbl = s"${QueriesStreaming.StreamTemp.dir("graft_retr")}/idx"
+      val tbl = s"${Scratch.dir("graft_retr")}/idx"
       val v = Similarity.commitPqIndex(e, "vec_id", "embedding", tbl)
       val served = Similarity.pqTopKFromManifest(tbl, e, qs, "vec_id",
         "embedding", k = 5, version = Some(v)).scratchCheckpoint(true)

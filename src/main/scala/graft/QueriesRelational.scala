@@ -1199,6 +1199,28 @@ private[graft] object QueriesRelational {
       FROM kc WHERE iter = 6
       ORDER BY side, id"""))
 
+  /** One committed graph artifact PER (source dir, artifact kind),
+    * shared by the serve rows — the bench-economics fix the round-12
+    * verdict asked for: a SERVE row's timed body must measure serving
+    * (kernel over the pinned snapshot), not rebuild+commit the
+    * artifact on every attempt. The build cost stays priced in its own
+    * row (`graph_edges_artifact`), exactly like a 100 TB deployment
+    * pays ONE edge build and amortizes it across the kernel family —
+    * and `graph_hits_serve`/`graph_ppr_serve` genuinely read ONE
+    * committed trade graph, which is the amortization contract their
+    * scaladoc states. `build` commits into the given table path and
+    * returns the committed version; the table lives in a
+    * [[Scratch.dir]] and the memo is a [[Scratch.memo]], so
+    * [[Scratch.cleanup]] drops both together. */
+  private[graft] final case class Artifact(table: String, version: Long)
+  private val artifacts = Scratch.memo[(String, String), Artifact]()
+  private[graft] def stagedArtifact(dir: String, kind: String)(
+      build: String => Long): Artifact =
+    artifacts((dir, kind)) {
+      val tbl = s"${Scratch.dir(s"graft_${kind}_mt")}/edges"
+      Artifact(tbl, build(tbl))
+    }
+
   /** The GRAPH EDGE ARTIFACT build/serve flow — the graph family's
     * instance of the PQ-index versioned build/serve split
     * ([[graft.etl.Graph.commitEdges]]). Motivation is SCALE.md's 100×
@@ -1214,43 +1236,12 @@ private[graft] object QueriesRelational {
     * fact directly. A swap that disturbed pinned readers, a collapse
     * that kept a self-loop or a parallel edge, or a clustered rewrite
     * that dropped rows would all move the numbers. */
-  /** One committed edge artifact PER (source dir, graph kind), shared
-    * by the serve rows — the bench-economics fix the round-12 verdict
-    * asked for: a SERVE row's timed body must measure serving (kernel
-    * over the pinned snapshot), not rebuild+commit the artifact on
-    * every attempt. The build cost stays priced in its own row
-    * (`graph_edges_artifact`), exactly like a 100 TB deployment pays
-    * ONE edge build and amortizes it across the kernel family — and
-    * `graph_hits_serve`/`graph_ppr_serve` now genuinely read ONE
-    * committed trade graph, which is the amortization contract their
-    * scaladoc states. Same lock as [[QueriesStreaming.StreamTemp]]
-    * (the one lock for all bench scratch state); invalidated from
-    * StreamTemp.cleanup alongside StreamStage. */
-  private[graft] object EdgeStage {
-    final case class Staged(table: String, version: Long)
-    private val cache =
-      scala.collection.mutable.Map[(String, String), Staged]()
-    /** Called only from [[QueriesStreaming.StreamTemp.cleanup]],
-      * under its lock. */
-    private[graft] def invalidate(): Unit = cache.clear()
-    def apply(s: org.apache.spark.sql.SparkSession, dir: String,
-              kind: String)(build: String => Long): Staged =
-      QueriesStreaming.StreamTemp.synchronized {
-        cache.getOrElseUpdate((dir, kind), {
-          val tbl =
-            s"${QueriesStreaming.StreamTemp.dir(s"graft_${kind}_mt")}/edges"
-          Staged(tbl, build(tbl))
-        })
-      }
-  }
-
   private[graft] val graphEdgesArtifact = Q("graph_edges_artifact",
     (s, dir) => {
       val fwd = t(s, dir, "lineitem").select(
         (col("l_suppkey").cast("long") * 2).as("src"),
         (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-      val tbl =
-        s"${QueriesStreaming.StreamTemp.dir("graft_edges_mt")}/edges"
+      val tbl = s"${Scratch.dir("graft_edges_mt")}/edges"
       val v1 = graft.etl.Graph.commitEdges(s, tbl, fwd)
       // rebuild-then-swap: a different corpus cut lands as head+1;
       // the pinned v1 read below must not move (the
@@ -1287,7 +1278,8 @@ private[graft] object QueriesRelational {
     * table as its own ManifestTable version; serving is then a pinned
     * manifest read + sort — no kernel per request, the same
     * build/serve split the ANN family ships (`sim_topk_pq_versioned`).
-    * Both artifacts build once per JVM (EdgeStage), so the timed body
+    * Both artifacts build once per JVM ([[stagedArtifact]], dropped by
+    * [[Scratch.cleanup]] and rebuilt on next use), so the timed body
     * prices SERVING; the edge build is priced in
     * `graph_edges_artifact` and the kernel in `graph_kcore` (the
     * canonical build+kernel row — since round 15 the gate serves the
@@ -1298,15 +1290,13 @@ private[graft] object QueriesRelational {
   private[graft] val graphKcoreServe = Q("graph_kcore_serve",
     (s, dir) => {
       import org.apache.spark.sql.graft.CheckpointBridge
-      val edgesSt = EdgeStage(s, dir, "kcore_edges") { tbl =>
+      val edgesSt = stagedArtifact(dir, "kcore_edges") { tbl =>
         graft.etl.Graph.commitEdges(s, tbl,
           t(s, dir, "lineitem").select(
             (col("l_suppkey").cast("long") * 2).as("src"),
             (col("l_partkey").cast("long") * 2 + 1).as("dst")))
       }
-      // sequential stages, never nested: EdgeStage's getOrElseUpdate
-      // must not re-enter itself on the shared cache map
-      val st = EdgeStage(s, dir, "kcore_scores") { tbl =>
+      val st = stagedArtifact(dir, "kcore_scores") { tbl =>
         val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
           Some(edgesSt.version))
         val superseded =
@@ -1350,19 +1340,18 @@ private[graft] object QueriesRelational {
       // here (the pre-round-15 shape) certified a throwaway
       // recomputation and priced the kernel twice per run —
       // graph_kcore remains the canonical build+kernel pricing row,
-      // and the serve/gate pair shares its artifacts (EdgeStage:
+      // and the serve/gate pair shares its artifacts (stagedArtifact:
       // one edge collapse + one kernel per JVM, min-of-3 keeps the
       // first-touch build out of the row's min).
-      val edgesSt = EdgeStage(s, dir, "kcore_edges") { tbl =>
+      val edgesSt = stagedArtifact(dir, "kcore_edges") { tbl =>
         graft.etl.Graph.commitEdges(s, tbl,
           t(s, dir, "lineitem").select(
             (col("l_suppkey").cast("long") * 2).as("src"),
             (col("l_partkey").cast("long") * 2 + 1).as("dst")))
       }
-      // sequential stages, never nested (see graphKcoreServe); the
-      // build closure is byte-identical to serve's, so whichever row
-      // runs first builds the ONE shared scores artifact
-      val scoresSt = EdgeStage(s, dir, "kcore_scores") { tbl =>
+      // the build closure is byte-identical to serve's, so whichever
+      // row runs first builds the ONE shared scores artifact
+      val scoresSt = stagedArtifact(dir, "kcore_scores") { tbl =>
         val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
           Some(edgesSt.version))
         val superseded =
@@ -1445,8 +1434,7 @@ private[graft] object QueriesRelational {
       val fwd = t(s, dir, "lineitem").select(
         (col("l_suppkey").cast("long") * 2).as("src"),
         (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-      val tbl =
-        s"${QueriesStreaming.StreamTemp.dir("graft_edges_inc")}/edges"
+      val tbl = s"${Scratch.dir("graft_edges_inc")}/edges"
       // base: suppliers 0..2 mod 4; growth batch: suppliers 1..3 mod 4
       // — the mod-1..2 overlap re-delivers base edges inside the batch
       val v1 = graft.etl.Graph.commitEdges(s, tbl,
@@ -1496,7 +1484,7 @@ private[graft] object QueriesRelational {
     * bound, clamped rounds preserve upper bounds, and any reached
     * fixed point is never above the true coreness, so fixed point =
     * exact). The one-time base build + base kernel + sliver append
-    * are staged per JVM (EdgeStage — priced by `graph_kcore` /
+    * are staged per JVM (stagedArtifact — priced by `graph_kcore` /
     * `graph_edges_incremental`, excluded from this row's min like
     * every serve row's artifacts). Oracle is `graph_kcore`'s
     * recursive CTE over the FULL fact: the strongest possible pin
@@ -1515,8 +1503,8 @@ private[graft] object QueriesRelational {
       def fwd = t(s, dir, "lineitem").select(
         (col("l_suppkey").cast("long") * 2).as("src"),
         (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-      // Staged ONCE per JVM (the EdgeStage economics every serve row
-      // uses): base edge artifact v1 = everything except supplier 3's
+      // Staged ONCE per JVM (the stagedArtifact economics every serve
+      // row uses): base edge artifact v1 = everything except supplier 3's
       // parts ≡ 0 (mod 64) — src is 2·suppkey, dst is 2·partkey+1, a
       // ~10-edge CDC sliver — then the base kernel's scores, then the
       // sliver lands via appendEdges as v2 (absorption exercised: the
@@ -1525,11 +1513,11 @@ private[graft] object QueriesRelational {
       // MAINTENANCE SERVE path: pinned post-append read + committed
       // base scores + re-convergence — per-attempt idempotent because
       // every input is a pinned version, never mutated state.
-      val edgesSt = EdgeStage(s, dir, "kcore_inc_edges") { tbl =>
+      val edgesSt = stagedArtifact(dir, "kcore_inc_edges") { tbl =>
         graft.etl.Graph.commitEdges(s, tbl,
           fwd.filter(!(col("src") === 6 && col("dst") % 128 === 1)))
       }
-      val scoresSt = EdgeStage(s, dir, "kcore_inc_scores") { tbl =>
+      val scoresSt = stagedArtifact(dir, "kcore_inc_scores") { tbl =>
         val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
           Some(edgesSt.version))
         val superseded =
@@ -1539,7 +1527,7 @@ private[graft] object QueriesRelational {
         try graft.sources.ManifestTable.commitAppend(s, tbl, c)
         finally superseded.foreach(CheckpointBridge.release)
       }
-      val appendSt = EdgeStage(s, dir, "kcore_inc_append") { _ =>
+      val appendSt = stagedArtifact(dir, "kcore_inc_append") { _ =>
         graft.etl.Graph.appendEdges(s, edgesSt.table, fwd)
       }
       require(appendSt.version == edgesSt.version + 1,
@@ -1610,7 +1598,7 @@ private[graft] object QueriesRelational {
         (for { a <- 2 to 9; b <- 2 to 9 if a < b }
           yield (a.toLong * 2, b.toLong * 2)).toDF("src", "dst")
       }
-      val edgesSt = EdgeStage(s, dir, "kcore_del_edges") { tbl =>
+      val edgesSt = stagedArtifact(dir, "kcore_del_edges") { tbl =>
         graft.etl.Graph.commitEdges(s, tbl,
           fwd.filter(!(col("src") === 6 && col("dst") % 128 === 3))
             .unionByName(clique))
@@ -1620,7 +1608,7 @@ private[graft] object QueriesRelational {
       // with empty old scores and an unbounded allowance degenerates
       // to degree init, and its converged-or-throw contract certifies
       // exactness, unlike a fixed budget
-      val scoresSt = EdgeStage(s, dir, "kcore_del_scores") { tbl =>
+      val scoresSt = stagedArtifact(dir, "kcore_del_scores") { tbl =>
         val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
           Some(edgesSt.version))
         val superseded =
@@ -1633,7 +1621,7 @@ private[graft] object QueriesRelational {
         try graft.sources.ManifestTable.commitAppend(s, tbl, c)
         finally superseded.foreach(CheckpointBridge.release)
       }
-      val batchSt = EdgeStage(s, dir, "kcore_del_batch") { _ =>
+      val batchSt = stagedArtifact(dir, "kcore_del_batch") { _ =>
         val v2 = graft.etl.Graph.appendEdges(s, edgesSt.table, fwd)
         require(v2 == edgesSt.version + 1,
           s"insert batch did not append: ${edgesSt.version} -> $v2")
@@ -1698,7 +1686,7 @@ private[graft] object QueriesRelational {
       import org.apache.spark.sql.graft.CheckpointBridge
       // ONE weighted trade-graph artifact per JVM, shared with
       // graph_ppr_serve — the amortization contract made literal
-      val st = EdgeStage(s, dir, "trade_w") { tbl =>
+      val st = stagedArtifact(dir, "trade_w") { tbl =>
         graft.etl.Graph.commitWeightedEdges(s, tbl, tradeEdges(s, dir))
       }
       val edges = graft.sources.ManifestTable.read(s, st.table,
@@ -1876,7 +1864,7 @@ private[graft] object QueriesRelational {
       import org.apache.spark.sql.graft.CheckpointBridge
       // reads the SAME committed trade graph as graph_hits_serve:
       // different kernels, different seed sets, one build
-      val st = EdgeStage(s, dir, "trade_w") { tbl =>
+      val st = stagedArtifact(dir, "trade_w") { tbl =>
         graft.etl.Graph.commitWeightedEdges(s, tbl, tradeEdges(s, dir))
       }
       val edges = graft.sources.ManifestTable.read(s, st.table,

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.Qdsl._
@@ -12,50 +13,11 @@ import graft.Qdsl._
   * each oracled against its batch twin. */
 private[graft] object QueriesStreaming {
 
-  /** Lifecycle owner for every `graft_stream_*` scratch dir this
-    * process creates (staged inputs, per-query checkpoints/outputs):
-    * each is registered at creation and deleted by a JVM shutdown hook
-    * — a bench/verify run leaves no /tmp residue behind. `cleanup()`
-    * is the hook body, callable directly (specs assert the sweep; a
-    * long-lived session can reclaim scratch space); it also drops the
-    * [[StreamStage]] cache, whose staged input lives in one of the
-    * swept dirs, so a later streaming query re-stages instead of
-    * reading a deleted path. All state shares this object's monitor —
-    * single lock, no ordering to get wrong. */
-  private[graft] object StreamTemp {
-    private val roots = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-    private var hooked = false
-    def dir(prefix: String): String = synchronized {
-      if (!hooked) {
-        Runtime.getRuntime.addShutdownHook(new Thread(() => cleanup()))
-        hooked = true
-      }
-      val p = java.nio.file.Files.createTempDirectory(prefix)
-      roots += p
-      p.toString
-    }
-    def registered: Seq[java.nio.file.Path] = synchronized(roots.toSeq)
-    def cleanup(): Unit = synchronized {
-      StreamStage.invalidate()
-      QueriesRelational.EdgeStage.invalidate()
-      QueriesText.FitStage.invalidate()
-      roots.foreach { root =>
-        if (java.nio.file.Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(root).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount) // children before parents
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
-      roots.clear()
-    }
-  }
-
   /** One sentinel-staged streaming input PER SOURCE DIR, shared by
     * every bounded-replay streaming query (daily engagement, sessions,
     * both attribution joins, and the watermarked dedup): the events
     * file(s) OS-copied next to a one-file parquet of
-    * two far-future sentinel rows (user -1, ts = max + 10 days, one per
+    * two far-future sentinel rows (user -1, ts = max + 30 days, one per
     * attribution branch). The sentinels advance the event-time
     * watermark past every real session/join window so bounded replays
     * flush what a production stream would emit as time advances; every
@@ -64,60 +26,70 @@ private[graft] object QueriesStreaming {
     * sentinel write, and a full set of input file copies per bench run
     * (~1.5-2 s at sf0.1 — the same harness trim that took
     * stream_sessions from 3.9 to 3.0 s in round 4). */
-  private object StreamStage {
-    final case class Staged(inDir: String, schema: StructType)
-    private val cache = scala.collection.mutable.Map[String, Staged]()
-    /** Called only from [[StreamTemp.cleanup]], under its lock. */
-    private[QueriesStreaming] def invalidate(): Unit = cache.clear()
-    // synchronized on StreamTemp — the ONE lock for all stream scratch
-    // state (a private monitor here plus StreamTemp's would deadlock:
-    // apply takes this→StreamTemp, cleanup takes StreamTemp→this)
-    def apply(s: SparkSession, dir: String): Staged =
-      StreamTemp.synchronized {
-      cache.getOrElseUpdate(dir, {
-        val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-        // far-future sentinel ts = max(ts) + 30 days, built in whatever
-        // physical type the source shipped (nanos-as-long or micros ntz)
-        // so the sentinel file unions cleanly with the copied source
-        // files. 30 days, not 10: the GLOBAL watermark is the min over
-        // both sides' watermark operators, so a join whose lagging side
-        // carries a windowDays+1 delay sees sentinel − (window+1) — the
-        // horizon must clear max(ts) + window + the largest delay, or
-        // the tail of the full-outer join's unmatched rows never evicts
-        val sentinelTs: Any = s.read.parquet(s"$dir/events.parquet")
-          .agg(max(col("ts"))).head().get(0) match {
-            case n: java.lang.Long => n + 30L * 86400 * 1000000000L
-            case t: java.time.LocalDateTime => t.plusDays(30)
-            case t: java.sql.Timestamp =>
-              java.sql.Timestamp.from(t.toInstant.plusSeconds(30L * 86400))
-            // TimestampType surfaces as Instant when
-            // spark.sql.datetime.java8API.enabled=true
-            case i: java.time.Instant => i.plusSeconds(30L * 86400)
+  private final case class Staged(inDir: String, schema: StructType)
+  private val stagedInputs = Scratch.memo[String, Staged]()
+  private def stagedInput(s: SparkSession, dir: String): Staged =
+    stagedInputs(dir) {
+      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      // far-future sentinel ts = max(ts) + 30 days, built in whatever
+      // physical type the source shipped (nanos-as-long or micros ntz)
+      // so the sentinel file unions cleanly with the copied source
+      // files. 30 days, not 10: the GLOBAL watermark is the min over
+      // both sides' watermark operators, so a join whose lagging side
+      // carries a windowDays+1 delay sees sentinel − (window+1) — the
+      // horizon must clear max(ts) + window + the largest delay, or
+      // the tail of the full-outer join's unmatched rows never evicts
+      val sentinelTs: Any = s.read.parquet(s"$dir/events.parquet")
+        .agg(max(col("ts"))).head().get(0) match {
+          case n: java.lang.Long => n + 30L * 86400 * 1000000000L
+          case t: java.time.LocalDateTime => t.plusDays(30)
+          case t: java.sql.Timestamp =>
+            java.sql.Timestamp.from(t.toInstant.plusSeconds(30L * 86400))
+          // TimestampType surfaces as Instant when
+          // spark.sql.datetime.java8API.enabled=true
+          case i: java.time.Instant => i.plusSeconds(30L * 86400)
+        }
+      val root = Scratch.dir("graft_stream_in")
+      def sentinelRow(eventType: String) =
+        org.apache.spark.sql.Row.fromSeq(rawSchema.fields.toSeq.map {
+          f => f.name match {
+            case "user_id" => -1L
+            case "event_type" => eventType
+            case "ts" => sentinelTs
+            case _ => null
           }
-        val root = StreamTemp.dir("graft_stream_in")
-        def sentinelRow(eventType: String) =
-          org.apache.spark.sql.Row.fromSeq(rawSchema.fields.toSeq.map {
-            f => f.name match {
-              case "user_id" => -1L
-              case "event_type" => eventType
-              case "ts" => sentinelTs
-              case _ => null
-            }
-          })
-        val sentinels = s.createDataFrame(
-          java.util.Arrays.asList(sentinelRow("purchase"),
-            sentinelRow("signup")), rawSchema)
-        sentinels.coalesce(1).write.parquet(s"$root/in")
-        val src = new java.io.File(s"$dir/events.parquet")
-        val files = // rehearsal layouts split the table into a dir
-          if (src.isDirectory)
-            src.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-          else Seq(src)
-        files.foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(s"$root/in/src_${f.getName}")))
-        Staged(s"$root/in", rawSchema)
-      })
+        })
+      val sentinels = s.createDataFrame(
+        java.util.Arrays.asList(sentinelRow("purchase"),
+          sentinelRow("signup")), rawSchema)
+      sentinels.coalesce(1).write.parquet(s"$root/in")
+      val src = new java.io.File(s"$dir/events.parquet")
+      val files = // rehearsal layouts split the table into a dir
+        if (src.isDirectory)
+          src.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+        else Seq(src)
+      files.foreach(f => java.nio.file.Files.copy(f.toPath,
+        java.nio.file.Paths.get(s"$root/in/src_${f.getName}")))
+      Staged(s"$root/in", rawSchema)
     }
+
+  /** The bounded replay every sentinel-aware streaming row reads: the
+    * [[stagedInput]] as a file stream, ts normalized. */
+  private def replay(s: SparkSession, dir: String): DataFrame = {
+    val staged = stagedInput(s, dir)
+    s.readStream.schema(staged.schema).parquet(staged.inDir)
+      .transform(normalizeTs)
+  }
+
+  /** Drain `df` into a parquet append sink at `$root/out` (checkpoint
+    * `$root/ckpt`) with one AvailableNow run, then read the sink. */
+  private def appendAvailableNow(df: DataFrame, root: String): DataFrame = {
+    df.writeStream.outputMode("append").format("parquet")
+      .option("path", s"$root/out")
+      .option("checkpointLocation", s"$root/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    df.sparkSession.read.parquet(s"$root/out")
   }
 
   /** Shared session-conf scope for every streaming query: shuffle
@@ -163,10 +135,7 @@ private[graft] object QueriesStreaming {
       // table is a directory of part files, as rehearsal layouts are —
       // the 10x pass was streaming an empty input)
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val stream = replay(s, dir)
         val agg = stream
           .withWatermark("ts", "1 day")
           .filter(col("event_type") === "purchase")
@@ -178,7 +147,7 @@ private[graft] object QueriesStreaming {
         // the watermark horizon — the pattern that survives an unbounded
         // stream (a complete-mode memory sink would retain the whole
         // result in state AND collect it to the driver).
-        val root = StreamTemp.dir("graft_stream_daily")
+        val root = Scratch.dir("graft_stream_daily")
         graft.stream.StreamingFact.upsertToSilver(
           s, agg, s"$root/fact", s"$root/ckpt", keyCols = Seq("user_id"))
         s.read.parquet(s"$root/fact")
@@ -210,16 +179,13 @@ private[graft] object QueriesStreaming {
   private[graft] val streamAnomaly = Q("stream_anomaly",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val stream = replay(s, dir)
         val agg = stream
           .withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 day").as("day"),
             col("event_type"))
           .agg(count(when(col("user_id") >= 0, 1)).as("n"))
-        val root = StreamTemp.dir("graft_stream_anomaly")
+        val root = Scratch.dir("graft_stream_anomaly")
         graft.stream.StreamingFact.upsertToSilver(
           s, agg, s"$root/fact", s"$root/ckpt",
           keyCols = Seq("event_type"))
@@ -285,25 +251,15 @@ private[graft] object QueriesStreaming {
   private[graft] val streamSlidingCounts = Q("stream_sliding_counts",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_sliding")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_sliding")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("ts"), col("event_type"))
           .withWatermark("ts", "1 day")
           .filter(col("event_type") === "purchase") // sentinel passes
         val agg = stream
           .groupBy(window(col("ts"), "1 day", "12 hours"))
           .agg(count(when(col("user_id") >= 0, 1)).as("n_purchases"))
-        val q = agg.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(agg, root)
           .filter(col("n_purchases") > 0) // sentinel-only windows
           .select(unix_micros(col("window.start")).as("window_start_us"),
             col("n_purchases"))
@@ -336,25 +292,15 @@ private[graft] object QueriesStreaming {
   private[graft] val streamTopk = Q("stream_topk",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_topk")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_topk")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("ts"),
             coalesce(col("event_type"), lit("(none)")).as("event_type"))
           .withWatermark("ts", "1 day")
         val agg = stream
           .groupBy(window(col("ts"), "6 hours"), col("event_type"))
           .agg(count(when(col("user_id") >= 0, 1)).as("n"))
-        val q = agg.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val sunk = s.read.parquet(s"$root/out").filter(col("n") > 0)
+        val sunk = appendAvailableNow(agg, root).filter(col("n") > 0)
         val w = Window.partitionBy(col("window.start"))
           .orderBy(col("n").desc, col("event_type"))
         sunk.withColumn("rank", row_number().over(w).cast("long"))
@@ -380,7 +326,7 @@ private[graft] object QueriesStreaming {
     * session_window closes a session at last_event + gap with an
     * EXCLUSIVE end, so an event exactly one gap after its predecessor
     * starts a new session — hence >= in this oracle's gap test where
-    * the lag/cumsum batch twin uses >. The shared [[StreamStage]]
+    * the lag/cumsum batch twin uses >. The shared [[stagedInput]]
     * input's far-future sentinels (user -1, filtered from the output)
     * advance the event-time watermark past every real session's close:
     * a production stream flushes as new events arrive; a bounded
@@ -388,22 +334,12 @@ private[graft] object QueriesStreaming {
   private[graft] val streamSessions = Q("stream_sessions",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_sess")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_sess")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("ts"))
         val sess = graft.stream.StreamingFact.sessionWindows(
           stream, "ts", "user_id")
-        val q = sess.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(sess, root)
           .filter(col("user_id") >= 0)
           .select(col("user_id"),
             unix_micros(col("session_start")).as("session_start_us"),
@@ -450,25 +386,15 @@ private[graft] object QueriesStreaming {
       withStreamConf(s) {
         Session.withConf(s, StateStoreProviderKey, RocksDbProvider) {
           import s.implicits._
-          val staged = StreamStage(s, dir)
-          val root = StreamTemp.dir("graft_stream_tws")
-          val stream = s.readStream.schema(staged.schema)
-            .parquet(staged.inDir)
-            .transform(normalizeTs)
+          val root = Scratch.dir("graft_stream_tws")
+          val stream = replay(s, dir)
             .select(col("user_id"), col("ts"),
               // sentinel rows carry null value; Ev.value is a primitive
               coalesce(col("value"), lit(0.0)).as("value"))
             .withWatermark("ts", "1 hour")
             .as[graft.stream.StreamingFact.Ev]
           val sess = graft.stream.StreamingFact.sessionizeTws(s, stream)
-          val q = sess.toDF().writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          s.read.parquet(s"$root/out")
+          appendAvailableNow(sess.toDF(), root)
             .filter(col("user_id") >= 0) // shared watermark sentinels
             .select(col("user_id"),
               unix_millis(col("session_start")).as("session_start_ms"),
@@ -511,23 +437,13 @@ private[graft] object QueriesStreaming {
   private[graft] val streamDedup = Q("stream_dedup",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_dedup")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_dedup")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("event_id"), col("ts"))
         val doubled = stream.union(stream)
         val deduped = graft.stream.StreamingFact.dedupStream(
           doubled, "ts", Seq("event_id"))
-        val q = deduped.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(deduped, root)
           .filter(col("user_id") >= 0) // shared watermark sentinels
           .select(col("user_id"), col("event_id"))
           .orderBy("user_id", "event_id")
@@ -555,27 +471,18 @@ private[graft] object QueriesStreaming {
   private[graft] val streamStateInspect = Q("stream_state_inspect",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_state")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_state")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("event_id"), col("ts"))
         val deduped = graft.stream.StreamingFact.dedupStream(
           stream, "ts", Seq("event_id"))
-        val q = deduped.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        appendAvailableNow(deduped, root)
         val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
         val meta = graft.stream.StateInspect
           .stateMetadata(s, s"$root/ckpt")
         val state = graft.stream.StateInspect
           .stateRows(s, s"$root/ckpt")
-        val inputIds = s.read.parquet(staged.inDir)
+        val inputIds = s.read.parquet(stagedInput(s, dir).inDir)
           .select(col("event_id")).where(col("event_id").isNotNull)
         val orphanCnt = state
           .select(col("key.event_id").as("event_id"))
@@ -612,24 +519,14 @@ private[graft] object QueriesStreaming {
   private[graft] val streamAttribution = Q("stream_attribution",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_attr")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_attr")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("event_id"), col("ts"),
             col("event_type"))
         val joined = graft.stream.StreamingFact.attributionJoin(
           stream.filter(col("event_type") === "purchase"),
           stream.filter(col("event_type") === "signup"))
-        val q = joined.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(joined, root)
           // the staged input carries the shared watermark sentinels
           // (user -1); the inner join pairs them up — drop that row
           .filter(col("user_id") >= 0)
@@ -656,23 +553,14 @@ private[graft] object QueriesStreaming {
   private[graft] val streamStaticEnrich = Q("stream_static_enrich",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_enrich")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
+        val root = Scratch.dir("graft_stream_enrich")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("event_id"))
         val dim = t(s, dir, "customer")
           .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
         val joined = graft.stream.StreamingFact.enrichWithDim(
           stream, dim, "user_id")
-        val q = joined.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(joined, root)
           .filter(col("user_id") >= 0) // shared staged-input sentinels
           .select(col("event_id"), col("user_id"), col("c_mktsegment"))
           .orderBy("event_id")
@@ -704,11 +592,8 @@ private[graft] object QueriesStreaming {
   private[graft] val streamAttributionDaily = Q("stream_attribution_daily",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_attr_daily")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_attr_daily")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("event_id"), col("ts"),
             col("event_type"))
         val p = stream.filter(col("event_type") === "purchase")
@@ -728,14 +613,7 @@ private[graft] object QueriesStreaming {
         val agg = joined
           .groupBy(window(col("p_ts"), "1 day"))
           .agg(count(when(col("p_user") >= 0, 1)).as("n_attributed"))
-        val q = agg.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(agg, root)
           .filter(col("n_attributed") > 0) // sentinel-only windows
           .select(unix_micros(col("window.start")).as("window_start_us"),
             col("n_attributed"))
@@ -759,7 +637,7 @@ private[graft] object QueriesStreaming {
     * semantic: matched pairs emit on arrival, while a never-matched
     * purchase emits (with a null signup side) only when the watermark
     * PROVES no future signup can still match it — i.e. at state
-    * eviction. The shared [[StreamStage]] sentinels (user -1, one per
+    * eviction. The shared [[stagedInput]] sentinels (user -1, one per
     * branch, filtered from the output) push the watermark past every
     * real purchase's window so the bounded replay flushes the
     * unmatched rows a production stream would emit as time advances.
@@ -768,25 +646,15 @@ private[graft] object QueriesStreaming {
   private[graft] val streamAttributionOuter = Q("stream_attribution_outer",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_attr_outer")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_attr_outer")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("event_id"), col("ts"),
             col("event_type"))
         val joined = graft.stream.StreamingFact.attributionJoin(
           stream.filter(col("event_type") === "purchase"),
           stream.filter(col("event_type") === "signup"),
           joinType = "left_outer")
-        val q = joined.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(joined, root)
           .filter(col("user_id") >= 0)
           .select(col("user_id"), col("purchase_event_id"),
             coalesce(col("signup_event_id"), lit(-1L))
@@ -819,25 +687,15 @@ private[graft] object QueriesStreaming {
   private[graft] val streamAttributionFull = Q("stream_attribution_full",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
-        val root = StreamTemp.dir("graft_stream_attr_full")
-        val stream = s.readStream.schema(staged.schema)
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
+        val root = Scratch.dir("graft_stream_attr_full")
+        val stream = replay(s, dir)
           .select(col("user_id"), col("event_id"), col("ts"),
             col("event_type"))
         val joined = graft.stream.StreamingFact.attributionJoin(
           stream.filter(col("event_type") === "purchase"),
           stream.filter(col("event_type") === "signup"),
           joinType = "full_outer")
-        val q = joined.writeStream.outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out")
+        appendAvailableNow(joined, root)
           .filter(col("user_id") >= 0)
           .select(col("user_id"),
             coalesce(col("purchase_event_id"), lit(-1L))
@@ -888,7 +746,7 @@ private[graft] object QueriesStreaming {
   private[graft] val streamDedupCorpus = Q("stream_dedup_corpus",
     (s, dir) => {
       withStreamConf(s) {
-        val root = StreamTemp.dir("graft_stream_corpus")
+        val root = Scratch.dir("graft_stream_corpus")
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), coalesce(col("text"), lit(""))
             .as("text"))
@@ -931,18 +789,18 @@ private[graft] object QueriesStreaming {
   private[graft] val streamMvRefresh = Q("stream_mv_refresh",
     (s, dir) => {
       withStreamConf(s) {
-        val staged = StreamStage(s, dir)
+        val staged = stagedInput(s, dir)
         val stream = s.readStream.schema(staged.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(staged.inDir)
           .transform(normalizeTs)
-        def partials(df: org.apache.spark.sql.DataFrame) = df
+        def partials(df: DataFrame) = df
           .filter(col("user_id") >= 0) // shared watermark sentinels
           .groupBy(to_date(col("ts")).as("date"), col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast(DecimalType(18, 2)))
               .cast(DecimalType(18, 2)).as("sum_value"))
-        val root = StreamTemp.dir("graft_stream_mv")
+        val root = Scratch.dir("graft_stream_mv")
         graft.stream.StreamingFact.mergeToMv(stream, s"$root/mv",
           s"$root/ckpt", Seq("date", "event_type"))(partials)
         graft.stream.StreamingFact.readMv(s, s"$root/mv")
@@ -978,7 +836,7 @@ private[graft] object QueriesStreaming {
   private[graft] val streamManifestCdc = Q("stream_manifest_cdc",
     (s, dir) => {
       withStreamConf(s) {
-        val root = StreamTemp.dir("graft_stream_cdc")
+        val root = Scratch.dir("graft_stream_cdc")
         val table = s"$root/t"
         val docs = t(s, dir, "documents").select(col("doc_id"))
         Seq((0L, 200L), (200L, 400L), (400L, Long.MaxValue))
@@ -992,7 +850,7 @@ private[graft] object QueriesStreaming {
           .option("path", table).load()
           .writeStream.format("memory").queryName("manifest_cdc_feed")
           .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
         s.table("manifest_cdc_feed")
@@ -1030,7 +888,7 @@ private[graft] object QueriesStreaming {
   private[graft] val graphCdcIncremental = Q("graph_cdc_incremental",
     (s, dir) => {
       withStreamConf(s) {
-        val root = StreamTemp.dir("graft_cdc_graph")
+        val root = Scratch.dir("graft_cdc_graph")
         val fact = s"$root/fact"
         val graph = s"$root/graph"
         val fwd = t(s, dir, "lineitem").select(
@@ -1063,7 +921,7 @@ private[graft] object QueriesStreaming {
               ()
           }
           .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
         val latest = graft.etl.Graph.edgesFromManifest(s, graph)

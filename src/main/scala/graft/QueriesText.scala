@@ -2136,21 +2136,16 @@ private[graft] object QueriesText {
       AS t(idx, feature, weight_q) ORDER BY idx"""))
 
   /** One quality-model fit per (dir) per JVM, shared by the gate —
-    * the `EdgeStage` discipline applied to a model artifact: training
-    * (30 driver-sequenced GD scans) is priced by `quality_classifier`
-    * INLINE on every attempt; the gate certifies the TRAINED model's
-    * invariants and should pay its own checks, not a second training
-    * run (the round-15 `graph_kcore_gate` lesson). The fit is a pure
-    * function of the corpus (deterministic quantized gradients), so
-    * whichever row's attempt lands first memoizes the same weights
-    * the inline row froze into its oracle. */
-  private[graft] object FitStage {
-    private val cache =
-      scala.collection.mutable.Map[String, QualityModel.Fit]()
-    private[graft] def invalidate(): Unit = synchronized(cache.clear())
-    def apply(dir: String)(build: => QualityModel.Fit): QualityModel.Fit =
-      synchronized(cache.getOrElseUpdate(dir, build))
-  }
+    * the [[QueriesRelational.stagedArtifact]] discipline applied to a
+    * model artifact: training (30 driver-sequenced GD scans) is priced
+    * by `quality_classifier` INLINE on every attempt; the gate
+    * certifies the TRAINED model's invariants and should pay its own
+    * checks, not a second training run (the round-15
+    * `graph_kcore_gate` lesson). The fit is a pure function of the
+    * corpus (deterministic quantized gradients), so whichever row's
+    * attempt lands first memoizes the same weights the inline row
+    * froze into its oracle. */
+  private val fits = Scratch.memo[String, QualityModel.Fit]()
 
   /** The training invariants, gated to a constant-0 row: (a) the loss
     * trajectory DECREASES end-to-end (GD on a separable-ish concept
@@ -2158,16 +2153,17 @@ private[graft] object QueriesText {
     * divergent lr all break it); (b) the learned model classifies the
     * training concept at ≥ 90% accuracy — far above the 52% majority
     * baseline, so a model that silently collapsed to the bias fails;
-    * (c) every weight is finite. Serves the per-JVM [[FitStage]] fit
-    * (training priced by `quality_classifier`); the timed body is the
-    * accuracy scan + the invariant checks — the certificate. */
+    * (c) every weight is finite. Serves the per-JVM [[fits]] memo
+    * (training priced by `quality_classifier`; refit on first use
+    * after [[Scratch.cleanup]]); the timed body is the accuracy scan +
+    * the invariant checks — the certificate. */
   private[graft] val qualityClassifierGate = Q("quality_classifier_gate",
     (s, dir) => {
       val labeled = t(s, dir, "documents")
         .select(QualityModel.features(col("text")).as("xs"),
           when(col("n_chars") >= 300, 1.0).otherwise(0.0).as("y"))
       val std = QualityModel.standardize(labeled)
-      val fit = FitStage(dir) {
+      val fit = fits(dir) {
         QualityModel.trainLogReg(std, iters = 30, lr = 2.0)
       }
       val acc = QualityModel.accuracy(std, fit.weights)

@@ -1,9 +1,28 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
-/** Scratch checkpointing for iterative kernels and multi-consumer
-  * intermediates — every lineage cut in the engine routes through
+/** The one owner of scratch state: the dirs queries stage output in,
+  * the one-time artifacts memoized over those dirs, and lineage cuts.
+  *
+  * Dirs and memos: [[dir]] hands out a registered temp dir, [[memo]]
+  * a typed per-JVM cache of one-time staged artifacts (staged stream
+  * inputs, committed graph artifacts, model fits, bucketed tables).
+  * [[cleanup]] drops every memo and deletes every registered dir; it
+  * runs from one JVM shutdown hook (a bench/verify run leaves no /tmp
+  * residue) and is callable directly, so a long-lived session can
+  * reclaim scratch space and the next run re-stages instead of
+  * reading a swept path. Dirs, memos and builds share this object's
+  * monitor: one lock, no ordering to get wrong, and a build may call
+  * [[dir]] because JVM monitors are reentrant.
+  *
+  * Lineage cuts, for iterative kernels and multi-consumer
+  * intermediates: every lineage cut in the engine routes through
   * [[Scratch.ScratchOps.scratchCheckpoint]] instead of calling
   * `Dataset.localCheckpoint` directly, so the durability of scratch
   * state is ONE deployment knob rather than 70 hard-coded choices.
@@ -48,6 +67,63 @@ object Scratch {
     * `false`) scratch checkpoints. */
   val ReliableConf = "spark.graft.checkpoint.reliable"
 
+  private val roots = mutable.ArrayBuffer[Path]()
+  private val memos = mutable.ArrayBuffer[Memo[_, _]]()
+  private var hooked = false
+
+  /** A fresh temp dir named `prefix*`, deleted by [[cleanup]]. */
+  def dir(prefix: String): String = synchronized {
+    if (!hooked) {
+      Runtime.getRuntime.addShutdownHook(new Thread(() => cleanup()))
+      hooked = true
+    }
+    val p = Files.createTempDirectory(prefix)
+    roots += p
+    p.toString
+  }
+
+  def registered: Seq[Path] = synchronized(roots.toSeq)
+
+  /** Drop every memo, then delete every registered dir. */
+  def cleanup(): Unit = synchronized {
+    memos.foreach(_.clear())
+    roots.foreach(deleteTree)
+    roots.clear()
+  }
+
+  /** Delete `root` and everything under it (no-op if absent). */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toSeq.reverse // children first
+        .foreach(Files.deleteIfExists(_))
+      finally walk.close()
+    }
+
+  /** Run `body` in a fresh temp dir that is deleted when it returns —
+    * for per-attempt roots that must not pile up across repeats. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val d = Files.createTempDirectory(prefix)
+    try body(d.toString) finally deleteTree(d)
+  }
+
+  /** A one-time artifact per key, built on first use under the
+    * [[Scratch]] monitor and dropped by [[cleanup]]. A failed build
+    * caches nothing; a build may use another memo. */
+  final class Memo[K, V] private[Scratch] () {
+    private val cache = mutable.Map[K, V]()
+    def apply(key: K)(build: => V): V = Scratch.synchronized {
+      cache.getOrElse(key, { val v = build; cache(key) = v; v })
+    }
+    private[Scratch] def clear(): Unit = cache.clear()
+  }
+
+  def memo[K, V](): Memo[K, V] = synchronized {
+    val m = new Memo[K, V]
+    memos += m
+    m
+  }
+
   implicit final class ScratchOps(private val df: DataFrame)
       extends AnyVal {
 
@@ -78,7 +154,7 @@ object Scratch {
       if (reliable) {
         if (spark.sparkContext.getCheckpointDir.isEmpty) {
           spark.sparkContext.setCheckpointDir(
-            java.nio.file.Files.createTempDirectory("graft_ckpt")
+            Files.createTempDirectory("graft_ckpt")
               .toString)
         }
         org.apache.spark.sql.graft.CheckpointBridge

@@ -26,8 +26,7 @@ object Session {
       // per-task launch overhead across every widened stage swamps
       // the single-task CPU it recovers. Compute-dense stages that
       // genuinely need width get a TARGETED spread instead
-      // (graft.Spread, Multimodal.ParallelismConf); see
-      // OPTIMIZATION_r17.md.
+      // (graft.Spread); see OPTIMIZATION_r17.md.
       .config("spark.sql.session.timeZone", "UTC")
       // saveAsTable queries (bucketed_join) must not drop a
       // spark-warehouse dir in whatever cwd the process launched from
@@ -86,7 +85,7 @@ object Session {
     * fails naming the variable and the value — a bare `.toInt` throws
     * an anonymous NumberFormatException, and a non-number spliced into
     * `local[...]` surfaces as a master-URL error far from its cause
-    * (the [[Spread.confInt]] discipline, for env vars). */
+    * (the [[Spread]] parallelism-conf discipline, for env vars). */
   private[graft] def positiveInt(env: collection.Map[String, String],
                                  name: String, default: Int): Int =
     env.get(name).fold(default) { v =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Compute-parallelism spread for CPU-dense narrow stages.
   *
@@ -32,26 +32,22 @@ object Spread {
 
   val ConfKey = "spark.graft.compute.parallelism"
 
-  /** Parse a parallelism conf value, naming the key and the bad value
-    * on failure — a bare `.toInt` throws an anonymous
+  /** The compute partition count: [[ConfKey]] when set, else
+    * `defaultParallelism`. A non-integer value fails naming the key
+    * and the value — a bare `.toInt` throws an anonymous
     * NumberFormatException at plan time with no hint which session
     * conf was at fault (round-17 advice). */
-  private[graft] def confInt(spark: org.apache.spark.sql.SparkSession,
-                             key: String): Option[Int] =
-    spark.conf.getOption(key).map { v =>
+  private def parallelism(spark: SparkSession): Int =
+    spark.conf.getOption(ConfKey).map { v =>
       try v.trim.toInt
       catch { case _: NumberFormatException =>
         throw new IllegalArgumentException(
-          s"session conf $key must be an integer, got '$v'")
+          s"session conf $ConfKey must be an integer, got '$v'")
       }
-    }
+    }.getOrElse(spark.sparkContext.defaultParallelism)
 
-  def byKey(df: DataFrame, key: Column): DataFrame = {
-    val spark = df.sparkSession
-    val n = confInt(spark, ConfKey)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    df.repartition(n, key)
-  }
+  def byKey(df: DataFrame, key: Column): DataFrame =
+    df.repartition(parallelism(df.sparkSession), key)
 
   /** Layout-CONDITIONAL spread for SCAN-ROOTED frames whose heavy
     * work happens before any exchange (where AQE coalescing can't
@@ -66,9 +62,7 @@ object Spread {
     * running jobs there; downstream of an exchange it would EXECUTE
     * the upstream stages — use [[byKey]] (or AQE) for those. */
   def ensureWideScan(df: DataFrame, key: Column): DataFrame = {
-    val spark = df.sparkSession
-    val n = confInt(spark, ConfKey)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    val n = parallelism(df.sparkSession)
     if (df.rdd.getNumPartitions >= n) df else df.repartition(n, key)
   }
 }

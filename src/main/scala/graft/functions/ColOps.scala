@@ -24,8 +24,4 @@ object ColOps {
     */
   def bound(e: Column)(f: Column => Column): Column =
     element_at(transform(array(e), f), 1)
-
-  /** [[bound]] for two columns: both evaluate once per row. */
-  def bound2(e1: Column, e2: Column)(f: (Column, Column) => Column): Column =
-    bound(e1)(b1 => bound(e2)(b2 => f(b1, b2)))
 }

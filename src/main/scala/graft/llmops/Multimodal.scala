@@ -27,43 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Session conf: partition count for the CPU-bound per-row stages
-    * ([[bytesToPngBlobs]] and everything narrow downstream of it —
-    * decode, aHash). Default = `sparkContext.defaultParallelism` (the
-    * cluster's total cores). The spread exists because AQE's
-    * bytes-based partition coalescing is blind to per-row decode cost:
-    * a few MB of payload coalesce to ONE post-shuffle partition, and
-    * the codec then runs serialized on one core while the rest of the
-    * cluster idles (measured at sf0.1: the PNG encode + decode stages
-    * ran as single 3.4 s / 1.7 s tasks). Deployments whose blob frame
-    * is already wider than the core count set this higher (or to the
-    * incoming partition count) — the conf is the knob, the default is
-    * scale-adaptive, never a local constant. */
-  val ParallelismConf = "spark.graft.multimodal.parallelism"
-
-  /** Spread a blob frame across the compute-stage partition count —
-    * hash on `blob_id` (deterministic; unique ids spread evenly), not
-    * round-robin, so retried tasks reproduce the same row placement
-    * (guide §2.5: keyless repartition pays a defensive sort and
-    * re-draws under retry).
-    *
-    * LAYOUT-CONDITIONAL (round-17 advice, the
-    * [[graft.Spread.ensureWideScan]] rule): the repartition only fires
-    * when the incoming split count is below the compute parallelism —
-    * a single-row-group test file scans as ONE split and serializes
-    * the codec chain, but a production blob table is already thousands
-    * of splits wide and must NOT pay a payload-carrying exchange just
-    * to re-spread what the scan already spread. Callers feed this
-    * scan-rooted narrow lineage ([[asBlobs]] output), so the `.rdd`
-    * partition probe builds the RDD without running a job. */
-  private def spreadForCompute(blobs: DataFrame): DataFrame = {
-    val spark = blobs.sparkSession
-    val n = graft.Spread.confInt(spark, ParallelismConf)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    if (blobs.rdd.getNumPartitions >= n) blobs
-    else blobs.repartition(n, col("blob_id"))
-  }
-
   case class Blob(blob_id: Long, kind: String, payload: Array[Byte])
   case class DecodedMeta(blob_id: Long, kind: String, n_bytes: Long,
                          width: Int, height: Int, n_frames: Int,
@@ -200,8 +163,14 @@ object Multimodal {
     import spark.implicits._
     // the encode is the head of every heavy chain (decode/aHash are
     // narrow downstream), so the one spread here parallelizes the
-    // whole binary pipeline — see [[ParallelismConf]]
-    spreadForCompute(blobs).as[Blob].mapPartitions { it =>
+    // whole binary pipeline: AQE's byte-based coalescing is blind to
+    // per-row codec cost (measured at sf0.1: encode + decode ran as
+    // single 3.4 s / 1.7 s tasks). Layout-conditional, so a blob
+    // table already wider than the cores pays no payload exchange;
+    // callers feed scan-rooted lineage ([[asBlobs]] output), as
+    // ensureWideScan requires.
+    val spread = graft.Spread.ensureWideScan(blobs, col("blob_id"))
+    spread.as[Blob].mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false) // see [[decode]]
       it.map { b =>
         val h = math.max(1, (b.payload.length + width - 1) / width)

@@ -57,12 +57,6 @@ object Similarity {
 
   // --- LSH (random hyperplane) ----------------------------------------
 
-  /** Sign-bit LSH bucket id from `numPlanes` hyperplane projections
-    * (custom expression — one tight eval per row; the HOF formulation
-    * was numPlanes interpreted array traversals). */
-  def lshBucket(vec: Column, dim: Int, numPlanes: Int = 12): Column =
-    graft.functions.HashExprs.randomProjectionBits(vec, numPlanes, 0)
-
   /** LSH-bucketed approximate top-k: score only corpus vectors that
     * share a bucket with the query under at least one of `numTables`
     * independent hash tables. Recall/cost trade by numPlanes/numTables.

@@ -80,21 +80,3 @@ object Schemas {
     StructField("loaded_at", TimestampType)
   ))
 }
-
-// Typed views for Dataset[T] call sites.
-case class RawEvent(`type`: String, time: Long,
-                    duration_watched: String, percent_watched: String)
-case class RawVisitor(visitor_key: String, ip_address: String,
-                      country: String, events: Seq[RawEvent])
-case class DimMedia(media_id: String, title: String, url: String,
-                    channel: String,
-                    created_at: java.sql.Timestamp,
-                    processed_at: java.sql.Timestamp)
-case class DimVisitor(visitor_id: String, ip_address: String,
-                      country: String, processed_at: java.sql.Timestamp)
-case class FactEngagement(media_id: String, visitor_id: String,
-                          date: java.sql.Date, play_count: Long,
-                          play_rate: Double,
-                          total_watch_time_seconds: Double,
-                          avg_percent_watched: Double,
-                          loaded_at: java.sql.Timestamp)

@@ -402,20 +402,4 @@ object StreamingFact {
   def enrichWithDim(events: DataFrame, dim: DataFrame,
                     key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left")
-
-  /** Run a watermarked aggregation over a bounded parquet dir as if it
-    * streamed in (memory sink, synchronous) — the local smoke harness
-    * for the streaming path. */
-  def runBoundedToMemory(spark: SparkSession, dir: String,
-                         queryName: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val agg = dailyEngagement(stream, "ts", "user_id", "event_type",
-      "value", playType = "purchase")
-    val q = agg.writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName(queryName).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
 }

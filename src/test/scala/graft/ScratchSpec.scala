@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Scratch.ScratchOps
 
-/** The one-knob scratch-checkpoint contract (graft.Scratch): reliable
+/** The scratch-state lifecycle ([[Scratch.dir]], [[Scratch.memo]],
+  * [[Scratch.cleanup]]) and the one-knob scratch-checkpoint contract
+  * (graft.Scratch). Reliable
   * mode must be a pure durability swap — same results, bit for bit —
   * with the checkpoint actually landing in the checkpoint directory
   * (that is the property that survives executor loss; localCheckpoint
@@ -140,5 +142,33 @@ class ScratchSpec extends AnyFunSuite {
       assert(edges.scratchCheckpoint(eager = false).count() == 7)
       assert(spark.sparkContext.getCheckpointDir.nonEmpty)
     } finally spark.conf.set(Scratch.ReliableConf, "false")
+  }
+
+  test("cleanup drops every memo and dir; staged rows re-stage") {
+    // each row stages a one-time artifact through a Scratch.memo (a
+    // bucketed table pair, committed graph artifacts, a model fit, the
+    // staged stream input) plus, for most, registered dirs; after
+    // cleanup() every dir is gone and the rerun must re-stage, not
+    // read a swept path, and return the same rows. The minimum dir
+    // count is what the row itself registers.
+    val dir = "/root/testdata/sf0.001"
+    Seq("bucketed_join" -> 1, "graph_kcore_serve" -> 2,
+      "quality_classifier_gate" -> 0, "stream_dedup" -> 2).foreach {
+      case (name, minDirs) =>
+        val q = Queries.all.find(_.name == name).get
+        Scratch.cleanup()
+        val first = q.run(spark, dir).collect().toSeq
+        assert(first.nonEmpty, name)
+        val regs = Scratch.registered
+        assert(regs.size >= minDirs, s"$name registered only $regs")
+        assert(regs.forall(java.nio.file.Files.exists(_)), s"$name: $regs")
+        Scratch.cleanup()
+        regs.foreach(p => assert(!java.nio.file.Files.exists(p),
+          s"$name: $p survived cleanup"))
+        assert(Scratch.registered.isEmpty, name)
+        assert(q.run(spark, dir).collect().toSeq == first,
+          s"$name changed after cleanup")
+    }
+    Scratch.cleanup()
   }
 }

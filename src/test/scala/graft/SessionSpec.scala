@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (in the spirit of PlanGuardrailSpec's registry-wide guards): only
   * [[Session]] builds a session or sets the nanos read conf, so no
   * main drifts onto its own engine and no read site mutates the
-  * session. Plus the env parsing every main shares. */
+  * session; only [[Scratch]] makes and deletes scratch dirs. Plus the
+  * env parsing every main shares. */
 class SessionSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -36,6 +37,39 @@ class SessionSpec extends AnyFunSuite {
           s"session-wide confs in graft.Session:\n${elsewhere.mkString("\n")}")
       assert(inSession.size == 1, inSession.mkString("\n"))
     }
+  }
+
+  /** [[sites]] of `needle` outside the `owners` (paths under `root`). */
+  private def strays(root: Path, needle: String,
+                     owners: Set[String]): Seq[String] =
+    sites(root, needle).filterNot(site =>
+      owners.exists(o => site.startsWith(s"${root.resolve(o)}:")))
+
+  // scratch state has one owner (graft.Scratch); Session keeps only
+  // its warehouse dir
+  Seq("createTempDirectory" -> Set("graft/Session.scala",
+      "graft/Scratch.scala"),
+    "Files.walk" -> Set("graft/Scratch.scala")).foreach {
+    case (needle, owners) =>
+      test(s"src/main has `$needle` only in ${owners.mkString(", ")}") {
+        val elsewhere = strays(mainRoot, needle, owners)
+        assert(elsewhere.isEmpty,
+          s"`$needle` outside ${owners.mkString(", ")} — stage scratch " +
+            s"dirs with graft.Scratch:\n${elsewhere.mkString("\n")}")
+      }
+  }
+
+  test("negative: the scratch guard flags a planted stray, not its " +
+    "owner") {
+    val root = Files.createTempDirectory("graft_guard")
+    val owner = root.resolve("graft/Scratch.scala")
+    val stray = root.resolve("Planted.scala")
+    Files.createDirectories(owner.getParent)
+    Seq(owner, stray).foreach(
+      Files.writeString(_, "object P {\n  Files.walk(p)\n}\n"))
+    try assert(strays(root, "Files.walk", Set("graft/Scratch.scala")) ==
+      Seq(s"$stray:2"))
+    finally Scratch.deleteTree(root)
   }
 
   test("negative: the scanner finds a planted site") {
