@@ -26,11 +26,11 @@ import org.apache.logging.log4j.core.filter.RegexFilter
   *    line carries no remaining signal — but hundreds of identical
   *    copies bury any real new warning in the official tail.
   *  - "was locally checkpointed, its lineage has been truncated":
-  *    one line per CheckpointBridge.release of a superseded
-  *    iteration cut. The releases are deliberate — the kernels' one-
-  *    round-behind discipline frees ONLY cuts whose contents are
-  *    consumed (CheckpointBridge's scaladoc contract, exercised by
-  *    the kernel specs).
+  *    one line per release of a consumed cut. The releases are
+  *    deliberate — Scratch.scoped and the loops' one-round-behind
+  *    discipline free ONLY cuts whose contents are consumed
+  *    (CheckpointBridge's scaladoc contract, exercised by the kernel
+  *    specs).
   *
   * (The third historical flood class — ChecksumCheckpointFileManager
   * "No checksum file found" from streaming state snapshots — is fixed

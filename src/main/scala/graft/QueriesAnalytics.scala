@@ -996,14 +996,13 @@ private[graft] object QueriesAnalytics {
 
   private[graft] val recoItemItem = Q("reco_item_item",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
       // capped feeds three consumers inside cfPairs (self-join sides +
       // item counts) — materialize once, see recoUserTopn. The final
-      // eager checkpoint (items×5 rows, bounded) lets the capped
-      // intermediate release deterministically instead of lingering
-      // in executor storage until the ContextCleaner runs.
-      val capped = cfCap(cfInteractions(s, dir)).scratchCheckpoint(true)
-      try {
+      // eager checkpoint (items×5 rows, bounded) lets the scope release
+      // the capped intermediate deterministically instead of leaving
+      // it in executor storage until the ContextCleaner runs.
+      Scratch.scoped {
+        val capped = cfCap(cfInteractions(s, dir)).scratchCheckpoint(true)
         cfPairs(capped)
           .withColumn("rank", row_number().over(
             Window.partitionBy(col("i"))
@@ -1013,7 +1012,7 @@ private[graft] object QueriesAnalytics {
             col("j").as("neighbor"), col("co"), col("cosine"))
           .orderBy("item", "rank")
           .scratchCheckpoint(true)
-      } finally CheckpointBridge.release(capped)
+      }
     },
     Some("""WITH inter AS (
         SELECT user_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS item,
@@ -1190,10 +1189,10 @@ private[graft] object QueriesAnalytics {
       // rehearsal). At 100 TB the capped seen-list is a persisted
       // table the serving job reads, same contract. Final eager
       // checkpoint (users×3 rows — the serving table you'd write
-      // anyway) → capped releases deterministically, not at GC time.
-      import org.apache.spark.sql.graft.CheckpointBridge
-      val capped = cfCap(cfInteractions(s, dir)).scratchCheckpoint(true)
-      try {
+      // anyway) → the scope releases capped deterministically, not at
+      // GC time.
+      Scratch.scoped {
+        val capped = cfCap(cfInteractions(s, dir)).scratchCheckpoint(true)
         cfRecScores(capped, cfNeighbors(cfPairs(capped)))
           .withColumn("rank", row_number().over(
             Window.partitionBy(col("user_id"))
@@ -1203,7 +1202,7 @@ private[graft] object QueriesAnalytics {
             col("score_d").cast("double").as("score"))
           .orderBy("user_id", "rank")
           .scratchCheckpoint(true)
-      } finally CheckpointBridge.release(capped)
+      }
     },
     Some("""WITH inter AS (
         SELECT user_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS item,
@@ -2423,39 +2422,36 @@ private[graft] object QueriesAnalytics {
       // marked splits into heldout + train and heldout is consumed
       // twice more — one materialization stops the events scan +
       // first-ts aggregate re-executing per consumer (see recoUserTopn)
-      import org.apache.spark.sql.graft.CheckpointBridge
-      val marked = eligible.withColumn("held_rk", row_number().over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("first_ts").desc, col("item").desc)))
-        .scratchCheckpoint(true)
-      try {
+      Scratch.scoped {
+        val marked = eligible.withColumn("held_rk", row_number().over(
+          Window.partitionBy(col("user_id"))
+            .orderBy(col("first_ts").desc, col("item").desc)))
+          .scratchCheckpoint(true)
         val heldout = marked.filter(col("held_rk") === 1)
           .select(col("user_id"), col("item").as("held_item"))
         val train = marked.filter(col("held_rk") > 1)
           .select(col("user_id"), col("item"), col("cnt"))
         val capped = cfCap(train).scratchCheckpoint(true)
-        try {
-          val recs = cfRecScores(capped, cfNeighbors(cfPairs(capped)))
-            .withColumn("rank", row_number().over(
-              Window.partitionBy(col("user_id"))
-                .orderBy(col("score_d").desc, col("cand"))))
-            .filter(col("rank") <= 3)
-          // heldout and recs share the marked/capped checkpoint
-          // lineage — alias both sides so the equi-join resolves
-          // through plain qualified names, not Spark's ambiguous-
-          // self-join dataset-id machinery (which logs "trivially
-          // true equals predicate" and has historically tightened).
-          val hits = heldout.as("h").join(recs.as("r"),
-              col("h.user_id") === col("r.user_id") &&
-                col("h.held_item") === col("r.cand"), "left_semi")
-          heldout.agg(count(lit(1)).as("n_users"))
-            .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-            .select(col("n_users"), col("n_hits"),
-              (col("n_hits").cast("double") /
-                col("n_users").cast("double")).as("hit_rate"))
-            .scratchCheckpoint(true) // 1 row; lets both releases fire
-        } finally CheckpointBridge.release(capped)
-      } finally CheckpointBridge.release(marked)
+        val recs = cfRecScores(capped, cfNeighbors(cfPairs(capped)))
+          .withColumn("rank", row_number().over(
+            Window.partitionBy(col("user_id"))
+              .orderBy(col("score_d").desc, col("cand"))))
+          .filter(col("rank") <= 3)
+        // heldout and recs share the marked/capped checkpoint
+        // lineage — alias both sides so the equi-join resolves
+        // through plain qualified names, not Spark's ambiguous-
+        // self-join dataset-id machinery (which logs "trivially
+        // true equals predicate" and has historically tightened).
+        val hits = heldout.as("h").join(recs.as("r"),
+            col("h.user_id") === col("r.user_id") &&
+              col("h.held_item") === col("r.cand"), "left_semi")
+        heldout.agg(count(lit(1)).as("n_users"))
+          .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
+          .select(col("n_users"), col("n_hits"),
+            (col("n_hits").cast("double") /
+              col("n_users").cast("double")).as("hit_rate"))
+          .scratchCheckpoint(true) // 1 row; lets the scope free the rest
+      }
     },
     Some("""WITH ft AS (SELECT user_id,
           CAST(json_extract_string(props, '$.k') AS INTEGER) AS item,

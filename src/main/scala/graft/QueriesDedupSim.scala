@@ -1371,25 +1371,28 @@ private[graft] object QueriesDedupSim {
       val exact = Similarity.bruteForceTopK(e, qs, "vec_id",
         "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"))
-      val ivfpq = Similarity.ivfPqTopK(e, qs, "vec_id", "embedding",
-        k = 5, rerankFactor = 10)
-        .scratchCheckpoint(true) // feeds both the semi-join and the count
-      // broadcast the bounded eval sides — see simLshRecallGate
-      val recall = broadcast(exact
-          .join(broadcast(ivfpq.select("query_id", "neighbor_id")),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("hits")))
-        .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
-          Seq("query_id"), "right")
-        .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
-          col("k").cast("double")).as("avg_recall"))
-      recall
-        .crossJoin(ivfpq.agg(count(lit(1)).as("ivfpq_rows")))
-        .select(
-          when(col("avg_recall") >= 0.8799, 0L).otherwise(1L)
-            .as("below_recall_floor"),
-          greatest(lit(0L), lit(25L) - col("ivfpq_rows"))
-            .as("ivfpq_row_shortfall"))
+      Scratch.scoped {
+        val ivfpq = Similarity.ivfPqTopK(e, qs, "vec_id", "embedding",
+          k = 5, rerankFactor = 10)
+          .scratchCheckpoint(true) // feeds both the semi-join and the count
+        // broadcast the bounded eval sides — see simLshRecallGate
+        val recall = broadcast(exact
+            .join(broadcast(ivfpq.select("query_id", "neighbor_id")),
+              Seq("query_id", "neighbor_id"), "left_semi")
+            .groupBy("query_id").agg(count(lit(1)).as("hits")))
+          .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
+            Seq("query_id"), "right")
+          .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
+            col("k").cast("double")).as("avg_recall"))
+        recall
+          .crossJoin(ivfpq.agg(count(lit(1)).as("ivfpq_rows")))
+          .select(
+            when(col("avg_recall") >= 0.8799, 0L).otherwise(1L)
+              .as("below_recall_floor"),
+            greatest(lit(0L), lit(25L) - col("ivfpq_rows"))
+              .as("ivfpq_row_shortfall"))
+          .scratchCheckpoint(true) // 1 row; lets the scope free the rest
+      }
     },
     Some("""SELECT CAST(0 AS BIGINT) AS below_recall_floor,
       CAST(0 AS BIGINT) AS ivfpq_row_shortfall"""))
@@ -1804,14 +1807,13 @@ private[graft] object QueriesDedupSim {
     * SimilaritySpec. */
   private[graft] val simTopkPqVersioned = Q("sim_topk_pq_versioned",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
       // the deduped corpus feeds ~8 driver-sequenced actions (two
       // builds, the dim probes, the serve's corpus + query sides) —
       // materialize once instead of re-scanning + re-shuffling per
       // action
-      val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
-        .scratchCheckpoint(true)
-      try {
+      Scratch.scoped {
+        val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
+          .scratchCheckpoint(true)
         val tbl = s"${Scratch.dir("graft_pq_mt")}/idx"
         val v1 = Similarity.commitPqIndex(e, "vec_id", "embedding", tbl)
         // rebuild-then-swap: a new index over a different corpus cut
@@ -1828,7 +1830,7 @@ private[graft] object QueriesDedupSim {
           "vec_id", "embedding", k = 5, version = Some(v1))
           .orderBy("query_id", "rank")
           .scratchCheckpoint(true) // k×|queries| rows; frees the corpus
-      } finally CheckpointBridge.release(e)
+      }
     },
     simTopkPq.oracle)
 
@@ -1965,10 +1967,9 @@ private[graft] object QueriesDedupSim {
       // re-executing per branch; at scale this table is the written
       // cell-assignment artifact anyway. Released once the bounded
       // result is itself materialized (the reco_eval_hitrate pattern).
-      import org.apache.spark.sql.graft.CheckpointBridge
-      val assigned = Similarity.assignToCells(e, cents, "vec_id",
-        "embedding").scratchCheckpoint(true)
-      try {
+      Scratch.scoped {
+        val assigned = Similarity.assignToCells(e, cents, "vec_id",
+          "embedding").scratchCheckpoint(true)
         val counts = assigned.groupBy("cell_id")
           .agg(count(lit(1)).as("n_cell"))
         val cap = 20L
@@ -1985,7 +1986,7 @@ private[graft] object QueriesDedupSim {
               .as("kept_id_sum"))
           .orderBy("cell_id")
           .scratchCheckpoint(true) // 16 rows; lets the release fire
-      } finally CheckpointBridge.release(assigned)
+      }
     },
     Some("""SELECT * FROM (VALUES
       (CAST(0 AS BIGINT), CAST(33 AS BIGINT), CAST(16 AS BIGINT), CAST(3879 AS BIGINT)),
@@ -2221,49 +2222,52 @@ private[graft] object QueriesDedupSim {
           qcos(col("qq"), col("q")).as("rel"))
       val wRel = Window.partitionBy(col("query_id"))
         .orderBy(col("rel").desc, col("vec_id"))
-      val cand = scored.withColumn("crk", row_number().over(wRel))
-        .filter(col("crk") <= 20).drop("crk")
-        .scratchCheckpoint(true)
-      val ce = cand.join(e, cand("vec_id") === e("vec_id"))
-        .select(cand("query_id"), cand("vec_id").as("id"), e("q"))
-      val sims = ce.as("x").join(ce.as("y"),
-          col("x.query_id") === col("y.query_id") &&
-            col("x.id") =!= col("y.id"))
-        .select(col("x.query_id").as("query_id"), col("x.id").as("a"),
-          col("y.id").as("b"),
-          qcos(col("x.q"), col("y.q")).as("simv"))
-        .scratchCheckpoint(true)
-      var sel = cand.withColumn("rn", row_number().over(wRel))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("vec_id").as("id"),
-          lit(1L).as("rank"), col("rel").as("score"))
-        .scratchCheckpoint(true)
-      for (k <- 2 to 5) {
-        val selIds = sel.select(col("query_id"), col("id").as("b"))
-        val mx = sims.join(selIds, Seq("query_id", "b"))
-          .groupBy(col("query_id"), col("a"))
-          .agg(max(col("simv")).as("mx"))
-        val rem = cand.join(
-          sel.select(col("query_id"), col("id")).withColumnRenamed(
-            "id", "vec_id"),
-          Seq("query_id", "vec_id"), "left_anti")
-        val scoredK = rem.join(mx,
-            rem("query_id") === mx("query_id") &&
-              rem("vec_id") === mx("a"))
-          .select(rem("query_id"), rem("vec_id"),
-            (lit(0.7) * col("rel") - lit(0.3) * col("mx"))
-              .as("score"))
-        val wk = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("vec_id"))
-        val pick = scoredK.withColumn("rn", row_number().over(wk))
+      Scratch.scoped {
+        val cand = scored.withColumn("crk", row_number().over(wRel))
+          .filter(col("crk") <= 20).drop("crk")
+          .scratchCheckpoint(true)
+        val ce = cand.join(e, cand("vec_id") === e("vec_id"))
+          .select(cand("query_id"), cand("vec_id").as("id"), e("q"))
+        val sims = ce.as("x").join(ce.as("y"),
+            col("x.query_id") === col("y.query_id") &&
+              col("x.id") =!= col("y.id"))
+          .select(col("x.query_id").as("query_id"), col("x.id").as("a"),
+            col("y.id").as("b"),
+            qcos(col("x.q"), col("y.q")).as("simv"))
+          .scratchCheckpoint(true)
+        var sel = cand.withColumn("rn", row_number().over(wRel))
           .filter(col("rn") === 1)
           .select(col("query_id"), col("vec_id").as("id"),
-            lit(k.toLong).as("rank"), col("score"))
-        sel = sel.union(pick).scratchCheckpoint(true)
+            lit(1L).as("rank"), col("rel").as("score"))
+          .scratchCheckpoint(true)
+        for (k <- 2 to 5) {
+          val selIds = sel.select(col("query_id"), col("id").as("b"))
+          val mx = sims.join(selIds, Seq("query_id", "b"))
+            .groupBy(col("query_id"), col("a"))
+            .agg(max(col("simv")).as("mx"))
+          val rem = cand.join(
+            sel.select(col("query_id"), col("id")).withColumnRenamed(
+              "id", "vec_id"),
+            Seq("query_id", "vec_id"), "left_anti")
+          val scoredK = rem.join(mx,
+              rem("query_id") === mx("query_id") &&
+                rem("vec_id") === mx("a"))
+            .select(rem("query_id"), rem("vec_id"),
+              (lit(0.7) * col("rel") - lit(0.3) * col("mx"))
+                .as("score"))
+          val wk = Window.partitionBy(col("query_id"))
+            .orderBy(col("score").desc, col("vec_id"))
+          val pick = scoredK.withColumn("rn", row_number().over(wk))
+            .filter(col("rn") === 1)
+            .select(col("query_id"), col("vec_id").as("id"),
+              lit(k.toLong).as("rank"), col("score"))
+          sel = sel.union(pick).scratchCheckpoint(true)
+        }
+        sel.select(col("query_id"), col("rank"),
+            col("id").as("neighbor_id"), col("score"))
+          .orderBy("query_id", "rank")
+          .scratchCheckpoint(true)
       }
-      sel.select(col("query_id"), col("rank"),
-          col("id").as("neighbor_id"), col("score"))
-        .orderBy("query_id", "rank")
     },
     Some("""WITH e AS (SELECT vec_id,
         list_transform(embedding, x ->

@@ -991,22 +991,16 @@ private[graft] object QueriesRelational {
     * the raw fact. */
   private[graft] val graphPagerank = Q("graph_pagerank",
     (s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("c_nationkey").as("src"),
-          col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
+      val edges = tradeEdges(s, dir)
       val nodes = t(s, dir, "nation").select("n_nationkey")
-      graft.etl.Graph.weightedPageRank(edges, nodes, iterations = 5)
-        .join(t(s, dir, "nation"),
-          col("node") === col("n_nationkey"))
-        .select(col("node"), col("n_name"), col("rank_micro"))
-        .orderBy(col("rank_micro").desc, col("node"))
+      Scratch.scoped {
+        graft.etl.Graph.weightedPageRank(edges, nodes, iterations = 5)
+          .join(t(s, dir, "nation"),
+            col("node") === col("n_nationkey"))
+          .select(col("node"), col("n_name"), col("rank_micro"))
+          .orderBy(col("rank_micro").desc, col("node"))
+          .scratchCheckpoint(true)
+      }
     },
     Some("""WITH RECURSIVE
       edges AS (
@@ -1054,34 +1048,20 @@ private[graft] object QueriesRelational {
     * float HITS would drift per summation order. Per-round plan: two
     * (join + map-side-combined groupBy) half-steps over the
     * edge-aggregate checkpoint plus two 1-row max aggregates
-    * broadcast back onto the node-sized vector; superseded round
-    * checkpoints released deterministically after the materializing
-    * action. */
+    * broadcast back onto the node-sized vector; the round checkpoints
+    * are released when the scope's eager result cut has consumed them. */
   private[graft] val graphHits = Q("graph_hits",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
-      val edges = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("c_nationkey").as("src"),
-          col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
+      val edges = tradeEdges(s, dir)
       val nodes = t(s, dir, "nation").select("n_nationkey")
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val scores = graft.etl.Graph.hits(edges, nodes, iterations = 4,
-        onCheckpoint = superseded += _)
-      try scores
-        .join(t(s, dir, "nation"), col("node") === col("n_nationkey"))
-        .select(col("node"), col("n_name"), col("hub_micro"),
-          col("auth_micro"))
-        .orderBy(col("auth_micro").desc, col("node"))
-        .scratchCheckpoint(true)
-      finally superseded.foreach(CheckpointBridge.release)
+      Scratch.scoped {
+        graft.etl.Graph.hits(edges, nodes, iterations = 4)
+          .join(t(s, dir, "nation"), col("node") === col("n_nationkey"))
+          .select(col("node"), col("n_name"), col("hub_micro"),
+            col("auth_micro"))
+          .orderBy(col("auth_micro").desc, col("node"))
+          .scratchCheckpoint(true)
+      }
     },
     Some("""WITH RECURSIVE
       edges AS (
@@ -1136,6 +1116,17 @@ private[graft] object QueriesRelational {
       WHERE iter = 4
       ORDER BY auth_micro DESC, node"""))
 
+  /** The supplier–part bipartite edge list (src, dst) of the k-core
+    * family and its edge artifacts: parity encoding disjoints the two
+    * key spaces at ANY scale (suppliers even, parts odd) — a fixed
+    * offset collides once s_suppkey outgrows it, the
+    * graph_bfs_depth/graph_sssp lesson. */
+  private def supplierPartEdges(s: org.apache.spark.sql.SparkSession,
+                                dir: String): org.apache.spark.sql.DataFrame =
+    t(s, dir, "lineitem").select(
+      (col("l_suppkey").cast("long") * 2).as("src"),
+      (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+
   /** k-core decomposition ([[graft.etl.Graph.coreness]]) of the
     * supplier–part bipartite graph: suppliers and parts are nodes
     * (parity-encoded 2k / 2k+1 to disjoint the key spaces at any
@@ -1152,25 +1143,12 @@ private[graft] object QueriesRelational {
     * per-node descending-rank window. */
   private[graft] val graphKcore = Q("graph_kcore",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
-      // parity encoding disjoints the two key spaces at ANY scale
-      // (suppliers even, parts odd) — a fixed offset collides once
-      // s_suppkey outgrows it, the graph_bfs_depth/graph_sssp lesson
-      val edges = t(s, dir, "lineitem").select(
-        (col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val c = graft.etl.Graph.coreness(edges, iterations = 6,
-        onCheckpoint = superseded += _)
-      try c.select(
-          when(col("node") % 2 === 1, lit("part"))
-            .otherwise(lit("supplier")).as("side"),
-          expr("node div 2").as("id"), // integer div: exact at any id
-          col("c").as("core"))
-        .orderBy(col("side"), col("id"))
-        .scratchCheckpoint(true)
-      finally superseded.foreach(CheckpointBridge.release)
+      Scratch.scoped {
+        kcoreSides(graft.etl.Graph.coreness(supplierPartEdges(s, dir),
+            iterations = 6))
+          .orderBy(col("side"), col("id"))
+          .scratchCheckpoint(true)
+      }
     },
     Some("""WITH RECURSIVE
       und AS (SELECT DISTINCT src, dst FROM (
@@ -1221,6 +1199,37 @@ private[graft] object QueriesRelational {
       Artifact(tbl, build(tbl))
     }
 
+  /** (node, c) coreness in the k-core rows' (side, id, core) shape:
+    * the inverse of the parity encoding (suppliers 2k, parts 2k+1). */
+  private def kcoreSides(c: org.apache.spark.sql.DataFrame)
+  : org.apache.spark.sql.DataFrame =
+    c.select(
+      when(col("node") % 2 === 1, lit("part"))
+        .otherwise(lit("supplier")).as("side"),
+      expr("node div 2").as("id"), // integer div: exact at any id
+      col("c").as("core"))
+
+  /** The committed supplier–part edge artifact and the 6-round
+    * coreness scores over it, shared by `graph_kcore_serve` and
+    * `graph_kcore_gate`. One def per artifact, because whichever row
+    * runs first builds the ONE shared copy. */
+  private def kcoreEdges(s: org.apache.spark.sql.SparkSession,
+                         dir: String): Artifact =
+    stagedArtifact(dir, "kcore_edges") { tbl =>
+      graft.etl.Graph.commitEdges(s, tbl, supplierPartEdges(s, dir))
+    }
+
+  private def kcoreScores(s: org.apache.spark.sql.SparkSession,
+                          dir: String): Artifact = {
+    val edgesSt = kcoreEdges(s, dir)
+    stagedArtifact(dir, "kcore_scores") { tbl =>
+      val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
+        Some(edgesSt.version))
+      graft.sources.ManifestTable.commitAppend(s, tbl, kcoreSides(
+        graft.etl.Graph.corenessOfUndirected(und, iterations = 6)))
+    }
+  }
+
   /** The GRAPH EDGE ARTIFACT build/serve flow — the graph family's
     * instance of the PQ-index versioned build/serve split
     * ([[graft.etl.Graph.commitEdges]]). Motivation is SCALE.md's 100×
@@ -1238,9 +1247,7 @@ private[graft] object QueriesRelational {
     * that dropped rows would all move the numbers. */
   private[graft] val graphEdgesArtifact = Q("graph_edges_artifact",
     (s, dir) => {
-      val fwd = t(s, dir, "lineitem").select(
-        (col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+      val fwd = supplierPartEdges(s, dir)
       val tbl = s"${Scratch.dir("graft_edges_mt")}/edges"
       val v1 = graft.etl.Graph.commitEdges(s, tbl, fwd)
       // rebuild-then-swap: a different corpus cut lands as head+1;
@@ -1289,28 +1296,7 @@ private[graft] object QueriesRelational {
     * guarantee that lets the deployment trust the artifact. */
   private[graft] val graphKcoreServe = Q("graph_kcore_serve",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
-      val edgesSt = stagedArtifact(dir, "kcore_edges") { tbl =>
-        graft.etl.Graph.commitEdges(s, tbl,
-          t(s, dir, "lineitem").select(
-            (col("l_suppkey").cast("long") * 2).as("src"),
-            (col("l_partkey").cast("long") * 2 + 1).as("dst")))
-      }
-      val st = stagedArtifact(dir, "kcore_scores") { tbl =>
-        val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
-          Some(edgesSt.version))
-        val superseded =
-          scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-        val c = graft.etl.Graph.corenessOfUndirected(und,
-          iterations = 6, onCheckpoint = superseded += _)
-        try graft.sources.ManifestTable.commitAppend(s, tbl,
-          c.select(
-            when(col("node") % 2 === 1, lit("part"))
-              .otherwise(lit("supplier")).as("side"),
-            expr("node div 2").as("id"),
-            col("c").as("core")))
-        finally superseded.foreach(CheckpointBridge.release)
-      }
+      val st = kcoreScores(s, dir)
       graft.sources.ManifestTable.read(s, st.table, Some(st.version))
         .orderBy(col("side"), col("id"))
     },
@@ -1331,7 +1317,6 @@ private[graft] object QueriesRelational {
     * iter-6 → iter-7 diff. */
   private[graft] val graphKcoreGate = Q("graph_kcore_gate",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
       // The certificate replays one extra round over the FINAL scores
       // — and the final scores a deployment actually trusts are the
       // COMMITTED score artifact (the thing graph_kcore_serve reads),
@@ -1340,32 +1325,11 @@ private[graft] object QueriesRelational {
       // here (the pre-round-15 shape) certified a throwaway
       // recomputation and priced the kernel twice per run —
       // graph_kcore remains the canonical build+kernel pricing row,
-      // and the serve/gate pair shares its artifacts (stagedArtifact:
-      // one edge collapse + one kernel per JVM, min-of-3 keeps the
-      // first-touch build out of the row's min).
-      val edgesSt = stagedArtifact(dir, "kcore_edges") { tbl =>
-        graft.etl.Graph.commitEdges(s, tbl,
-          t(s, dir, "lineitem").select(
-            (col("l_suppkey").cast("long") * 2).as("src"),
-            (col("l_partkey").cast("long") * 2 + 1).as("dst")))
-      }
-      // the build closure is byte-identical to serve's, so whichever
-      // row runs first builds the ONE shared scores artifact
-      val scoresSt = stagedArtifact(dir, "kcore_scores") { tbl =>
-        val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
-          Some(edgesSt.version))
-        val superseded =
-          scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-        val c = graft.etl.Graph.corenessOfUndirected(und,
-          iterations = 6, onCheckpoint = superseded += _)
-        try graft.sources.ManifestTable.commitAppend(s, tbl,
-          c.select(
-            when(col("node") % 2 === 1, lit("part"))
-              .otherwise(lit("supplier")).as("side"),
-            expr("node div 2").as("id"),
-            col("c").as("core")))
-        finally superseded.foreach(CheckpointBridge.release)
-      }
+      // and the serve/gate pair shares its artifacts (kcoreEdges,
+      // kcoreScores: one edge collapse + one kernel per JVM, min-of-3
+      // keeps the first-touch build out of the row's min).
+      val edgesSt = kcoreEdges(s, dir)
+      val scoresSt = kcoreScores(s, dir)
       val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
         Some(edgesSt.version))
       // undo the serve projection: node = 2*id (+1 for parts) — the
@@ -1431,9 +1395,7 @@ private[graft] object QueriesRelational {
     * rewrite. */
   private[graft] val graphEdgesIncremental = Q("graph_edges_incremental",
     (s, dir) => {
-      val fwd = t(s, dir, "lineitem").select(
-        (col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+      val fwd = supplierPartEdges(s, dir)
       val tbl = s"${Scratch.dir("graft_edges_inc")}/edges"
       // base: suppliers 0..2 mod 4; growth batch: suppliers 1..3 mod 4
       // — the mod-1..2 overlap re-delivers base edges inside the batch
@@ -1499,10 +1461,7 @@ private[graft] object QueriesRelational {
     * sweep is SCALE.md's round-16 table. */
   private[graft] val graphKcoreIncremental = Q("graph_kcore_incremental",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
-      def fwd = t(s, dir, "lineitem").select(
-        (col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+      def fwd = supplierPartEdges(s, dir)
       // Staged ONCE per JVM (the stagedArtifact economics every serve
       // row uses): base edge artifact v1 = everything except supplier 3's
       // parts ≡ 0 (mod 64) — src is 2·suppkey, dst is 2·partkey+1, a
@@ -1520,12 +1479,8 @@ private[graft] object QueriesRelational {
       val scoresSt = stagedArtifact(dir, "kcore_inc_scores") { tbl =>
         val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
           Some(edgesSt.version))
-        val superseded =
-          scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-        val c = graft.etl.Graph.corenessOfUndirected(und,
-          iterations = 6, onCheckpoint = superseded += _)
-        try graft.sources.ManifestTable.commitAppend(s, tbl, c)
-        finally superseded.foreach(CheckpointBridge.release)
+        graft.sources.ManifestTable.commitAppend(s, tbl,
+          graft.etl.Graph.corenessOfUndirected(und, iterations = 6))
       }
       val appendSt = stagedArtifact(dir, "kcore_inc_append") { _ =>
         graft.etl.Graph.appendEdges(s, edgesSt.table, fwd)
@@ -1540,23 +1495,16 @@ private[graft] object QueriesRelational {
       val b = graft.sources.ManifestTable
         .readAppendsSince(s, edgesSt.table, edgesSt.version)
         .count() / 2
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      try {
+      Scratch.scoped {
         val oldScores = graft.sources.ManifestTable
           .read(s, scoresSt.table, Some(scoresSt.version))
-        val c = graft.etl.Graph.incrementalCoreness(
-          graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
-            Some(appendSt.version)),
-          oldScores, batchEdges = b, onCheckpoint = superseded += _)
-        c.select(
-            when(col("node") % 2 === 1, lit("part"))
-              .otherwise(lit("supplier")).as("side"),
-            expr("node div 2").as("id"),
-            col("c").as("core"))
+        kcoreSides(graft.etl.Graph.incrementalCoreness(
+            graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
+              Some(appendSt.version)),
+            oldScores, batchEdges = b))
           .orderBy(col("side"), col("id"))
           .scratchCheckpoint(true)
-      } finally superseded.foreach(CheckpointBridge.release)
+      }
     },
     graphKcore.oracle)
 
@@ -1587,10 +1535,7 @@ private[graft] object QueriesRelational {
   private[graft] val graphKcoreIncrementalDel =
     Q("graph_kcore_incremental_del",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
-      def fwd = t(s, dir, "lineitem").select(
-        (col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+      def fwd = supplierPartEdges(s, dir)
       // K8 on supplier nodes 4..18: even–even edges cannot occur in
       // the even–odd bipartite fact, so retraction applies exactly
       def clique = {
@@ -1611,15 +1556,11 @@ private[graft] object QueriesRelational {
       val scoresSt = stagedArtifact(dir, "kcore_del_scores") { tbl =>
         val und = graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
           Some(edgesSt.version))
-        val superseded =
-          scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
         val noScores = und.groupBy(col("src").as("node"))
           .agg(count(lit(1)).as("c")).limit(0)
-        val c = graft.etl.Graph.incrementalCoreness(und, noScores,
-          batchEdges = 1L << 40, maxRounds = 64,
-          onCheckpoint = superseded += _)
-        try graft.sources.ManifestTable.commitAppend(s, tbl, c)
-        finally superseded.foreach(CheckpointBridge.release)
+        graft.sources.ManifestTable.commitAppend(s, tbl,
+          graft.etl.Graph.incrementalCoreness(und, noScores,
+            batchEdges = 1L << 40, maxRounds = 64))
       }
       val batchSt = stagedArtifact(dir, "kcore_del_batch") { _ =>
         val v2 = graft.etl.Graph.appendEdges(s, edgesSt.table, fwd)
@@ -1637,31 +1578,24 @@ private[graft] object QueriesRelational {
         .countRows(s, edgesSt.table, Some(vAppend)).get -
         graft.sources.ManifestTable
           .countRows(s, edgesSt.table, Some(edgesSt.version)).get) / 2
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      try {
+      Scratch.scoped {
         val oldScores = graft.sources.ManifestTable
           .read(s, scoresSt.table, Some(scoresSt.version))
-        val c = graft.etl.Graph.incrementalCoreness(
-          graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
-            Some(batchSt.version)),
-          oldScores, batchEdges = b, onCheckpoint = superseded += _)
-        c.select(
-            when(col("node") % 2 === 1, lit("part"))
-              .otherwise(lit("supplier")).as("side"),
-            expr("node div 2").as("id"),
-            col("c").as("core"))
+        kcoreSides(graft.etl.Graph.incrementalCoreness(
+            graft.etl.Graph.edgesFromManifest(s, edgesSt.table,
+              Some(batchSt.version)),
+            oldScores, batchEdges = b))
           .orderBy(col("side"), col("id"))
           .scratchCheckpoint(true)
-      } finally superseded.foreach(CheckpointBridge.release)
+      }
     },
     graphKcore.oracle)
 
   /** The nation-level trade graph (customer nation → supplier nation,
-    * weight = lineitem count) that [[graphHits]] and [[graphPpr]] both
-    * aggregate from the fact — factored out because the WEIGHTED edge
-    * artifact's whole point is that ONE build serves the whole kernel
-    * family. */
+    * weight = lineitem count) that [[graphPagerank]], [[graphHits]]
+    * and [[graphPpr]] aggregate from the fact — one def because the
+    * WEIGHTED edge artifact's whole point is that ONE build serves the
+    * whole kernel family. */
   private def tradeEdges(s: org.apache.spark.sql.SparkSession,
                          dir: String): org.apache.spark.sql.DataFrame =
     t(s, dir, "lineitem")
@@ -1671,6 +1605,16 @@ private[graft] object QueriesRelational {
       .groupBy(col("c_nationkey").as("src"),
         col("s_nationkey").as("dst"))
       .agg(count(lit(1)).as("w"))
+
+  /** ONE committed weighted trade-graph artifact per JVM, shared by
+    * `graph_hits_serve` and `graph_ppr_serve` — the amortization
+    * contract made literal, and one def so both rows build the same
+    * copy whichever runs first. */
+  private def tradeArtifact(s: org.apache.spark.sql.SparkSession,
+                            dir: String): Artifact =
+    stagedArtifact(dir, "trade_w") { tbl =>
+      graft.etl.Graph.commitWeightedEdges(s, tbl, tradeEdges(s, dir))
+    }
 
   /** HITS served from the committed WEIGHTED edge artifact
     * ([[graft.etl.Graph.commitWeightedEdges]]): the fact-sized
@@ -1683,26 +1627,18 @@ private[graft] object QueriesRelational {
     * one build amortize across the family. */
   private[graft] val graphHitsServe = Q("graph_hits_serve",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
-      // ONE weighted trade-graph artifact per JVM, shared with
-      // graph_ppr_serve — the amortization contract made literal
-      val st = stagedArtifact(dir, "trade_w") { tbl =>
-        graft.etl.Graph.commitWeightedEdges(s, tbl, tradeEdges(s, dir))
-      }
+      val st = tradeArtifact(s, dir)
       val edges = graft.sources.ManifestTable.read(s, st.table,
         Some(st.version))
       val nodes = t(s, dir, "nation").select("n_nationkey")
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val scores = graft.etl.Graph.hits(edges, nodes, iterations = 4,
-        onCheckpoint = superseded += _)
-      try scores
-        .join(t(s, dir, "nation"), col("node") === col("n_nationkey"))
-        .select(col("node"), col("n_name"), col("hub_micro"),
-          col("auth_micro"))
-        .orderBy(col("auth_micro").desc, col("node"))
-        .scratchCheckpoint(true)
-      finally superseded.foreach(CheckpointBridge.release)
+      Scratch.scoped {
+        graft.etl.Graph.hits(edges, nodes, iterations = 4)
+          .join(t(s, dir, "nation"), col("node") === col("n_nationkey"))
+          .select(col("node"), col("n_name"), col("hub_micro"),
+            col("auth_micro"))
+          .orderBy(col("auth_micro").desc, col("node"))
+          .scratchCheckpoint(true)
+      }
     },
     graphHits.oracle)
 
@@ -1720,9 +1656,7 @@ private[graft] object QueriesRelational {
     * BIGINT n·Σxy overflow at any scale. */
   private[graft] val graphAssortativity = Q("graph_assortativity",
     (s, dir) => {
-      val fwd = t(s, dir, "lineitem").select(
-        (col("l_suppkey").cast("long") * 2).as("src"),
-        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+      val fwd = supplierPartEdges(s, dir)
       val und = fwd
         .union(fwd.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
@@ -1783,34 +1717,22 @@ private[graft] object QueriesRelational {
     * the recurrence with the same seed CASE in the recursive CTE. */
   private[graft] val graphPpr = Q("graph_ppr",
     (s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("c_nationkey").as("src"),
-          col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
+      val edges = tradeEdges(s, dir)
       val nodes = t(s, dir, "nation").select("n_nationkey")
       val seeds = t(s, dir, "nation")
         .join(t(s, dir, "region"),
           col("n_regionkey") === col("r_regionkey"))
         .filter(col("r_name") === "EUROPE")
         .select(col("n_nationkey"))
-      import org.apache.spark.sql.graft.CheckpointBridge
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val ranks = graft.etl.Graph.personalizedPageRank(edges, nodes,
-        seeds, iterations = 5, onCheckpoint = superseded += _)
-      try ranks
-        .join(t(s, dir, "nation"),
-          col("node") === col("n_nationkey"))
-        .select(col("node"), col("n_name"), col("rank_micro"))
-        .orderBy(col("rank_micro").desc, col("node"))
-        .scratchCheckpoint(true)
-      finally superseded.foreach(CheckpointBridge.release)
+      Scratch.scoped {
+        graft.etl.Graph.personalizedPageRank(edges, nodes, seeds,
+            iterations = 5)
+          .join(t(s, dir, "nation"),
+            col("node") === col("n_nationkey"))
+          .select(col("node"), col("n_name"), col("rank_micro"))
+          .orderBy(col("rank_micro").desc, col("node"))
+          .scratchCheckpoint(true)
+      }
     },
     Some("""WITH RECURSIVE
       edges AS (
@@ -1861,12 +1783,9 @@ private[graft] object QueriesRelational {
     * touching the fact) read one committed graph. */
   private[graft] val graphPprServe = Q("graph_ppr_serve",
     (s, dir) => {
-      import org.apache.spark.sql.graft.CheckpointBridge
       // reads the SAME committed trade graph as graph_hits_serve:
       // different kernels, different seed sets, one build
-      val st = stagedArtifact(dir, "trade_w") { tbl =>
-        graft.etl.Graph.commitWeightedEdges(s, tbl, tradeEdges(s, dir))
-      }
+      val st = tradeArtifact(s, dir)
       val edges = graft.sources.ManifestTable.read(s, st.table,
         Some(st.version))
       val nodes = t(s, dir, "nation").select("n_nationkey")
@@ -1875,16 +1794,14 @@ private[graft] object QueriesRelational {
           col("n_regionkey") === col("r_regionkey"))
         .filter(col("r_name") === "EUROPE")
         .select(col("n_nationkey"))
-      val superseded =
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val ranks = graft.etl.Graph.personalizedPageRank(edges, nodes,
-        seeds, iterations = 5, onCheckpoint = superseded += _)
-      try ranks
-        .join(t(s, dir, "nation"), col("node") === col("n_nationkey"))
-        .select(col("node"), col("n_name"), col("rank_micro"))
-        .orderBy(col("rank_micro").desc, col("node"))
-        .scratchCheckpoint(true)
-      finally superseded.foreach(CheckpointBridge.release)
+      Scratch.scoped {
+        graft.etl.Graph.personalizedPageRank(edges, nodes, seeds,
+            iterations = 5)
+          .join(t(s, dir, "nation"), col("node") === col("n_nationkey"))
+          .select(col("node"), col("n_name"), col("rank_micro"))
+          .orderBy(col("rank_micro").desc, col("node"))
+          .scratchCheckpoint(true)
+      }
     },
     graphPpr.oracle)
 
@@ -3129,17 +3046,17 @@ private[graft] object QueriesRelational {
       // the explode emits both directions narrowly from the collapsed
       // set — the previous explode-first shape shuffled 2N rows into
       // the same aggregate for an identical output set.
-      val edges = t(s, dir, "lineitem")
-        .filter(col("l_quantity") <= 2)
-        .select((col("l_orderkey") * 2).as("src"),
-          (col("l_partkey") * 2 + 1).as("dst"))
-        .distinct()
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .scratchCheckpoint(true)
-      try {
+      Scratch.scoped {
+        val edges = t(s, dir, "lineitem")
+          .filter(col("l_quantity") <= 2)
+          .select((col("l_orderkey") * 2).as("src"),
+            (col("l_partkey") * 2 + 1).as("dst"))
+          .distinct()
+          .select(explode(array(
+            struct(col("src"), col("dst")),
+            struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"))
+          .scratchCheckpoint(true)
         // Δ-frontier loop state, exactly graph_sssp's round-11 shape
         // (q.v. for the blocked-convergence argument): the REACHED set
         // (id, hops) is the only loop state — never a dense per-node
@@ -3185,13 +3102,12 @@ private[graft] object QueriesRelational {
           .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_id"))
           .select(lit(-1L).as("hops"), col("n_nodes"), col("min_id"))
           .filter(col("n_nodes") > 0)
-        try reached.groupBy(col("hops"))
+        reached.groupBy(col("hops"))
           .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_id"))
           .unionByName(unreached)
           .orderBy("hops")
           .scratchCheckpoint(true)
-        finally CheckpointBridge.release(reached)
-      } finally CheckpointBridge.release(edges)
+      }
     },
     Some("""WITH RECURSIVE
       base AS (SELECT l_orderkey * 2 AS a, l_partkey * 2 + 1 AS b
@@ -3691,13 +3607,16 @@ private[graft] object QueriesRelational {
         .filter(col("l_quantity") <= 2)
         .select((col("l_orderkey") * 2).as("id_a"),
           (col("l_partkey") * 2 + 1).as("id_b"))
-      graft.etl.Graph.labelPropagation(pairs, iterations = 4)
-        .groupBy(col("lab"))
-        .agg(count(lit(1)).as("comm_size"))
-        .groupBy(col("comm_size"))
-        .agg(count(lit(1)).as("n_communities"),
-          min(col("lab")).as("min_label"))
-        .orderBy("comm_size")
+      Scratch.scoped {
+        graft.etl.Graph.labelPropagation(pairs, iterations = 4)
+          .groupBy(col("lab"))
+          .agg(count(lit(1)).as("comm_size"))
+          .groupBy(col("comm_size"))
+          .agg(count(lit(1)).as("n_communities"),
+            min(col("lab")).as("min_label"))
+          .orderBy("comm_size")
+          .scratchCheckpoint(true)
+      }
     },
     Some("""WITH base AS (SELECT l_orderkey * 2 AS a, l_partkey * 2 + 1 AS b
         FROM lineitem WHERE l_quantity <= 2),
@@ -3954,21 +3873,21 @@ private[graft] object QueriesRelational {
       // directions from the E collapsed rows emits the identical
       // weighted edge set while the exchange carries half the rows of
       // the previous explode-first shape.
-      val edges = t(s, dir, "lineitem")
-        .filter(col("l_quantity") <= 2)
-        .select((col("l_orderkey") * 2).as("src"),
-          (col("l_partkey") * 2 + 1).as("dst"),
-          col("l_quantity").cast("long").as("w"))
-        .groupBy(col("src"), col("dst"))
-        .agg(min(col("w")).as("w"))
-        .select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"),
-          col("w"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"),
-          col("w"))
-        .scratchCheckpoint(true)
-      try {
+      Scratch.scoped {
+        val edges = t(s, dir, "lineitem")
+          .filter(col("l_quantity") <= 2)
+          .select((col("l_orderkey") * 2).as("src"),
+            (col("l_partkey") * 2 + 1).as("dst"),
+            col("l_quantity").cast("long").as("w"))
+          .groupBy(col("src"), col("dst"))
+          .agg(min(col("w")).as("w"))
+          .select(explode(array(
+            struct(col("src"), col("dst")),
+            struct(col("dst").as("src"), col("src").as("dst")))).as("e"),
+            col("w"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"),
+            col("w"))
+          .scratchCheckpoint(true)
         // reached = (id, d) for touched nodes ONLY (see scaladoc);
         // seeds are the 10 smallest node ids at distance 0
         var reached = edges.select(col("src").as("id")).distinct()
@@ -4015,7 +3934,7 @@ private[graft] object QueriesRelational {
         // histogram over reached distances + ONE unreached row (d=-1),
         // derived by an anti-join at the end — the only time the full
         // node set is touched after the seed selection. Eagerly
-        // checkpointed (≤ distance-domain rows) so the finally can
+        // checkpointed (≤ distance-domain rows) so the scope can
         // release the edge + round checkpoints the plan consumed.
         val nodes = edges.select(col("src").as("id")).distinct()
         val unreached = nodes
@@ -4023,13 +3942,12 @@ private[graft] object QueriesRelational {
           .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_id"))
           .select(lit(-1L).as("d"), col("n_nodes"), col("min_id"))
           .filter(col("n_nodes") > 0)
-        try reached.groupBy(col("d"))
+        reached.groupBy(col("d"))
           .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_id"))
           .unionByName(unreached)
           .orderBy("d")
           .scratchCheckpoint(true)
-        finally CheckpointBridge.release(reached)
-      } finally CheckpointBridge.release(edges)
+      }
     },
     Some("""WITH RECURSIVE
       base AS (SELECT l_orderkey * 2 AS a, l_partkey * 2 + 1 AS b,

@@ -691,29 +691,29 @@ private[graft] object QueriesText {
       // the distinct collapse is the ONLY data-sized work — checkpoint
       // it so the pair join's two sides and the totals read the
       // materialized collapse instead of re-shuffling the corpus 3×
-      import org.apache.spark.sql.graft.CheckpointBridge
-      val sg = docs.select(col("source"), explode(grams).as("gram"))
-        .select(col("source"), xxhash64(col("gram")).as("gh"))
-        .distinct()
-        .scratchCheckpoint(false)
-      val tot = sg.groupBy("source").agg(count(lit(1)).as("total"))
-      try sg.as("a")
-        .join(sg.as("b"), col("a.gh") === col("b.gh") &&
-          col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("source_a"),
-          col("b.source").as("source_b"))
-        .agg(count(lit(1)).as("shared_grams"))
-        .join(tot.select(col("source").as("source_a"),
-          col("total").as("total_a")), "source_a")
-        .join(tot.select(col("source").as("source_b"),
-          col("total").as("total_b")), "source_b")
-        .select(col("source_a"), col("source_b"), col("shared_grams"),
-          col("total_a"), col("total_b"),
-          expr("shared_grams * 1000 div least(total_a, total_b)")
-            .as("overlap_permille"))
-        .orderBy("source_a", "source_b")
-        .scratchCheckpoint(true)
-      finally CheckpointBridge.release(sg)
+      Scratch.scoped {
+        val sg = docs.select(col("source"), explode(grams).as("gram"))
+          .select(col("source"), xxhash64(col("gram")).as("gh"))
+          .distinct()
+          .scratchCheckpoint(false)
+        val tot = sg.groupBy("source").agg(count(lit(1)).as("total"))
+        sg.as("a")
+          .join(sg.as("b"), col("a.gh") === col("b.gh") &&
+            col("a.source") < col("b.source"))
+          .groupBy(col("a.source").as("source_a"),
+            col("b.source").as("source_b"))
+          .agg(count(lit(1)).as("shared_grams"))
+          .join(tot.select(col("source").as("source_a"),
+            col("total").as("total_a")), "source_a")
+          .join(tot.select(col("source").as("source_b"),
+            col("total").as("total_b")), "source_b")
+          .select(col("source_a"), col("source_b"), col("shared_grams"),
+            col("total_a"), col("total_b"),
+            expr("shared_grams * 1000 div least(total_a, total_b)")
+              .as("overlap_permille"))
+          .orderBy("source_a", "source_b")
+          .scratchCheckpoint(true)
+      }
     },
     Some(raw"""WITH d AS (SELECT source, lower(trim(text)) AS txt
         FROM documents WHERE text IS NOT NULL AND trim(text) != ''),

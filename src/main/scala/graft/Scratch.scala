@@ -6,6 +6,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.CheckpointBridge
 
 /** The one owner of scratch state: the dirs queries stage output in,
   * the one-time artifacts memoized over those dirs, and lineage cuts.
@@ -25,7 +26,13 @@ import org.apache.spark.sql.DataFrame
   * intermediates: every lineage cut in the engine routes through
   * [[Scratch.ScratchOps.scratchCheckpoint]] instead of calling
   * `Dataset.localCheckpoint` directly, so the durability of scratch
-  * state is ONE deployment knob rather than 70 hard-coded choices.
+  * state is ONE deployment knob rather than 70 hard-coded choices,
+  * and [[scoped]] decides when a cut's storage is freed: a query or
+  * build that cuts runs in a scope, and the scope releases every cut
+  * the body made when it exits. Kernels take no release callback.
+  * The only explicit releases left are the one-round-behind frees
+  * inside iterative loops, which bound storage while the loop still
+  * runs.
   *
   * Default (`spark.graft.checkpoint.reliable=false`) is
   * `localCheckpoint`: blocks live in executor storage
@@ -49,14 +56,12 @@ import org.apache.spark.sql.DataFrame
   * automatically if unset, which is only appropriate in local mode),
   * surviving executor loss at the price of one write+read per cut.
   * Deployments on preemptible fleets set this; deployments on stable
-  * fleets keep the default. Checkpoint files are deleted
-  * deterministically when the kernels release superseded cuts
-  * (CheckpointBridge.release cleans reliable checkpoint files along
-  * with the cache blocks), so the checkpoint directory stays bounded
-  * by the release-one-round-behind discipline; cuts that are never
-  * released fall back to the ContextCleaner when
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` ([[Session]]
-  * sets it in reliable mode) or JVM exit.
+  * fleets keep the default. A release deletes a reliable cut's
+  * checkpoint files along with its cache blocks, so the checkpoint
+  * directory stays bounded by the scopes and the one-round-behind
+  * loops; cuts made outside any scope fall back to the ContextCleaner
+  * when `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+  * ([[Session]] sets it in reliable mode) or JVM exit.
   *
   * [[Session]] exposes the knob as `SPARK_GRAFT_RELIABLE_CKPT=true` so
   * the constrained-heap gate can price reliable mode at the 100x tier.
@@ -107,13 +112,54 @@ object Scratch {
     try body(d.toString) finally deleteTree(d)
   }
 
+  /** The cuts each open [[scoped]] on this thread has recorded,
+    * innermost first. A plain (not inheritable) ThreadLocal, so a
+    * worker thread never joins the scope of the thread that made it. */
+  private val openScopes =
+    new ThreadLocal[List[mutable.ArrayBuffer[DataFrame]]] {
+      override def initialValue() = Nil
+    }
+
+  /** Run `body` and free every lineage cut it made.
+    *
+    * Every [[ScratchOps.scratchCheckpoint]] on this thread while `body`
+    * runs is recorded; on exit, normal or by exception, each recorded
+    * cut is released (cache blocks and reliable checkpoint files). The
+    * one exception is the frame `body` returns when that frame is
+    * itself a recorded cut: it survives, and is handed to the
+    * enclosing scope if there is one. So a body that cuts must return
+    * an already-MATERIALIZED cut (an eager `scratchCheckpoint(true)`,
+    * or a lazy cut the body already forced) or a value that holds no
+    * frame at all: a lazy frame built on a released cut cannot be
+    * recomputed.
+    *
+    * A scope never cuts or runs anything itself, so wrapping a body
+    * adds no job and leaves its plan unchanged. Releasing a cut twice
+    * is harmless, so a loop may still free superseded rounds early. */
+  def scoped[T](body: => T): T = {
+    val outer = openScopes.get
+    val cuts = mutable.ArrayBuffer[DataFrame]()
+    openScopes.set(cuts :: outer)
+    var result: AnyRef = null
+    try { val r = body; result = r.asInstanceOf[AnyRef]; r }
+    finally {
+      openScopes.set(outer)
+      val (kept, freed) = cuts.partition(_ eq result)
+      freed.foreach(CheckpointBridge.release)
+      outer.headOption.foreach(_ ++= kept)
+    }
+  }
+
   /** A one-time artifact per key, built on first use under the
     * [[Scratch]] monitor and dropped by [[cleanup]]. A failed build
-    * caches nothing; a build may use another memo. */
+    * caches nothing; a build may use another memo. Each build runs
+    * in a [[scoped]] body, so the cuts it makes are freed when it
+    * returns: memo values are paths, versions, schemas or driver
+    * arrays, never frames. */
   final class Memo[K, V] private[Scratch] () {
     private val cache = mutable.Map[K, V]()
     def apply(key: K)(build: => V): V = Scratch.synchronized {
-      cache.getOrElse(key, { val v = build; cache(key) = v; v })
+      cache.getOrElse(key, { val v = scoped(build); cache(key) = v; v })
     }
     private[Scratch] def clear(): Unit = cache.clear()
   }
@@ -145,23 +191,27 @@ object Scratch {
       * lazy cuts, and evicting a caller's independently-cached
       * identical plan on unpersist): eager cuts unpersist as soon as
       * the files are written; lazy cuts stay cached (spillable) until
-      * the kernel's existing CheckpointBridge.release discipline
-      * frees blocks AND checkpoint files together. */
+      * a release frees blocks AND checkpoint files together.
+      *
+      * The cut is recorded in the innermost open [[scoped]] body on
+      * this thread, which frees it on exit. */
     def scratchCheckpoint(eager: Boolean = true): DataFrame = {
       val spark = df.sparkSession
       val reliable = java.lang.Boolean.parseBoolean(
         spark.conf.get(Scratch.ReliableConf, "false"))
-      if (reliable) {
-        if (spark.sparkContext.getCheckpointDir.isEmpty) {
-          spark.sparkContext.setCheckpointDir(
-            Files.createTempDirectory("graft_ckpt")
-              .toString)
+      val cut =
+        if (reliable) {
+          if (spark.sparkContext.getCheckpointDir.isEmpty) {
+            spark.sparkContext.setCheckpointDir(
+              Files.createTempDirectory("graft_ckpt")
+                .toString)
+          }
+          CheckpointBridge.reliableCheckpoint(df, eager)
+        } else {
+          df.localCheckpoint(eager)
         }
-        org.apache.spark.sql.graft.CheckpointBridge
-          .reliableCheckpoint(df, eager)
-      } else {
-        df.localCheckpoint(eager)
-      }
+      openScopes.get.headOption.foreach(_ += cut)
+      cut
     }
   }
 }

@@ -34,7 +34,7 @@ object Session {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config(Scratch.ReliableConf, reliable)
       // reliable mode writes real checkpoint files; released cuts are
-      // cleaned deterministically (CheckpointBridge.release), and this
+      // cleaned deterministically (Scratch.scoped), and this
       // lets the ContextCleaner reclaim any cut that outlives its
       // Dataset so a full-registry run's checkpoint dir stays bounded
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", reliable)

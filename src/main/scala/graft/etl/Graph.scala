@@ -98,20 +98,15 @@ object Graph {
     * into the node vector once (one broadcast-able join), then each
     * round is one edge equi-join + map-side-combined groupBy.
     *
-    * @param seeds single-column frame of seed node ids
-    * @param onCheckpoint called with every intermediate checkpoint
-    *              INCLUDING the returned frame — release after the
-    *              materializing action (the [[hits]] contract) */
+    * @param seeds single-column frame of seed node ids */
   def personalizedPageRank(edges: DataFrame, nodes: DataFrame,
-                           seeds: DataFrame, iterations: Int = 5,
-                           onCheckpoint: DataFrame => Unit = _ => ())
+                           seeds: DataFrame, iterations: Int = 5)
   : DataFrame = {
     val nodeCol = nodes.columns.head
     val outw = edges.groupBy("src").agg(sum("w").as("outw"))
     val e = edges.join(outw, "src")
       .select(col("src"), col("dst"), col("w"), col("outw"))
       .scratchCheckpoint(eager = false)
-    onCheckpoint(e)
     val seedSet = seeds.select(col(seeds.columns.head).as("node"))
       .distinct().withColumn("is_seed", lit(1L))
     val nodesSeeded = nodes.select(col(nodeCol).as("node"))
@@ -119,7 +114,6 @@ object Graph {
       .select(col("node"), coalesce(col("is_seed"), lit(0L))
         .as("is_seed"))
       .scratchCheckpoint(eager = false)
-    onCheckpoint(nodesSeeded)
     var ranks = nodesSeeded.select(col("node"),
       (col("is_seed") * lit(150000L)).as("rank_micro"))
     for (_ <- 1 to iterations) {
@@ -136,7 +130,6 @@ object Graph {
             expr("85 * coalesce(inflow, 0L) div 100").cast("long"))
             .as("rank_micro"))
         .scratchCheckpoint(eager = false)
-      onCheckpoint(ranks)
     }
     ranks
   }
@@ -167,26 +160,22 @@ object Graph {
     * NEVER a single-partition window, which would serialize a
     * billion-node vector through one task). No per-round action: the
     * whole ladder is lazy localCheckpoints materialized by the
-    * caller's one action.
+    * caller's one action, inside the caller's [[graft.Scratch.scoped]]
+    * body, which frees them.
     *
     * @param edges (src, dst, w) BIGINT edge weights, pre-aggregated
     *              (parallel edges collapsed by the caller)
     * @param nodes single-column frame of every node id
-    * @param onCheckpoint called with every intermediate checkpoint
-    *              INCLUDING the returned hubs/auths frames — after
-    *              materializing the result, release them all via
-    *              [[org.apache.spark.sql.graft.CheckpointBridge]]
     * @return (node, hub_micro, auth_micro) one row per node
     */
-  def hits(edges: DataFrame, nodes: DataFrame, iterations: Int = 4,
-           onCheckpoint: DataFrame => Unit = _ => ()): DataFrame = {
+  def hits(edges: DataFrame, nodes: DataFrame, iterations: Int = 4)
+  : DataFrame = {
     val nodeCol = nodes.columns.head
     val outw = edges.groupBy("src").agg(sum("w").as("outw"))
     val inw = edges.groupBy("dst").agg(sum("w").as("inw"))
     val e = edges.join(outw, "src").join(inw, "dst")
       .select(col("src"), col("dst"), col("w"), col("outw"), col("inw"))
       .scratchCheckpoint(eager = false)
-    onCheckpoint(e)
     val nodesOnly = nodes.select(col(nodeCol).as("node"))
     var hubs = nodesOnly.select(col("node"),
       lit(1000000L).as("hub_micro"))
@@ -204,13 +193,11 @@ object Graph {
         .join(araw.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(col("node"), coalesce(col("raw"), lit(0L)).as("raw"))
         .scratchCheckpoint(eager = false)
-      onCheckpoint(arawAll)
       val amax = arawAll.agg(greatest(max("raw"), lit(1L)).as("mx"))
       auths = arawAll.crossJoin(broadcast(amax))
         .select(col("node"),
           expr("raw * 1000000 div mx").as("auth_micro"))
         .scratchCheckpoint(eager = false)
-      onCheckpoint(auths)
       // authority → hub half-step
       val hraw = e.join(auths.withColumnRenamed("node", "dst"), "dst")
         .select(col("src"),
@@ -220,13 +207,11 @@ object Graph {
         .join(hraw.withColumnRenamed("src", "node"), Seq("node"), "left")
         .select(col("node"), coalesce(col("raw"), lit(0L)).as("raw"))
         .scratchCheckpoint(eager = false)
-      onCheckpoint(hrawAll)
       val hmax = hrawAll.agg(greatest(max("raw"), lit(1L)).as("mx"))
       hubs = hrawAll.crossJoin(broadcast(hmax))
         .select(col("node"),
           expr("raw * 1000000 div mx").as("hub_micro"))
         .scratchCheckpoint(eager = false)
-      onCheckpoint(hubs)
     }
     hubs.join(auths, "node")
   }
@@ -276,22 +261,16 @@ object Graph {
     * that can contain a top-degree node past ~10⁵ — every social or
     * web-shaped corpus at 100 TB — is on the histogram's side of the
     * line. No per-round action: lazy localCheckpoints
-    * materialized by the caller's one action, released via
-    * `onCheckpoint`.
+    * materialized by the caller's one action, freed by the caller's
+    * [[graft.Scratch.scoped]] body.
     *
     * @param edges (src, dst) directed pairs; symmetrized, self-loops
     *              dropped and parallel edges collapsed here
-    * @param onCheckpoint called with every intermediate checkpoint
-    *              INCLUDING the returned frame — release after the
-    *              materializing action
     * @return (node, core) one row per non-isolated node
     */
-  def coreness(edges: DataFrame, iterations: Int,
-               onCheckpoint: DataFrame => Unit = _ => ()): DataFrame = {
-    val und = symmetrize(edges).scratchCheckpoint(eager = false)
-    onCheckpoint(und)
-    corenessOfUndirected(und, iterations, onCheckpoint)
-  }
+  def coreness(edges: DataFrame, iterations: Int): DataFrame =
+    corenessOfUndirected(
+      symmetrize(edges).scratchCheckpoint(eager = false), iterations)
 
   /** The canonical undirected edge set of a directed pair list:
     * long-cast, both directions, self-loops dropped, parallel edges
@@ -331,16 +310,13 @@ object Graph {
     * artifact's files. `und` is used once per round — callers that
     * pass a computed frame (not a storage-backed read) should
     * checkpoint it first, as [[coreness]] does. */
-  def corenessOfUndirected(und: DataFrame, iterations: Int,
-                           onCheckpoint: DataFrame => Unit = _ => ())
+  def corenessOfUndirected(und: DataFrame, iterations: Int)
   : DataFrame = {
     var c = und.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("c"))
       .scratchCheckpoint(eager = false)
-    onCheckpoint(c)
     for (_ <- 1 to iterations) {
       c = hIndexRound(und, c).scratchCheckpoint(eager = false)
-      onCheckpoint(c)
     }
     c
   }
@@ -365,19 +341,11 @@ object Graph {
     // Broadcasting the SCORE side instead moves only |V|-bounded
     // bytes per round and probes the edges in place, in parallel,
     // with map-side partial aggregation — no edge bytes move after
-    // the initial collapse. Deployment bound: a broadcast relation
-    // caps at 8 GB / 512M rows, i.e. ~10^8 nodes; past that set
-    // spark.graft.graph.roundJoin=shuffle_hash to shuffle the edges
-    // by join key each round instead (still no driver collect, no
-    // per-round sort at any scale); the fully staged edge layout that
-    // would avoid even that is mapped in OPTIMIZATION_r18.md (wave 2).
-    val scores = c.withColumnRenamed("node", "dst")
-    val scoreSide = und.sparkSession.conf
-      .getOption("spark.graft.graph.roundJoin").getOrElse("broadcast") match {
-      case "shuffle_hash" => scores.hint("SHUFFLE_HASH")
-      case _              => broadcast(scores)
-    }
-    val hist = und.join(scoreSide, "dst")
+    // the initial collapse. The pin holds while a broadcast relation
+    // fits (8 GB / 512M rows, i.e. ~10^8 nodes); the staged edge
+    // layout that lifts that bound is mapped in OPTIMIZATION_r18.md.
+    val hist = und.join(broadcast(c.withColumnRenamed("node", "dst")),
+        "dst")
       .groupBy(col("src"), col("c").as("cv"))
       .agg(count(lit(1)).as("k"))
     // cum over DISTINCT (src, cv) rows: the descending-score order
@@ -471,8 +439,7 @@ object Graph {
     * @return (node, c) exact coreness of the post-batch graph
     */
   def incrementalCoreness(und: DataFrame, oldScores: DataFrame,
-                          batchEdges: Long, maxRounds: Int = 32,
-                          onCheckpoint: DataFrame => Unit = _ => ())
+                          batchEdges: Long, maxRounds: Int = 32)
   : DataFrame = {
     val deg = und.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -483,7 +450,6 @@ object Graph {
         least(col("deg"),
           coalesce(col("c_old"), lit(0L)) + lit(batchEdges)).as("c"))
       .scratchCheckpoint(eager = false)
-    onCheckpoint(c)
     // node count for the wide-frontier shortcut below — one
     // node-sized job, also forces the seed checkpoint so the first
     // round's plan starts from the cut
@@ -510,7 +476,6 @@ object Graph {
         .select(col("node"), col("c").as("c_prev"),
           least(col("c"), coalesce(col("h"), col("c"))).as("c"))
         .scratchCheckpoint(eager = false)
-      onCheckpoint(step)
       // the convergence-signal count is the round's one materializing
       // action (the connectedComponents discipline)
       val changed = step.filter(col("c") =!= col("c_prev"))
@@ -553,7 +518,6 @@ object Graph {
   def commitEdges(spark: org.apache.spark.sql.SparkSession,
                   table: String, edges: DataFrame,
                   targetFiles: Int = 8): Long = {
-    import graft.Scratch.ScratchOps
     // Cut lineage between the collapse and the clustered write:
     // repartitionByRange SAMPLES its child in a separate pass to pick
     // range bounds, so a lazy collapse would run the fact-sized
@@ -561,12 +525,13 @@ object Graph {
     // adjudication measured the double-pay at ~2x build wall-clock.
     // Checkpointed, the sample and the write both read the dim-sized
     // collapsed edges.
-    val sym = symmetrize(edges).scratchCheckpoint(eager = true)
-    try graft.sources.ManifestTable.commitOverwrite(spark, table,
-      sym.repartitionByRange(targetFiles, col("src"))
-        .sortWithinPartitions("src"),
-      statsCol = Some("src"))
-    finally org.apache.spark.sql.graft.CheckpointBridge.release(sym)
+    graft.Scratch.scoped {
+      val sym = symmetrize(edges).scratchCheckpoint(eager = true)
+      graft.sources.ManifestTable.commitOverwrite(spark, table,
+        sym.repartitionByRange(targetFiles, col("src"))
+          .sortWithinPartitions("src"),
+        statsCol = Some("src"))
+    }
   }
 
   /** SERVE the committed edge artifact: the pinned (or latest)
@@ -595,15 +560,14 @@ object Graph {
   def appendEdges(spark: org.apache.spark.sql.SparkSession,
                   table: String, newEdges: DataFrame,
                   targetFiles: Int = 2): Long = {
-    import graft.Scratch.ScratchOps
     // Cut the batch collapse's lineage ONCE: without it the fold runs
     // the fact-sized distinct up to three times — the src-range probe,
     // repartitionByRange's bound-sampling pass, and the staged write
     // each re-derive a lazy symmetrize (the round-14 1000x
     // adjudication measured the un-cut fold at 2-3x this cost).
     // Checkpointed, every downstream pass reads the dim-sized edges.
-    val sym = symmetrize(newEdges).scratchCheckpoint(eager = true)
-    try {
+    graft.Scratch.scoped {
+      val sym = symmetrize(newEdges).scratchCheckpoint(eager = true)
       // The artifact side is src-range-clustered with footer stats
       // (commitEdges/compactSorted record them; appends carry their
       // own), so the anti-join only needs the files whose src range
@@ -636,7 +600,7 @@ object Graph {
           .repartitionByRange(targetFiles, col("src"))
           .sortWithinPartitions("src"),
         statsCol = Some("src"))
-    } finally org.apache.spark.sql.graft.CheckpointBridge.release(sym)
+    }
   }
 
   /** INCREMENTAL edge-artifact DELETION — [[appendEdges]]'s CDC
@@ -658,14 +622,14 @@ object Graph {
     * post-deletion graph. Returns the committed version. */
   def removeEdges(spark: org.apache.spark.sql.SparkSession,
                   table: String, doomedEdges: DataFrame): Long = {
-    import graft.Scratch.ScratchOps
     // one lineage cut: deleteMatching's shape pass + anti-join would
     // otherwise re-run the batch collapse per consumer (the
     // appendEdges economics)
-    val sym = symmetrize(doomedEdges).scratchCheckpoint(eager = true)
-    try graft.sources.ManifestTable
-      .deleteMatching(spark, table, "src", sym).version
-    finally org.apache.spark.sql.graft.CheckpointBridge.release(sym)
+    graft.Scratch.scoped {
+      val sym = symmetrize(doomedEdges).scratchCheckpoint(eager = true)
+      graft.sources.ManifestTable
+        .deleteMatching(spark, table, "src", sym).version
+    }
   }
 
   /** BUILD/COMMIT the WEIGHTED DIRECTED edge artifact — the
@@ -683,19 +647,19 @@ object Graph {
   def commitWeightedEdges(spark: org.apache.spark.sql.SparkSession,
                           table: String, edges: DataFrame,
                           targetFiles: Int = 8): Long = {
-    import graft.Scratch.ScratchOps
     // Same lineage cut as [[commitEdges]]: the caller's edge list is
     // typically a fact-sized aggregation, and repartitionByRange's
     // sampling pass would re-run it wholesale before the write does.
-    val typed = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"),
-        col("w").cast("long").as("w"))
-      .scratchCheckpoint(eager = true)
-    try graft.sources.ManifestTable.commitOverwrite(spark, table,
-      typed.repartitionByRange(targetFiles, col("src"))
-        .sortWithinPartitions("src"),
-      statsCol = Some("src"))
-    finally org.apache.spark.sql.graft.CheckpointBridge.release(typed)
+    graft.Scratch.scoped {
+      val typed = edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"),
+          col("w").cast("long").as("w"))
+        .scratchCheckpoint(eager = true)
+      graft.sources.ManifestTable.commitOverwrite(spark, table,
+        typed.repartitionByRange(targetFiles, col("src"))
+          .sortWithinPartitions("src"),
+        statsCol = Some("src"))
+    }
   }
 
   /** Synchronous label-propagation community detection (Raghavan et

@@ -213,12 +213,12 @@ object Dedup {
         lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
     // Storage hygiene: a long-lived session running dedup repeatedly
     // must not accumulate checkpoint blocks until the ContextCleaner
-    // happens to run, so the pairs checkpoint AND each superseded
-    // round's labels are released DETERMINISTICALLY via
-    // CheckpointBridge (localCheckpoint is the faster materialization
-    // — raw RDD persist, no columnar encode round-trip; measured ~0.3 s
-    // cheaper than cache()+count() on the sf0.1 bench — but exposes no
-    // public unpersist, hence the bridge).
+    // happens to run, so each superseded round's labels are released
+    // one round behind via CheckpointBridge, and the scope frees the
+    // pairs checkpoint on exit (localCheckpoint is the faster
+    // materialization — raw RDD persist, no columnar encode
+    // round-trip; measured ~0.3 s cheaper than cache()+count() on the
+    // sf0.1 bench — but exposes no public unpersist, hence the bridge).
     import org.apache.spark.sql.graft.CheckpointBridge
     // distinct: labels are insensitive to parallel edges, but every
     // round's propagation join fans out once per duplicate pair — on a
@@ -226,10 +226,10 @@ object Dedup {
     // dominant per-round term (measured: graph_bfs_depth went 37 s →
     // bounded at the 100× rehearsal from the same collapse). One
     // up-front shuffle over the pair set buys rounds × smaller joins.
-    val p = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .distinct()
-      .scratchCheckpoint(true)
-    try {
+    graft.Scratch.scoped {
+      val p = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+        .distinct()
+        .scratchCheckpoint(true)
       val edges = p
         .union(p.select(col("dst").as("src"), col("src").as("dst")))
       var labels = edges.groupBy(col("src").as("id"))
@@ -254,7 +254,7 @@ object Dedup {
         i += 1
       }
       labels // its checkpoint is materialized; never recomputes from p
-    } finally CheckpointBridge.release(p)
+    }
   }
 
   /** Corpus-level dedup decision: cluster near-dup pairs, keep the

@@ -90,63 +90,64 @@ object QualityModel {
   def trainLogReg(labeled: DataFrame, iters: Int, lr: Double): Fit = {
     val spark = labeled.sparkSession
     import spark.implicits._
-    val data = labeled.select(col("xs"), col("y"))
-      .scratchCheckpoint(true)
-    val d = data.select(size(col("xs"))).head().getInt(0)
-    // The GD inner loop runs as a typed treeAggregate over the
-    // checkpointed feature frame, NOT as per-iteration DataFrame
-    // aggregates: each Catalyst formulation re-entered the weight
-    // vector as literals, so every one of the `iters` steps paid a
-    // full analyze/optimize/plan pass on the driver — measured
-    // round-18 at ~150 ms/iteration of pure planning against ~30 ms
-    // of compute (69 jobs, 1.0 s task-time, 5.7 s wall). The typed
-    // loop submits one job per iteration with zero planning. This is
-    // the justified-typed-path precedent (the LSH bucket loop):
-    // driver-sequenced model training whose per-row arithmetic
-    // Catalyst re-derives identically every round. Determinism is
-    // UNCHANGED — same left-to-right double fold for z (the
-    // aggregate(zip_with(...)) order), same Math.exp/log/floor, same
-    // ⌊·1e6⌋ Long quantization BEFORE the commutative cross-row sum —
-    // so the weight trajectory is bit-identical (the frozen VALUES
-    // oracle and the gate's loss-descent leg pin it).
-    val vecs = data.as[(Seq[Double], Double)].rdd
-      .map { case (xs, y) => (xs.toArray, y) }
-    val n = data.count()
-    var w = Array.fill(d)(0.0)
-    val losses = Seq.newBuilder[Double]
-    var it = 0
-    while (it < iters) {
-      val wCur = w // stable capture for the closure
-      val row = vecs.treeAggregate(new Array[Long](d + 1))(
-        seqOp = (acc, r) => {
-          val (xs, y) = r
-          var z = 0.0
-          var j = 0
-          while (j < d) { z += xs(j) * wCur(j); j += 1 }
-          val p = 1.0 / (1.0 + math.exp(-z))
-          j = 0
-          while (j < d) {
-            acc(j) += math.floor((p - y) * xs(j) * 1e6).toLong
-            j += 1
-          }
-          acc(d) += math.floor(-(y * math.log(p) +
-            (1.0 - y) * math.log(1.0 - p)) * 1e6).toLong
-          acc
-        },
-        combOp = (a, b) => {
-          var j = 0
-          while (j <= d) { a(j) += b(j); j += 1 }
-          a
-        })
-      w = Array.tabulate(d)(j => w(j) - lr * (row(j) / 1e6) / n)
-      losses += row(d) / 1e6 / n
-      it += 1
+    // the Fit carries only driver arrays, so the scope frees the
+    // training checkpoint deterministically on return rather than
+    // waiting on the ContextCleaner
+    graft.Scratch.scoped {
+      val data = labeled.select(col("xs"), col("y"))
+        .scratchCheckpoint(true)
+      val d = data.select(size(col("xs"))).head().getInt(0)
+      // The GD inner loop runs as a typed treeAggregate over the
+      // checkpointed feature frame, NOT as per-iteration DataFrame
+      // aggregates: each Catalyst formulation re-entered the weight
+      // vector as literals, so every one of the `iters` steps paid a
+      // full analyze/optimize/plan pass on the driver — measured
+      // round-18 at ~150 ms/iteration of pure planning against ~30 ms
+      // of compute (69 jobs, 1.0 s task-time, 5.7 s wall). The typed
+      // loop submits one job per iteration with zero planning. This is
+      // the justified-typed-path precedent (the LSH bucket loop):
+      // driver-sequenced model training whose per-row arithmetic
+      // Catalyst re-derives identically every round. Determinism is
+      // UNCHANGED — same left-to-right double fold for z (the
+      // aggregate(zip_with(...)) order), same Math.exp/log/floor, same
+      // ⌊·1e6⌋ Long quantization BEFORE the commutative cross-row sum —
+      // so the weight trajectory is bit-identical (the frozen VALUES
+      // oracle and the gate's loss-descent leg pin it).
+      val vecs = data.as[(Seq[Double], Double)].rdd
+        .map { case (xs, y) => (xs.toArray, y) }
+      val n = data.count()
+      var w = Array.fill(d)(0.0)
+      val losses = Seq.newBuilder[Double]
+      var it = 0
+      while (it < iters) {
+        val wCur = w // stable capture for the closure
+        val row = vecs.treeAggregate(new Array[Long](d + 1))(
+          seqOp = (acc, r) => {
+            val (xs, y) = r
+            var z = 0.0
+            var j = 0
+            while (j < d) { z += xs(j) * wCur(j); j += 1 }
+            val p = 1.0 / (1.0 + math.exp(-z))
+            j = 0
+            while (j < d) {
+              acc(j) += math.floor((p - y) * xs(j) * 1e6).toLong
+              j += 1
+            }
+            acc(d) += math.floor(-(y * math.log(p) +
+              (1.0 - y) * math.log(1.0 - p)) * 1e6).toLong
+            acc
+          },
+          combOp = (a, b) => {
+            var j = 0
+            while (j <= d) { a(j) += b(j); j += 1 }
+            a
+          })
+        w = Array.tabulate(d)(j => w(j) - lr * (row(j) / 1e6) / n)
+        losses += row(d) / 1e6 / n
+        it += 1
+      }
+      Fit(w, losses.result(), n)
     }
-    // the Fit carries only driver arrays; release the training
-    // checkpoint deterministically rather than waiting on the
-    // ContextCleaner (same discipline as the iterative kernels)
-    org.apache.spark.sql.graft.CheckpointBridge.release(data)
-    Fit(w, losses.result(), n)
   }
 
   /** Accuracy of sign(w·x) against `y` — exact integer counting. */

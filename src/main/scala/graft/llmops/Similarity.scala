@@ -104,9 +104,8 @@ object Similarity {
     * at most numCells × dim doubles in the plan, so it needs no cut;
     * an already-cut LogicalRDD (the iterations = 0 path returns the
     * init checkpoint) needs no SECOND cut; anything else keeps the
-    * eager checkpoint. [[org.apache.spark.sql.graft.CheckpointBridge.release]]
-    * is a no-op on non-checkpoint frames, so callers' release
-    * discipline is unchanged. */
+    * eager checkpoint. Only a real cut is recorded in the caller's
+    * [[graft.Scratch.scoped]] body, so an uncut model frees nothing. */
   private def modelCut(df: DataFrame): DataFrame =
     // optimizedPlan, not analyzed: the local model comes back as
     // Project(LocalRelation) (the toDF renames), which the optimizer
@@ -757,42 +756,41 @@ object Similarity {
       // partitions, and every consumer stage of the Lloyd round
       // inherited the 32-task layout (profiled on sim_topk_pq_served).
       .coalesce(1)
-    var cents: DataFrame =
-      if (iterations >= 1) init0.scratchCheckpoint(true) else init0
-    val init = cents
-    try for (_ <- 1 to iterations) {
-      // NOT carrySubv: timing is indistinguishable at this scale (both
-      // within the ±1 s scheduler noise of this many-small-stage
-      // query), and min over a struct with an array member copies the
-      // array per combine step — prefer the copy-free argmin and the
-      // join-back, since training runs on a bounded sample at scale
-      val assigned = assignPqCodes(subrows, cents)
-      val means = assigned
-        .join(subrows, Seq("vid", "s"))
-        .select(col("s"), col("code_id"),
-          posexplode(col("subv")).as(Seq("pos", "x")))
-        .groupBy("s", "code_id", "pos")
-        .agg(avg(col("x").cast("double")).as("mn"))
-        .collect()
-      val prev: Map[(Int, Int), Seq[Double]] = cents.collect()
-        .map(r => (r.getAs[Int]("s"), r.getAs[Int]("code_id")) ->
-          r.getSeq[Number](2).map(_.doubleValue()).toSeq).toMap
-      val updated = means.groupBy(r =>
-        (r.getAs[Int]("s"), r.getAs[Int]("code_id"))).map {
-        case (key, rows) => key -> rows.sortBy(_.getAs[Int]("pos"))
-          .map(_.getAs[Double]("mn")).toSeq
+    graft.Scratch.scoped {
+      var cents: DataFrame =
+        if (iterations >= 1) init0.scratchCheckpoint(true) else init0
+      for (_ <- 1 to iterations) {
+        // NOT carrySubv: timing is indistinguishable at this scale (both
+        // within the ±1 s scheduler noise of this many-small-stage
+        // query), and min over a struct with an array member copies the
+        // array per combine step — prefer the copy-free argmin and the
+        // join-back, since training runs on a bounded sample at scale
+        val assigned = assignPqCodes(subrows, cents)
+        val means = assigned
+          .join(subrows, Seq("vid", "s"))
+          .select(col("s"), col("code_id"),
+            posexplode(col("subv")).as(Seq("pos", "x")))
+          .groupBy("s", "code_id", "pos")
+          .agg(avg(col("x").cast("double")).as("mn"))
+          .collect()
+        val prev: Map[(Int, Int), Seq[Double]] = cents.collect()
+          .map(r => (r.getAs[Int]("s"), r.getAs[Int]("code_id")) ->
+            r.getSeq[Number](2).map(_.doubleValue()).toSeq).toMap
+        val updated = means.groupBy(r =>
+          (r.getAs[Int]("s"), r.getAs[Int]("code_id"))).map {
+          case (key, rows) => key -> rows.sortBy(_.getAs[Int]("pos"))
+            .map(_.getAs[Double]("mn")).toSeq
+        }
+        cents = prev.keys.toSeq.sorted.map { key =>
+          (key._1, key._2, updated.getOrElse(key, prev(key)))
+        }.toDF("s", "code_id", "centroid")
       }
-      cents = prev.keys.toSeq.sorted.map { key =>
-        (key._1, key._2, updated.getOrElse(key, prev(key)))
-      }.toDF("s", "code_id", "centroid")
+      // the init checkpoint is superseded by the driver-local model the
+      // moment one Lloyd round ran (with iterations = 0 nothing was
+      // cut); the scope frees it, also when a round fails (executor
+      // loss, cancelled job group)
+      cents
     }
-    // the init checkpoint is superseded by the driver-local model the
-    // moment one Lloyd round ran; with iterations = 0 it IS the model.
-    // finally: a failed round (executor loss, cancelled job group)
-    // must not leak the checkpoint for the session lifetime.
-    finally if (iterations >= 1)
-      org.apache.spark.sql.graft.CheckpointBridge.release(init)
-    cents
   }
 
   /** Nearest-centroid (squared-L2) code per (vector, subspace): one
@@ -999,25 +997,25 @@ object Similarity {
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    val cents = modelCut(trainPqCodebooksImpl(corpus, idCol, vecCol, m,
-      codebookK, iterations, dim))
-    // the serve path reads the artifact back from disk, so the build's
-    // model checkpoint releases as soon as both writes land
-    // File sizing on the artifact writes (guide §6): a bare write
-    // lands one near-empty file PER PARTITION of the writing plan
-    // (profiled: 32 files for an 8 000-row codes table, ~0.18 s of
-    // writer setup each, and every later serve scan pays the 32
-    // splits again). The CODEBOOK side is bounded model state
-    // (m × codebookK rows at any corpus scale) — a narrow coalesce(1)
-    // writes it as one file with no shuffle. The CODES side is
-    // corpus-sized, so it gets a REBALANCE hint instead: the
-    // AQE-coalesced round-robin exchange sizes output files to the
-    // advisory partition size at ANY scale — one file here,
-    // ~advisory-sized files for a 100 TB codes table — with no tuned
-    // constant. The index has no within-file order contract (codes
-    // are hash-joined on (s, code_id)), so the layout is free to
-    // rebalance.
-    try {
+    graft.Scratch.scoped {
+      val cents = modelCut(trainPqCodebooksImpl(corpus, idCol, vecCol, m,
+        codebookK, iterations, dim))
+      // the serve path reads the artifact back from disk, so the scope
+      // frees the build's model checkpoint as soon as both writes land
+      // File sizing on the artifact writes (guide §6): a bare write
+      // lands one near-empty file PER PARTITION of the writing plan
+      // (profiled: 32 files for an 8 000-row codes table, ~0.18 s of
+      // writer setup each, and every later serve scan pays the 32
+      // splits again). The CODEBOOK side is bounded model state
+      // (m × codebookK rows at any corpus scale) — a narrow coalesce(1)
+      // writes it as one file with no shuffle. The CODES side is
+      // corpus-sized, so it gets a REBALANCE hint instead: the
+      // AQE-coalesced round-robin exchange sizes output files to the
+      // advisory partition size at ANY scale — one file here,
+      // ~advisory-sized files for a 100 TB codes table — with no tuned
+      // constant. The index has no within-file order contract (codes
+      // are hash-joined on (s, code_id)), so the layout is free to
+      // rebalance.
       cents.coalesce(1).write.mode("overwrite")
         .parquet(s"$path/codebooks")
       assignPqCodes(
@@ -1026,7 +1024,7 @@ object Similarity {
         cents)
         .hint("rebalance")
         .write.mode("overwrite").parquet(s"$path/codes")
-    } finally org.apache.spark.sql.graft.CheckpointBridge.release(cents)
+    }
   }
 
   /** VERSIONED index build: commit the [[buildPqIndex]] artifact as
@@ -1050,34 +1048,35 @@ object Similarity {
     val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    val cents = modelCut(trainPqCodebooksImpl(corpus, idCol, vecCol, m,
-      codebookK, iterations, dim))
-    val codes = assignPqCodes(
-      corpus.select(col(idCol).as("vid"),
-        posexplode(subvectors(col(vecCol), m, sub)).as(Seq("s", "subv"))),
-      cents)
-    val centroidType = cents.schema("centroid").dataType
-    // vid keeps the CALLER'S id type (string doc ids survive — a cast
-    // to long would silently null every code row and the serve path
-    // would return empty top-ks); the codebook rows' null vid adopts it
-    val vidType = codes.schema("vid").dataType
-    // File sizing per side, the [[buildPqIndex]] discipline: the
-    // bounded codebook rows coalesce narrowly to one partition, the
-    // corpus-sized code rows REBALANCE so AQE sizes their files to
-    // the advisory partition size at any scale. Without it the commit
-    // staged one near-empty file per partition of the writing plan.
-    val art = cents.select(lit("codebook").as("kind"),
-        lit(null).cast(vidType).as("vid"), col("s"), col("code_id"),
-        col("centroid"))
-      .coalesce(1)
-      .unionByName(codes.select(lit("code").as("kind"),
-        col("vid"), col("s"), col("code_id"),
-        lit(null).cast(centroidType).as("centroid"))
-        .hint("rebalance"))
-    // readers serve from the COMMITTED files, so the build's model
-    // checkpoint releases the moment the commit lands
-    try graft.sources.ManifestTable.commitOverwrite(spark, table, art)
-    finally org.apache.spark.sql.graft.CheckpointBridge.release(cents)
+    graft.Scratch.scoped {
+      val cents = modelCut(trainPqCodebooksImpl(corpus, idCol, vecCol, m,
+        codebookK, iterations, dim))
+      val codes = assignPqCodes(
+        corpus.select(col(idCol).as("vid"),
+          posexplode(subvectors(col(vecCol), m, sub)).as(Seq("s", "subv"))),
+        cents)
+      val centroidType = cents.schema("centroid").dataType
+      // vid keeps the CALLER'S id type (string doc ids survive — a cast
+      // to long would silently null every code row and the serve path
+      // would return empty top-ks); the codebook rows' null vid adopts it
+      val vidType = codes.schema("vid").dataType
+      // File sizing per side, the [[buildPqIndex]] discipline: the
+      // bounded codebook rows coalesce narrowly to one partition, the
+      // corpus-sized code rows REBALANCE so AQE sizes their files to
+      // the advisory partition size at any scale. Without it the commit
+      // staged one near-empty file per partition of the writing plan.
+      val art = cents.select(lit("codebook").as("kind"),
+          lit(null).cast(vidType).as("vid"), col("s"), col("code_id"),
+          col("centroid"))
+        .coalesce(1)
+        .unionByName(codes.select(lit("code").as("kind"),
+          col("vid"), col("s"), col("code_id"),
+          lit(null).cast(centroidType).as("centroid"))
+          .hint("rebalance"))
+      // readers serve from the COMMITTED files, so the scope frees the
+      // build's model checkpoint the moment the commit lands
+      graft.sources.ManifestTable.commitOverwrite(spark, table, art)
+    }
   }
 
   /** SERVE top-k from a [[commitPqIndex]] version: the pinned (or

@@ -17,18 +17,24 @@ import org.apache.spark.storage.StorageLevel
   * accumulate superseded round states in executor storage for the
   * lifetime of the session. Same bridge technique as
   * [[ColumnBridge]]: an `org.apache.spark.sql` subpackage reaches the
-  * `private[sql]` execution node. */
+  * `private[sql]` execution node.
+  *
+  * Callers do not release cuts themselves: `graft.Scratch.scoped`
+  * releases every cut its body made when the body exits. The only
+  * direct [[release]] calls outside Scratch are the one-round-behind
+  * frees inside iterative loops (connected components, BPE training,
+  * BFS and SSSP), and `SessionSpec` pins that list. */
 object CheckpointBridge {
 
   /** Unpersist the RDD behind a checkpointed Dataset (non-blocking;
     * no-op when the plan is not a checkpoint product), and — when the
     * RDD was RELIABLY checkpointed — delete its checkpoint files too,
     * so a long-lived reliable-mode session's checkpoint directory
-    * stays bounded by the kernels' release-one-round-behind
-    * discipline instead of growing one directory per cut until JVM
-    * exit. Only call on datasets whose contents are no longer needed —
-    * a checkpoint has TRUNCATED lineage, so a released state cannot be
-    * recomputed in either mode. */
+    * stays bounded by the scopes and loops that release its cuts
+    * instead of growing one directory per cut until JVM exit.
+    * Idempotent. Only call on datasets whose contents are no longer
+    * needed — a checkpoint has TRUNCATED lineage, so a released state
+    * cannot be recomputed in either mode. */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case l: LogicalRDD =>
       l.rdd.unpersist(blocking = false)

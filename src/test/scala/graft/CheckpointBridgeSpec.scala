@@ -77,13 +77,15 @@ class CheckpointBridgeSpec extends AnyFunSuite {
         s"found ${fresh.size} (edges or superseded rounds leaked)")
   }
 
-  // Round 11 extended the release-one-behind discipline beyond the
-  // iterative kernels: queries that checkpoint shared intermediates
-  // (reco's capped seen-list, the versioned PQ build's corpus + model
-  // state) now end with one eager RESULT checkpoint and release
-  // everything else. The bound stays 1 for all of them.
+  // Queries that checkpoint shared intermediates (reco's capped
+  // seen-list, the versioned PQ build's corpus + model state) or run
+  // an iterative kernel (pagerank, label propagation, MMR's selection
+  // rounds, the IVF-PQ build) end with one eager RESULT checkpoint inside a
+  // Scratch.scoped body, which frees everything else. The bound
+  // stays 1 for all of them.
   Seq("reco_item_item", "reco_user_topn", "reco_eval_hitrate",
-    "sim_topk_pq_versioned").foreach { name =>
+    "sim_topk_pq_versioned", "graph_pagerank", "graph_label_propagation",
+    "sim_mmr_rerank", "sim_topk_ivfpq_gate").foreach { name =>
     test(s"$name leaves at most its final result checkpoint persisted") {
       val q = Queries.all.find(_.name == name).get
       val fresh = newlyPersisted {

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.Scratch.ScratchOps
 
 /** The scratch-state lifecycle ([[Scratch.dir]], [[Scratch.memo]],
-  * [[Scratch.cleanup]]) and the one-knob scratch-checkpoint contract
+  * [[Scratch.cleanup]]), the lifetime of lineage cuts
+  * ([[Scratch.scoped]]) and the one-knob scratch-checkpoint contract
   * (graft.Scratch). Reliable
   * mode must be a pure durability swap — same results, bit for bit —
   * with the checkpoint actually landing in the checkpoint directory
@@ -20,6 +21,68 @@ class ScratchSpec extends AnyFunSuite {
   private def edges = Seq(
     (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L),
     (6L, 7L)).toDF("src", "dst")
+
+  /** RDDs persisted by `body` and still persisted after it. */
+  private def leftPersisted(body: => Unit): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    body
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  test("scoped releases every cut its body made, on return and when " +
+    "the body throws") {
+    assert(leftPersisted {
+      val n = Scratch.scoped {
+        val eager = edges.scratchCheckpoint(eager = true)
+        val lazyCut = eager.filter(col("src") < 4)
+          .scratchCheckpoint(eager = false)
+        lazyCut.count()
+      }
+      assert(n == 4)
+    }.isEmpty, "cuts survived a normal scope exit")
+    assert(leftPersisted {
+      intercept[IllegalStateException](Scratch.scoped {
+        assert(edges.scratchCheckpoint(eager = true).count() == 7)
+        throw new IllegalStateException("body failed")
+      })
+    }.isEmpty, "cuts survived a scope exit by exception")
+  }
+
+  test("scoped keeps the materialized cut it returns, and a nested " +
+    "scope hands that cut to the outer scope, which frees it") {
+    var kept: org.apache.spark.sql.DataFrame = null
+    val fresh = leftPersisted {
+      kept = Scratch.scoped {
+        edges.scratchCheckpoint(eager = true)
+          .filter(col("src") < 4).scratchCheckpoint(eager = true)
+      }
+    }
+    assert(fresh.size == 1, s"expected only the returned cut, got $fresh")
+    assert(kept.count() == 4, "the returned cut no longer collects")
+    org.apache.spark.sql.graft.CheckpointBridge.release(kept)
+
+    assert(leftPersisted {
+      val total = Scratch.scoped {
+        val inner = leftPersisted {
+          kept = Scratch.scoped {
+            edges.scratchCheckpoint(eager = true)
+              .filter(col("src") < 4).scratchCheckpoint(eager = true)
+          }
+        }
+        assert(inner.size == 1, s"inner scope kept $inner")
+        kept.count() // still materialized inside the outer scope
+      }
+      assert(total == 4)
+    }.isEmpty, "the outer scope did not free the cut handed to it")
+  }
+
+  test("a memo build is a scope: its cuts are freed when it returns") {
+    val m = Scratch.memo[String, Long]()
+    assert(leftPersisted {
+      assert(m("k")(edges.scratchCheckpoint(eager = true).count()) == 7)
+    }.isEmpty, "a memo build left its cut persisted")
+    Scratch.cleanup()
+  }
 
   test("reliable mode is a pure durability swap: an iterative kernel " +
     "returns identical results under both modes") {
@@ -104,6 +167,18 @@ class ScratchSpec extends AnyFunSuite {
       org.apache.spark.sql.graft.CheckpointBridge.release(prev)
       assert(ckptDirs() == 0,
         "final release should reclaim the last checkpoint dir")
+      // the same rounds in a scope: its exit reclaims every dir,
+      // including one a loop already released (release is idempotent)
+      val n = Scratch.scoped {
+        val first = edges.scratchCheckpoint(eager = true)
+        val second = first.filter(col("src") < 4)
+          .scratchCheckpoint(eager = true)
+        org.apache.spark.sql.graft.CheckpointBridge.release(first)
+        second.count()
+      }
+      assert(n == 4)
+      assert(ckptDirs() == 0,
+        s"scope exit left ${ckptDirs()} rdd checkpoint dirs")
     } finally spark.conf.set(Scratch.ReliableConf, "false")
   }
 

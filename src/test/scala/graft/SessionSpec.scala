@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (in the spirit of PlanGuardrailSpec's registry-wide guards): only
   * [[Session]] builds a session or sets the nanos read conf, so no
   * main drifts onto its own engine and no read site mutates the
-  * session; only [[Scratch]] makes and deletes scratch dirs. Plus the
-  * env parsing every main shares. */
+  * session; only [[Scratch]] makes and deletes scratch dirs and frees
+  * lineage cuts (outside the one-round-behind loops). Plus the env
+  * parsing every main shares. */
 class SessionSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -70,6 +71,54 @@ class SessionSpec extends AnyFunSuite {
     try assert(strays(root, "Files.walk", Set("graft/Scratch.scala")) ==
       Seq(s"$stray:2"))
     finally Scratch.deleteTree(root)
+  }
+
+  // lineage cuts are freed by Scratch.scoped; the only explicit
+  // releases left are the one-round-behind frees inside iterative
+  // loops (connected components, BPE training, BFS and SSSP), which
+  // bound storage while the loop still runs
+  private val releaseOwners = Map("graft/Scratch.scala" -> 1,
+    "graft/llmops/Dedup.scala" -> 1, "graft/llmops/Bpe.scala" -> 2,
+    "graft/QueriesRelational.scala" -> 2)
+
+  /** Owner-file counts of `CheckpointBridge.release` under `root` that
+    * differ from [[releaseOwners]], plus every stray site. */
+  private def releaseDrift(root: Path): Seq[String] = {
+    val all = sites(root, "CheckpointBridge.release")
+    val counts = releaseOwners.toSeq.flatMap { case (owner, n) =>
+      val found = all.count(_.startsWith(s"${root.resolve(owner)}:"))
+      if (found == n) None else Some(s"$owner: $found sites, expected $n")
+    }
+    counts ++ strays(root, "CheckpointBridge.release", releaseOwners.keySet)
+  }
+
+  test("src/main releases lineage cuts only through Scratch.scoped and " +
+    "the one-round-behind loops; kernels take no onCheckpoint") {
+    val drift = releaseDrift(mainRoot)
+    assert(drift.isEmpty, "free cuts by wrapping the body in " +
+      s"Scratch.scoped:\n${drift.mkString("\n")}")
+    val callbacks = sites(mainRoot, "onCheckpoint")
+    assert(callbacks.isEmpty, callbacks.mkString("\n"))
+  }
+
+  test("negative: the release guard flags a planted stray and an extra " +
+    "owner site") {
+    val root = Files.createTempDirectory("graft_guard")
+    val release = "  CheckpointBridge.release(df)\n"
+    releaseOwners.foreach { case (owner, n) =>
+      val f = root.resolve(owner)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, "object P {\n" + release * n + "}\n")
+    }
+    try {
+      assert(releaseDrift(root).isEmpty)
+      val stray = root.resolve("graft/Planted.scala")
+      Files.writeString(stray, "object P {\n" + release + "}\n")
+      val bpe = root.resolve("graft/llmops/Bpe.scala")
+      Files.writeString(bpe, "object P {\n" + release * 3 + "}\n")
+      assert(releaseDrift(root).toSet == Set(
+        "graft/llmops/Bpe.scala: 3 sites, expected 2", s"$stray:2"))
+    } finally Scratch.deleteTree(root)
   }
 
   test("negative: the scanner finds a planted site") {
