@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.ControlFile.{jsonString => jstr}
+
 /** Pure formatting for [[Bench]]'s two artifacts, factored out so the
   * format CONTRACT is unit-testable without a Spark run: the stdout
   * headline must stay parseable inside a bounded (2000-char) log
@@ -45,16 +47,6 @@ private[graft] object BenchFormat {
     * artifact needs, and short numbers keep the headline small. */
   def d3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-  /** JSON string escape — the sf dir is environment-controlled (a
-    * Windows path or a quote in it must not corrupt the artifact). */
-  def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   def minMap(rs: Seq[Row]): String =
     rs.map(r => jstr(r.name) + ":" + d3(r.min))

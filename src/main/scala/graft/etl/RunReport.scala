@@ -1,7 +1,6 @@
 package graft.etl
 
-import java.nio.charset.StandardCharsets
-
+import graft.sources.ControlFile
 import org.apache.spark.sql.SparkSession
 
 /** The run-level ops artifact: one JSON document per pipeline run tying
@@ -14,9 +13,8 @@ import org.apache.spark.sql.SparkSession
   * ops checklist asks operators to eyeball row counts and failure logs
   * daily, guide p.32): here a run's health is a single machine-readable
   * file next to the data it describes, so an orchestrator alert is a
-  * file read, not a log grep. Driver-side write of a few hundred bytes
-  * through the Hadoop FS API — works against any storage scheme, no
-  * Spark job. */
+  * file read, not a log grep. Written by [[graft.sources.ControlFile]]:
+  * a few hundred bytes on the driver, no Spark job. */
 object RunReport {
 
   private def jsonValue(v: Any): String = v match {
@@ -26,15 +24,7 @@ object RunReport {
     case n: Double =>
       if (n.isNaN || n.isInfinite) "null" else n.toString
     case b: Boolean => b.toString
-    case other => "\"" + other.toString.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    case other => ControlFile.jsonString(other.toString)
   }
 
   /** Contract metrics are the `expect_<rule>` violation counts emitted
@@ -87,17 +77,14 @@ object RunReport {
       s""""contracts":$contracts,"frames":$frames}"""
   }
 
-  /** Write the artifact (overwrite — one report per silver root, the
-    * previous run's report is superseded like the watermark is). */
+  /** Write the artifact: one report per silver root, replacing the
+    * previous run's like the watermark is, through
+    * [[graft.sources.ControlFile]] (a reader never sees a truncated
+    * report). */
   def write(spark: SparkSession, path: String, runTs: String,
             status: String,
             reports: Map[String, Map[String, Any]],
-            contractRules: Map[String, Set[String]] = Map.empty): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(render(runTs, status, reports, contractRules)
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+            contractRules: Map[String, Set[String]] = Map.empty): Unit =
+    ControlFile.replace(spark, path,
+      render(runTs, status, reports, contractRules))
 }

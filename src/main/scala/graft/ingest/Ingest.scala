@@ -1,7 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import graft.model.Schemas
+import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.sources.ControlFile
 
 /** Bronze-layer ingestion: fetcher abstraction with retry/backoff,
   * incremental watermark, JSON bronze writes.
@@ -171,87 +171,34 @@ object Ingest {
 
   /** Read the last successful run timestamp; absent/malformed → default
     * lookback (reference default 7 days). Returns ISO-8601 string.
-    *
-    * The absent case is checked with a driver-side `fs.exists` BEFORE
-    * the Spark read: every first run of a pipeline hits it, and letting
-    * `spark.read.json` throw PATH_NOT_FOUND for an EXPECTED state made
-    * two loggers dump full driver stacks into stderr per run
-    * (FileStreamSink's metadata probe at WARN, and the analysis
-    * exception re-thrown inside ExecutionListenerBus listeners that
-    * touch the failed execution) — noise that buried real errors in
-    * bench/ops tails and was misread as a failed pipeline attempt in
-    * the round-11 artifact audit. */
+    * Read on the driver through [[graft.sources.ControlFile]] (no
+    * Spark job); a legacy Spark-written directory reads from its
+    * part file. */
   def readWatermark(spark: SparkSession, metaPath: String,
                     lookbackDays: Int = 7,
                     now: java.time.Instant = java.time.Instant.now())
   : String = {
     val default = now.minus(java.time.Duration.ofDays(lookbackDays))
       .toString
-    try {
-      val p = new org.apache.hadoop.fs.Path(metaPath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) default
-      else {
-        val rows = spark.read.schema(Schemas.lastRun).json(metaPath)
-          .select("timestamp").collect()
-        rows.headOption.flatMap(r => Option(r.getString(0)))
-          .getOrElse(default)
-      }
-    } catch { case _: Exception => default }
+    try ControlFile.read(spark, metaPath)
+      .flatMap(_.linesIterator.find(_.trim.nonEmpty))
+      .flatMap(line => Option(json.readTree(line).path("timestamp")
+        .textValue()))
+      .getOrElse(default)
+    catch { case _: Exception => default }
   }
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Commit the watermark: {timestamp, status: "success"}
-    * (nb02:204-213), written as ONE file via tmp-then-rename. The
-    * previous Spark `Overwrite` write deleted the old watermark and
-    * then ran a whole cancellable job before the replacement existed —
-    * a cancel/crash in between LOSES the watermark, and a lost
-    * watermark is not safe (readWatermark falls back to the lookback
-    * default, re-fetching windows whose bronze dirs from COMMITTED
-    * runs still exist → transform double-counts them). A single-file
-    * rename is atomic on HDFS and local filesystems. Replacing a
-    * PREVIOUS watermark uses `FileContext.rename(…, Rename.OVERWRITE)`
-    * — a single in-place replace on HDFS/local, so there is no
-    * delete→rename instant in which a crash loses the committed
-    * watermark (the unsafe direction: readWatermark's lookback
-    * fallback would re-fetch windows whose committed bronze dirs
-    * still exist and double-count them). Filesystems with no
-    * `AbstractFileSystem` binding fall back to delete-then-rename,
-    * the old microseconds-wide window; the one-time migration off the
-    * legacy Spark-write DIRECTORY layout also must delete first (no
-    * file-over-directory rename exists anywhere). */
+    * (nb02:204-213), replaced atomically by [[graft.sources.ControlFile]].
+    * A lost watermark is not safe: readWatermark's lookback default
+    * would re-fetch windows whose bronze dirs from COMMITTED runs
+    * still exist, and the transform would double-count them. */
   def commitWatermark(spark: SparkSession, metaPath: String,
-                      timestamp: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val rawP = new org.apache.hadoop.fs.Path(metaPath)
-    val fs = rawP.getFileSystem(conf)
-    val p = fs.makeQualified(rawP)
-    val tmp = fs.makeQualified(new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.tmp${System.nanoTime()}"))
-    fs.mkdirs(p.getParent)
-    val out = fs.create(tmp, /* overwrite = */ true)
-    try out.write(
-      (s"""{"timestamp":"$timestamp","status":"success"}""" + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val legacyDir = try fs.getFileStatus(p).isDirectory catch {
-      case _: java.io.FileNotFoundException => false
-    }
-    if (legacyDir) fs.delete(p, true)
-    val renamedAtomically =
-      try {
-        org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          false // no AbstractFileSystem for this scheme → legacy path
-      }
-    if (!renamedAtomically) {
-      if (fs.exists(p)) fs.delete(p, true)
-      if (!fs.rename(tmp, p))
-        sys.error(s"watermark rename $tmp -> $p failed")
-    }
-  }
+                      timestamp: String): Unit =
+    ControlFile.replace(spark, metaPath,
+      s"""{"timestamp":"$timestamp","status":"success"}""" + "\n")
 
   /** Health check (nb01:96-123): write/read round-trip under the target
     * path; returns the row count read back. */

@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.hadoop.fs.Path
+import graft.sources.ControlFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,16 +34,12 @@ object CorpusReport {
         java.lang.Double.valueOf(d))
     case m: Seq[_] => m.map(j).mkString("[", ",", "]")
     case (k: String, v2: Any) => s"${j(k)}: ${j(v2)}"
-    case s => "\"" + s.toString.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    case s => ControlFile.jsonString(s.toString)
   }
 
   /** Compute the card for `docs` (columns: text, source, lang) and
-    * write it to `path` as a single JSON file. Returns the JSON. */
+    * write it to `path` as a single JSON file (replaced atomically by
+    * [[ControlFile]]). Returns the JSON. */
   def write(spark: SparkSession, docs: DataFrame, path: String): String = {
     val base = docs.select(col("text"), col("source"), col("lang"),
         length(coalesce(col("text"), lit(""))).cast("long").as("chars"),
@@ -82,11 +78,7 @@ object CorpusReport {
            |  "by_source": {${shares("source").map(j).mkString(", ")}},
            |  "by_lang": {${shares("lang").map(j).mkString(", ")}}
            |}""".stripMargin
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      ControlFile.replace(spark, path, json)
       json
     } finally base.unpersist()
   }

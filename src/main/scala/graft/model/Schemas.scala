@@ -44,13 +44,6 @@ object Schemas {
     StructField("events", ArrayType(rawEvent))
   ))
 
-  /** Watermark singleton `metadata/last_run.json`
-    * (`notebool-02.py:190-213`). */
-  val lastRun: StructType = StructType(Seq(
-    StructField("timestamp", StringType),
-    StructField("status", StringType)
-  ))
-
   // --- Silver (star schema), SURVEY.md §1.2 --------------------------------
 
   val dimMedia: StructType = StructType(Seq(

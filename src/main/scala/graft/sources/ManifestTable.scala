@@ -506,20 +506,12 @@ object ManifestTable {
     * exactly-once when `process` is idempotent (partition upsert,
     * key-merge — everything this engine writes with). Returns the
     * synced version; a no-op sync (already at head) skips `process`
-    * entirely. */
+    * entirely. The cursor is a [[ControlFile]], so a crash mid-commit
+    * leaves the previous version, never an empty file. */
   def syncAppends(spark: SparkSession, table: String,
                   stateFile: String)
                  (process: DataFrame => Unit): Long = {
-    val sp = new Path(stateFile)
-    val f = fs(spark, sp)
-    val last: Option[Long] =
-      if (!f.exists(sp)) None
-      else {
-        val in = f.open(sp)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim.toLong)
-        finally in.close()
-      }
+    val last = ControlFile.read(spark, stateFile).map(_.trim.toLong)
     val head = latestVersion(spark, table)
     require(head > 0, s"$table has no committed version")
     last match {
@@ -529,9 +521,7 @@ object ManifestTable {
           case None => read(spark, table, Some(head))
           case Some(v) => readAppendsSince(spark, table, v)
         })
-        val out = f.create(sp, /* overwrite = */ true)
-        try out.write(s"$head\n".getBytes(StandardCharsets.UTF_8))
-        finally out.close()
+        ControlFile.replace(spark, stateFile, s"$head\n")
         head
     }
   }

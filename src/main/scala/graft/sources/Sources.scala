@@ -45,11 +45,6 @@ object Sources {
     if (matched.isEmpty) reader.json(glob) else reader.json(matched: _*)
   }
 
-  /** Diagnostic mode: schema inference like the reference. Never on the
-    * hot path. */
-  def readBronzeJsonInferred(spark: SparkSession, glob: String): DataFrame =
-    spark.read.option("multiLine", true).json(glob)
-
   /** S8: silver Parquet write. `partitionCol` (the fact's date) enables
     * partition pruning for every downstream date-ranged query — the
     * single most important layout decision at 100 TB. Dims pass None
@@ -141,15 +136,15 @@ object Sources {
 
   /** Batch upsert into a partitioned dir: dynamic partition overwrite
     * rewrites ONLY the partitions present in `df` — the batch twin of
-    * the streaming foreachBatch upsert; replays converge. */
+    * the streaming foreachBatch upsert; replays converge. The mode is
+    * a writer option, so the session's
+    * `spark.sql.sources.partitionOverwriteMode` (and every other
+    * query's overwrite) stays as it is. */
   def upsertByPartition(df: DataFrame, path: String,
-                        partitionCol: String): Unit = {
-    graft.Session.withConf(df.sparkSession,
-      "spark.sql.sources.partitionOverwriteMode", "dynamic") {
-      df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-        .parquet(path)
-    }
-  }
+                        partitionCol: String): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
 
   /** Targeted key deletion from a partitioned parquet table — the
     * right-to-be-forgotten / compliance delete, without a table format:
@@ -201,30 +196,26 @@ object Sources {
         col(partitionCol).isin(touchedNonNull: _*) else lit(false)
       if (touched.contains(null)) in || col(partitionCol).isNull else in
     }
-    graft.Session.withConf(spark,
-      "spark.sql.sources.partitionOverwriteMode", "dynamic") {
-      val kept = table
-        .filter(partPred)
-        .filter(not(coalesce(col(keyCol).isin(keys: _*), lit(false))))
-        // materialize before the overwrite deletes the files being read
-        .scratchCheckpoint(true)
-      kept.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-        .parquet(path)
-      // a partition whose every row was doomed writes nothing under
-      // dynamic overwrite and would survive intact — remove its
-      // directory (located above from real file paths) directly, and
-      // FAIL loudly if the removal doesn't happen: silent survival of
-      // doomed rows is the one unacceptable outcome of this operator.
-      val keptParts = kept.select(partitionCol).distinct()
-        .collect().map(_.get(0)).toSet
-      val fs = new Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      touched.filterNot(keptParts).foreach { v =>
-        dirsByValue(v).foreach { dir =>
-          if (fs.exists(dir) && !fs.delete(dir, true))
-            throw new java.io.IOException(
-              s"deleteKeys: failed to remove emptied partition dir $dir")
-        }
+    val kept = table
+      .filter(partPred)
+      .filter(not(coalesce(col(keyCol).isin(keys: _*), lit(false))))
+      // materialize before the overwrite deletes the files being read
+      .scratchCheckpoint(true)
+    upsertByPartition(kept, path, partitionCol)
+    // a partition whose every row was doomed writes nothing under
+    // dynamic overwrite and would survive intact — remove its
+    // directory (located above from real file paths) directly, and
+    // FAIL loudly if the removal doesn't happen: silent survival of
+    // doomed rows is the one unacceptable outcome of this operator.
+    val keptParts = kept.select(partitionCol).distinct()
+      .collect().map(_.get(0)).toSet
+    val fs = new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    touched.filterNot(keptParts).foreach { v =>
+      dirsByValue(v).foreach { dir =>
+        if (fs.exists(dir) && !fs.delete(dir, true))
+          throw new java.io.IOException(
+            s"deleteKeys: failed to remove emptied partition dir $dir")
       }
     }
     touched.size
@@ -243,34 +234,47 @@ object Sources {
     * files. Streaming upserts and incremental loads accumulate small
     * files; scan cost at 100 TB is dominated by file count, so
     * compaction is part of table maintenance, not an optimization.
-    * (Writes to a temp dir, then rename-swap-delete: the source is
-    * moved to a backup path BEFORE anything is deleted, so the DATA is
-    * recoverable at every step. A crash in the swap window — between
-    * rename(path,_backup) and rename(_compacting,path) — does leave
-    * `path` itself missing with the table parked at `_backup`; the
-    * entry check below detects exactly that state and restores the
-    * backup before proceeding, so the next compact self-heals instead
-    * of failing its initial read.) */
-  def compact(spark: SparkSession, path: String, targetFiles: Int): Unit = {
-    val tmp = path + "_compacting"
-    val bak = path + "_backup"
-    val p = new Path(path); val t = new Path(tmp); val b = new Path(bak)
+    * (Writes to a staging dir, then [[rewriteInPlace]]'s
+    * rename-swap-delete: the DATA is recoverable at every step, and a
+    * compact after a crash in the swap window self-heals.) */
+  def compact(spark: SparkSession, path: String, targetFiles: Int): Unit =
+    rewriteInPlace(spark, path, "_compacting", "compact") { staging =>
+      spark.read.parquet(path).repartition(targetFiles)
+        .write.mode(SaveMode.Overwrite).parquet(staging)
+    }
+
+  /** The staging + backup-before-delete swap shared by [[compact]] and
+    * [[repartitionPath]]. First restores a table a crashed swap left
+    * parked at `<path>_backup` (a crash between the two renames below
+    * leaves `path` missing), then runs `stage`, which writes the
+    * rewrite to the staging dir `<path><suffix>` it is given and may
+    * throw to abort with `path` untouched and the staging dir removed.
+    * Then the original moves aside to the backup BEFORE anything is
+    * deleted, the staging dir is renamed into place (rolling back to
+    * the backup if that fails) and the backup is deleted. */
+  private def rewriteInPlace[T](spark: SparkSession, path: String,
+                                suffix: String, op: String)
+                               (stage: String => T): T = {
+    val p = new Path(path); val t = new Path(path + suffix)
+    val b = new Path(path + "_backup")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // crash recovery: a prior run that died mid-swap left the table at
     // _backup and nothing at path — put it back before reading
     if (!fs.exists(p) && fs.exists(b) && !fs.rename(b, p))
       throw new java.io.IOException(
-        s"compact: cannot restore $bak after interrupted swap")
-    spark.read.parquet(path).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
+        s"$op: cannot restore $b after interrupted swap")
+    val result =
+      try stage(t.toString)
+      catch { case e: Throwable => fs.delete(t, true); throw e }
     fs.delete(b, true) // clear any stale backup from a prior crash
     if (!fs.rename(p, b))
-      throw new java.io.IOException(s"compact: cannot move $path aside")
+      throw new java.io.IOException(s"$op: cannot move $path aside")
     if (!fs.rename(t, p)) {
       fs.rename(b, p) // roll back: restore the original table
-      throw new java.io.IOException(s"compact: swap failed for $path")
+      throw new java.io.IOException(s"$op: swap failed for $path")
     }
     fs.delete(b, true)
+    result
   }
 
   /** PARTITION-LAYOUT MIGRATION: rewrite a parquet directory under a
@@ -293,38 +297,21 @@ object Sources {
     * drop aborts with the original intact. Returns the row count. */
   def repartitionPath(spark: SparkSession, path: String,
                       newPartitionCol: String,
-                      value: org.apache.spark.sql.Column): Long = {
-    val tmp = path + "_repartitioning"
-    val bak = path + "_backup"
-    val p = new Path(path); val t = new Path(tmp); val b = new Path(bak)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) && fs.exists(b) && !fs.rename(b, p))
-      throw new java.io.IOException(
-        s"repartitionPath: cannot restore $bak after interrupted swap")
-    val before = spark.read.parquet(path).count()
-    spark.read.parquet(path)
-      .withColumn(newPartitionCol, value)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(newPartitionCol).parquet(tmp)
-    val after = spark.read.parquet(tmp).count()
-    if (after != before) {
-      fs.delete(t, true)
-      throw new IllegalStateException(
-        s"repartitionPath: rewrite row count $after != source $before" +
-          s" — aborted, $path untouched")
+                      value: org.apache.spark.sql.Column): Long =
+    rewriteInPlace(spark, path, "_repartitioning", "repartitionPath") {
+      staging =>
+        val before = spark.read.parquet(path).count()
+        spark.read.parquet(path)
+          .withColumn(newPartitionCol, value)
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy(newPartitionCol).parquet(staging)
+        val after = spark.read.parquet(staging).count()
+        if (after != before)
+          throw new IllegalStateException(
+            s"repartitionPath: rewrite row count $after != source " +
+              s"$before — aborted, $path untouched")
+        before
     }
-    fs.delete(b, true)
-    if (!fs.rename(p, b))
-      throw new java.io.IOException(
-        s"repartitionPath: cannot move $path aside")
-    if (!fs.rename(t, p)) {
-      fs.rename(b, p)
-      throw new java.io.IOException(
-        s"repartitionPath: swap failed for $path")
-    }
-    fs.delete(b, true)
-    before
-  }
 
   /** Parquet write with BLOOM FILTERS on the named columns — the
     * point-lookup complement to min/max stats. Range clustering and

@@ -1,6 +1,7 @@
 package graft.stream
 
 import graft.Scratch.ScratchOps
+import graft.sources.ControlFile
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -283,50 +284,44 @@ object StreamingFact {
     * batches. Instead: key-dedup the batch (a replayed batch can
     * overlap itself), read back ONLY the touched partitions, anti-join
     * out the keys this batch supersedes, and overwrite the touched
-    * partitions with the union. localCheckpoint materializes the merge
+    * partitions with the union
+    * ([[graft.sources.Sources.upsertByPartition]]). localCheckpoint materializes the merge
     * before the overwrite deletes the files it was read from. The
     * touched-date collect is bounded by dates-per-batch, not data. */
   private[stream] def upsertBatch(batch: DataFrame, path: String,
                                   keyCols: Seq[String]): Unit = {
     val ss = batch.sparkSession
-    // dynamic overwrite is scoped to this batch write, so later
-    // mode(overwrite) writes elsewhere keep full-table semantics (same
-    // pattern as Sources.upsertByPartition)
-    graft.Session.withConf(ss,
-      "spark.sql.sources.partitionOverwriteMode", "dynamic") {
-      val fresh = batch
-        .withColumn("date", to_date(col("day.start")))
-        .drop("day")
-        .dropDuplicates("date" +: keyCols)
-      if (!fresh.isEmpty) {
-        val target = new org.apache.hadoop.fs.Path(path)
-        val fs = target.getFileSystem(ss.sparkContext.hadoopConfiguration)
-        val merged =
-          if (!fs.exists(target)) fresh
-          else {
-            val touched = fresh.select("date").distinct()
-              .collect().map(_.getDate(0)).toSeq
-            val prior = ss.read.parquet(path)
-              .filter(col("date").isin(touched: _*))
-              .join(fresh.select("date", keyCols: _*),
-                "date" +: keyCols, "left_anti")
-            fresh.unionByName(prior)
-          }
-        // cluster the write by (date, small key-hash bucket): without
-        // this, every shuffle partition contributes a file to every
-        // touched date dir — the key-growth rehearsal measured the
-        // daily upsert at 68 s (vs 16 s at 10x) once 32 state
-        // partitions × touched dates amplified into thousands of tiny
-        // files. Hash-bucketing bounds files-per-date at 4 while
-        // keeping >1 writer per hot date (pure repartition('date')
-        // would serialize a skewed date through one task).
+    val fresh = batch
+      .withColumn("date", to_date(col("day.start")))
+      .drop("day")
+      .dropDuplicates("date" +: keyCols)
+    if (!fresh.isEmpty) {
+      val target = new org.apache.hadoop.fs.Path(path)
+      val fs = target.getFileSystem(ss.sparkContext.hadoopConfiguration)
+      val merged =
+        if (!fs.exists(target)) fresh
+        else {
+          val touched = fresh.select("date").distinct()
+            .collect().map(_.getDate(0)).toSeq
+          val prior = ss.read.parquet(path)
+            .filter(col("date").isin(touched: _*))
+            .join(fresh.select("date", keyCols: _*),
+              "date" +: keyCols, "left_anti")
+          fresh.unionByName(prior)
+        }
+      // cluster the write by (date, small key-hash bucket): without
+      // this, every shuffle partition contributes a file to every
+      // touched date dir — the key-growth rehearsal measured the
+      // daily upsert at 68 s (vs 16 s at 10x) once 32 state
+      // partitions × touched dates amplified into thousands of tiny
+      // files. Hash-bucketing bounds files-per-date at 4 while
+      // keeping >1 writer per hot date (pure repartition('date')
+      // would serialize a skewed date through one task).
+      graft.sources.Sources.upsertByPartition(
         merged.scratchCheckpoint(eager = true)
           .repartition(col("date"),
-            pmod(xxhash64(keyCols.map(col): _*), lit(4)))
-          .write.mode("overwrite")
-          .partitionBy("date")
-          .parquet(path)
-      }
+            pmod(xxhash64(keyCols.map(col): _*), lit(4))),
+        path, "date")
     }
   }
 
@@ -344,7 +339,8 @@ object StreamingFact {
     * Exactly-once via a versioned commit protocol (the manifest-table
     * posture scaled down to one pointer): batch `id` writes its merged
     * view to `v<id>` FROM the marker's immutable base `v<last>`, then
-    * atomically swaps the `_committed_batch` marker. A crash anywhere
+    * replaces the `_committed_batch` marker, a
+    * [[graft.sources.ControlFile]]. A crash anywhere
     * before the swap makes the replayed batch rewrite `v<id>` from the
     * SAME base — idempotent; a replay after the swap is dropped by the
     * `id <= last` guard. foreachBatch alone is only at-least-once;
@@ -363,23 +359,23 @@ object StreamingFact {
   }
 
   /** Latest committed view version, or -1 before the first commit. */
-  def committedMvBatch(mvDir: String): Long = {
-    val marker = java.nio.file.Paths.get(mvDir, "_committed_batch")
-    if (java.nio.file.Files.exists(marker))
-      java.nio.file.Files.readString(marker).trim.toLong
-    else -1L
-  }
+  def committedMvBatch(mvDir: String): Long =
+    committedMvBatch(SparkSession.active, mvDir)
+
+  private def committedMvBatch(spark: SparkSession, mvDir: String): Long =
+    ControlFile.read(spark, s"$mvDir/_committed_batch")
+      .fold(-1L)(_.trim.toLong)
 
   /** The committed view snapshot (empty-schema error before any
     * commit — callers run after at least one batch). */
   def readMv(spark: SparkSession, mvDir: String): DataFrame =
-    spark.read.parquet(s"$mvDir/v${committedMvBatch(mvDir)}")
+    spark.read.parquet(s"$mvDir/v${committedMvBatch(spark, mvDir)}")
 
   private[stream] def mergeMvBatch(batch: DataFrame, id: Long,
                                    mvDir: String, keys: Seq[String],
                                    partialsOf: DataFrame => DataFrame): Unit = {
     val ss = batch.sparkSession
-    val last = committedMvBatch(mvDir)
+    val last = committedMvBatch(ss, mvDir)
     if (id <= last) return // replay of a committed batch: drop it
     val p = partialsOf(batch)
     val merged =
@@ -387,12 +383,7 @@ object StreamingFact {
       else graft.etl.Materialized.mergePartials(
         ss.read.parquet(s"$mvDir/v$last"), p, keys)
     merged.write.mode("overwrite").parquet(s"$mvDir/v$id")
-    val dir = java.nio.file.Paths.get(mvDir)
-    val tmp = dir.resolve(s"_committed_batch.tmp$id")
-    java.nio.file.Files.writeString(tmp, id.toString)
-    java.nio.file.Files.move(tmp, dir.resolve("_committed_batch"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    ControlFile.replace(ss, s"$mvDir/_committed_batch", id.toString)
   }
 
   /** Stream-static enrichment: join the event stream against a static

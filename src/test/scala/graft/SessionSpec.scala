@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one-session-factory rule, checked statically over `src/main`
@@ -9,25 +10,34 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Session]] builds a session or sets the nanos read conf, so no
   * main drifts onto its own engine and no read site mutates the
   * session; only [[Scratch]] makes and deletes scratch dirs and frees
-  * lineage cuts (outside the one-round-behind loops). Plus the env
+  * lineage cuts (outside the one-round-behind loops); only
+  * [[graft.sources.ControlFile]] writes control files. Plus the env
   * parsing every main shares. */
 class SessionSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
   private val sessionFile = mainRoot.resolve("graft/Session.scala")
 
-  /** `file:line` of every line of a `.scala` file under `root` that
-    * contains `needle`. */
-  private def sites(root: Path, needle: String): Seq[String] = {
+  private def scalaFiles(root: Path): Seq[Path] = {
     val walk = Files.walk(root)
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .toSeq.sorted.flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(needle) => s"$p:${i + 1}"
-        }
-      }
+      .toSeq.sorted
     finally walk.close()
   }
+
+  /** `file:line` of every match of `pattern` in a `.scala` file under
+    * `root` (a match may span lines; it is reported at its start). */
+  private def matches(root: Path, pattern: Regex): Seq[String] =
+    scalaFiles(root).flatMap { p =>
+      val text = Files.readString(p)
+      pattern.findAllMatchIn(text).map(m =>
+        s"$p:${text.take(m.start).count(_ == '\n') + 1}")
+    }
+
+  /** `file:line` of every occurrence of `needle` in a `.scala` file
+    * under `root`. */
+  private def sites(root: Path, needle: String): Seq[String] =
+    matches(root, Regex.quote(needle).r)
 
   Seq("SparkSession.builder", "nanosAsLong").foreach { needle =>
     test(s"src/main has exactly one `$needle` site, in Session.scala") {
@@ -81,16 +91,22 @@ class SessionSpec extends AnyFunSuite {
     "graft/llmops/Dedup.scala" -> 1, "graft/llmops/Bpe.scala" -> 2,
     "graft/QueriesRelational.scala" -> 2)
 
-  /** Owner-file counts of `CheckpointBridge.release` under `root` that
-    * differ from [[releaseOwners]], plus every stray site. */
-  private def releaseDrift(root: Path): Seq[String] = {
-    val all = sites(root, "CheckpointBridge.release")
-    val counts = releaseOwners.toSeq.flatMap { case (owner, n) =>
-      val found = all.count(_.startsWith(s"${root.resolve(owner)}:"))
+  /** Owner-file counts of `pattern` under `root` that differ from
+    * `owners` (path → expected count), plus every stray site. */
+  private def drift(root: Path, pattern: Regex,
+                    owners: Map[String, Int]): Seq[String] = {
+    val all = matches(root, pattern)
+    def in(owner: String)(site: String) =
+      site.startsWith(s"${root.resolve(owner)}:")
+    val counts = owners.toSeq.flatMap { case (owner, n) =>
+      val found = all.count(in(owner))
       if (found == n) None else Some(s"$owner: $found sites, expected $n")
     }
-    counts ++ strays(root, "CheckpointBridge.release", releaseOwners.keySet)
+    counts ++ all.filterNot(site => owners.keys.exists(in(_)(site)))
   }
+
+  private def releaseDrift(root: Path): Seq[String] =
+    drift(root, Regex.quote("CheckpointBridge.release").r, releaseOwners)
 
   test("src/main releases lineage cuts only through Scratch.scoped and " +
     "the one-round-behind loops; kernels take no onCheckpoint") {
@@ -118,6 +134,51 @@ class SessionSpec extends AnyFunSuite {
       Files.writeString(bpe, "object P {\n" + release * 3 + "}\n")
       assert(releaseDrift(root).toSet == Set(
         "graft/llmops/Bpe.scala: 3 sites, expected 2", s"$stray:2"))
+    } finally Scratch.deleteTree(root)
+  }
+
+  // control files have one owner, graft.sources.ControlFile; the
+  // manifest's exclusive create (ManifestTable.createExclusive) is a
+  // different contract
+  private val createOwners = Map("graft/sources/ControlFile.scala" -> 1,
+    "graft/sources/ManifestTable.scala" -> 1)
+  private val hadoopCreate = """\b(fs|f)\.create\(""".r
+  private val overwriteModeScope =
+    """withConf\([^)]*partitionOverwriteMode""".r
+
+  test("src/main creates Hadoop files only in ControlFile and " +
+    "ManifestTable.createExclusive; dynamic overwrite is a writer " +
+    "option, never a withConf scope") {
+    val creates = drift(mainRoot, hadoopCreate, createOwners)
+    assert(creates.isEmpty, "read and replace control files with " +
+      s"graft.sources.ControlFile:\n${creates.mkString("\n")}")
+    val scopes = matches(mainRoot, overwriteModeScope)
+    assert(scopes.isEmpty, "pass .option(\"partitionOverwriteMode\", " +
+      s"\"dynamic\") on the write instead:\n${scopes.mkString("\n")}")
+  }
+
+  test("negative: the control-file guard flags a planted create and a " +
+    "an extra owner site and a planted overwrite-mode scope") {
+    val root = Files.createTempDirectory("graft_guard")
+    val create = "  val out = fs.create(p, true)\n"
+    createOwners.keys.foreach { owner =>
+      val f = root.resolve(owner)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, "object P {\n" + create + "}\n")
+    }
+    try {
+      assert(drift(root, hadoopCreate, createOwners).isEmpty)
+      val stray = root.resolve("graft/etl/Planted.scala")
+      Files.createDirectories(stray.getParent)
+      Files.writeString(stray, "object P {\n" + create.replace("fs.", "f.") +
+        "  Session.withConf(s,\n    \"spark.sql.sources." +
+        "partitionOverwriteMode\", \"dynamic\") {\n  }\n}\n")
+      val manifest = root.resolve("graft/sources/ManifestTable.scala")
+      Files.writeString(manifest, "object P {\n" + create * 2 + "}\n")
+      assert(drift(root, hadoopCreate, createOwners).toSet == Set(
+        "graft/sources/ManifestTable.scala: 2 sites, expected 1",
+        s"$stray:2"))
+      assert(matches(root, overwriteModeScope) == Seq(s"$stray:3"))
     } finally Scratch.deleteTree(root)
   }
 

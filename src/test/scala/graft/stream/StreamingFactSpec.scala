@@ -443,8 +443,16 @@ class StreamingFactSpec extends AnyFunSuite {
 
   test("mergeMvBatch: versioned marker makes the MV merge exactly-once " +
     "under replay AND under a crash between data write and commit") {
+    // a plain path and a URI-qualified root (file://, like hdfs:// or
+    // abfss:// roots): the marker must land through the Hadoop FS
+    def tmp() = java.nio.file.Files.createTempDirectory("graft_mv_eo")
+    Seq(tmp().toString, tmp().toUri.toString.stripSuffix("/")).foreach {
+      mv => withClue(s"mv = $mv: ") { checkMvExactlyOnce(mv) }
+    }
+  }
+
+  private def checkMvExactlyOnce(mv: String): Unit = {
     import graft.stream.{StreamingFact => SF}
-    val mv = java.nio.file.Files.createTempDirectory("graft_mv_eo").toString
     def partials(df: org.apache.spark.sql.DataFrame) =
       df.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s"))
     def batch(rows: (String, Long)*) = rows.toSeq.toDF("k", "v")
