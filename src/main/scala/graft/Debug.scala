@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Developer CLI over the query registry, on the same [[Session]]
@@ -17,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `profile`: per-JOB breakdown — the measurement tool the
   *    optimization guide's §1 empirical loop needs when the Spark UI is
   *    disabled: runs the query through the noop sink (after one untimed
-  *    warm attempt) and prints every job's wall-clock, task time,
-  *    shuffle bytes and description, so a multi-job query's cost
+  *    warm attempt) under [[Ledger.measure]] and prints every job it
+  *    booked (wall-clock, description) and every stage (tasks, task
+  *    time, shuffle and input bytes), so a multi-job query's cost
   *    attributes to its phases instead of one opaque total.
   *  - `sql`: registers the tables as views plus graft's SQL functions
   *    ([[Tables.registerViews]]) and runs one statement.
@@ -90,9 +90,6 @@ object Debug {
     println(s"-- ${rows.length} rows; cols: ${fields.map(_.name).mkString(", ")}")
   }
 
-  private case class JobRec(id: Int, desc: String, started: Long,
-                            var ended: Long = 0L)
-
   private def profile(spark: SparkSession, q: Queries.Q, dir: String)
   : Unit = {
     // warm: JIT, codegen cache, parquet footers — same as Bench's warmup
@@ -102,59 +99,25 @@ object Debug {
     } catch { case e: Throwable =>
       System.err.println(s"[profile] warm attempt failed: $e") }
 
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
-    val stageTask = new java.util.concurrent.atomic.AtomicLong()
-    val stageLines =
-      java.util.Collections.synchronizedList(
-        new java.util.ArrayList[String]())
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.put(e.jobId, JobRec(e.jobId,
-          Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(""), e.time))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val r = jobs.get(e.jobId); if (r != null) r.ended = e.time
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted)
-      : Unit = {
-        val i = e.stageInfo
-        val m = i.taskMetrics
-        stageTask.addAndGet(m.executorRunTime)
-        stageLines.add(
-          f"    stage ${i.stageId}%4d ${i.numTasks}%5d tasks " +
-          f"run=${m.executorRunTime / 1e3}%8.2fs " +
-          f"shufR=${m.shuffleReadMetrics.totalBytesRead / 1e6}%9.1fMB " +
-          f"shufW=${m.shuffleWriteMetrics.bytesWritten / 1e6}%9.1fMB " +
-          f"in=${m.inputMetrics.bytesRead / 1e6}%9.1fMB " +
-          s"[${i.name.takeWhile(_ != '\n').take(90)}]")
-      }
+    val (row, costs) = Ledger.measure(spark) {
+      Bench.timeAttempts(q.name, 1)(Bench.drain(q.run(spark, dir)))
     }
-    spark.sparkContext.addSparkListener(listener)
-    val row = Bench.timeAttempts(q.name, 1)(Bench.drain(q.run(spark, dir)))
-    // The listener bus delivers events ASYNCHRONOUSLY: removing the
-    // listener the instant the action returns can drop trailing
-    // onStageCompleted/onJobEnd events (missing stage lines, jobs
-    // printed with ended=0 — round-17 advice). Poll until every
-    // recorded job has ended, bounded at 2 s.
-    import scala.jdk.CollectionConverters._
-    val deadline = System.nanoTime() + 2_000_000_000L
-    while (jobs.values().asScala.exists(_.ended == 0L) &&
-           System.nanoTime() < deadline)
-      Thread.sleep(50)
-    spark.sparkContext.removeSparkListener(listener)
-
-    val recs = jobs.values().asScala.toSeq.sortBy(_.id)
     val wall = if (row.ok) f"${row.min}%.3f s wall" else "FAILED"
-    println(f"=== ${q.name}: $wall, ${recs.size} jobs, " +
-      f"task-time ${stageTask.get() / 1e3}%.1f s ===")
-    recs.foreach { r =>
-      val dur = // a job the bus never closed prints as unknown, not negative
-        if (r.ended == 0L) "       ?"
-        else f"${(r.ended - r.started) / 1e3}%8.3f"
-      println(f"  job ${r.id}%4d $dur%ss  ${r.desc.take(100)}%s")
+    println(f"=== ${q.name}: $wall, ${costs.jobs.size} jobs, " +
+      f"task-time ${costs.taskMs / 1e3}%.1f s ===")
+    costs.jobs.foreach { j =>
+      println(f"  job ${j.id}%4d ${j.seconds}%8.3fs  " +
+        j.description.take(100))
     }
     println("  --- stages ---")
-    stageLines.asScala.foreach(println)
+    costs.stages.foreach { st =>
+      println(
+        f"    stage ${st.id}%4d ${st.tasks}%5d tasks " +
+        f"run=${st.runMs / 1e3}%8.2fs " +
+        f"shufR=${st.shuffleReadBytes / 1e6}%9.1fMB " +
+        f"shufW=${st.shuffleWriteBytes / 1e6}%9.1fMB " +
+        f"in=${st.inputBytes / 1e6}%9.1fMB " +
+        s"[${st.name.takeWhile(_ != '\n').take(90)}]")
+    }
   }
 }

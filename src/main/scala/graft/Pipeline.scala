@@ -254,8 +254,7 @@ object Pipeline {
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
+    Sources.fileSystem(spark, p).delete(p, true)
   }
 
   /** The silver data contracts (dbt-tests shape, SURVEY §2 G9): each

@@ -84,8 +84,7 @@ object Session {
   /** A positive-integer env setting, `default` when unset. A bad value
     * fails naming the variable and the value — a bare `.toInt` throws
     * an anonymous NumberFormatException, and a non-number spliced into
-    * `local[...]` surfaces as a master-URL error far from its cause
-    * (the [[Spread]] parallelism-conf discipline, for env vars). */
+    * `local[...]` surfaces as a master-URL error far from its cause. */
   private[graft] def positiveInt(env: collection.Map[String, String],
                                  name: String, default: Int): Int =
     env.get(name).fold(default) { v =>

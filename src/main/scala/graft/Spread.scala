@@ -17,8 +17,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the exchange it inserts costs a stage and ~50 ms that cheap rows
   * should not pay.
   *
-  * Partition count: session conf `spark.graft.compute.parallelism`,
-  * defaulting to `sparkContext.defaultParallelism` (total cluster
+  * Partition count: `sparkContext.defaultParallelism` (total cluster
   * cores) — scale-adaptive, never a local constant. Hash on a caller
   * key (unique ids spread evenly; deterministic under task retry),
   * not round-robin, which pays a defensive sort and re-draws row
@@ -30,21 +29,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * `dropDuplicates` on a non-key superset — always below. */
 object Spread {
 
-  val ConfKey = "spark.graft.compute.parallelism"
-
-  /** The compute partition count: [[ConfKey]] when set, else
-    * `defaultParallelism`. A non-integer value fails naming the key
-    * and the value — a bare `.toInt` throws an anonymous
-    * NumberFormatException at plan time with no hint which session
-    * conf was at fault (round-17 advice). */
   private def parallelism(spark: SparkSession): Int =
-    spark.conf.getOption(ConfKey).map { v =>
-      try v.trim.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"session conf $ConfKey must be an integer, got '$v'")
-      }
-    }.getOrElse(spark.sparkContext.defaultParallelism)
+    spark.sparkContext.defaultParallelism
 
   def byKey(df: DataFrame, key: Column): DataFrame =
     df.repartition(parallelism(df.sparkSession), key)

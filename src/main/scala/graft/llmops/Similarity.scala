@@ -760,11 +760,6 @@ object Similarity {
       var cents: DataFrame =
         if (iterations >= 1) init0.scratchCheckpoint(true) else init0
       for (_ <- 1 to iterations) {
-        // NOT carrySubv: timing is indistinguishable at this scale (both
-        // within the ±1 s scheduler noise of this many-small-stage
-        // query), and min over a struct with an array member copies the
-        // array per combine step — prefer the copy-free argmin and the
-        // join-back, since training runs on a bounded sample at scale
         val assigned = assignPqCodes(subrows, cents)
         val means = assigned
           .join(subrows, Seq("vid", "s"))
@@ -800,26 +795,18 @@ object Similarity {
     * row_number window it partial-aggregates map-side: no per-key sort
     * and a combiner-sized shuffle however many vectors stream through.
     * Returns (vid, s, code_id). */
-  private def assignPqCodes(subrows: DataFrame, cents: DataFrame,
-                            carrySubv: Boolean = false): DataFrame = {
+  private def assignPqCodes(subrows: DataFrame, cents: DataFrame)
+  : DataFrame = {
     val d2 = aggregate(
       zip_with(col("subv"), col("centroid"),
         (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
       lit(0.0), (acc, v) => acc + v)
-    // carrySubv rides the subvector through the argmin struct so the
-    // training round's mean pass needs no second corpus join/recompute;
-    // (d2, code_id) is unique per group, so the array member never
-    // decides the min
-    val fields = Seq(d2.as("d2"), col("code_id").as("code_id")) ++
-      (if (carrySubv) Seq(col("subv").as("subv")) else Nil)
-    val best = subrows.join(broadcast(cents), Seq("s"))
-      .select(col("vid"), col("s"), struct(fields: _*).as("dc"))
+    subrows.join(broadcast(cents), Seq("s"))
+      .select(col("vid"), col("s"),
+        struct(d2.as("d2"), col("code_id").as("code_id")).as("dc"))
       .groupBy(col("vid"), col("s"))
       .agg(min(col("dc")).as("best"))
-    val out = Seq(col("vid"), col("s"),
-      col("best.code_id").as("code_id")) ++
-      (if (carrySubv) Seq(col("best.subv").as("subv")) else Nil)
-    best.select(out: _*)
+      .select(col("vid"), col("s"), col("best.code_id").as("code_id"))
   }
 
   /** IVF-PQ composite top-k — the billion-scale ANN architecture

@@ -23,7 +23,7 @@ object ControlFile {
     * files concatenated in name order. */
   def read(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Sources.fileSystem(spark, p)
     status(fs, p).map { st =>
       val files =
         if (!st.isDirectory) Seq(p)
@@ -47,9 +47,8 @@ object ControlFile {
     * Spark-written layout) is deleted first: no file-over-directory
     * rename exists anywhere. */
   def replace(spark: SparkSession, path: String, content: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
     val rawP = new Path(path)
-    val fs = rawP.getFileSystem(conf)
+    val fs = Sources.fileSystem(spark, rawP)
     val p = fs.makeQualified(rawP)
     val tmp = new Path(p.getParent, s".${p.getName}.tmp${System.nanoTime()}")
     fs.mkdirs(p.getParent)
@@ -59,7 +58,7 @@ object ControlFile {
     if (status(fs, p).exists(_.isDirectory)) fs.delete(p, true)
     val renamedAtomically =
       try {
-        FileContext.getFileContext(fs.getUri, conf)
+        FileContext.getFileContext(fs.getUri, fs.getConf)
           .rename(tmp, p, Options.Rename.OVERWRITE)
         true
       } catch {

@@ -42,16 +42,13 @@ object ManifestTable {
 
   private val ManifestRe = """v(\d{9})\.txt""".r
 
-  private def fs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def manifestPath(table: Path, v: Long): Path =
     new Path(new Path(table, "_manifests"), f"v$v%09d.txt")
 
   /** Latest committed version, or 0 when the table has none. */
   def latestVersion(spark: SparkSession, table: String): Long = {
     val dir = new Path(table, "_manifests")
-    val f = fs(spark, dir)
+    val f = Sources.fileSystem(spark, dir)
     if (!f.exists(dir)) 0L
     else f.listStatus(dir).iterator.map(_.getPath.getName).collect {
       case ManifestRe(v) => v.toLong
@@ -61,7 +58,7 @@ object ManifestTable {
   private def readManifest(spark: SparkSession, table: Path,
                            v: Long): Seq[String] = {
     val p = manifestPath(table, v)
-    val in = fs(spark, p).open(p)
+    val in = Sources.fileSystem(spark, p).open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8")
       .getLines().map(_.trim).filter(_.nonEmpty).toList
     finally in.close()
@@ -137,12 +134,12 @@ object ManifestTable {
     * parquet FOOTER of one staged file in ONE footer open — stats
     * parquet already wrote; no data pages read. The range is None when
     * the column is absent, not INT64, or all-null. */
-  private def footerMeta(spark: SparkSession, file: Path,
-                         column: Option[String])
+  private def footerMeta(conf: org.apache.hadoop.conf.Configuration,
+                         file: Path, column: Option[String])
   : (Long, Option[(Long, Long)]) = {
     import scala.jdk.CollectionConverters._
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(file, spark.sparkContext.hadoopConfiguration)
+      .fromPath(file, conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val blocks = r.getFooter.getBlocks.asScala.toList
@@ -175,16 +172,17 @@ object ManifestTable {
     * open per staged file, at commit time only. */
   private def withStats(spark: SparkSession, table: Path,
                         staged: Seq[String],
-                        statsCol: Option[String]): Seq[String] =
+                        statsCol: Option[String]): Seq[String] = {
+    val conf = Sources.hadoopConf(spark)
     staged.map { rel =>
-      val (nRows, range) =
-        footerMeta(spark, new Path(table, rel), statsCol)
+      val (nRows, range) = footerMeta(conf, new Path(table, rel), statsCol)
       val statsPart = range match {
         case Some((lo, hi)) => s"\t${statsCol.get}\t$lo\t$hi"
         case None => ""
       }
       s"$rel$statsPart\t#rows\t$nRows"
     }
+  }
 
   /** Stage `df` as immutable files under `data/` WITHOUT publishing
     * them: written through a scratch dir, then moved to unique names.
@@ -194,7 +192,7 @@ object ManifestTable {
     val stamp = java.util.UUID.randomUUID.toString.take(8)
     val scratch = new Path(table, s"_staging_$stamp")
     df.write.parquet(scratch.toString)
-    val f = fs(spark, table)
+    val f = Sources.fileSystem(spark, table)
     val dataDir = new Path(table, "data")
     f.mkdirs(dataDir)
     val moved = f.listStatus(scratch).iterator
@@ -243,7 +241,7 @@ object ManifestTable {
     * version. */
   private def publish(spark: SparkSession, table: Path,
                       files: Long => Seq[String]): Long = {
-    val f = fs(spark, table)
+    val f = Sources.fileSystem(spark, table)
     var attempts = 0
     while (attempts < 20) {
       val head = latestVersion(spark, table.toString)
@@ -303,7 +301,7 @@ object ManifestTable {
     publish(spark, t, head => {
       // see [[stagedLive]]: a racing vacuum reclaiming the staged files
       // must fail THIS commit loudly, never land dangling references
-      require(stagedLive(fs(spark, t), t, staged),
+      require(stagedLive(Sources.fileSystem(spark, t), t, staged),
         s"commitAppend to $table: a concurrent vacuum reclaimed staged " +
           "files before publish — retry the append (and give vacuum a " +
           "minFileAgeMs grace window covering in-flight commits)")
@@ -319,7 +317,7 @@ object ManifestTable {
     val t = new Path(table)
     val staged = withStats(spark, t, stageFiles(spark, t, df), statsCol)
     publish(spark, t, _ => {
-      require(stagedLive(fs(spark, t), t, staged),
+      require(stagedLive(Sources.fileSystem(spark, t), t, staged),
         s"commitOverwrite to $table: a concurrent vacuum reclaimed " +
           "staged files before publish — retry the overwrite (and give " +
           "vacuum a minFileAgeMs grace window covering in-flight commits)")
@@ -612,7 +610,7 @@ object ManifestTable {
               // a racing vacuum may have reclaimed this attempt's
               // staged (manifest-less) files — publishing would commit
               // dangling references; re-plan restages from live data
-              if (!stagedLive(fs(spark, t), t, staged))
+              if (!stagedLive(Sources.fileSystem(spark, t), t, staged))
                 throw new DmlRebaseConflict
               curLines.filterNot(touchedSet) ++ staged
             })
@@ -906,7 +904,7 @@ object ManifestTable {
         s"$minRetainedVersions — a reader pinned to one of them would " +
         "fail at action time; raise keepVersions or pass force = true")
     val t = new Path(table)
-    val f = fs(spark, t)
+    val f = Sources.fileSystem(spark, t)
     val head = latestVersion(spark, table)
     val keep = ((head - keepVersions + 1) max 1) to head
     (1L until keep.head).foreach(v =>

@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.Scratch.ScratchOps
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -15,6 +16,19 @@ import org.apache.spark.sql.types.StructType
   * S12 catalog listing
   */
 object Sources {
+
+  /** The session's Hadoop conf: the context's plus every key set with
+    * `spark.conf.set` (the reference configures storage that way,
+    * nb01:44-127), which is the conf Spark's own reads and writes use.
+    * The context conf alone misses those keys. */
+  private[graft] def hadoopConf(spark: SparkSession): Configuration =
+    spark.sessionState.newHadoopConf()
+
+  /** `path`'s FileSystem under [[hadoopConf]]: the one way driver-side
+    * code reaches a filesystem. Each call copies the conf, so resolve
+    * once per operation, not once per file. */
+  private[graft] def fileSystem(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(hadoopConf(spark))
 
   /** S6: the reference's `spark.read.option("multiline","true")
     * .json(RAW + "/media/STAR/STAR.json")` (nb03:90-104) — with an explicit
@@ -35,7 +49,7 @@ object Sources {
     // "escaped exception" was exactly this log line). One extra
     // globStatus RPC per read, driver-side, independent of data size.
     val p = new Path(glob)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, p)
     val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
       .map(_.getPath.toString).sorted
     val reader = spark.read.schema(schema).option("multiLine", multiline)
@@ -209,8 +223,7 @@ object Sources {
     // doomed rows is the one unacceptable outcome of this operator.
     val keptParts = kept.select(partitionCol).distinct()
       .collect().map(_.get(0)).toSet
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, new Path(path))
     touched.filterNot(keptParts).foreach { v =>
       dirsByValue(v).foreach { dir =>
         if (fs.exists(dir) && !fs.delete(dir, true))
@@ -257,7 +270,7 @@ object Sources {
                                (stage: String => T): T = {
     val p = new Path(path); val t = new Path(path + suffix)
     val b = new Path(path + "_backup")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, p)
     // crash recovery: a prior run that died mid-swap left the table at
     // _backup and nothing at path — put it back before reading
     if (!fs.exists(p) && fs.exists(b) && !fs.rename(b, p))
@@ -452,14 +465,14 @@ object Sources {
     * supported filesystem, not just local. */
   def listDir(spark: SparkSession, path: String): Seq[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, p)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).map(_.getPath.toString).toSeq
   }
 
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    fileSystem(spark, p).exists(p)
   }
 
   /** RETENTION EXPIRY on a date-partitioned table: DROP every
@@ -477,7 +490,7 @@ object Sources {
   def expirePartitions(spark: SparkSession, path: String,
                        dateCol: String, cutoff: String): Seq[String] = {
     val root = new Path(path)
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = fileSystem(spark, root)
     if (!f.exists(root)) return Nil
     val prefix = s"$dateCol="
     f.listStatus(root).iterator

@@ -36,7 +36,7 @@ object CorpusAdmission {
   private def storeDirs(spark: SparkSession, storeDir: String,
                         exclude: Option[String]): Seq[String] = {
     val p = new Path(storeDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sources.Sources.fileSystem(spark, p)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
       .filter(d => !exclude.contains(d.getName))

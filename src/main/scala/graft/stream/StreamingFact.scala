@@ -297,7 +297,7 @@ object StreamingFact {
       .dropDuplicates("date" +: keyCols)
     if (!fresh.isEmpty) {
       val target = new org.apache.hadoop.fs.Path(path)
-      val fs = target.getFileSystem(ss.sparkContext.hadoopConfiguration)
+      val fs = graft.sources.Sources.fileSystem(ss, target)
       val merged =
         if (!fs.exists(target)) fresh
         else {

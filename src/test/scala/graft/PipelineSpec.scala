@@ -335,28 +335,16 @@ class PipelineSpec extends AnyFunSuite {
       mediaIds = Seq("abc1", "zzz9"),
       clock = Some(to_timestamp(lit("2024-06-01 00:00:00"))))
     Pipeline.ingest(spark, conf, fetcher)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        // a job's result-stage name is the action's call site, e.g.
-        // "parquet at Sources.scala:41"
-        jobs.add(j.stageInfos.map(_.name).mkString("|"))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val res =
-      try {
-        val r = Pipeline.transform(spark, conf)
-        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (res, costs) = Ledger.measure(spark)(Pipeline.transform(spark, conf))
     // every job transform ran belongs to a silver parquet write: its
-    // result stage is the write call site, or it is an AQE-internal
-    // stage-materialization sub-job of one (withThreadLocalCaptured).
-    // The DQ metrics were collected by observe() INSIDE those jobs —
-    // a reintroduced separate aggregation would surface here as a job
-    // whose result stage names collect/count/head.
-    val seen = jobs.toArray(Array.empty[String]).toSeq
+    // result stage is the write call site (a stage name is the
+    // action's call site, e.g. "parquet at Sources.scala:41"), or it
+    // is an AQE-internal stage-materialization sub-job of one
+    // (withThreadLocalCaptured). The DQ metrics were collected by
+    // observe() INSIDE those jobs — a reintroduced separate
+    // aggregation would surface here as a job whose result stage
+    // names collect/count/head.
+    val seen = costs.jobs.map(_.stageNames.mkString("|"))
     assert(seen.exists(_.contains("parquet at")))
     assert(seen.forall(s => s.contains("parquet at") ||
         s.contains("withThreadLocalCaptured")),

@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * main drifts onto its own engine and no read site mutates the
   * session; only [[Scratch]] makes and deletes scratch dirs and frees
   * lineage cuts (outside the one-round-behind loops); only
-  * [[graft.sources.ControlFile]] writes control files. Plus the env
-  * parsing every main shares. */
+  * [[graft.sources.ControlFile]] writes control files; only
+  * [[Ledger]] registers Spark listeners; only `Sources.fileSystem`
+  * resolves a FileSystem. Plus the env parsing every main shares. */
 class SessionSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -179,6 +180,52 @@ class SessionSpec extends AnyFunSuite {
         "graft/sources/ManifestTable.scala: 2 sites, expected 1",
         s"$stray:2"))
       assert(matches(root, overwriteModeScope) == Seq(s"$stray:3"))
+    } finally Scratch.deleteTree(root)
+  }
+
+  // Spark cost accounting has one owner (graft.Ledger), and a path's
+  // FileSystem one resolver (Sources.fileSystem over the session's
+  // Hadoop conf); configureStorage still writes the context conf
+  private val ownedSites = Seq(
+    """addSparkListener\(|listenerManager\.register\(""".r ->
+      Map("graft/Ledger.scala" -> 1),
+    """getFileSystem\(|newHadoopConf""".r ->
+      Map("graft/sources/Sources.scala" -> 2),
+    "hadoopConfiguration".r -> Map("graft/sources/Sources.scala" -> 1))
+
+  private def ownedDrift(root: Path): Seq[String] =
+    ownedSites.flatMap { case (pattern, owners) =>
+      drift(root, pattern, owners)
+    }
+
+  test("src/main registers Spark listeners only in Ledger and resolves " +
+    "FileSystems only through Sources.fileSystem") {
+    val found = ownedDrift(mainRoot)
+    assert(found.isEmpty, "measure Spark work with graft.Ledger and reach " +
+      "a path's FileSystem with Sources.fileSystem:\n" + found.mkString("\n"))
+  }
+
+  test("negative: the ledger and resolver guards flag planted strays") {
+    val root = Files.createTempDirectory("graft_guard")
+    val ledger = root.resolve("graft/Ledger.scala")
+    val sources = root.resolve("graft/sources/Sources.scala")
+    Files.createDirectories(sources.getParent)
+    Files.writeString(ledger,
+      "object P {\n  sc.addSparkListener(book)\n}\n")
+    Files.writeString(sources, "object P {\n" +
+      "  def hadoopConf(s: S) = s.sessionState.newHadoopConf()\n" +
+      "  def fileSystem(s: S, p: Path) = p.getFileSystem(hadoopConf(s))\n" +
+      "  s.sparkContext.hadoopConfiguration.set(k, v)\n}\n")
+    try {
+      assert(ownedDrift(root).isEmpty)
+      val stray = root.resolve("graft/etl/Planted.scala")
+      Files.createDirectories(stray.getParent)
+      Files.writeString(stray, "object P {\n" +
+        "  spark.listenerManager.register(l)\n" +
+        "  p.getFileSystem(spark.sparkContext.hadoopConfiguration)\n}\n")
+      // line 3 trips both the resolver and the context-conf guard
+      assert(ownedDrift(root) ==
+        Seq(s"$stray:2", s"$stray:3", s"$stray:3"))
     } finally Scratch.deleteTree(root)
   }
 

@@ -94,19 +94,11 @@ class IngestSpec extends AnyFunSuite {
     assert(absent == "2024-06-01T00:00:00Z")
     Ingest.commitWatermark(spark, dir, "2024-06-07T12:00:00Z")
     // a committed watermark is read on the driver: no Spark job
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(Ingest.readWatermark(spark, dir, 7, now) ==
-        "2024-06-07T12:00:00Z")
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"${jobs.get} Spark jobs for one watermark read")
+    val (read, costs) =
+      graft.Ledger.measure(spark)(Ingest.readWatermark(spark, dir, 7, now))
+    assert(read == "2024-06-07T12:00:00Z")
+    assert(costs.jobs.size == 0,
+      s"${costs.jobs.size} Spark jobs for one watermark read")
     // re-commit REPLACES in place (the FileContext OVERWRITE rename
     // path — no delete→rename window) and no tmp litter stays behind
     Ingest.commitWatermark(spark, dir, "2024-06-08T00:00:00Z")

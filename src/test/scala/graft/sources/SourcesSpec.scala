@@ -473,23 +473,36 @@ class SourcesSpec extends AnyFunSuite {
   test("expirePartitions drops only pre-cutoff date partitions and " +
     "never touches the null partition") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_exp")
-      .toString + "/tbl"
-    val rows = Seq(
-      ("2024-01-05", 1L), ("2024-01-09", 2L), ("2024-01-10", 3L),
-      ("2024-02-01", 4L), (null: String, 5L))
-    rows.toDF("date", "id").write.partitionBy("date").parquet(root)
-    val dropped = Sources.expirePartitions(spark, root, "date",
-      "2024-01-10")
-    assert(dropped == Seq("2024-01-05", "2024-01-09"))
-    val left = spark.read.parquet(root).select("id")
-      .as[Long].collect().sorted.toSeq
-    // cutoff-day and later survive; the NULL-dated row is untouched
-    // (no well-defined age — retention must not destroy it)
-    assert(left == Seq(3L, 4L, 5L))
-    // idempotent: nothing left to expire
-    assert(Sources.expirePartitions(spark, root, "date",
-      "2024-01-10").isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft_exp")
+    // the second input is a viewfs mount that only the SESSION conf
+    // defines, as the reference sets its storage keys with
+    // spark.conf.set (nb01:44-127): driver-side ops must resolve the
+    // FileSystem with the conf Spark's own writes use. A fresh mount
+    // name per run, and no FileSystem cache for viewfs, so no call
+    // can borrow an instance another conf resolved.
+    val mount = s"graft${System.nanoTime()}"
+    val confs = Map(
+      s"fs.viewfs.mounttable.$mount.link./data" -> dir.toUri.toString,
+      "fs.viewfs.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try Seq(s"$dir/tbl", s"viewfs://$mount/data/tbl_viewfs").foreach {
+      root =>
+        val rows = Seq(
+          ("2024-01-05", 1L), ("2024-01-09", 2L), ("2024-01-10", 3L),
+          ("2024-02-01", 4L), (null: String, 5L))
+        rows.toDF("date", "id").write.partitionBy("date").parquet(root)
+        val dropped = Sources.expirePartitions(spark, root, "date",
+          "2024-01-10")
+        assert(dropped == Seq("2024-01-05", "2024-01-09"), root)
+        val left = spark.read.parquet(root).select("id")
+          .as[Long].collect().sorted.toSeq
+        // cutoff-day and later survive; the NULL-dated row is untouched
+        // (no well-defined age — retention must not destroy it)
+        assert(left == Seq(3L, 4L, 5L), root)
+        // idempotent: nothing left to expire
+        assert(Sources.expirePartitions(spark, root, "date",
+          "2024-01-10").isEmpty, root)
+    } finally confs.keys.foreach(spark.conf.unset)
   }
 }
 
