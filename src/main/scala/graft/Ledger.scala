@@ -7,9 +7,11 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{JobSucceeded, SparkListener,
-  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
-  StageInfo}
+  SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The one owner of "what did this code cost in Spark work".
   * [[measure]] books every job its body launches, with their stages
@@ -24,6 +26,11 @@ import org.apache.spark.sql.SparkSession
   * metrics: input records are the rows the scans read, output records
   * the rows a file sink wrote (0 for the noop sink), so no plan walk
   * is needed and AQE hides nothing.
+  *
+  * A job's description is its `spark.job.description` when the code
+  * set one, else the description of the SQL execution it ran under
+  * (the action's call site, e.g. `save at Bench.scala:40`), so AQE's
+  * stage sub-jobs and broadcast jobs name the action they serve.
   *
   * A thread the body constructs inherits the property, so its jobs
   * are booked too. A measured scope bounds memory: the listener lives
@@ -93,13 +100,25 @@ object Ledger {
     private val jobs = mutable.Map[Int, Job]()
     private val jobStages = mutable.Set[Int]()
     private val stages = mutable.ArrayBuffer[Stage]()
+    private val executions = mutable.Map[String, String]()
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => synchronized {
+        executions(x.executionId.toString) = x.description
+      }
+      case _ =>
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val props = Option(e.properties)
       if (props.exists(_.getProperty(Prop) == token)) {
+        def prop(k: String) =
+          props.flatMap(p => Option(p.getProperty(k))).filter(_.nonEmpty)
         jobStages ++= e.stageIds
         jobs(e.jobId) = Job(e.jobId, e.time, -1L,
-          props.flatMap(p => Option(p.getProperty("spark.job.description")))
+          prop("spark.job.description")
+            .orElse(prop(SQLExecution.EXECUTION_ID_KEY)
+              .flatMap(executions.get))
             .getOrElse(""),
           e.stageInfos.map(_.name), failed = false)
       }

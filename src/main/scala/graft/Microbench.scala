@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch.ScratchOps
+
 /** Micro-benchmarks that pin two live design decisions, where the
   * registered sf0.1 queries are too overhead-dominated to resolve the
   * trade (plan/shuffle setup is the measurement there). Both run at
@@ -49,13 +51,11 @@ object Microbench {
     val bg = spark.range(bgRows).select(
       (col("id") % (bgRows / 20) + hubDegree + 1).as("src"),
       (col("id") + hubDegree + 1).as("dst"))
-    val und = hub.unionAll(bg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = hub.unionAll(bg).scratchCheckpoint(true)
     val c = und.select(col("dst").as("node"))
       .distinct()
       .select(col("node"), (col("node") % distinctScores + 1).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count(); c.count()
+      .scratchCheckpoint(true)
     def round(label: String)(df: => DataFrame): Unit =
       time(label, _ => f"(hub=$hubDegree%d, scores=$distinctScores%d, " +
         f"bg=$bgRows%d)")(df.agg(sum(col("c"))).collect())
@@ -95,7 +95,10 @@ object Microbench {
   /** `cosine_sim` / `dot_long` full-scan throughput over `rows` ×
     * `dims` deterministic arrays. */
   private def exprMode(spark: SparkSession, rows: Long, dims: Int): Unit = {
-    // deterministic per-row arrays: a_i = ((id*dims+i) % 97) / 10.0
+    // deterministic per-row arrays: a_i = ((id*dims+i) % 97) / 10.0,
+    // materialized BEFORE timing — transform(sequence(...)) is an
+    // interpreted HOF whose generation cost would otherwise swamp the
+    // scoring loop under measure
     val base = spark.range(rows).select(col("id"),
       expr(s"transform(sequence(0, ${dims - 1}), " +
         "i -> cast((id * " + dims + " + i) % 97 as double) / 10.0)")
@@ -107,11 +110,7 @@ object Microbench {
         "i -> cast((id + i) % 1000 as bigint))").as("qa"),
       expr(s"transform(sequence(0, ${dims - 1}), " +
         "i -> cast((id + i * 3) % 1000 as bigint))").as("qb"))
-    // materialize the arrays BEFORE timing — transform(sequence(...))
-    // is an interpreted HOF whose generation cost would otherwise
-    // swamp the scoring loop under measure
-    base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
+      .scratchCheckpoint(true)
     def rate(t: Double) = f"(${rows / t / 1e6}%.1f M rows/s)"
     import graft.functions.HashExprs
     time("cosine_sim", rate)(base

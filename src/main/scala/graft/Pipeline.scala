@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import graft.Scratch.ScratchOps
 import graft.etl.{Quality, Transforms}
 import graft.ingest.Ingest
 import graft.model.Schemas
@@ -154,7 +156,13 @@ object Pipeline {
       }
   }
 
-  /** `qualityReports` are MATERIALIZED metric maps (frame name →
+  /** What a transform committed. The frames are silver read-backs:
+    * lazy scans of the rows the silver writes committed (`goldFact` is
+    * the gold cast over the `fact` read-back), so a caller reads the
+    * committed rows (until the next transform on the same silver path
+    * overwrites them) and the session holds no cache between
+    * refreshes.
+    * `qualityReports` are MATERIALIZED metric maps (frame name →
     * metric → value), collected via `observe()` as a side effect of the
     * silver writes — consuming them costs zero additional jobs. */
   case class Result(dimMedia: DataFrame, dimVisitor: DataFrame,
@@ -330,46 +338,55 @@ object Pipeline {
         Transforms.dimVisitor(rawVisitors, clock),
         Seq("visitor_id"), Seq(col("ip_address"), col("country"))),
       s"dq_dim_visitor_$tag", Seq("visitor_id"), visitorContract)
+    val factPath = s"${conf.silverPath}/fact-engagement"
     // dead-letter routing: rows with empty/null keys go to quarantine
-    // WITH their failure reasons instead of silently vanishing. The
-    // tagged frame is cached because both sinks (silver valid side,
-    // quarantine side) filter it — one evaluation of the whole bronze
-    // scan + transform, then two cheap filtered writes.
-    val factTagged = Quality.tagErrors(
-      Transforms.factEngagement(
-        Transforms.withMediaIdFromPath(rawVisitors), clock,
-        dropNullKeys = false), // routed below, not dropped
-      factRouteRules).cache()
-    val (fact, factObs) = Quality.observedReport(
-      factTagged.filter(col("_errors") === "").drop("_errors"),
-      s"dq_fact_$tag", Seq("media_id", "visitor_id", "date"),
-      factContract)
-    val (factDead, factDeadObs) = Quality.observedReport(
-      factTagged.filter(col("_errors") =!= ""),
-      s"dq_fact_quarantine_$tag", Seq("media_id", "visitor_id"))
-    val dimMediaC = dimMedia.cache()
-    val dimVisitorC = dimVisitor.cache()
+    // WITH their failure reasons instead of silently vanishing. Both
+    // sinks filter the tagged frame, a lazy cut: the silver write fills
+    // it (one bronze scan + transform, no extra job), the quarantine
+    // write reads it back, and the scope frees it.
+    val (factSchema, reports) = Scratch.scoped {
+      val factTagged = Quality.tagErrors(
+        Transforms.factEngagement(
+          Transforms.withMediaIdFromPath(rawVisitors), clock,
+          dropNullKeys = false), // routed below, not dropped
+        factRouteRules).scratchCheckpoint(eager = false)
+      val (fact, factObs) = Quality.observedReport(
+        factTagged.filter(col("_errors") === "").drop("_errors"),
+        s"dq_fact_$tag", Seq("media_id", "visitor_id", "date"),
+        factContract)
+      val (factDead, factDeadObs) = Quality.observedReport(
+        factTagged.filter(col("_errors") =!= ""),
+        s"dq_fact_quarantine_$tag", Seq("media_id", "visitor_id"))
 
-    Sources.writeSilverParquet(dimMediaC, s"${conf.silverPath}/dim-media")
-    Sources.writeSilverParquet(dimVisitorC,
-      s"${conf.silverPath}/dim-visitor")
-    // fact partitioned by date: partition pruning for every downstream
-    // date-ranged query (100 TB posture, SURVEY §7.4.7)
-    Sources.writeSilverParquet(fact, s"${conf.silverPath}/fact-engagement",
-      partitionCol = Some("date"))
-    Sources.writeSilverParquet(factDead,
-      s"${conf.silverPath}/_quarantine/fact-engagement")
+      Sources.writeSilverParquet(dimMedia, s"${conf.silverPath}/dim-media")
+      Sources.writeSilverParquet(dimVisitor,
+        s"${conf.silverPath}/dim-visitor")
+      // fact partitioned by date: partition pruning for every downstream
+      // date-ranged query (100 TB posture, SURVEY §7.4.7)
+      Sources.writeSilverParquet(fact, factPath,
+        partitionCol = Some("date"))
+      Sources.writeSilverParquet(factDead,
+        s"${conf.silverPath}/_quarantine/fact-engagement")
 
-    // The writes above are the actions that populated the observations;
-    // .get is now a pure read of already-collected metrics.
-    val reports = Map(
-      "dim_media" -> dimMediaObs.get,
-      "dim_visitor" -> dimVisitorObs.get,
-      "fact" -> factObs.get,
-      "fact_quarantine" -> factDeadObs.get)
+      // The writes above populated the observations; .get is now a
+      // pure read of already-collected metrics.
+      (fact.schema, Map(
+        "dim_media" -> dimMediaObs.get,
+        "dim_visitor" -> dimVisitorObs.get,
+        "fact" -> factObs.get,
+        "fact_quarantine" -> factDeadObs.get))
+    }
 
-    Result(dimMediaC, dimVisitorC, fact, Transforms.goldCastFact(fact),
-      reports)
+    // the committed silver rows, read back lazily with the written
+    // schemas: no job, and an empty silver dir still reads. The select
+    // keeps the written column order (a partition column is read last).
+    def silver(schema: StructType, path: String) =
+      spark.read.schema(schema).parquet(path)
+        .select(schema.fieldNames.map(col): _*)
+    val fact = silver(factSchema, factPath)
+    Result(silver(dimMedia.schema, s"${conf.silverPath}/dim-media"),
+      silver(dimVisitor.schema, s"${conf.silverPath}/dim-visitor"),
+      fact, Transforms.goldCastFact(fact), reports)
   }
 
   /** Full run: ingest → transform → run report. The report artifact

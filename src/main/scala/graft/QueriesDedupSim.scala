@@ -1,7 +1,7 @@
 package graft
 
 import graft.Scratch.ScratchOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -418,7 +418,7 @@ private[graft] object QueriesDedupSim {
     * the election step is unchanged (cluster_id keyed, constant
     * payload). */
   private[graft] val dedupSurvivorQuality = Q("dedup_survivor_quality",
-    (s, dir) => {
+    (s, dir) => Scratch.scoped {
       val base = t(s, dir, "documents")
         .filter(col("text").isNotNull && trim(col("text")) =!= "" &&
           col("doc_id") < 200)
@@ -448,6 +448,7 @@ private[graft] object QueriesDedupSim {
         .select(col("cluster_id"), col("cluster_size"),
           col("s.id").as("keep_id"), col("s.n_tokens").as("n_tokens"))
         .orderBy("cluster_id")
+        .scratchCheckpoint(true) // frees base and the clustering rounds
     },
     Some("""WITH s AS (SELECT doc_id, text,
         list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS toks
@@ -1770,23 +1771,23 @@ private[graft] object QueriesDedupSim {
       (CAST(4 AS BIGINT), CAST(4 AS INTEGER), CAST(280 AS BIGINT), CAST('0.27982608680315935' AS DOUBLE)),
       (CAST(4 AS BIGINT), CAST(5 AS INTEGER), CAST(249 AS BIGINT), CAST('0.2796306459978647' AS DOUBLE)))
       AS t(query_id, rank, neighbor_id, cos_sim) ORDER BY query_id, rank"""))
-  /** Index BUILD/SERVE split ([[Similarity.buildPqIndex]] /
-    * [[Similarity.pqTopKFromIndex]]): the PQ codebooks + codes persist
-    * as a parquet artifact and top-k is served from the artifact with
-    * NO recomputation — the offline-build / online-serve separation a
-    * production retrieval stack runs (the codes table is the
-    * ~128×-compressed thing that ships to the serving fleet). Shares
-    * [[simTopkPq]]'s frozen oracle VERBATIM: the served path must
-    * reproduce the inline path byte-for-byte through the parquet
+  /** Index BUILD/SERVE split ([[Similarity.commitPqIndex]] /
+    * [[Similarity.pqTopKFromManifest]]): the PQ codebooks + codes
+    * commit as a parquet table and top-k is served from its latest
+    * version with NO recomputation — the offline-build / online-serve
+    * separation a production retrieval stack runs (the codes table is
+    * the ~128×-compressed thing that ships to the serving fleet).
+    * Shares [[simTopkPq]]'s frozen oracle VERBATIM: the served path
+    * must reproduce the inline path byte-for-byte through the parquet
     * round-trip — codebook doubles, code assignments, DECIMAL ADC
     * partials and the rerank all survive persistence, or the hash
     * flips. */
   private[graft] val simTopkPqServed = Q("sim_topk_pq_served",
     (s, dir) => {
       val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
-      val root = Scratch.dir("graft_pq_index")
-      Similarity.buildPqIndex(e, "vec_id", "embedding", s"$root/idx")
-      Similarity.pqTopKFromIndex(s"$root/idx", e,
+      val tbl = s"${Scratch.dir("graft_pq_index")}/idx"
+      Similarity.commitPqIndex(e, "vec_id", "embedding", tbl)
+      Similarity.pqTopKFromManifest(tbl, e,
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 5)
         .orderBy("query_id", "rank")
     },
@@ -1849,38 +1850,47 @@ private[graft] object QueriesDedupSim {
     * scoring, exact re-rank on k·rerank survivors, recall priced by
     * SCALE.md's ladder. */
   private[graft] val retrievalPipeline = Q("retrieval_pipeline",
-    (s, dir) => {
-      val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
-      val qs = e.filter(col("vec_id") < 5)
-      val tbl = s"${Scratch.dir("graft_retr")}/idx"
-      val v = Similarity.commitPqIndex(e, "vec_id", "embedding", tbl)
-      val served = Similarity.pqTopKFromManifest(tbl, e, qs, "vec_id",
-        "embedding", k = 5, version = Some(v)).scratchCheckpoint(true)
-      val exact = Similarity.bruteForceTopK(e, qs, "vec_id", "embedding",
-        k = 5).select(col("query_id"), col("neighbor_id"))
-        .scratchCheckpoint(true)
-      // both eval sides are k × |queries| rows BY CONSTRUCTION —
-      // broadcast explicitly (a localCheckpoint's stats default to
-      // "huge", so the planner would fall back to sort-merge). The
-      // right-outer join must build its LEFT side, so the hint wraps
-      // the hits frame, not the preserved k frame.
-      val recall = broadcast(exact
-          .join(broadcast(served.select("query_id", "neighbor_id")),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("hits")))
-        .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
-          Seq("query_id"), "right")
-        .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
-          col("k").cast("double")).as("avg_recall"))
-      recall.crossJoin(served.agg(count(lit(1)).as("served_rows")))
-        .select(lit(v).as("index_version"),
-          when(col("avg_recall") >= 0.5199, 0L).otherwise(1L)
-            .as("recall_below_floor"),
-          col("served_rows"))
+    (s, dir) => Scratch.scoped {
+      retrievalRecall(s, dir).scratchCheckpoint(true)
     },
     Some("""SELECT CAST(1 AS BIGINT) AS index_version,
       CAST(0 AS BIGINT) AS recall_below_floor,
       CAST(25 AS BIGINT) AS served_rows"""))
+
+  /** [[retrievalPipeline]]'s frame before its result cut: the eval
+    * joins over the served and exact cuts, whose plan
+    * `PlanGuardrailSpec` audits. Call it inside a [[Scratch.scoped]]
+    * body. */
+  private[graft] def retrievalRecall(s: SparkSession, dir: String)
+  : DataFrame = {
+    val e = t(s, dir, "embeddings").dropDuplicates("vec_id")
+    val qs = e.filter(col("vec_id") < 5)
+    val tbl = s"${Scratch.dir("graft_retr")}/idx"
+    val v = Similarity.commitPqIndex(e, "vec_id", "embedding", tbl)
+    val served = Similarity.pqTopKFromManifest(tbl, e, qs, "vec_id",
+      "embedding", k = 5, version = Some(v)).scratchCheckpoint(true)
+    val exact = Similarity.bruteForceTopK(e, qs, "vec_id", "embedding",
+      k = 5).select(col("query_id"), col("neighbor_id"))
+      .scratchCheckpoint(true)
+    // both eval sides are k × |queries| rows BY CONSTRUCTION —
+    // broadcast explicitly (a localCheckpoint's stats default to
+    // "huge", so the planner would fall back to sort-merge). The
+    // right-outer join must build its LEFT side, so the hint wraps
+    // the hits frame, not the preserved k frame.
+    val recall = broadcast(exact
+        .join(broadcast(served.select("query_id", "neighbor_id")),
+          Seq("query_id", "neighbor_id"), "left_semi")
+        .groupBy("query_id").agg(count(lit(1)).as("hits")))
+      .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
+        Seq("query_id"), "right")
+      .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
+        col("k").cast("double")).as("avg_recall"))
+    recall.crossJoin(served.agg(count(lit(1)).as("served_rows")))
+      .select(lit(v).as("index_version"),
+        when(col("avg_recall") >= 0.5199, 0L).otherwise(1L)
+          .as("recall_below_floor"),
+        col("served_rows"))
+  }
 
   /** Incremental ANN index maintenance ([[Similarity.assignToCells]]):
     * a RUNNING index appends new vector batches by routing them

@@ -28,10 +28,8 @@ private[graft] object QueriesKpi {
     Some("""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 3600.0 AS total_watch_hours FROM lineitem"""))
 
   private[graft] val kpiEngagementRate = Q("kpi_engagement_rate",
-    (s, dir) => t(s, dir, "lineitem").agg(
-      (dsum(col("l_quantity")) /
-        nullif(count_distinct(col("l_orderkey")).cast("double"),
-          lit(0.0))).as("engagement_rate")),
+    (s, dir) => Kpi.engagementRate(t(s, dir, "lineitem"), "l_quantity",
+      "l_orderkey"),
     Some("""SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / NULLIF(CAST(COUNT(DISTINCT l_orderkey) AS DOUBLE), 0.0) AS engagement_rate FROM lineitem"""))
 
   private[graft] val kpiByChannel = Q("kpi_by_channel",

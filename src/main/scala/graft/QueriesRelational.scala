@@ -886,16 +886,14 @@ private[graft] object QueriesRelational {
     * COALESCE-to-0 semantics of scalar COUNT subqueries are part of
     * what's verified. */
   private[graft] val corrScalarSubquery = Q("corr_scalar_subquery",
-    (s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("customer_csq")
-      t(s, dir, "orders").createOrReplaceTempView("orders_csq")
-      s.sql("""SELECT * FROM (
+    (s, dir) => Tables.sql(s, "customer_csq" -> t(s, dir, "customer"),
+        "orders_csq" -> t(s, dir, "orders"))(
+      """SELECT * FROM (
           SELECT c_custkey,
             (SELECT COUNT(*) FROM orders_csq o
              WHERE o.o_custkey = c.c_custkey) AS n_orders
           FROM customer_csq c)
-        WHERE n_orders >= 15 ORDER BY c_custkey""")
-    },
+        WHERE n_orders >= 15 ORDER BY c_custkey"""),
     Some("""SELECT * FROM (
         SELECT c_custkey,
           (SELECT COUNT(*) FROM orders o
@@ -911,18 +909,16 @@ private[graft] object QueriesRelational {
     * deterministic, and prices are compared, never summed, so the
     * doubles are safe cross-engine. */
   private[graft] val lateralTopn = Q("lateral_topn",
-    (s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("customer_lat")
-      t(s, dir, "orders").createOrReplaceTempView("orders_lat")
-      s.sql("""SELECT seg.c_mktsegment, t.o_orderkey, t.o_totalprice
+    (s, dir) => Tables.sql(s, "customer_lat" -> t(s, dir, "customer"),
+        "orders_lat" -> t(s, dir, "orders"))(
+      """SELECT seg.c_mktsegment, t.o_orderkey, t.o_totalprice
         FROM (SELECT DISTINCT c_mktsegment FROM customer_lat) seg,
         LATERAL (SELECT o.o_orderkey, o.o_totalprice
           FROM orders_lat o JOIN customer_lat c
             ON o.o_custkey = c.c_custkey
           WHERE c.c_mktsegment = seg.c_mktsegment
           ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 2) t
-        ORDER BY seg.c_mktsegment, t.o_orderkey""")
-    },
+        ORDER BY seg.c_mktsegment, t.o_orderkey"""),
     Some("""SELECT seg.c_mktsegment, t.o_orderkey, t.o_totalprice
       FROM (SELECT DISTINCT c_mktsegment FROM customer) seg,
       LATERAL (SELECT o.o_orderkey, o.o_totalprice
@@ -948,9 +944,8 @@ private[graft] object QueriesRelational {
     * 0.7 s at sf0.1 (round 9; the round-8 drift was exactly the
     * per-iteration rescan getting costlier with the events reader). */
   private[graft] val recursiveCteSpine = Q("recursive_cte_spine",
-    (s, dir) => {
-      events(s, dir).createOrReplaceTempView("events_rcte")
-      s.sql("""WITH RECURSIVE bounds AS (
+    (s, dir) => Tables.sql(s, "events_rcte" -> events(s, dir))(
+      """WITH RECURSIVE bounds AS (
           SELECT MIN(CAST(ts AS DATE)) AS mn, MAX(CAST(ts AS DATE)) AS mx
           FROM events_rcte),
         spine(date, mx) AS (
@@ -960,8 +955,7 @@ private[graft] object QueriesRelational {
         d AS (SELECT CAST(ts AS DATE) AS date, COUNT(*) AS n
           FROM events_rcte GROUP BY 1)
         SELECT spine.date, COALESCE(d.n, 0) AS n_events
-        FROM spine LEFT JOIN d USING (date) ORDER BY spine.date""")
-    },
+        FROM spine LEFT JOIN d USING (date) ORDER BY spine.date"""),
     Some("""WITH RECURSIVE bounds AS (
         SELECT MIN(CAST(ts AS DATE)) AS mn, MAX(CAST(ts AS DATE)) AS mx
         FROM events),

@@ -846,14 +846,16 @@ private[graft] object QueriesStreaming {
                 .coalesce(1),
               statsCol = Some("doc_id"))
           }
+        // drained into a parquet sink under the scratch dir, not a
+        // memory sink, whose query name would stay behind as a temp view
         val q = s.readStream.format("graft-manifest-cdc")
           .option("path", table).load()
-          .writeStream.format("memory").queryName("manifest_cdc_feed")
+          .writeStream.format("parquet").option("path", s"$root/feed")
           .option("checkpointLocation", s"$root/ckpt")
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.table("manifest_cdc_feed")
+        s.read.parquet(s"$root/feed")
           .groupBy(col("version"))
           .agg(count(lit(1)).as("n_files"),
             min(col("stats_min")).as("min_id"),

@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.Scratch.ScratchOps
 import graft.sources.ControlFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Cost shape: ONE full scan computes every corpus-wide number (the
   * measures ride a single aggregate; Spark schedules the per-source
-  * and per-lang rollups as parallel subtrees over the same cached
-  * scan), plus one digest-keyed aggregate for the dup rate — the same
+  * and per-lang rollups as parallel subtrees over one lineage cut of
+  * the scan), plus one digest-keyed aggregate for the dup rate — the same
   * exchange discipline as `dedup_exact` (16-byte digests, never
   * text). At 100 TB the report costs two passes and writes a few KB
   * next to the data. */
@@ -40,15 +41,15 @@ object CorpusReport {
   /** Compute the card for `docs` (columns: text, source, lang) and
     * write it to `path` as a single JSON file (replaced atomically by
     * [[ControlFile]]). Returns the JSON. */
-  def write(spark: SparkSession, docs: DataFrame, path: String): String = {
-    val base = docs.select(col("text"), col("source"), col("lang"),
-        length(coalesce(col("text"), lit(""))).cast("long").as("chars"),
-        when(trim(coalesce(col("text"), lit(""))) === "", 0L)
-          .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
-          .as("tokens"),
-        md5(coalesce(col("text"), lit(""))).as("digest"))
-      .cache()
-    try {
+  def write(spark: SparkSession, docs: DataFrame, path: String): String =
+    graft.Scratch.scoped {
+      val base = docs.select(col("text"), col("source"), col("lang"),
+          length(coalesce(col("text"), lit(""))).cast("long").as("chars"),
+          when(trim(coalesce(col("text"), lit(""))) === "", 0L)
+            .otherwise(size(split(trim(col("text")), "\\s+")).cast("long"))
+            .as("tokens"),
+          md5(coalesce(col("text"), lit(""))).as("digest"))
+        .scratchCheckpoint(eager = false) // the first aggregate fills it
       val overall = base.agg(
         count(lit(1)).as("n_docs"),
         coalesce(sum(col("tokens")), lit(0L)).as("n_tokens"),
@@ -80,6 +81,5 @@ object CorpusReport {
            |}""".stripMargin
       ControlFile.replace(spark, path, json)
       json
-    } finally base.unpersist()
-  }
+    }
 }

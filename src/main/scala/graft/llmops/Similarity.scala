@@ -724,9 +724,8 @@ object Similarity {
   }
 
   /** [[trainPqCodebooks]] with the dimension probe hoisted — callers
-    * that already ran the probe ([[buildPqIndex]]/[[commitPqIndex]]
-    * need `dim` for their own code-assignment pass) skip a duplicate
-    * corpus job. */
+    * that already ran the probe ([[commitPqIndex]] needs `dim` for
+    * its own code-assignment pass) skip a duplicate corpus job. */
   private def trainPqCodebooksImpl(corpus: DataFrame, idCol: String,
                                    vecCol: String, m: Int,
                                    codebookK: Int, iterations: Int,
@@ -931,8 +930,8 @@ object Similarity {
   }
 
   /** The PQ SERVE stage, shared by the inline [[pqTopK]] and the
-    * persisted-index [[pqTopKFromIndex]] path: broadcast per-query ADC
-    * lookup table, additive approximate scores over the code rows,
+    * committed-index [[pqTopKFromManifest]] path: broadcast per-query
+    * ADC lookup table, additive approximate scores over the code rows,
     * exact-cosine re-rank of the top `rerankFactor`·k. */
   private def pqServe(codes: DataFrame, cents: DataFrame,
                       corpus: DataFrame, queries: DataFrame,
@@ -970,53 +969,12 @@ object Similarity {
         col("cos_sim"))
   }
 
-  /** BUILD the PQ index as a persisted artifact: codebooks + codes as
-    * parquet under `path`. This is the offline half of the
-    * build/serve split a production retrieval stack runs — the index
-    * is built once per corpus version (the expensive training +
-    * assignment pass), then served arbitrarily many times without
-    * recomputation. At 100 TB the codes table is the ~128×-compressed
-    * artifact that ships to the serving fleet; versioning it is what
-    * [[graft.sources.ManifestTable]] is for. */
-  def buildPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                   path: String, m: Int = 4, codebookK: Int = 16,
-                   iterations: Int = 1): Unit = {
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    graft.Scratch.scoped {
-      val cents = modelCut(trainPqCodebooksImpl(corpus, idCol, vecCol, m,
-        codebookK, iterations, dim))
-      // the serve path reads the artifact back from disk, so the scope
-      // frees the build's model checkpoint as soon as both writes land
-      // File sizing on the artifact writes (guide §6): a bare write
-      // lands one near-empty file PER PARTITION of the writing plan
-      // (profiled: 32 files for an 8 000-row codes table, ~0.18 s of
-      // writer setup each, and every later serve scan pays the 32
-      // splits again). The CODEBOOK side is bounded model state
-      // (m × codebookK rows at any corpus scale) — a narrow coalesce(1)
-      // writes it as one file with no shuffle. The CODES side is
-      // corpus-sized, so it gets a REBALANCE hint instead: the
-      // AQE-coalesced round-robin exchange sizes output files to the
-      // advisory partition size at ANY scale — one file here,
-      // ~advisory-sized files for a 100 TB codes table — with no tuned
-      // constant. The index has no within-file order contract (codes
-      // are hash-joined on (s, code_id)), so the layout is free to
-      // rebalance.
-      cents.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/codebooks")
-      assignPqCodes(
-        corpus.select(col(idCol).as("vid"),
-          posexplode(subvectors(col(vecCol), m, sub)).as(Seq("s", "subv"))),
-        cents)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$path/codes")
-    }
-  }
-
-  /** VERSIONED index build: commit the [[buildPqIndex]] artifact as
-    * ONE atomic [[graft.sources.ManifestTable]] version and return the
-    * version number. The codebook rows ride in the same committed
+  /** BUILD the PQ index — the offline half of the build/serve split a
+    * production retrieval stack runs: trained codebooks + codes, built
+    * once per corpus version and served arbitrarily many times without
+    * recomputation ([[pqTopKFromManifest]]). The index commits as ONE
+    * atomic [[graft.sources.ManifestTable]] version and the version
+    * number is returned. The codebook rows ride in the same committed
     * table as the code rows (a `kind` discriminator column), so a
     * reader pins a CONSISTENT (codebooks, codes) pair with a single
     * version — two separate tables could skew under concurrent
@@ -1047,11 +1005,16 @@ object Similarity {
       // to long would silently null every code row and the serve path
       // would return empty top-ks); the codebook rows' null vid adopts it
       val vidType = codes.schema("vid").dataType
-      // File sizing per side, the [[buildPqIndex]] discipline: the
-      // bounded codebook rows coalesce narrowly to one partition, the
-      // corpus-sized code rows REBALANCE so AQE sizes their files to
-      // the advisory partition size at any scale. Without it the commit
-      // staged one near-empty file per partition of the writing plan.
+      // File sizing per side (guide §6): the bounded codebook rows
+      // (m × codebookK at any corpus scale) coalesce narrowly to one
+      // partition with no shuffle; the corpus-sized code rows REBALANCE
+      // so AQE sizes their files to the advisory partition size at any
+      // scale. Without it the commit staged one near-empty file per
+      // partition of the writing plan (profiled: 32 files for an
+      // 8 000-row codes table, ~0.18 s of writer setup each, and every
+      // serve scan paid the 32 splits again). The index has no
+      // within-file order contract (codes are hash-joined on
+      // (s, code_id)), so the layout is free to rebalance.
       val art = cents.select(lit("codebook").as("kind"),
           lit(null).cast(vidType).as("vid"), col("s"), col("code_id"),
           col("centroid"))
@@ -1071,7 +1034,9 @@ object Similarity {
     * [[pqServe]] as the inline path — byte-identical results at the
     * same geometry. `version = None` serves the latest commit;
     * an explicit version pins a snapshot that stays stable however
-    * many rebuilds land while it is being consumed. */
+    * many rebuilds land while it is being consumed. `corpus` supplies
+    * only the re-rank vectors (the refine step needs originals; same
+    * contract as a FAISS refine index). */
   def pqTopKFromManifest(table: String, corpus: DataFrame,
                          queries: DataFrame, idCol: String,
                          vecCol: String, k: Int,
@@ -1083,25 +1048,6 @@ object Similarity {
       .select("s", "code_id", "centroid")
     val codes = art.filter(col("kind") === "code")
       .select("vid", "s", "code_id")
-    val geom = cents.agg(max(col("s")).as("ms"),
-      max(size(col("centroid"))).as("sub")).head()
-    pqServe(codes, cents, corpus, queries, idCol, vecCol, k,
-      m = geom.getInt(0) + 1, sub = geom.getInt(1),
-      rerankFactor = rerankFactor)
-  }
-
-  /** SERVE top-k from a [[buildPqIndex]] artifact: codebooks/codes are
-    * read back from `path`, never recomputed — byte-identical results
-    * to the inline [[pqTopK]] at the same geometry (the registered
-    * `sim_topk_pq_served` row proves it against the SAME frozen
-    * oracle). `corpus` supplies only the re-rank vectors (the refine
-    * step needs originals; same contract as a FAISS refine index). */
-  def pqTopKFromIndex(path: String, corpus: DataFrame, queries: DataFrame,
-                      idCol: String, vecCol: String, k: Int,
-                      rerankFactor: Int = 3): DataFrame = {
-    val spark = corpus.sparkSession
-    val cents = spark.read.parquet(s"$path/codebooks")
-    val codes = spark.read.parquet(s"$path/codes")
     val geom = cents.agg(max(col("s")).as("ms"),
       max(size(col("centroid"))).as("sub")).head()
     pqServe(codes, cents, corpus, queries, idCol, vecCol, k,

@@ -50,6 +50,19 @@ class LedgerSpec extends AnyFunSuite {
     assert(c.rowsWritten == 0, c) // the noop sink writes no file rows
   }
 
+  test("every job of an AQE shuffle query names the action's call site") {
+    // AQE runs the exchange's map stage in a sub-job of its own, on a
+    // pool thread; the job still names the collect it serves (the
+    // read's schema job runs outside the measure: it is no SQL
+    // execution, so it has no execution description to take)
+    val df = spark.read.parquet(table()).groupBy("k").agg(sum("id").as("s"))
+    val (_, c) = Ledger.measure(spark)(df.collect())
+    assert(c.jobs.size >= 2, c)
+    assert(c.jobs.forall(
+      _.description.startsWith("collect at LedgerSpec.scala:")),
+      c.jobs.map(_.description))
+  }
+
   test("a failing action is booked as a failed job") {
     val (r, c) = Ledger.measure(spark) {
       Try(Bench.drain(spark.range(10).select(expr("assert_true(id < 5)"))))

@@ -41,6 +41,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(fact.map(_.getAs[String]("media_id")).toSet ==
       Set("abc1", "zzz9")) // recovered from the bronze dir names
     assert(fact.forall(_.getAs[Long]("play_count") == 1)) // 'end' excluded
+    // the silver read-back keeps the fact's column order (the date
+    // partition column does not move to the end)
+    assert(res.fact.columns.toSeq ==
+      graft.model.Schemas.factEngagement.fieldNames.toSeq)
     // silver parquet landed, fact partitioned by date
     assert(graft.sources.Sources.exists(spark,
       s"$root/silver/fact-engagement"))
@@ -291,6 +295,8 @@ class PipelineSpec extends AnyFunSuite {
         else if (endpoint == "media") Some(mediaJson(id))
         else Some(visitorJson(id))
     }
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
     // retry under a DIFFERENT stamp — the double-count hazard
     assert(Pipeline.ingest(spark, conf, ok,
       java.time.Instant.parse("2024-06-08T01:00:00Z")))
@@ -300,6 +306,17 @@ class PipelineSpec extends AnyFunSuite {
     // without the dirty-run rollback, ok1's visitor would sit in two
     // stamped bronze dirs and its play_count here would be 2
     assert(fact.forall(_.getAs[Long]("play_count") == 1))
+    assert(res.goldFact.count() == 2)
+    // the next refresh on the same root, as a scheduled run would
+    assert(Pipeline.ingest(spark, conf, ok,
+      java.time.Instant.parse("2024-06-08T02:00:00Z")))
+    val next = Pipeline.transform(spark, conf)
+    assert(next.fact.collect().forall(_.getAs[Long]("play_count") == 2))
+    assert(next.goldFact.count() == 2)
+    // two refreshes leave the session as they found it: the results
+    // are silver read-backs, not cached frames that pile up per call
+    assert((persisted -- before).isEmpty,
+      s"transform left persisted RDDs: ${persisted -- before}")
   }
 
   test("unrecoverable-lineage fact rows land in quarantine with " +

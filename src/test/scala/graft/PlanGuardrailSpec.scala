@@ -21,7 +21,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
   /** Bounded-id crossJoin oracle demos (doc_id/vec_id-filtered), each
     * documented in Queries.scala with its LSH/banded scale path. */
   private val cartesianOk = Set("dedup_ngram_jaccard", "dedup_corpus",
-    "dedup_survivor_quality", "dedup_embedding", "dedup_containment")
+    "dedup_embedding", "dedup_containment")
 
   /** Queries allowed an unpartitioned window — and ONLY over aggregated
     * input, asserted below: the window's size is bounded by a value
@@ -63,9 +63,11 @@ class PlanGuardrailSpec extends AnyFunSuite {
 
   test("retrieval_pipeline's recall-eval joins broadcast their " +
     "bounded sides (checkpoint stats default to huge → SMJ fallback)") {
-    val df = Queries.all.find(_.name == "retrieval_pipeline").get
-      .run(spark, dir)
-    val plan = df.queryExecution.executedPlan.toString
+    // the row ends in a result cut, so audit the frame it cuts
+    val plan = Scratch.scoped {
+      QueriesDedupSim.retrievalRecall(spark, dir)
+        .queryExecution.executedPlan.toString
+    }
     assert(plan.contains("BroadcastHashJoin"),
       s"retrieval_pipeline lost its broadcast eval joins:\n$plan")
     assert(!plan.contains("SortMergeJoin"),

@@ -2,10 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Smoke: every registered query runs on sf0.001 and produces a sane
-  * frame. (Exact value correctness is enforced by the DuckDB oracle via
-  * Verify + scripts/verify_local.py; this keeps `sbt test` covering the
-  * full registry.) */
+/** Smoke: every registered query runs on sf0.001, produces a sane
+  * frame and leaves the session as it found it. (Exact value
+  * correctness is enforced by the DuckDB oracle via Verify +
+  * scripts/verify_local.py; this keeps `sbt test` covering the full
+  * registry.) */
 class QueriesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -14,12 +15,38 @@ class QueriesSpec extends AnyFunSuite {
   private val mayBeEmpty = Set("dup_groups", "dedup_minhash_lsh",
     "dedup_simhash", "dedup_ngram_jaccard", "dedup_embedding")
 
+  private def tempViews: Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary)
+      .map(_.name).toSet
+
+  private def persisted: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  // Session hygiene, no allowlist: a row leaves the explicit session
+  // conf and the temp views as it found them, stops every stream it
+  // started, and keeps at most one new persisted RDD, its result cut
+  // (Scratch.scoped frees every other cut). Persistent catalog tables
+  // a Scratch.memo build stages once per JVM (bucketed_join's bucketed
+  // tables) are scratch artifacts, not checked here.
   Queries.all.foreach { q =>
     test(s"query ${q.name} runs on sf0.001") {
+      val (conf0, views0, rdds0) = (spark.conf.getAll, tempViews, persisted)
       val df = q.run(spark, dir)
       assert(df.columns.nonEmpty)
       val n = df.count()
       if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows")
+      val conf = spark.conf.getAll
+      assert(conf == conf0, s"${q.name} changed session confs: " +
+        s"${conf.toSet diff conf0.toSet}, was ${conf0.toSet diff conf.toSet}")
+      assert(tempViews == views0,
+        s"${q.name} left temp views: ${tempViews diff views0}")
+      assert(spark.streams.active.isEmpty,
+        s"${q.name} left streams running: " +
+          spark.streams.active.map(_.name).mkString(","))
+      val fresh = persisted -- rdds0
+      assert(fresh.size <= 1, s"${q.name} left ${fresh.size} persisted " +
+        "RDDs; free intermediates with Scratch.scoped and end in one " +
+        "result cut")
     }
   }
 

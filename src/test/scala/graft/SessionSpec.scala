@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * lineage cuts (outside the one-round-behind loops); only
   * [[graft.sources.ControlFile]] writes control files; only
   * [[Ledger]] registers Spark listeners; only `Sources.fileSystem`
-  * resolves a FileSystem. Plus the env parsing every main shares. */
+  * resolves a FileSystem; only CheckpointBridge persists and only
+  * [[Tables]] registers temp views. Plus the env parsing every main
+  * shares. */
 class SessionSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -226,6 +228,50 @@ class SessionSpec extends AnyFunSuite {
       // line 3 trips both the resolver and the context-conf guard
       assert(ownedDrift(root) ==
         Seq(s"$stray:2", s"$stray:3", s"$stray:3"))
+    } finally Scratch.deleteTree(root)
+  }
+
+  // in-memory session state has one owner per kind: a lineage cut's
+  // storage is persisted only inside CheckpointBridge (the reliable
+  // cut's internal RDD), and temp views are registered only by Tables
+  // (registerViews and the query-scoped Tables.sql)
+  private val sessionStateSites = Seq(
+    """\.cache\(\)|\.persist\(""".r ->
+      Map("org/apache/spark/sql/graft/CheckpointBridge.scala" -> 1),
+    """create(OrReplace)?(Global)?TempView\(""".r ->
+      Map("graft/Tables.scala" -> 2))
+
+  private def sessionStateDrift(root: Path): Seq[String] =
+    sessionStateSites.flatMap { case (pattern, owners) =>
+      drift(root, pattern, owners)
+    }
+
+  test("src/main caches and persists only in CheckpointBridge and " +
+    "registers temp views only in Tables") {
+    val found = sessionStateDrift(mainRoot)
+    assert(found.isEmpty, "stage an intermediate read twice as a " +
+      "scratchCheckpoint in a Scratch.scoped body, and run SQL over " +
+      s"frames with Tables.sql:\n${found.mkString("\n")}")
+  }
+
+  test("negative: the cache and temp-view guards flag planted strays") {
+    val root = Files.createTempDirectory("graft_guard")
+    val bridge =
+      root.resolve("org/apache/spark/sql/graft/CheckpointBridge.scala")
+    val tables = root.resolve("graft/Tables.scala")
+    Seq(bridge, tables).foreach(f => Files.createDirectories(f.getParent))
+    Files.writeString(bridge,
+      "object P {\n  rdd.persist(StorageLevel.MEMORY_AND_DISK)\n}\n")
+    Files.writeString(tables, "object P {\n" +
+      "  df.createOrReplaceTempView(n)\n  df.createOrReplaceTempView(n)\n}\n")
+    try {
+      assert(sessionStateDrift(root).isEmpty)
+      val stray = root.resolve("graft/Planted.scala")
+      Files.writeString(stray, "object P {\n  val c = df.cache()\n" +
+        "  df.persist(StorageLevel.DISK_ONLY)\n  df.createTempView(\"v\")\n" +
+        "  df.createOrReplaceGlobalTempView(\"g\")\n}\n")
+      assert(sessionStateDrift(root) ==
+        Seq(s"$stray:2", s"$stray:3", s"$stray:4", s"$stray:5"))
     } finally Scratch.deleteTree(root)
   }
 
