@@ -63,33 +63,6 @@ object Bench {
         spark.read.parquet(s"$sfDir/$tbl.parquet").count()
       }
     } catch { case _: Throwable => () }
-    // SPARK_GRAFT_PRESTAGE=name1,name2 — run the named queries ONCE,
-    // untimed, before any timing starts. The min-of-3 protocol already
-    // keeps one-time artifact builds (Scratch.memo) out of a
-    // row's min, but single-attempt rehearsal tiers (REPEATS=1 at
-    // 1000x) have no second attempt: without prestaging, a serve row's
-    // only attempt pays the build and the tier records the build cost
-    // under the serve row's name (SCALE.md round-13: graph_hits_serve
-    // 99.2 s at 1000x was ~all one-time trade_w build). Rehearsals
-    // prestage the serve rows so their timed attempt measures what the
-    // row names; builds are priced by their own rows.
-    sys.env.get("SPARK_GRAFT_PRESTAGE")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Array.empty[String])
-      .foreach { name =>
-        Queries.all.find(_.name == name).foreach { q =>
-          val t0 = System.nanoTime()
-          try {
-            drain(q.run(spark, sfDir))
-            // stderr, not the artifact: the untimed staging pass IS the
-            // build cost — rehearsal logs record it as its own line
-            System.err.println(f"[bench] prestage $name: " +
-              f"${(System.nanoTime() - t0) / 1e9}%.3f s")
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] prestage $name failed: $e")
-          }
-        }
-      }
     val results = Queries.all.filter(q => wanted(q.name))
       .map(q => timeAttempts(q.name, repeats)(drain(q.run(spark, sfDir))))
     // pipeline_e2e: entry point A (ingest → silver → gold) over a

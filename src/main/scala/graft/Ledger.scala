@@ -30,7 +30,11 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * A job's description is its `spark.job.description` when the code
   * set one, else the description of the SQL execution it ran under
   * (the action's call site, e.g. `save at Bench.scala:40`), so AQE's
-  * stage sub-jobs and broadcast jobs name the action they serve.
+  * stage sub-jobs and broadcast jobs name the action they serve, else
+  * (a job outside any SQL execution, like a read's schema inference)
+  * its result stage's name, which is its call site. It is never empty
+  * and always one line: a streaming batch's multi-line description is
+  * joined with spaces.
   *
   * A thread the body constructs inherits the property, so its jobs
   * are booked too. A measured scope bounds memory: the listener lives
@@ -115,11 +119,13 @@ object Ledger {
         def prop(k: String) =
           props.flatMap(p => Option(p.getProperty(k))).filter(_.nonEmpty)
         jobStages ++= e.stageIds
-        jobs(e.jobId) = Job(e.jobId, e.time, -1L,
-          prop("spark.job.description")
-            .orElse(prop(SQLExecution.EXECUTION_ID_KEY)
-              .flatMap(executions.get))
-            .getOrElse(""),
+        // the result stage (the job's last-created, highest id) is
+        // named by the job's call site
+        val callSite = e.stageInfos.maxByOption(_.stageId).map(_.name)
+        val description = Seq(prop("spark.job.description"),
+          prop(SQLExecution.EXECUTION_ID_KEY).flatMap(executions.get),
+          callSite).flatten.map(oneLine).find(_.nonEmpty).getOrElse("")
+        jobs(e.jobId) = Job(e.jobId, e.time, -1L, description,
           e.stageInfos.map(_.name), failed = false)
       }
     }
@@ -156,6 +162,12 @@ object Ledger {
       Costs(jobs.values.toSeq.sortBy(_.id), stages.toList)
     }
   }
+
+  /** A description on one line: a streaming batch's
+    * `"\nid = …\nrunId = …\nbatch = 0"` becomes
+    * `"id = … runId = … batch = 0"`. */
+  private def oneLine(d: String): String =
+    d.split('\n').map(_.trim).filter(_.nonEmpty).mkString(" ")
 
   private def stage(i: StageInfo): Stage = {
     val m = i.taskMetrics

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,6 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.Qdsl._
+import graft.sources.Sources
 
 /** Registry part 5 — Structured Streaming: watermarked daily
   * engagement, session windows, and stream-stream attribution joins,
@@ -16,7 +18,7 @@ private[graft] object QueriesStreaming {
   /** One sentinel-staged streaming input PER SOURCE DIR, shared by
     * every bounded-replay streaming query (daily engagement, sessions,
     * both attribution joins, and the watermarked dedup): the events
-    * file(s) OS-copied next to a one-file parquet of
+    * file(s) copied next to a one-file parquet of
     * two far-future sentinel rows (user -1, ts = max + 30 days, one per
     * attribution branch). The sentinels advance the event-time
     * watermark past every real session/join window so bounded replays
@@ -25,12 +27,16 @@ private[graft] object QueriesStreaming {
     * Staging once instead of per-query saves two max(ts) scans, a
     * sentinel write, and a full set of input file copies per bench run
     * (~1.5-2 s at sf0.1 — the same harness trim that took
-    * stream_sessions from 3.9 to 3.0 s in round 4). */
-  private final case class Staged(inDir: String, schema: StructType)
+    * stream_sessions from 3.9 to 3.0 s in round 4). `users` is the
+    * source's approximate distinct user count, from the same scan that
+    * finds max(ts): the key count the replay rows' state is sized by. */
+  private final case class Staged(inDir: String, schema: StructType,
+                                  users: Long)
   private val stagedInputs = Scratch.memo[String, Staged]()
   private def stagedInput(s: SparkSession, dir: String): Staged =
     stagedInputs(dir) {
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val events = s.read.parquet(s"$dir/events.parquet")
+      val rawSchema = events.schema
       // far-future sentinel ts = max(ts) + 30 days, built in whatever
       // physical type the source shipped (nanos-as-long or micros ntz)
       // so the sentinel file unions cleanly with the copied source
@@ -39,16 +45,17 @@ private[graft] object QueriesStreaming {
       // carries a windowDays+1 delay sees sentinel − (window+1) — the
       // horizon must clear max(ts) + window + the largest delay, or
       // the tail of the full-outer join's unmatched rows never evicts
-      val sentinelTs: Any = s.read.parquet(s"$dir/events.parquet")
-        .agg(max(col("ts"))).head().get(0) match {
-          case n: java.lang.Long => n + 30L * 86400 * 1000000000L
-          case t: java.time.LocalDateTime => t.plusDays(30)
-          case t: java.sql.Timestamp =>
-            java.sql.Timestamp.from(t.toInstant.plusSeconds(30L * 86400))
-          // TimestampType surfaces as Instant when
-          // spark.sql.datetime.java8API.enabled=true
-          case i: java.time.Instant => i.plusSeconds(30L * 86400)
-        }
+      val stats = events
+        .agg(max(col("ts")), approx_count_distinct(col("user_id"))).head()
+      val sentinelTs: Any = stats.get(0) match {
+        case n: java.lang.Long => n + 30L * 86400 * 1000000000L
+        case t: java.time.LocalDateTime => t.plusDays(30)
+        case t: java.sql.Timestamp =>
+          java.sql.Timestamp.from(t.toInstant.plusSeconds(30L * 86400))
+        // TimestampType surfaces as Instant when
+        // spark.sql.datetime.java8API.enabled=true
+        case i: java.time.Instant => i.plusSeconds(30L * 86400)
+      }
       val root = Scratch.dir("graft_stream_in")
       def sentinelRow(eventType: String) =
         org.apache.spark.sql.Row.fromSeq(rawSchema.fields.toSeq.map {
@@ -63,23 +70,18 @@ private[graft] object QueriesStreaming {
         java.util.Arrays.asList(sentinelRow("purchase"),
           sentinelRow("signup")), rawSchema)
       sentinels.coalesce(1).write.parquet(s"$root/in")
-      val src = new java.io.File(s"$dir/events.parquet")
-      val files = // rehearsal layouts split the table into a dir
-        if (src.isDirectory)
-          src.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-        else Seq(src)
-      files.foreach(f => java.nio.file.Files.copy(f.toPath,
-        java.nio.file.Paths.get(s"$root/in/src_${f.getName}")))
-      Staged(s"$root/in", rawSchema)
+      // through the Hadoop FS, so a URI-qualified dir (file://, hdfs://)
+      // stages like a plain path; rehearsal layouts split the table
+      // into a dir of part files
+      val src = new Path(s"$dir/events.parquet")
+      val (srcFs, dstFs) =
+        (Sources.fileSystem(s, src), Sources.fileSystem(s, new Path(root)))
+      srcFs.listStatus(src).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+        .foreach(f => FileUtil.copy(srcFs, f, dstFs,
+          new Path(s"$root/in/src_${f.getName}"), false, srcFs.getConf))
+      Staged(s"$root/in", rawSchema, stats.getLong(1))
     }
-
-  /** The bounded replay every sentinel-aware streaming row reads: the
-    * [[stagedInput]] as a file stream, ts normalized. */
-  private def replay(s: SparkSession, dir: String): DataFrame = {
-    val staged = stagedInput(s, dir)
-    s.readStream.schema(staged.schema).parquet(staged.inDir)
-      .transform(normalizeTs)
-  }
 
   /** Drain `df` into a parquet append sink at `$root/out` (checkpoint
     * `$root/ckpt`) with one AvailableNow run, then read the sink. */
@@ -92,36 +94,51 @@ private[graft] object QueriesStreaming {
     df.sparkSession.read.parquet(s"$root/out")
   }
 
-  /** Shared session-conf scope for every streaming query: shuffle
-    * partitions sized to the STATE KEY CARDINALITY (state-store
-    * instances scale with shuffle partitions — default 4 for the
-    * tiny-key oracle fixtures; `SPARK_GRAFT_STREAM_PARTS` overrides,
-    * because the key-growth rehearsal measured session-window state
-    * merge at 18.6× on 10× keys when 150k users funneled through 4
-    * state partitions, and 32 partitions bought the linear path back
-    * — at 100 TB this is the `spark.sql.shuffle.partitions` the
-    * streaming job is SUBMITTED with, sized like any stateful shuffle),
-    * and — when `SPARK_GRAFT_ROCKSDB=1` — the RocksDB state store
-    * provider, the backend that keeps 100 TB-scale streaming state
-    * (dedup keys, open sessions, join buffers) on executor-local disk
-    * + off-heap instead of the JVM heap, with incremental-checkpoint
-    * commits. Query RESULTS are provider- and partition-independent
-    * (the oracle suite passes under any setting — the knobs exist so
-    * the scale rehearsal can measure the backends); both confs are
-    * restored on exit, so a failed stream cannot leak session state
-    * into the batch queries. */
-  private def withStreamConf[T](s: SparkSession)(body: => T): T =
-    Session.withConf(s, "spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")) {
-      if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-        Session.withConf(s, StateStoreProviderKey, RocksDbProvider)(body)
-      else body
-    }
+  /** State-store width (`spark.sql.shuffle.partitions`, one state
+    * store instance per partition) for a stream over `users` distinct
+    * keys on `cores` cores: one partition per 4096 keys, at least 4,
+    * at most the core count. SCALE.md measured both ends: 4 is the
+    * optimum at 1,500 users (3.57 s, against 4.69 s at 8 and 7.73 s
+    * at 16), and at 150k users session-window merges went 18.6× on 4
+    * partitions while 32 on local[32] bought the linear path back. */
+  private[graft] def stateWidth(users: Long, cores: Int): Int =
+    math.min(math.max(4L, (users + 4095) / 4096), math.max(4, cores).toLong)
+      .toInt
 
-  private val StateStoreProviderKey =
-    "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  /** What a streaming row runs in: its session, source dir, a fresh
+    * scratch `root`, and the bounded `replay` every sentinel-aware row
+    * reads (the [[stagedInput]] as a file stream, ts normalized). */
+  private final class StreamScope(val s: SparkSession, val dir: String,
+                                  val root: String) {
+    lazy val replay: DataFrame = {
+      val staged = stagedInput(s, dir)
+      s.readStream.schema(staged.schema).parquet(staged.inDir)
+        .transform(normalizeTs)
+    }
+  }
+
+  /** The one stream scope every streaming row runs in: `body` gets a
+    * fresh scratch root named `prefix` while the session's shuffle
+    * partitions are the [[stateWidth]] of the staged input's users
+    * (the floor width for a row that replays no events,
+    * `replays = false`). The conf is restored on exit, so a failed
+    * stream cannot leak it into the batch queries. Query results are
+    * width-independent.
+    *
+    * The state-store provider is the session's own: a deployment that
+    * keeps 100 TB-scale state (dedup keys, open sessions, join
+    * buffers) in RocksDB on executor-local disk sets Spark's
+    * `spark.sql.streaming.stateStore.providerClass` on its session,
+    * and this scope never overrides that key. */
+  private def streamRow(prefix: String, replays: Boolean = true)(
+      body: StreamScope => DataFrame): (SparkSession, String) => DataFrame =
+    (s, dir) => {
+      val users = if (replays) stagedInput(s, dir).users else 0L
+      Session.withConf(s, "spark.sql.shuffle.partitions",
+        stateWidth(users, s.sparkContext.defaultParallelism).toString) {
+        body(new StreamScope(s, dir, Scratch.dir(prefix)))
+      }
+    }
 
   // ======================================================================
   // Streaming: the daily engagement aggregate over a bounded stream,
@@ -129,32 +146,29 @@ private[graft] object QueriesStreaming {
   // ======================================================================
 
   private[graft] val streamDaily = Q("stream_daily_engagement",
-    (s, dir) => {
+    streamRow("graft_stream_daily") { sc =>
+      import sc._
       // the shared staged input (not pathGlobFilter over the source
       // dir: a glob on the FILE name silently matches nothing when the
       // table is a directory of part files, as rehearsal layouts are —
       // the 10x pass was streaming an empty input)
-      withStreamConf(s) {
-        val stream = replay(s, dir)
-        val agg = stream
-          .withWatermark("ts", "1 day")
-          .filter(col("event_type") === "purchase")
-          .groupBy(window(col("ts"), "1 day").as("day"),
-            col("user_id"))
-          .agg(count(lit(1)).as("play_count"))
-        // update mode + foreachBatch merge-upsert: each batch rewrites
-        // only the date partitions it touches, state holds only keys in
-        // the watermark horizon — the pattern that survives an unbounded
-        // stream (a complete-mode memory sink would retain the whole
-        // result in state AND collect it to the driver).
-        val root = Scratch.dir("graft_stream_daily")
-        graft.stream.StreamingFact.upsertToSilver(
-          s, agg, s"$root/fact", s"$root/ckpt", keyCols = Seq("user_id"))
-        s.read.parquet(s"$root/fact")
-          .filter(col("user_id") >= 0) // shared watermark sentinels
-          .select(col("date"), col("user_id"), col("play_count"))
-          .orderBy("date", "user_id")
-      }
+      val agg = replay
+        .withWatermark("ts", "1 day")
+        .filter(col("event_type") === "purchase")
+        .groupBy(window(col("ts"), "1 day").as("day"),
+          col("user_id"))
+        .agg(count(lit(1)).as("play_count"))
+      // update mode + foreachBatch merge-upsert: each batch rewrites
+      // only the date partitions it touches, state holds only keys in
+      // the watermark horizon — the pattern that survives an unbounded
+      // stream (a complete-mode memory sink would retain the whole
+      // result in state AND collect it to the driver).
+      graft.stream.StreamingFact.upsertToSilver(
+        s, agg, s"$root/fact", s"$root/ckpt", keyCols = Seq("user_id"))
+      s.read.parquet(s"$root/fact")
+        .filter(col("user_id") >= 0) // shared watermark sentinels
+        .select(col("date"), col("user_id"), col("play_count"))
+        .orderBy("date", "user_id")
     },
     Some("""SELECT CAST(date_trunc('day', ts) AS DATE) AS date, user_id,
       COUNT(*) AS play_count
@@ -177,39 +191,36 @@ private[graft] object QueriesStreaming {
     * out. Oracle = the batch z-score SQL verbatim: the stream-
     * maintained store must equal the batch daily aggregate exactly. */
   private[graft] val streamAnomaly = Q("stream_anomaly",
-    (s, dir) => {
-      withStreamConf(s) {
-        val stream = replay(s, dir)
-        val agg = stream
-          .withWatermark("ts", "1 day")
-          .groupBy(window(col("ts"), "1 day").as("day"),
-            col("event_type"))
-          .agg(count(when(col("user_id") >= 0, 1)).as("n"))
-        val root = Scratch.dir("graft_stream_anomaly")
-        graft.stream.StreamingFact.upsertToSilver(
-          s, agg, s"$root/fact", s"$root/ckpt",
-          keyCols = Seq("event_type"))
-        val daily = s.read.parquet(s"$root/fact")
-          .filter(col("n") > 0) // sentinel-only far-future groups
-          .select(col("event_type"), col("date"), col("n"))
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(col("date")).rowsBetween(-28, -1)
-        val withSums = daily.select(col("event_type"), col("date"),
-          col("n"),
-          sum(col("n")).over(w).cast("double").as("s1"),
-          sum(col("n") * col("n")).over(w).cast("double").as("s2"),
-          count(col("n")).over(w).cast("double").as("m"))
-          .filter(col("m") >= 8)
-        val variance = (col("s2") - col("s1") * col("s1") / col("m")) /
-          (col("m") - lit(1.0))
-        val z = when(variance > 0,
-          round((col("n").cast("double") - col("s1") / col("m")) /
-            sqrt(variance), 6))
-        withSums
-          .select(col("event_type"), col("date"), col("n"),
-            z.as("z"), (abs(coalesce(z, lit(0.0))) > 3.0).as("is_anomaly"))
-          .orderBy("event_type", "date")
-      }
+    streamRow("graft_stream_anomaly") { sc =>
+      import sc._
+      val agg = replay
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day").as("day"),
+          col("event_type"))
+        .agg(count(when(col("user_id") >= 0, 1)).as("n"))
+      graft.stream.StreamingFact.upsertToSilver(
+        s, agg, s"$root/fact", s"$root/ckpt",
+        keyCols = Seq("event_type"))
+      val daily = s.read.parquet(s"$root/fact")
+        .filter(col("n") > 0) // sentinel-only far-future groups
+        .select(col("event_type"), col("date"), col("n"))
+      val w = Window.partitionBy(col("event_type"))
+        .orderBy(col("date")).rowsBetween(-28, -1)
+      val withSums = daily.select(col("event_type"), col("date"),
+        col("n"),
+        sum(col("n")).over(w).cast("double").as("s1"),
+        sum(col("n") * col("n")).over(w).cast("double").as("s2"),
+        count(col("n")).over(w).cast("double").as("m"))
+        .filter(col("m") >= 8)
+      val variance = (col("s2") - col("s1") * col("s1") / col("m")) /
+        (col("m") - lit(1.0))
+      val z = when(variance > 0,
+        round((col("n").cast("double") - col("s1") / col("m")) /
+          sqrt(variance), 6))
+      withSums
+        .select(col("event_type"), col("date"), col("n"),
+          z.as("z"), (abs(coalesce(z, lit(0.0))) > 3.0).as("is_anomaly"))
+        .orderBy("event_type", "date")
     },
     Some("""WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS date,
@@ -249,22 +260,20 @@ private[graft] object QueriesStreaming {
     * dropped on the way out. State is one count per open window in the
     * horizon — bounded by the window grid, not the stream. */
   private[graft] val streamSlidingCounts = Q("stream_sliding_counts",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_sliding")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("ts"), col("event_type"))
-          .withWatermark("ts", "1 day")
-          .filter(col("event_type") === "purchase") // sentinel passes
-        val agg = stream
-          .groupBy(window(col("ts"), "1 day", "12 hours"))
-          .agg(count(when(col("user_id") >= 0, 1)).as("n_purchases"))
-        appendAvailableNow(agg, root)
-          .filter(col("n_purchases") > 0) // sentinel-only windows
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("n_purchases"))
-          .orderBy("window_start_us")
-      }
+    streamRow("graft_stream_sliding") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("ts"), col("event_type"))
+        .withWatermark("ts", "1 day")
+        .filter(col("event_type") === "purchase") // sentinel passes
+      val agg = stream
+        .groupBy(window(col("ts"), "1 day", "12 hours"))
+        .agg(count(when(col("user_id") >= 0, 1)).as("n_purchases"))
+      appendAvailableNow(agg, root)
+        .filter(col("n_purchases") > 0) // sentinel-only windows
+        .select(unix_micros(col("window.start")).as("window_start_us"),
+          col("n_purchases"))
+        .orderBy("window_start_us")
     },
     Some("""WITH p AS (SELECT epoch_us(ts) AS ts_us FROM events
         WHERE event_type = 'purchase'),
@@ -290,25 +299,23 @@ private[graft] object QueriesStreaming {
     * groups drop on the way out. Oracle = the batch twin over the same
     * events. */
   private[graft] val streamTopk = Q("stream_topk",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_topk")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("ts"),
-            coalesce(col("event_type"), lit("(none)")).as("event_type"))
-          .withWatermark("ts", "1 day")
-        val agg = stream
-          .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-          .agg(count(when(col("user_id") >= 0, 1)).as("n"))
-        val sunk = appendAvailableNow(agg, root).filter(col("n") > 0)
-        val w = Window.partitionBy(col("window.start"))
-          .orderBy(col("n").desc, col("event_type"))
-        sunk.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 2)
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("rank"), col("event_type"), col("n"))
-          .orderBy("window_start_us", "rank")
-      }
+    streamRow("graft_stream_topk") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("ts"),
+          coalesce(col("event_type"), lit("(none)")).as("event_type"))
+        .withWatermark("ts", "1 day")
+      val agg = stream
+        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+        .agg(count(when(col("user_id") >= 0, 1)).as("n"))
+      val sunk = appendAvailableNow(agg, root).filter(col("n") > 0)
+      val w = Window.partitionBy(col("window.start"))
+        .orderBy(col("n").desc, col("event_type"))
+      sunk.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= 2)
+        .select(unix_micros(col("window.start")).as("window_start_us"),
+          col("rank"), col("event_type"), col("n"))
+        .orderBy("window_start_us", "rank")
     },
     Some("""WITH c AS (SELECT
         (epoch_us(ts) // 21600000000) * 21600000000 AS window_start_us,
@@ -332,21 +339,19 @@ private[graft] object QueriesStreaming {
     * a production stream flushes as new events arrive; a bounded
     * replay needs the nudge. */
   private[graft] val streamSessions = Q("stream_sessions",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_sess")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("ts"))
-        val sess = graft.stream.StreamingFact.sessionWindows(
-          stream, "ts", "user_id")
-        appendAvailableNow(sess, root)
-          .filter(col("user_id") >= 0)
-          .select(col("user_id"),
-            unix_micros(col("session_start")).as("session_start_us"),
-            unix_micros(col("session_end")).as("session_end_us"),
-            col("n_events"))
-          .orderBy("user_id", "session_start_us")
-      }
+    streamRow("graft_stream_sess") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("ts"))
+      val sess = graft.stream.StreamingFact.sessionWindows(
+        stream, "ts", "user_id")
+      appendAvailableNow(sess, root)
+        .filter(col("user_id") >= 0)
+        .select(col("user_id"),
+          unix_micros(col("session_start")).as("session_start_us"),
+          unix_micros(col("session_end")).as("session_end_us"),
+          col("n_events"))
+        .orderBy("user_id", "session_start_us")
     },
     Some("""SELECT user_id, MIN(ts_us) AS session_start_us,
       MAX(ts_us) + 1800 * 1000000 AS session_end_us,
@@ -375,33 +380,29 @@ private[graft] object QueriesStreaming {
     * session_window's exclusive-end >=), its session end is the LAST
     * EVENT's time (not last + gap), and its arithmetic runs on
     * epoch-millis (`Timestamp.getTime`) — so the oracle floors event
-    * times to millis and mirrors all three. Forces the RocksDB state
-    * store for the run: the only provider implementing
-    * transformWithState's state layout (restored after, like every
-    * stream conf). Sessions still open at end-of-replay (the sentinel
-    * user's own) never emit — closed-sessions-only is the operator's
-    * contract. */
+    * times to millis and mirrors all three. Runs on the state store
+    * the operator requires ([[graft.stream.StreamingFact.withTwsStore]]).
+    * Sessions still open at end-of-replay (the sentinel user's own)
+    * never emit — closed-sessions-only is the operator's contract. */
   private[graft] val streamSessionsTws = Q("stream_sessions_tws",
-    (s, dir) => {
-      withStreamConf(s) {
-        Session.withConf(s, StateStoreProviderKey, RocksDbProvider) {
-          import s.implicits._
-          val root = Scratch.dir("graft_stream_tws")
-          val stream = replay(s, dir)
-            .select(col("user_id"), col("ts"),
-              // sentinel rows carry null value; Ev.value is a primitive
-              coalesce(col("value"), lit(0.0)).as("value"))
-            .withWatermark("ts", "1 hour")
-            .as[graft.stream.StreamingFact.Ev]
-          val sess = graft.stream.StreamingFact.sessionizeTws(s, stream)
-          appendAvailableNow(sess.toDF(), root)
-            .filter(col("user_id") >= 0) // shared watermark sentinels
-            .select(col("user_id"),
-              unix_millis(col("session_start")).as("session_start_ms"),
-              unix_millis(col("session_end")).as("session_end_ms"),
-              col("n_events"))
-            .orderBy("user_id", "session_start_ms")
-        }
+    streamRow("graft_stream_tws") { sc =>
+      import sc._
+      graft.stream.StreamingFact.withTwsStore(s) {
+        import s.implicits._
+        val stream = replay
+          .select(col("user_id"), col("ts"),
+            // sentinel rows carry null value; Ev.value is a primitive
+            coalesce(col("value"), lit(0.0)).as("value"))
+          .withWatermark("ts", "1 hour")
+          .as[graft.stream.StreamingFact.Ev]
+        val sess = graft.stream.StreamingFact.sessionizeTws(s, stream)
+        appendAvailableNow(sess.toDF(), root)
+          .filter(col("user_id") >= 0) // shared watermark sentinels
+          .select(col("user_id"),
+            unix_millis(col("session_start")).as("session_start_ms"),
+            unix_millis(col("session_end")).as("session_end_ms"),
+            col("n_events"))
+          .orderBy("user_id", "session_start_ms")
       }
     },
     Some("""SELECT user_id, MIN(ts_ms) AS session_start_ms,
@@ -435,19 +436,17 @@ private[graft] object QueriesStreaming {
     * one 8-byte key per event inside the horizon, keyed-partitioned
     * by the dedup column. */
   private[graft] val streamDedup = Q("stream_dedup",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_dedup")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"))
-        val doubled = stream.union(stream)
-        val deduped = graft.stream.StreamingFact.dedupStream(
-          doubled, "ts", Seq("event_id"))
-        appendAvailableNow(deduped, root)
-          .filter(col("user_id") >= 0) // shared watermark sentinels
-          .select(col("user_id"), col("event_id"))
-          .orderBy("user_id", "event_id")
-      }
+    streamRow("graft_stream_dedup") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("event_id"), col("ts"))
+      val doubled = stream.union(stream)
+      val deduped = graft.stream.StreamingFact.dedupStream(
+        doubled, "ts", Seq("event_id"))
+      appendAvailableNow(deduped, root)
+        .filter(col("user_id") >= 0) // shared watermark sentinels
+        .select(col("user_id"), col("event_id"))
+        .orderBy("user_id", "event_id")
     },
     Some("""SELECT user_id, event_id FROM events ORDER BY 1, 2"""))
 
@@ -469,40 +468,38 @@ private[graft] object QueriesStreaming {
     *    evicted yet — the watermark that would evict them commits one
     *    batch later). */
   private[graft] val streamStateInspect = Q("stream_state_inspect",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_state")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"))
-        val deduped = graft.stream.StreamingFact.dedupStream(
-          stream, "ts", Seq("event_id"))
-        appendAvailableNow(deduped, root)
-        val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val meta = graft.stream.StateInspect
-          .stateMetadata(s, s"$root/ckpt")
-        val state = graft.stream.StateInspect
-          .stateRows(s, s"$root/ckpt")
-        val inputIds = s.read.parquet(stagedInput(s, dir).inDir)
-          .select(col("event_id")).where(col("event_id").isNotNull)
-        val orphanCnt = state
-          .select(col("key.event_id").as("event_id"))
-          .where(col("event_id").isNotNull) // sentinels carry null ids
-          .join(inputIds, Seq("event_id"), "left_anti")
-          .agg(count(lit(1)).as("orphan_keys"))
-        meta.agg(
-            count(when(col("operatorName") =!= "dedupeWithinWatermark",
-              1)).as("bad_operator"),
-            count(when(col("numPartitions") =!= parts, 1))
-              .as("bad_partitions"),
-            count(lit(1)).as("n_operators"))
-          .crossJoin(state.agg(
-            when(count(lit(1)) === 0, 1L).otherwise(0L)
-              .as("state_empty")))
-          .crossJoin(orphanCnt)
-          .select(col("n_operators"), col("bad_operator"),
-            col("bad_partitions"), col("state_empty"),
-            col("orphan_keys"))
-      }
+    streamRow("graft_stream_state") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("event_id"), col("ts"))
+      val deduped = graft.stream.StreamingFact.dedupStream(
+        stream, "ts", Seq("event_id"))
+      appendAvailableNow(deduped, root)
+      val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
+      val meta = graft.stream.StateInspect
+        .stateMetadata(s, s"$root/ckpt")
+      val state = graft.stream.StateInspect
+        .stateRows(s, s"$root/ckpt")
+      val inputIds = s.read.parquet(stagedInput(s, dir).inDir)
+        .select(col("event_id")).where(col("event_id").isNotNull)
+      val orphanCnt = state
+        .select(col("key.event_id").as("event_id"))
+        .where(col("event_id").isNotNull) // sentinels carry null ids
+        .join(inputIds, Seq("event_id"), "left_anti")
+        .agg(count(lit(1)).as("orphan_keys"))
+      meta.agg(
+          count(when(col("operatorName") =!= "dedupeWithinWatermark",
+            1)).as("bad_operator"),
+          count(when(col("numPartitions") =!= parts, 1))
+            .as("bad_partitions"),
+          count(lit(1)).as("n_operators"))
+        .crossJoin(state.agg(
+          when(count(lit(1)) === 0, 1L).otherwise(0L)
+            .as("state_empty")))
+        .crossJoin(orphanCnt)
+        .select(col("n_operators"), col("bad_operator"),
+          col("bad_partitions"), col("state_empty"),
+          col("orphan_keys"))
     },
     Some("""SELECT CAST(1 AS BIGINT) AS n_operators,
       CAST(0 AS BIGINT) AS bad_operator,
@@ -517,21 +514,19 @@ private[graft] object QueriesStreaming {
     * on the full pair set. Inner join emits on arrival; watermarks
     * bound state, so the bounded replay needs no sentinel. */
   private[graft] val streamAttribution = Q("stream_attribution",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_attr")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            col("event_type"))
-        val joined = graft.stream.StreamingFact.attributionJoin(
-          stream.filter(col("event_type") === "purchase"),
-          stream.filter(col("event_type") === "signup"))
-        appendAvailableNow(joined, root)
-          // the staged input carries the shared watermark sentinels
-          // (user -1); the inner join pairs them up — drop that row
-          .filter(col("user_id") >= 0)
-          .orderBy("user_id", "purchase_event_id", "signup_event_id")
-      }
+    streamRow("graft_stream_attr") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("event_id"), col("ts"),
+          col("event_type"))
+      val joined = graft.stream.StreamingFact.attributionJoin(
+        stream.filter(col("event_type") === "purchase"),
+        stream.filter(col("event_type") === "signup"))
+      appendAvailableNow(joined, root)
+        // the staged input carries the shared watermark sentinels
+        // (user -1); the inner join pairs them up — drop that row
+        .filter(col("user_id") >= 0)
+        .orderBy("user_id", "purchase_event_id", "signup_event_id")
     },
     Some("""SELECT p.user_id, p.event_id AS purchase_event_id,
       s.event_id AS signup_event_id
@@ -551,20 +546,18 @@ private[graft] object QueriesStreaming {
     * updates between batches). Stateless, so no watermark and no
     * sentinel mechanics: the oracle is the plain batch LEFT JOIN. */
   private[graft] val streamStaticEnrich = Q("stream_static_enrich",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_enrich")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("event_id"))
-        val dim = t(s, dir, "customer")
-          .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-        val joined = graft.stream.StreamingFact.enrichWithDim(
-          stream, dim, "user_id")
-        appendAvailableNow(joined, root)
-          .filter(col("user_id") >= 0) // shared staged-input sentinels
-          .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-          .orderBy("event_id")
-      }
+    streamRow("graft_stream_enrich") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("event_id"))
+      val dim = t(s, dir, "customer")
+        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
+      val joined = graft.stream.StreamingFact.enrichWithDim(
+        stream, dim, "user_id")
+      appendAvailableNow(joined, root)
+        .filter(col("user_id") >= 0) // shared staged-input sentinels
+        .select(col("event_id"), col("user_id"), col("c_mktsegment"))
+        .orderBy("event_id")
     },
     Some("""SELECT e.event_id, e.user_id, c.c_mktsegment
       FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
@@ -590,35 +583,33 @@ private[graft] object QueriesStreaming {
     * constraint at 100 TB (loose per-input delays compound through
     * every downstream stateful stage). */
   private[graft] val streamAttributionDaily = Q("stream_attribution_daily",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_attr_daily")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            col("event_type"))
-        val p = stream.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_event_id"),
-            col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 day")
-          .dropDuplicatesWithinWatermark("purchase_event_id")
-        val sg = stream.filter(col("event_type") === "signup")
-          .select(col("user_id").as("s_user"),
-            col("event_id").as("signup_event_id"), col("ts").as("s_ts"))
-          .withWatermark("s_ts", "1 day")
-          .dropDuplicatesWithinWatermark("signup_event_id")
-        val joined = p.join(sg, expr(
-          """p_user = s_user AND p_ts >= s_ts AND
-             p_ts < s_ts + interval 7 days"""))
-        val agg = joined
-          .groupBy(window(col("p_ts"), "1 day"))
-          .agg(count(when(col("p_user") >= 0, 1)).as("n_attributed"))
-        appendAvailableNow(agg, root)
-          .filter(col("n_attributed") > 0) // sentinel-only windows
-          .select(unix_micros(col("window.start")).as("window_start_us"),
-            col("n_attributed"))
-          .orderBy("window_start_us")
-      }
+    streamRow("graft_stream_attr_daily") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("event_id"), col("ts"),
+          col("event_type"))
+      val p = stream.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"),
+          col("event_id").as("purchase_event_id"),
+          col("ts").as("p_ts"))
+        .withWatermark("p_ts", "1 day")
+        .dropDuplicatesWithinWatermark("purchase_event_id")
+      val sg = stream.filter(col("event_type") === "signup")
+        .select(col("user_id").as("s_user"),
+          col("event_id").as("signup_event_id"), col("ts").as("s_ts"))
+        .withWatermark("s_ts", "1 day")
+        .dropDuplicatesWithinWatermark("signup_event_id")
+      val joined = p.join(sg, expr(
+        """p_user = s_user AND p_ts >= s_ts AND
+           p_ts < s_ts + interval 7 days"""))
+      val agg = joined
+        .groupBy(window(col("p_ts"), "1 day"))
+        .agg(count(when(col("p_user") >= 0, 1)).as("n_attributed"))
+      appendAvailableNow(agg, root)
+        .filter(col("n_attributed") > 0) // sentinel-only windows
+        .select(unix_micros(col("window.start")).as("window_start_us"),
+          col("n_attributed"))
+        .orderBy("window_start_us")
     },
     Some("""WITH j AS (
         SELECT p.user_id, p.ts AS p_ts
@@ -644,23 +635,21 @@ private[graft] object QueriesStreaming {
     * Oracle: the batch LEFT JOIN twin; nulls are coalesced to -1 so
     * the order keys stay non-null. */
   private[graft] val streamAttributionOuter = Q("stream_attribution_outer",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_attr_outer")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            col("event_type"))
-        val joined = graft.stream.StreamingFact.attributionJoin(
-          stream.filter(col("event_type") === "purchase"),
-          stream.filter(col("event_type") === "signup"),
-          joinType = "left_outer")
-        appendAvailableNow(joined, root)
-          .filter(col("user_id") >= 0)
-          .select(col("user_id"), col("purchase_event_id"),
-            coalesce(col("signup_event_id"), lit(-1L))
-              .as("signup_event_id"))
-          .orderBy("user_id", "purchase_event_id", "signup_event_id")
-      }
+    streamRow("graft_stream_attr_outer") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("event_id"), col("ts"),
+          col("event_type"))
+      val joined = graft.stream.StreamingFact.attributionJoin(
+        stream.filter(col("event_type") === "purchase"),
+        stream.filter(col("event_type") === "signup"),
+        joinType = "left_outer")
+      appendAvailableNow(joined, root)
+        .filter(col("user_id") >= 0)
+        .select(col("user_id"), col("purchase_event_id"),
+          coalesce(col("signup_event_id"), lit(-1L))
+            .as("signup_event_id"))
+        .orderBy("user_id", "purchase_event_id", "signup_event_id")
     },
     Some("""SELECT p.user_id, p.event_id AS purchase_event_id,
       COALESCE(s.event_id, -1) AS signup_event_id
@@ -685,25 +674,23 @@ private[graft] object QueriesStreaming {
     * advancing production stream. Oracle: the batch FULL JOIN twin
     * with null keys coalesced to -1 (order keys must be non-null). */
   private[graft] val streamAttributionFull = Q("stream_attribution_full",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_attr_full")
-        val stream = replay(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts"),
-            col("event_type"))
-        val joined = graft.stream.StreamingFact.attributionJoin(
-          stream.filter(col("event_type") === "purchase"),
-          stream.filter(col("event_type") === "signup"),
-          joinType = "full_outer")
-        appendAvailableNow(joined, root)
-          .filter(col("user_id") >= 0)
-          .select(col("user_id"),
-            coalesce(col("purchase_event_id"), lit(-1L))
-              .as("purchase_event_id"),
-            coalesce(col("signup_event_id"), lit(-1L))
-              .as("signup_event_id"))
-          .orderBy("user_id", "purchase_event_id", "signup_event_id")
-      }
+    streamRow("graft_stream_attr_full") { sc =>
+      import sc._
+      val stream = replay
+        .select(col("user_id"), col("event_id"), col("ts"),
+          col("event_type"))
+      val joined = graft.stream.StreamingFact.attributionJoin(
+        stream.filter(col("event_type") === "purchase"),
+        stream.filter(col("event_type") === "signup"),
+        joinType = "full_outer")
+      appendAvailableNow(joined, root)
+        .filter(col("user_id") >= 0)
+        .select(col("user_id"),
+          coalesce(col("purchase_event_id"), lit(-1L))
+            .as("purchase_event_id"),
+          coalesce(col("signup_event_id"), lit(-1L))
+            .as("signup_event_id"))
+        .orderBy("user_id", "purchase_event_id", "signup_event_id")
     },
     Some("""SELECT COALESCE(p.user_id, s.user_id) AS user_id,
       COALESCE(p.event_id, -1) AS purchase_event_id,
@@ -744,72 +731,68 @@ private[graft] object QueriesStreaming {
     * duplicates of base docs are refused. Any dropped batch, double
     * admission, or wrong within-batch tiebreak breaks the hash. */
   private[graft] val streamDedupCorpus = Q("stream_dedup_corpus",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_corpus")
-        val docs = t(s, dir, "documents")
-          .select(col("doc_id"), coalesce(col("text"), lit(""))
-            .as("text"))
-        docs.filter(col("doc_id") < 300)
-          .select(col("doc_id"), md5(col("text")).as("digest"))
-          .groupBy(col("digest")).agg(min(col("doc_id")).as("doc_id"))
-          .select(col("digest"), col("doc_id"))
-          .write.parquet(s"$root/store/base")
-        val newDocs = docs.filter(col("doc_id") >= 300)
-        val b = newDocs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val step = math.max(1L, (hi - lo) / 4 + 1)
-        new java.io.File(s"$root/in").mkdirs()
-        (0 until 4).foreach { i =>
-          val (flo, fhi) = (lo + i * step, lo + (i + 1) * step)
-          val tmp = s"$root/stage_$i"
-          newDocs.filter(col("doc_id") >= flo && col("doc_id") < fhi)
-            .coalesce(1).write.parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$root/in/batch_$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          // FileStreamSource orders by (mtime, path): pin arrival order
-          dst.setLastModified(1700000000000L + i * 60000L)
-        }
-        val stream = s.readStream.schema(newDocs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$root/in")
-        graft.stream.CorpusAdmission.admitStream(stream,
-          s"$root/store", s"$root/ckpt")
-        graft.stream.CorpusAdmission.readCorpus(s, s"$root/store")
-          .select(col("doc_id"), col("digest"))
-          .orderBy("doc_id")
+    streamRow("graft_stream_corpus", replays = false) { sc =>
+      import sc._
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), coalesce(col("text"), lit(""))
+          .as("text"))
+      docs.filter(col("doc_id") < 300)
+        .select(col("doc_id"), md5(col("text")).as("digest"))
+        .groupBy(col("digest")).agg(min(col("doc_id")).as("doc_id"))
+        .select(col("digest"), col("doc_id"))
+        .write.parquet(s"$root/store/base")
+      val newDocs = docs.filter(col("doc_id") >= 300)
+      val b = newDocs.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val (lo, hi) = (b.getLong(0), b.getLong(1))
+      val step = math.max(1L, (hi - lo) / 4 + 1)
+      new java.io.File(s"$root/in").mkdirs()
+      (0 until 4).foreach { i =>
+        val (flo, fhi) = (lo + i * step, lo + (i + 1) * step)
+        val tmp = s"$root/stage_$i"
+        newDocs.filter(col("doc_id") >= flo && col("doc_id") < fhi)
+          .coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        val dst = new java.io.File(s"$root/in/batch_$i.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        // FileStreamSource orders by (mtime, path): pin arrival order
+        dst.setLastModified(1700000000000L + i * 60000L)
       }
+      val stream = s.readStream.schema(newDocs.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$root/in")
+      graft.stream.CorpusAdmission.admitStream(stream,
+        s"$root/store", s"$root/ckpt")
+      graft.stream.CorpusAdmission.readCorpus(s, s"$root/store")
+        .select(col("doc_id"), col("digest"))
+        .orderBy("doc_id")
     },
     Some("""SELECT MIN(doc_id) AS doc_id,
         md5(COALESCE(text, '')) AS digest
       FROM documents GROUP BY 2 ORDER BY 1"""))
 
   private[graft] val streamMvRefresh = Q("stream_mv_refresh",
-    (s, dir) => {
-      withStreamConf(s) {
-        val staged = stagedInput(s, dir)
-        val stream = s.readStream.schema(staged.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(staged.inDir)
-          .transform(normalizeTs)
-        def partials(df: DataFrame) = df
-          .filter(col("user_id") >= 0) // shared watermark sentinels
-          .groupBy(to_date(col("ts")).as("date"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(DecimalType(18, 2)))
-              .cast(DecimalType(18, 2)).as("sum_value"))
-        val root = Scratch.dir("graft_stream_mv")
-        graft.stream.StreamingFact.mergeToMv(stream, s"$root/mv",
-          s"$root/ckpt", Seq("date", "event_type"))(partials)
-        graft.stream.StreamingFact.readMv(s, s"$root/mv")
-          .select(col("date"), col("event_type"), col("n_events"),
-            col("sum_value").cast("double").as("total_value"),
-            (col("sum_value").cast("double") / col("n_events"))
-              .as("avg_value"))
-          .orderBy("date", "event_type")
-      }
+    streamRow("graft_stream_mv") { sc =>
+      import sc._
+      val staged = stagedInput(s, dir)
+      val stream = s.readStream.schema(staged.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged.inDir)
+        .transform(normalizeTs)
+      def partials(df: DataFrame) = df
+        .filter(col("user_id") >= 0) // shared watermark sentinels
+        .groupBy(to_date(col("ts")).as("date"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("value").cast(DecimalType(18, 2)))
+            .cast(DecimalType(18, 2)).as("sum_value"))
+      graft.stream.StreamingFact.mergeToMv(stream, s"$root/mv",
+        s"$root/ckpt", Seq("date", "event_type"))(partials)
+      graft.stream.StreamingFact.readMv(s, s"$root/mv")
+        .select(col("date"), col("event_type"), col("n_events"),
+          col("sum_value").cast("double").as("total_value"),
+          (col("sum_value").cast("double") / col("n_events"))
+            .as("avg_value"))
+        .orderBy("date", "event_type")
     },
     Some("""SELECT CAST(ts AS DATE) AS date, event_type,
       COUNT(*) AS n_events,
@@ -834,34 +817,32 @@ private[graft] object QueriesStreaming {
     * (`ManifestCdcSourceSpec` covers restart/startingVersion/
     * overwrite semantics the oracle can't see). */
   private[graft] val streamManifestCdc = Q("stream_manifest_cdc",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_stream_cdc")
-        val table = s"$root/t"
-        val docs = t(s, dir, "documents").select(col("doc_id"))
-        Seq((0L, 200L), (200L, 400L), (400L, Long.MaxValue))
-          .foreach { case (lo, hi) =>
-            graft.sources.ManifestTable.commitAppend(s, table,
-              docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
-                .coalesce(1),
-              statsCol = Some("doc_id"))
-          }
-        // drained into a parquet sink under the scratch dir, not a
-        // memory sink, whose query name would stay behind as a temp view
-        val q = s.readStream.format("graft-manifest-cdc")
-          .option("path", table).load()
-          .writeStream.format("parquet").option("path", s"$root/feed")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/feed")
-          .groupBy(col("version"))
-          .agg(count(lit(1)).as("n_files"),
-            min(col("stats_min")).as("min_id"),
-            max(col("stats_max")).as("max_id"))
-          .orderBy("version")
-      }
+    streamRow("graft_stream_cdc", replays = false) { sc =>
+      import sc._
+      val table = s"$root/t"
+      val docs = t(s, dir, "documents").select(col("doc_id"))
+      Seq((0L, 200L), (200L, 400L), (400L, Long.MaxValue))
+        .foreach { case (lo, hi) =>
+          graft.sources.ManifestTable.commitAppend(s, table,
+            docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+              .coalesce(1),
+            statsCol = Some("doc_id"))
+        }
+      // drained into a parquet sink under the scratch dir, not a
+      // memory sink, whose query name would stay behind as a temp view
+      val q = s.readStream.format("graft-manifest-cdc")
+        .option("path", table).load()
+        .writeStream.format("parquet").option("path", s"$root/feed")
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      s.read.parquet(s"$root/feed")
+        .groupBy(col("version"))
+        .agg(count(lit(1)).as("n_files"),
+          min(col("stats_min")).as("min_id"),
+          max(col("stats_max")).as("max_id"))
+        .orderBy("version")
     },
     Some("""WITH buckets AS (
         SELECT CASE WHEN doc_id < 200 THEN 1
@@ -888,54 +869,52 @@ private[graft] object QueriesStreaming {
     * at-least-once delivery + idempotent fold = exactly-once
     * artifact. */
   private[graft] val graphCdcIncremental = Q("graph_cdc_incremental",
-    (s, dir) => {
-      withStreamConf(s) {
-        val root = Scratch.dir("graft_cdc_graph")
-        val fact = s"$root/fact"
-        val graph = s"$root/graph"
-        val fwd = t(s, dir, "lineitem").select(
-          (col("l_suppkey").cast("long") * 2).as("src"),
-          (col("l_partkey").cast("long") * 2 + 1).as("dst"))
-        // bootstrap: the first fact batch is committed AND built into
-        // the graph (a deployment starts from one full build)
+    streamRow("graft_cdc_graph", replays = false) { sc =>
+      import sc._
+      val fact = s"$root/fact"
+      val graph = s"$root/graph"
+      val fwd = t(s, dir, "lineitem").select(
+        (col("l_suppkey").cast("long") * 2).as("src"),
+        (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+      // bootstrap: the first fact batch is committed AND built into
+      // the graph (a deployment starts from one full build)
+      graft.sources.ManifestTable.commitAppend(s, fact,
+        fwd.filter(col("src") % 6 === 0), statsCol = Some("src"))
+      graft.etl.Graph.commitEdges(s, graph,
+        graft.sources.ManifestTable.read(s, fact))
+      // growth: two more fact batches land as manifest commits
+      // (src = 2*suppkey, so src % 6 covers {0, 2, 4} exactly)
+      Seq(2L, 4L).foreach { r =>
         graft.sources.ManifestTable.commitAppend(s, fact,
-          fwd.filter(col("src") % 6 === 0), statsCol = Some("src"))
-        graft.etl.Graph.commitEdges(s, graph,
-          graft.sources.ManifestTable.read(s, fact))
-        // growth: two more fact batches land as manifest commits
-        // (src = 2*suppkey, so src % 6 covers {0, 2, 4} exactly)
-        Seq(2L, 4L).foreach { r =>
-          graft.sources.ManifestTable.commitAppend(s, fact,
-            fwd.filter(col("src") % 6 === r), statsCol = Some("src"))
-        }
-        val q = s.readStream.format("graft-manifest-cdc")
-          .option("path", fact).option("startingVersion", "1").load()
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) =>
-              // file entries are KB-scale driver metadata, never rows
-              val files = batch.select("file").distinct()
-                .collect().map(r => s"$fact/${r.getString(0)}")
-              if (files.nonEmpty)
-                graft.etl.Graph.appendEdges(s, graph,
-                  s.read.parquet(files.toIndexedSeq: _*))
-              ()
-          }
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val latest = graft.etl.Graph.edgesFromManifest(s, graph)
-        val deg = latest.groupBy("src").agg(count(lit(1)).as("d"))
-        val dups = latest.groupBy("src", "dst")
-          .agg(count(lit(1)).as("k")).filter(col("k") > 1)
-          .agg(count(lit(1)).as("dup_edges"))
-        deg.agg(count(lit(1)).as("n_nodes"),
-            sum("d").as("n_directed_edges"),
-            max("d").as("max_degree"), min("d").as("min_degree"))
-          .crossJoin(broadcast(dups))
+          fwd.filter(col("src") % 6 === r), statsCol = Some("src"))
       }
+      val q = s.readStream.format("graft-manifest-cdc")
+        .option("path", fact).option("startingVersion", "1").load()
+        .writeStream
+        .foreachBatch {
+          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+           _: Long) =>
+            // file entries are KB-scale driver metadata, never rows
+            val files = batch.select("file").distinct()
+              .collect().map(r => s"$fact/${r.getString(0)}")
+            if (files.nonEmpty)
+              graft.etl.Graph.appendEdges(s, graph,
+                s.read.parquet(files.toIndexedSeq: _*))
+            ()
+        }
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val latest = graft.etl.Graph.edgesFromManifest(s, graph)
+      val deg = latest.groupBy("src").agg(count(lit(1)).as("d"))
+      val dups = latest.groupBy("src", "dst")
+        .agg(count(lit(1)).as("k")).filter(col("k") > 1)
+        .agg(count(lit(1)).as("dup_edges"))
+      deg.agg(count(lit(1)).as("n_nodes"),
+          sum("d").as("n_directed_edges"),
+          max("d").as("max_degree"), min("d").as("min_degree"))
+        .crossJoin(broadcast(dups))
     },
     Some("""WITH fwd AS (
         SELECT CAST(l_suppkey AS BIGINT) * 2 AS src,

@@ -108,6 +108,16 @@ object StreamingFact {
 
   // --- transformWithState (Spark 4 arbitrary-state API) ----------------
 
+  /** Run `body` (which starts a transformWithState query) on the
+    * RocksDB state-store provider, the only one implementing that
+    * operator's state layout; the session's provider is restored on
+    * exit. */
+  def withTwsStore[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")(body)
+
   /** The [[sessionize]] contract re-expressed on `transformWithState` —
     * Spark 4's successor to flatMapGroupsWithState: typed state handles
     * (`ValueState`) instead of one opaque state object, EXPLICIT timers
@@ -169,7 +179,7 @@ object StreamingFact {
 
   /** [[sessionize]] on the transformWithState API — see
     * [[SessionProcessor]]. Input must carry `withWatermark` on `ts`;
-    * the session must run the RocksDB state-store provider. */
+    * start the query inside [[withTwsStore]]. */
   def sessionizeTws(spark: SparkSession, events: Dataset[Ev],
                     gapMs: Long = 30 * 60 * 1000L): Dataset[SessionOut] = {
     import spark.implicits._

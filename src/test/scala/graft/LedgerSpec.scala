@@ -3,6 +3,7 @@ package graft
 import scala.util.Try
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cost ledger: read volume visible per measured body (selectivity,
@@ -61,6 +62,23 @@ class LedgerSpec extends AnyFunSuite {
     assert(c.jobs.forall(
       _.description.startsWith("collect at LedgerSpec.scala:")),
       c.jobs.map(_.description))
+    // a job outside any SQL execution (a read's schema inference) takes
+    // its call site, and a streaming batch's multi-line description is
+    // booked on one line: never empty, never a newline
+    val t = table()
+    val (_, more) = Ledger.measure(spark) {
+      val schema = spark.read.parquet(t).schema
+      spark.readStream.schema(schema).parquet(t)
+        .writeStream.format("parquet").option("path", s"$t-stream")
+        .option("checkpointLocation", s"$t-ckpt")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    val descriptions = more.jobs.map(_.description)
+    assert(descriptions.exists(_.startsWith("parquet at LedgerSpec.scala:")),
+      descriptions)
+    assert(descriptions.exists(_.contains("batch = 0")), descriptions)
+    assert(descriptions.forall(d => d.nonEmpty && !d.contains('\n')),
+      descriptions)
   }
 
   test("a failing action is booked as a failed job") {

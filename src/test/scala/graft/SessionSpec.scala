@@ -53,10 +53,11 @@ class SessionSpec extends AnyFunSuite {
     }
   }
 
-  /** [[sites]] of `needle` outside the `owners` (paths under `root`). */
-  private def strays(root: Path, needle: String,
+  /** [[matches]] of `pattern` outside the `owners` (paths under
+    * `root`). */
+  private def strays(root: Path, pattern: Regex,
                      owners: Set[String]): Seq[String] =
-    sites(root, needle).filterNot(site =>
+    matches(root, pattern).filterNot(site =>
       owners.exists(o => site.startsWith(s"${root.resolve(o)}:")))
 
   // scratch state has one owner (graft.Scratch); Session keeps only
@@ -66,7 +67,7 @@ class SessionSpec extends AnyFunSuite {
     "Files.walk" -> Set("graft/Scratch.scala")).foreach {
     case (needle, owners) =>
       test(s"src/main has `$needle` only in ${owners.mkString(", ")}") {
-        val elsewhere = strays(mainRoot, needle, owners)
+        val elsewhere = strays(mainRoot, Regex.quote(needle).r, owners)
         assert(elsewhere.isEmpty,
           s"`$needle` outside ${owners.mkString(", ")} — stage scratch " +
             s"dirs with graft.Scratch:\n${elsewhere.mkString("\n")}")
@@ -81,7 +82,8 @@ class SessionSpec extends AnyFunSuite {
     Files.createDirectories(owner.getParent)
     Seq(owner, stray).foreach(
       Files.writeString(_, "object P {\n  Files.walk(p)\n}\n"))
-    try assert(strays(root, "Files.walk", Set("graft/Scratch.scala")) ==
+    try assert(strays(root, Regex.quote("Files.walk").r,
+      Set("graft/Scratch.scala")) ==
       Seq(s"$stray:2"))
     finally Scratch.deleteTree(root)
   }
@@ -293,6 +295,38 @@ class SessionSpec extends AnyFunSuite {
     val cwd = Paths.get("").toAbsolutePath.normalize
     assert(wh.startsWith(tmp), s"$wh is not under $tmp")
     assert(!wh.startsWith(cwd), s"$wh is under the working directory")
+  }
+
+  // env vars are read only by the entry points; query code decides
+  // from its inputs and the session it is handed
+  private val envOwners = Set("graft/Session.scala", "graft/Bench.scala",
+    "graft/Debug.scala", "graft/Verify.scala")
+  private val envRead = """sys\.env\b|System\.getenv""".r
+
+  test("src/main reads env vars only in the entry points (Session, " +
+    "Bench, Debug, Verify)") {
+    val found = strays(mainRoot, envRead, envOwners)
+    assert(found.isEmpty, "read settings in an entry point and pass " +
+      s"them down, or derive them from the input:\n${found.mkString("\n")}")
+  }
+
+  test("negative: the env guard flags planted strays, not an entry " +
+    "point") {
+    val root = Files.createTempDirectory("graft_guard")
+    val read = "  val v = sys.env.get(\"X\")\n"
+    envOwners.foreach { owner =>
+      val f = root.resolve(owner)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, "object P {\n" + read + "}\n")
+    }
+    try {
+      assert(strays(root, envRead, envOwners).isEmpty)
+      val stray = root.resolve("graft/QueriesPlanted.scala")
+      Files.writeString(stray, "object P {\n" + read +
+        "  val w = System.getenv(\"Y\")\n}\n")
+      assert(strays(root, envRead, envOwners) ==
+        Seq(s"$stray:2", s"$stray:3"))
+    } finally Scratch.deleteTree(root)
   }
 
   private def assertRejects(name: String, parse: Map[String, String] => Int)

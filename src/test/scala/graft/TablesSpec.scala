@@ -34,8 +34,14 @@ class TablesSpec extends AnyFunSuite {
     val s = spark.newSession()
     val before = s.conf.getAll
     Tables.names.foreach(n => Tables.load(s, dir, n).count())
+    // over a plain path and a URI-qualified dir (file://, like hdfs://
+    // or abfss:// roots): the staged stream input is listed and copied
+    // through the Hadoop FS, and both give the same rows
     Seq("stream_daily_engagement", "stream_anomaly").foreach { n =>
-      Queries.all.find(_.name == n).get.run(s, dir).collect()
+      val q = Queries.all.find(_.name == n).get
+      val Seq(plain, uri) = Seq(dir, s"file://$dir").map(d =>
+        q.run(s, d).collect().toSeq)
+      assert(uri.nonEmpty && uri == plain, n)
     }
     val after = s.conf.getAll
     val changed = (before.keySet ++ after.keySet)
