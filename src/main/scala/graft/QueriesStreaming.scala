@@ -4,11 +4,11 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.Qdsl._
 import graft.sources.Sources
+import graft.stream.StreamingFact
 
 /** Registry part 5 — Structured Streaming: watermarked daily
   * engagement, session windows, and stream-stream attribution joins,
@@ -83,17 +83,6 @@ private[graft] object QueriesStreaming {
       Staged(s"$root/in", rawSchema, stats.getLong(1))
     }
 
-  /** Drain `df` into a parquet append sink at `$root/out` (checkpoint
-    * `$root/ckpt`) with one AvailableNow run, then read the sink. */
-  private def appendAvailableNow(df: DataFrame, root: String): DataFrame = {
-    df.writeStream.outputMode("append").format("parquet")
-      .option("path", s"$root/out")
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    df.sparkSession.read.parquet(s"$root/out")
-  }
-
   /** State-store width (`spark.sql.shuffle.partitions`, one state
     * store instance per partition) for a stream over `users` distinct
     * keys on `cores` cores: one partition per 4096 keys, at least 4,
@@ -105,48 +94,56 @@ private[graft] object QueriesStreaming {
     math.min(math.max(4L, (users + 4095) / 4096), math.max(4, cores).toLong)
       .toInt
 
-  /** What a streaming row runs in: its session, source dir, a fresh
-    * scratch `root`, and the bounded `replay` every sentinel-aware row
-    * reads (the [[stagedInput]] as a file stream, ts normalized). */
+  /** What a streaming row runs in: its session, source dir, its
+    * `name`, a fresh scratch `root`, and the bounded `replay` every
+    * sentinel-aware row reads (the [[stagedInput]] as a file stream, ts
+    * normalized). A row drains its stream through [[drain]] or
+    * [[drainTo]], which name the query after the row and checkpoint it
+    * at `$root/ckpt`. */
   private final class StreamScope(val s: SparkSession, val dir: String,
-                                  val root: String) {
+                                  val name: String, val root: String) {
     lazy val replay: DataFrame = {
       val staged = stagedInput(s, dir)
       s.readStream.schema(staged.schema).parquet(staged.inDir)
         .transform(normalizeTs)
     }
+    def drain(df: DataFrame, mode: String = "append")(
+        batch: (DataFrame, Long) => Unit): Unit =
+      StreamingFact.drain(df, name, s"$root/ckpt", mode)(batch)
+    def drainTo(df: DataFrame): DataFrame =
+      StreamingFact.drainTo(df, name, root)
   }
 
-  /** The one stream scope every streaming row runs in: `body` gets a
-    * fresh scratch root named `prefix` while the session's shuffle
-    * partitions are the [[stateWidth]] of the staged input's users
-    * (the floor width for a row that replays no events,
-    * `replays = false`). The conf is restored on exit, so a failed
-    * stream cannot leak it into the batch queries. Query results are
-    * width-independent.
+  /** The registry row `name`, run in the one stream scope every
+    * streaming row shares: `body` gets a fresh scratch root named after
+    * the row while the session's shuffle partitions are the
+    * [[stateWidth]] of the staged input's users (the floor width for a
+    * row that replays no events, `replays = false`). The conf is
+    * restored on exit, so a failed stream cannot leak it into the batch
+    * queries. Query results are width-independent.
     *
     * The state-store provider is the session's own: a deployment that
     * keeps 100 TB-scale state (dedup keys, open sessions, join
     * buffers) in RocksDB on executor-local disk sets Spark's
     * `spark.sql.streaming.stateStore.providerClass` on its session,
     * and this scope never overrides that key. */
-  private def streamRow(prefix: String, replays: Boolean = true)(
-      body: StreamScope => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
+  private def streamRow(name: String, replays: Boolean = true)(
+      body: StreamScope => DataFrame)(oracle: String): Q =
+    Q(name, (s, dir) => {
       val users = if (replays) stagedInput(s, dir).users else 0L
       Session.withConf(s, "spark.sql.shuffle.partitions",
         stateWidth(users, s.sparkContext.defaultParallelism).toString) {
-        body(new StreamScope(s, dir, Scratch.dir(prefix)))
+        body(new StreamScope(s, dir, name, Scratch.dir(name)))
       }
-    }
+    }, Some(oracle))
 
   // ======================================================================
   // Streaming: the daily engagement aggregate over a bounded stream,
   // oracle = the equivalent batch SQL (stream/batch parity).
   // ======================================================================
 
-  private[graft] val streamDaily = Q("stream_daily_engagement",
-    streamRow("graft_stream_daily") { sc =>
+  private[graft] val streamDaily =
+    streamRow("stream_daily_engagement") { sc =>
       import sc._
       // the shared staged input (not pathGlobFilter over the source
       // dir: a glob on the FILE name silently matches nothing when the
@@ -163,17 +160,17 @@ private[graft] object QueriesStreaming {
       // the watermark horizon — the pattern that survives an unbounded
       // stream (a complete-mode memory sink would retain the whole
       // result in state AND collect it to the driver).
-      graft.stream.StreamingFact.upsertToSilver(
-        s, agg, s"$root/fact", s"$root/ckpt", keyCols = Seq("user_id"))
+      drain(agg, "update") { (batch, _) =>
+        StreamingFact.upsertBatch(batch, s"$root/fact", Seq("user_id"))
+      }
       s.read.parquet(s"$root/fact")
         .filter(col("user_id") >= 0) // shared watermark sentinels
         .select(col("date"), col("user_id"), col("play_count"))
         .orderBy("date", "user_id")
-    },
-    Some("""SELECT CAST(date_trunc('day', ts) AS DATE) AS date, user_id,
+    }("""SELECT CAST(date_trunc('day', ts) AS DATE) AS date, user_id,
       COUNT(*) AS play_count
       FROM events WHERE event_type = 'purchase'
-      GROUP BY 1, 2 ORDER BY 1, 2"""))
+      GROUP BY 1, 2 ORDER BY 1, 2""")
 
 
   /** Streaming anomaly feed — the production shape of
@@ -190,17 +187,17 @@ private[graft] object QueriesStreaming {
     * and the sentinels' zero-count far-future groups drop on the way
     * out. Oracle = the batch z-score SQL verbatim: the stream-
     * maintained store must equal the batch daily aggregate exactly. */
-  private[graft] val streamAnomaly = Q("stream_anomaly",
-    streamRow("graft_stream_anomaly") { sc =>
+  private[graft] val streamAnomaly =
+    streamRow("stream_anomaly") { sc =>
       import sc._
       val agg = replay
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 day").as("day"),
           col("event_type"))
         .agg(count(when(col("user_id") >= 0, 1)).as("n"))
-      graft.stream.StreamingFact.upsertToSilver(
-        s, agg, s"$root/fact", s"$root/ckpt",
-        keyCols = Seq("event_type"))
+      drain(agg, "update") { (batch, _) =>
+        StreamingFact.upsertBatch(batch, s"$root/fact", Seq("event_type"))
+      }
       val daily = s.read.parquet(s"$root/fact")
         .filter(col("n") > 0) // sentinel-only far-future groups
         .select(col("event_type"), col("date"), col("n"))
@@ -221,8 +218,7 @@ private[graft] object QueriesStreaming {
         .select(col("event_type"), col("date"), col("n"),
           z.as("z"), (abs(coalesce(z, lit(0.0))) > 3.0).as("is_anomaly"))
         .orderBy("event_type", "date")
-    },
-    Some("""WITH daily AS (
+    }("""WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS date,
           CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY 1, 2),
@@ -242,7 +238,7 @@ private[graft] object QueriesStreaming {
           THEN ROUND((CAST(n AS DOUBLE) - s1 / m) /
             SQRT((s2 - s1 * s1 / m) / (m - 1.0)), 6) END, 0.0)) > 3.0
           AS is_anomaly
-      FROM win WHERE m >= 8 ORDER BY event_type, date"""))
+      FROM win WHERE m >= 8 ORDER BY event_type, date""")
 
   /** SLIDING event-time windows (1-day window, 12-hour slide) — the
     * overlapping-window shape the tumbling `stream_daily_engagement`
@@ -259,8 +255,8 @@ private[graft] object QueriesStreaming {
     * far-future windows — the only zero-count groups possible — are
     * dropped on the way out. State is one count per open window in the
     * horizon — bounded by the window grid, not the stream. */
-  private[graft] val streamSlidingCounts = Q("stream_sliding_counts",
-    streamRow("graft_stream_sliding") { sc =>
+  private[graft] val streamSlidingCounts =
+    streamRow("stream_sliding_counts") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("ts"), col("event_type"))
@@ -269,13 +265,12 @@ private[graft] object QueriesStreaming {
       val agg = stream
         .groupBy(window(col("ts"), "1 day", "12 hours"))
         .agg(count(when(col("user_id") >= 0, 1)).as("n_purchases"))
-      appendAvailableNow(agg, root)
+      drainTo(agg)
         .filter(col("n_purchases") > 0) // sentinel-only windows
         .select(unix_micros(col("window.start")).as("window_start_us"),
           col("n_purchases"))
         .orderBy("window_start_us")
-    },
-    Some("""WITH p AS (SELECT epoch_us(ts) AS ts_us FROM events
+    }("""WITH p AS (SELECT epoch_us(ts) AS ts_us FROM events
         WHERE event_type = 'purchase'),
       w AS (
         SELECT (ts_us // 43200000000) * 43200000000 AS window_start_us
@@ -284,7 +279,7 @@ private[graft] object QueriesStreaming {
         SELECT (ts_us // 43200000000) * 43200000000 - 43200000000
         FROM p)
       SELECT window_start_us, COUNT(*) AS n_purchases
-      FROM w GROUP BY 1 ORDER BY 1"""))
+      FROM w GROUP BY 1 ORDER BY 1""")
 
   /** Windowed top-N in streaming — the trending-now query: per 6-hour
     * tumbling window, the 2 most frequent event types. The RANKING
@@ -298,8 +293,8 @@ private[graft] object QueriesStreaming {
     * rows are counted conditionally, and the sentinel-only zero-count
     * groups drop on the way out. Oracle = the batch twin over the same
     * events. */
-  private[graft] val streamTopk = Q("stream_topk",
-    streamRow("graft_stream_topk") { sc =>
+  private[graft] val streamTopk =
+    streamRow("stream_topk") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("ts"),
@@ -308,7 +303,7 @@ private[graft] object QueriesStreaming {
       val agg = stream
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(count(when(col("user_id") >= 0, 1)).as("n"))
-      val sunk = appendAvailableNow(agg, root).filter(col("n") > 0)
+      val sunk = drainTo(agg).filter(col("n") > 0)
       val w = Window.partitionBy(col("window.start"))
         .orderBy(col("n").desc, col("event_type"))
       sunk.withColumn("rank", row_number().over(w).cast("long"))
@@ -316,15 +311,14 @@ private[graft] object QueriesStreaming {
         .select(unix_micros(col("window.start")).as("window_start_us"),
           col("rank"), col("event_type"), col("n"))
         .orderBy("window_start_us", "rank")
-    },
-    Some("""WITH c AS (SELECT
+    }("""WITH c AS (SELECT
         (epoch_us(ts) // 21600000000) * 21600000000 AS window_start_us,
         COALESCE(event_type, '(none)') AS event_type, COUNT(*) AS n
       FROM events GROUP BY 1, 2)
       SELECT window_start_us, rank, event_type, n FROM (
         SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY window_start_us
           ORDER BY n DESC, event_type) AS BIGINT) AS rank FROM c)
-      WHERE rank <= 2 ORDER BY window_start_us, rank"""))
+      WHERE rank <= 2 ORDER BY window_start_us, rank""")
 
   /** Event-time session windows over the same bounded stream — the
     * strongest check the streaming path can have: the oracle is the
@@ -338,22 +332,21 @@ private[graft] object QueriesStreaming {
     * advance the event-time watermark past every real session's close:
     * a production stream flushes as new events arrive; a bounded
     * replay needs the nudge. */
-  private[graft] val streamSessions = Q("stream_sessions",
-    streamRow("graft_stream_sess") { sc =>
+  private[graft] val streamSessions =
+    streamRow("stream_sessions") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("ts"))
-      val sess = graft.stream.StreamingFact.sessionWindows(
+      val sess = StreamingFact.sessionWindows(
         stream, "ts", "user_id")
-      appendAvailableNow(sess, root)
+      drainTo(sess)
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           unix_micros(col("session_start")).as("session_start_us"),
           unix_micros(col("session_end")).as("session_end_us"),
           col("n_events"))
         .orderBy("user_id", "session_start_us")
-    },
-    Some("""SELECT user_id, MIN(ts_us) AS session_start_us,
+    }("""SELECT user_id, MIN(ts_us) AS session_start_us,
       MAX(ts_us) + 1800 * 1000000 AS session_end_us,
       COUNT(*) AS n_events
       FROM (
@@ -368,7 +361,7 @@ private[graft] object QueriesStreaming {
               PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
               >= 1800 * 1000000 THEN 1 ELSE 0 END AS new_sess
           FROM events))
-      GROUP BY user_id, session_id ORDER BY 1, 2"""))
+      GROUP BY user_id, session_id ORDER BY 1, 2""")
 
   /** The [[graft.stream.StreamingFact.sessionizeTws]] sessionizer —
     * Spark 4's `transformWithState` arbitrary-state API (typed
@@ -384,19 +377,19 @@ private[graft] object QueriesStreaming {
     * the operator requires ([[graft.stream.StreamingFact.withTwsStore]]).
     * Sessions still open at end-of-replay (the sentinel user's own)
     * never emit — closed-sessions-only is the operator's contract. */
-  private[graft] val streamSessionsTws = Q("stream_sessions_tws",
-    streamRow("graft_stream_tws") { sc =>
+  private[graft] val streamSessionsTws =
+    streamRow("stream_sessions_tws") { sc =>
       import sc._
-      graft.stream.StreamingFact.withTwsStore(s) {
+      StreamingFact.withTwsStore(s) {
         import s.implicits._
         val stream = replay
           .select(col("user_id"), col("ts"),
             // sentinel rows carry null value; Ev.value is a primitive
             coalesce(col("value"), lit(0.0)).as("value"))
           .withWatermark("ts", "1 hour")
-          .as[graft.stream.StreamingFact.Ev]
-        val sess = graft.stream.StreamingFact.sessionizeTws(s, stream)
-        appendAvailableNow(sess.toDF(), root)
+          .as[StreamingFact.Ev]
+        val sess = StreamingFact.sessionizeTws(s, stream)
+        drainTo(sess.toDF())
           .filter(col("user_id") >= 0) // shared watermark sentinels
           .select(col("user_id"),
             unix_millis(col("session_start")).as("session_start_ms"),
@@ -404,8 +397,7 @@ private[graft] object QueriesStreaming {
             col("n_events"))
           .orderBy("user_id", "session_start_ms")
       }
-    },
-    Some("""SELECT user_id, MIN(ts_ms) AS session_start_ms,
+    }("""SELECT user_id, MIN(ts_ms) AS session_start_ms,
       MAX(ts_ms) AS session_end_ms, COUNT(*) AS n_events
       FROM (
         SELECT user_id, ts_ms,
@@ -421,7 +413,7 @@ private[graft] object QueriesStreaming {
                 PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
               > 1800 * 1000 THEN 1 ELSE 0 END AS new_sess
           FROM events))
-      GROUP BY user_id, session_id ORDER BY 1, 2"""))
+      GROUP BY user_id, session_id ORDER BY 1, 2""")
 
   /** STREAMING DEDUPLICATION under a watermark
     * (`dropDuplicatesWithinWatermark`): the at-least-once ingestion
@@ -435,20 +427,19 @@ private[graft] object QueriesStreaming {
     * distinct, proving exactly-once emission. At 100 TB the state is
     * one 8-byte key per event inside the horizon, keyed-partitioned
     * by the dedup column. */
-  private[graft] val streamDedup = Q("stream_dedup",
-    streamRow("graft_stream_dedup") { sc =>
+  private[graft] val streamDedup =
+    streamRow("stream_dedup") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("event_id"), col("ts"))
       val doubled = stream.union(stream)
-      val deduped = graft.stream.StreamingFact.dedupStream(
+      val deduped = StreamingFact.dedupStream(
         doubled, "ts", Seq("event_id"))
-      appendAvailableNow(deduped, root)
+      drainTo(deduped)
         .filter(col("user_id") >= 0) // shared watermark sentinels
         .select(col("user_id"), col("event_id"))
         .orderBy("user_id", "event_id")
-    },
-    Some("""SELECT user_id, event_id FROM events ORDER BY 1, 2"""))
+    }("""SELECT user_id, event_id FROM events ORDER BY 1, 2""")
 
   /** STREAMING-STATE INTROSPECTION ([[graft.stream.StateInspect]]):
     * run the watermarked dedup to completion, then audit its
@@ -467,14 +458,14 @@ private[graft] object QueriesStreaming {
     *  - state is non-empty (the final batch's keys cannot have been
     *    evicted yet — the watermark that would evict them commits one
     *    batch later). */
-  private[graft] val streamStateInspect = Q("stream_state_inspect",
-    streamRow("graft_stream_state") { sc =>
+  private[graft] val streamStateInspect =
+    streamRow("stream_state_inspect") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("event_id"), col("ts"))
-      val deduped = graft.stream.StreamingFact.dedupStream(
+      val deduped = StreamingFact.dedupStream(
         stream, "ts", Seq("event_id"))
-      appendAvailableNow(deduped, root)
+      drainTo(deduped)
       val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
       val meta = graft.stream.StateInspect
         .stateMetadata(s, s"$root/ckpt")
@@ -500,12 +491,11 @@ private[graft] object QueriesStreaming {
         .select(col("n_operators"), col("bad_operator"),
           col("bad_partitions"), col("state_empty"),
           col("orphan_keys"))
-    },
-    Some("""SELECT CAST(1 AS BIGINT) AS n_operators,
+    }("""SELECT CAST(1 AS BIGINT) AS n_operators,
       CAST(0 AS BIGINT) AS bad_operator,
       CAST(0 AS BIGINT) AS bad_partitions,
       CAST(0 AS BIGINT) AS state_empty,
-      CAST(0 AS BIGINT) AS orphan_keys"""))
+      CAST(0 AS BIGINT) AS orphan_keys""")
 
   /** STREAM-STREAM join (two unbounded sides, state-store buffered,
     * watermark-evicted): purchases ⋈ signups of the same user within 7
@@ -513,22 +503,21 @@ private[graft] object QueriesStreaming {
     * the identical range join run as batch SQL — stream/batch parity
     * on the full pair set. Inner join emits on arrival; watermarks
     * bound state, so the bounded replay needs no sentinel. */
-  private[graft] val streamAttribution = Q("stream_attribution",
-    streamRow("graft_stream_attr") { sc =>
+  private[graft] val streamAttribution =
+    streamRow("stream_attribution") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"))
-      val joined = graft.stream.StreamingFact.attributionJoin(
+      val joined = StreamingFact.attributionJoin(
         stream.filter(col("event_type") === "purchase"),
         stream.filter(col("event_type") === "signup"))
-      appendAvailableNow(joined, root)
+      drainTo(joined)
         // the staged input carries the shared watermark sentinels
         // (user -1); the inner join pairs them up — drop that row
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "purchase_event_id", "signup_event_id")
-    },
-    Some("""SELECT p.user_id, p.event_id AS purchase_event_id,
+    }("""SELECT p.user_id, p.event_id AS purchase_event_id,
       s.event_id AS signup_event_id
       FROM (SELECT user_id, event_id, ts FROM events
         WHERE event_type = 'purchase') p
@@ -536,7 +525,7 @@ private[graft] object QueriesStreaming {
         WHERE event_type = 'signup') s
       ON p.user_id = s.user_id AND p.ts >= s.ts
         AND p.ts < s.ts + INTERVAL 7 DAY
-      ORDER BY 1, 2, 3"""))
+      ORDER BY 1, 2, 3""")
 
   /** STREAM-STATIC enrichment
     * ([[graft.stream.StreamingFact.enrichWithDim]]): the event stream
@@ -545,23 +534,22 @@ private[graft] object QueriesStreaming {
     * micro-batch, which is also how a slowly-changing dim picks up
     * updates between batches). Stateless, so no watermark and no
     * sentinel mechanics: the oracle is the plain batch LEFT JOIN. */
-  private[graft] val streamStaticEnrich = Q("stream_static_enrich",
-    streamRow("graft_stream_enrich") { sc =>
+  private[graft] val streamStaticEnrich =
+    streamRow("stream_static_enrich") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("event_id"))
       val dim = t(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val joined = graft.stream.StreamingFact.enrichWithDim(
+      val joined = StreamingFact.enrichWithDim(
         stream, dim, "user_id")
-      appendAvailableNow(joined, root)
+      drainTo(joined)
         .filter(col("user_id") >= 0) // shared staged-input sentinels
         .select(col("event_id"), col("user_id"), col("c_mktsegment"))
         .orderBy("event_id")
-    },
-    Some("""SELECT e.event_id, e.user_id, c.c_mktsegment
+    }("""SELECT e.event_id, e.user_id, c.c_mktsegment
       FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-      ORDER BY e.event_id"""))
+      ORDER BY e.event_id""")
 
   /** CHAINED STATEFUL OPERATORS (Spark 4): a stream-stream range join
     * feeding a downstream windowed aggregate in ONE query — daily
@@ -582,8 +570,8 @@ private[graft] object QueriesStreaming {
     * the last stage's emission latency pays — a real design
     * constraint at 100 TB (loose per-input delays compound through
     * every downstream stateful stage). */
-  private[graft] val streamAttributionDaily = Q("stream_attribution_daily",
-    streamRow("graft_stream_attr_daily") { sc =>
+  private[graft] val streamAttributionDaily =
+    streamRow("stream_attribution_daily") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -605,13 +593,12 @@ private[graft] object QueriesStreaming {
       val agg = joined
         .groupBy(window(col("p_ts"), "1 day"))
         .agg(count(when(col("p_user") >= 0, 1)).as("n_attributed"))
-      appendAvailableNow(agg, root)
+      drainTo(agg)
         .filter(col("n_attributed") > 0) // sentinel-only windows
         .select(unix_micros(col("window.start")).as("window_start_us"),
           col("n_attributed"))
         .orderBy("window_start_us")
-    },
-    Some("""WITH j AS (
+    }("""WITH j AS (
         SELECT p.user_id, p.ts AS p_ts
         FROM (SELECT user_id, event_id, ts FROM events
           WHERE event_type = 'purchase') p
@@ -622,7 +609,7 @@ private[graft] object QueriesStreaming {
       SELECT (epoch_us(p_ts) // 86400000000) * 86400000000
           AS window_start_us,
         COUNT(*) AS n_attributed
-      FROM j GROUP BY 1 ORDER BY 1"""))
+      FROM j GROUP BY 1 ORDER BY 1""")
 
   /** STREAM-STREAM LEFT OUTER join — the hardest streaming-join
     * semantic: matched pairs emit on arrival, while a never-matched
@@ -634,24 +621,23 @@ private[graft] object QueriesStreaming {
     * unmatched rows a production stream would emit as time advances.
     * Oracle: the batch LEFT JOIN twin; nulls are coalesced to -1 so
     * the order keys stay non-null. */
-  private[graft] val streamAttributionOuter = Q("stream_attribution_outer",
-    streamRow("graft_stream_attr_outer") { sc =>
+  private[graft] val streamAttributionOuter =
+    streamRow("stream_attribution_outer") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"))
-      val joined = graft.stream.StreamingFact.attributionJoin(
+      val joined = StreamingFact.attributionJoin(
         stream.filter(col("event_type") === "purchase"),
         stream.filter(col("event_type") === "signup"),
         joinType = "left_outer")
-      appendAvailableNow(joined, root)
+      drainTo(joined)
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("purchase_event_id"),
           coalesce(col("signup_event_id"), lit(-1L))
             .as("signup_event_id"))
         .orderBy("user_id", "purchase_event_id", "signup_event_id")
-    },
-    Some("""SELECT p.user_id, p.event_id AS purchase_event_id,
+    }("""SELECT p.user_id, p.event_id AS purchase_event_id,
       COALESCE(s.event_id, -1) AS signup_event_id
       FROM (SELECT user_id, event_id, ts FROM events
         WHERE event_type = 'purchase') p
@@ -659,7 +645,7 @@ private[graft] object QueriesStreaming {
         WHERE event_type = 'signup') s
       ON p.user_id = s.user_id AND p.ts >= s.ts
         AND p.ts < s.ts + INTERVAL 7 DAY
-      ORDER BY 1, 2, 3"""))
+      ORDER BY 1, 2, 3""")
 
   /** STREAM-STREAM FULL-OUTER join — completes the join matrix
     * ([[streamAttribution]] inner, [[streamAttributionOuter]]
@@ -673,17 +659,17 @@ private[graft] object QueriesStreaming {
     * bounded replay flushes both unmatched sides exactly like an
     * advancing production stream. Oracle: the batch FULL JOIN twin
     * with null keys coalesced to -1 (order keys must be non-null). */
-  private[graft] val streamAttributionFull = Q("stream_attribution_full",
-    streamRow("graft_stream_attr_full") { sc =>
+  private[graft] val streamAttributionFull =
+    streamRow("stream_attribution_full") { sc =>
       import sc._
       val stream = replay
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"))
-      val joined = graft.stream.StreamingFact.attributionJoin(
+      val joined = StreamingFact.attributionJoin(
         stream.filter(col("event_type") === "purchase"),
         stream.filter(col("event_type") === "signup"),
         joinType = "full_outer")
-      appendAvailableNow(joined, root)
+      drainTo(joined)
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           coalesce(col("purchase_event_id"), lit(-1L))
@@ -691,8 +677,7 @@ private[graft] object QueriesStreaming {
           coalesce(col("signup_event_id"), lit(-1L))
             .as("signup_event_id"))
         .orderBy("user_id", "purchase_event_id", "signup_event_id")
-    },
-    Some("""SELECT COALESCE(p.user_id, s.user_id) AS user_id,
+    }("""SELECT COALESCE(p.user_id, s.user_id) AS user_id,
       COALESCE(p.event_id, -1) AS purchase_event_id,
       COALESCE(s.event_id, -1) AS signup_event_id
       FROM (SELECT user_id, event_id, ts FROM events
@@ -701,23 +686,8 @@ private[graft] object QueriesStreaming {
         WHERE event_type = 'signup') s
       ON p.user_id = s.user_id AND p.ts >= s.ts
         AND p.ts < s.ts + INTERVAL 7 DAY
-      ORDER BY 1, 2, 3"""))
+      ORDER BY 1, 2, 3""")
 
-  /** STREAMING INCREMENTAL MV MAINTENANCE
-    * ([[graft.stream.StreamingFact.mergeToMv]]) — the streaming twin
-    * of `mv_incremental_daily`, and the third maintenance strategy in
-    * the streaming family: [[streamDaily]] keeps windowed agg STATE
-    * and upserts changed keys; this keeps NO streaming state at all —
-    * each micro-batch (`maxFilesPerTrigger=1` forces a real multi-
-    * batch run) folds its partial aggregates into a persisted view
-    * under a versioned exactly-once marker (batch id writes `v<id>`
-    * from the immutable committed base, then atomically swaps the
-    * pointer — replays before or after the swap both converge). No
-    * watermark: a view merge handles arbitrarily late data by
-    * construction, because counts and exact-decimal sums absorb any
-    * batch in any order. State store size: ZERO, at any key
-    * cardinality — the trade is per-batch view I/O, priced in
-    * SCALE.md. Oracle = the full batch recompute over all events. */
   /** Streaming corpus dedup admission ([[graft.stream.CorpusAdmission]]
     * — the streaming half of `dedup_incremental`): an initial corpus
     * store is seeded from doc_id < 300, the remaining documents arrive
@@ -730,8 +700,8 @@ private[graft] object QueriesStreaming {
     * keeper, streamed digests keep their first (= smallest) arrival,
     * duplicates of base docs are refused. Any dropped batch, double
     * admission, or wrong within-batch tiebreak breaks the hash. */
-  private[graft] val streamDedupCorpus = Q("stream_dedup_corpus",
-    streamRow("graft_stream_corpus", replays = false) { sc =>
+  private[graft] val streamDedupCorpus =
+    streamRow("stream_dedup_corpus", replays = false) { sc =>
       import sc._
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), coalesce(col("text"), lit(""))
@@ -761,18 +731,33 @@ private[graft] object QueriesStreaming {
       val stream = s.readStream.schema(newDocs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$root/in")
-      graft.stream.CorpusAdmission.admitStream(stream,
-        s"$root/store", s"$root/ckpt")
+      drain(stream) { (batch, id) =>
+        graft.stream.CorpusAdmission.admitBatch(batch, s"$root/store", id)
+      }
       graft.stream.CorpusAdmission.readCorpus(s, s"$root/store")
         .select(col("doc_id"), col("digest"))
         .orderBy("doc_id")
-    },
-    Some("""SELECT MIN(doc_id) AS doc_id,
+    }("""SELECT MIN(doc_id) AS doc_id,
         md5(COALESCE(text, '')) AS digest
-      FROM documents GROUP BY 2 ORDER BY 1"""))
+      FROM documents GROUP BY 2 ORDER BY 1""")
 
-  private[graft] val streamMvRefresh = Q("stream_mv_refresh",
-    streamRow("graft_stream_mv") { sc =>
+  /** STREAMING INCREMENTAL MV MAINTENANCE
+    * ([[graft.stream.StreamingFact.mergeMvBatch]]) — the streaming twin
+    * of `mv_incremental_daily`, and the third maintenance strategy in
+    * the streaming family: [[streamDaily]] keeps windowed agg STATE
+    * and upserts changed keys; this keeps NO streaming state at all —
+    * each micro-batch (`maxFilesPerTrigger=1` forces a real multi-
+    * batch run) folds its partial aggregates into a persisted view
+    * under a versioned exactly-once marker (batch id writes `v<id>`
+    * from the immutable committed base, then atomically swaps the
+    * pointer — replays before or after the swap both converge). No
+    * watermark: a view merge handles arbitrarily late data by
+    * construction, because counts and exact-decimal sums absorb any
+    * batch in any order. State store size: ZERO, at any key
+    * cardinality — the trade is per-batch view I/O, priced in
+    * SCALE.md. Oracle = the full batch recompute over all events. */
+  private[graft] val streamMvRefresh =
+    streamRow("stream_mv_refresh") { sc =>
       import sc._
       val staged = stagedInput(s, dir)
       val stream = s.readStream.schema(staged.schema)
@@ -785,21 +770,22 @@ private[graft] object QueriesStreaming {
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(DecimalType(18, 2)))
             .cast(DecimalType(18, 2)).as("sum_value"))
-      graft.stream.StreamingFact.mergeToMv(stream, s"$root/mv",
-        s"$root/ckpt", Seq("date", "event_type"))(partials)
-      graft.stream.StreamingFact.readMv(s, s"$root/mv")
+      drain(stream) { (batch, id) =>
+        StreamingFact.mergeMvBatch(batch, id, s"$root/mv",
+          Seq("date", "event_type"), partials)
+      }
+      StreamingFact.readMv(s, s"$root/mv")
         .select(col("date"), col("event_type"), col("n_events"),
           col("sum_value").cast("double").as("total_value"),
           (col("sum_value").cast("double") / col("n_events"))
             .as("avg_value"))
         .orderBy("date", "event_type")
-    },
-    Some("""SELECT CAST(ts AS DATE) AS date, event_type,
+    }("""SELECT CAST(ts AS DATE) AS date, event_type,
       COUNT(*) AS n_events,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
         AS avg_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
+      FROM events GROUP BY 1, 2 ORDER BY 1, 2""")
 
   /** MANIFEST CHANGE FEED as a streaming source — the engine's own
     * DataSourceV2 `MicroBatchStream`
@@ -816,8 +802,8 @@ private[graft] object QueriesStreaming {
     * all cross-engine-checked, not just spec-asserted
     * (`ManifestCdcSourceSpec` covers restart/startingVersion/
     * overwrite semantics the oracle can't see). */
-  private[graft] val streamManifestCdc = Q("stream_manifest_cdc",
-    streamRow("graft_stream_cdc", replays = false) { sc =>
+  private[graft] val streamManifestCdc =
+    streamRow("stream_manifest_cdc", replays = false) { sc =>
       import sc._
       val table = s"$root/t"
       val docs = t(s, dir, "documents").select(col("doc_id"))
@@ -828,30 +814,21 @@ private[graft] object QueriesStreaming {
               .coalesce(1),
             statsCol = Some("doc_id"))
         }
-      // drained into a parquet sink under the scratch dir, not a
-      // memory sink, whose query name would stay behind as a temp view
-      val q = s.readStream.format("graft-manifest-cdc")
-        .option("path", table).load()
-        .writeStream.format("parquet").option("path", s"$root/feed")
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$root/feed")
+      drainTo(s.readStream.format("graft-manifest-cdc")
+          .option("path", table).load())
         .groupBy(col("version"))
         .agg(count(lit(1)).as("n_files"),
           min(col("stats_min")).as("min_id"),
           max(col("stats_max")).as("max_id"))
         .orderBy("version")
-    },
-    Some("""WITH buckets AS (
+    }("""WITH buckets AS (
         SELECT CASE WHEN doc_id < 200 THEN 1
                     WHEN doc_id < 400 THEN 2
                     ELSE 3 END AS version, doc_id
         FROM documents)
       SELECT version, CAST(1 AS BIGINT) AS n_files,
         MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-      FROM buckets GROUP BY 1 ORDER BY 1"""))
+      FROM buckets GROUP BY 1 ORDER BY 1""")
 
   /** The CDC feed COMPOSED with incremental graph maintenance —
     * end-to-end proof of the loop a 100 TB deployment actually runs:
@@ -868,8 +845,8 @@ private[graft] object QueriesStreaming {
     * versions, and the anti-join makes redelivery idempotent —
     * at-least-once delivery + idempotent fold = exactly-once
     * artifact. */
-  private[graft] val graphCdcIncremental = Q("graph_cdc_incremental",
-    streamRow("graft_cdc_graph", replays = false) { sc =>
+  private[graft] val graphCdcIncremental =
+    streamRow("graph_cdc_incremental", replays = false) { sc =>
       import sc._
       val fact = s"$root/fact"
       val graph = s"$root/graph"
@@ -888,24 +865,16 @@ private[graft] object QueriesStreaming {
         graft.sources.ManifestTable.commitAppend(s, fact,
           fwd.filter(col("src") % 6 === r), statsCol = Some("src"))
       }
-      val q = s.readStream.format("graft-manifest-cdc")
-        .option("path", fact).option("startingVersion", "1").load()
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           _: Long) =>
-            // file entries are KB-scale driver metadata, never rows
-            val files = batch.select("file").distinct()
-              .collect().map(r => s"$fact/${r.getString(0)}")
-            if (files.nonEmpty)
-              graft.etl.Graph.appendEdges(s, graph,
-                s.read.parquet(files.toIndexedSeq: _*))
-            ()
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(s.readStream.format("graft-manifest-cdc")
+          .option("path", fact).option("startingVersion", "1").load()) {
+        (batch, _) =>
+          // file entries are KB-scale driver metadata, never rows
+          val files = batch.select("file").distinct()
+            .collect().map(r => s"$fact/${r.getString(0)}")
+          if (files.nonEmpty)
+            graft.etl.Graph.appendEdges(s, graph,
+              s.read.parquet(files.toIndexedSeq: _*))
+      }
       val latest = graft.etl.Graph.edgesFromManifest(s, graph)
       val deg = latest.groupBy("src").agg(count(lit(1)).as("d"))
       val dups = latest.groupBy("src", "dst")
@@ -915,8 +884,7 @@ private[graft] object QueriesStreaming {
           sum("d").as("n_directed_edges"),
           max("d").as("max_degree"), min("d").as("min_degree"))
         .crossJoin(broadcast(dups))
-    },
-    Some("""WITH fwd AS (
+    }("""WITH fwd AS (
         SELECT CAST(l_suppkey AS BIGINT) * 2 AS src,
           CAST(l_partkey AS BIGINT) * 2 + 1 AS dst FROM lineitem),
       und AS (SELECT DISTINCT src, dst FROM (
@@ -930,6 +898,6 @@ private[graft] object QueriesStreaming {
         CAST(MAX(d) AS BIGINT) AS max_degree,
         CAST(MIN(d) AS BIGINT) AS min_degree,
         CAST(0 AS BIGINT) AS dup_edges
-      FROM deg"""))
+      FROM deg""")
 
 }

@@ -76,8 +76,7 @@ object Multimodal {
     * luma histogram of frame 0. Unrecognized or corrupt payloads fall
     * through to [[fallbackDecode]] — the stage is total. */
   private[llmops] def decodeOne(b: Blob): DecodedMeta = {
-    val in = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(b.payload))
+    val in = memoryIn(b.payload)
     try {
       val readers = javax.imageio.ImageIO.getImageReaders(in)
       if (!readers.hasNext) fallbackDecode(b)
@@ -95,7 +94,7 @@ object Multimodal {
       }
     } catch {
       case _: Exception => fallbackDecode(b) // truncated/corrupt image
-    } finally if (in != null) in.close()
+    } finally in.close()
   }
 
   /** 8-bin normalized luma histogram (Rec.601 integer weights) — a real,
@@ -123,33 +122,26 @@ object Multimodal {
     counts.map(c => c.toFloat / total)
   }
 
-  /** Decode stage: typed mapPartitions so per-partition codec init is
-    * amortized (the Scala analogue of a mapInPandas batch UDF — the
-    * iterator IS the batch). */
+  /** Decode stage: typed mapPartitions (the Scala analogue of a
+    * mapInPandas batch UDF — the iterator IS the batch); ImageIO's
+    * plugin registry scan happens once per executor JVM on first use. */
   def decode(spark: SparkSession, blobs: DataFrame): Dataset[DecodedMeta] = {
     import spark.implicits._
-    blobs.as[Blob].mapPartitions { it =>
-      // per-partition codec init: ImageIO's plugin registry scan happens
-      // once per executor JVM on first use. setUseCache(false) keeps
-      // stream caches IN MEMORY: the default wraps every
-      // createImageInputStream/ImageOutputStream in a FILE-backed
-      // cache — one temp-file create/write/delete per image — which
-      // is pure overhead for byte-array payloads and collapses under
-      // concurrent tasks on a contended disk (measured: the spread
-      // decode stage went 540 s of task-time across 32 tasks with the
-      // disk cache vs sub-second in memory). NOTE this is a
-      // PROCESS-GLOBAL static: it changes ImageIO stream-cache
-      // behavior for every other user of the executor (and, in local
-      // mode, driver) JVM, and in-memory caching raises heap pressure
-      // for very large images elsewhere (round-17 advice). Accepted
-      // deliberately: this engine's codec paths are the JVM's only
-      // ImageIO users, payloads are byte arrays, and the measured
-      // disk-cache collapse is the bigger hazard. A stricter scope
-      // would construct MemoryCacheImageInputStream per read instead.
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map(decodeOne)
-    }
+    blobs.as[Blob].mapPartitions(_.map(decodeOne))
   }
+
+  /** An in-memory image stream over `payload`. ImageIO's own
+    * `createImageInputStream`/`write(…, OutputStream)` wrap each stream
+    * in a FILE-backed cache by default — one temp-file
+    * create/write/delete per image, pure overhead for byte-array
+    * payloads, and it collapses under concurrent tasks on a contended
+    * disk (measured: the spread decode stage went 540 s of task-time
+    * across 32 tasks with the disk cache vs sub-second in memory). An
+    * explicit memory-cached stream keeps that, without flipping
+    * ImageIO's process-wide cache setting. */
+  private def memoryIn(payload: Array[Byte]) =
+    new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
 
   /** Pack arbitrary payload bytes into a REAL grayscale PNG (fixed
     * `width`, rows = ceil(n/width), zero-padded tail): turns any corpus
@@ -171,7 +163,6 @@ object Multimodal {
     // ensureWideScan requires.
     val spread = graft.Spread.ensureWideScan(blobs, col("blob_id"))
     spread.as[Blob].mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false) // see [[decode]]
       it.map { b =>
         val h = math.max(1, (b.payload.length + width - 1) / width)
         val img = new java.awt.image.BufferedImage(width, h,
@@ -183,7 +174,10 @@ object Multimodal {
           i += 1
         }
         val os = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", os)
+        val out = // in memory, as [[memoryIn]]
+          new javax.imageio.stream.MemoryCacheImageOutputStream(os)
+        try javax.imageio.ImageIO.write(img, "png", out)
+        finally out.close() // flushes into `os`
         Blob(b.blob_id, "image/png", os.toByteArray)
       }
     }.toDF()
@@ -251,11 +245,9 @@ object Multimodal {
   def aHash64(spark: SparkSession, blobs: DataFrame): DataFrame = {
     import spark.implicits._
     blobs.as[Blob].mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false) // see [[decode]]
       it.map { b =>
         val img =
-          try javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(b.payload))
+          try javax.imageio.ImageIO.read(memoryIn(b.payload))
           catch { case _: Throwable => null }
         val sig =
           if (img != null) aHashFromImage(img)

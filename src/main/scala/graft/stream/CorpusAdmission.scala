@@ -1,7 +1,7 @@
 package graft.stream
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** STREAMING CORPUS DEDUP ADMISSION — the streaming half of
@@ -45,7 +45,8 @@ object CorpusAdmission {
 
   /** One admission batch: dedup within the batch (min doc_id per
     * digest), anti-join against every OTHER store dir, overwrite this
-    * batch's own dir. Idempotent under replay by construction. */
+    * batch's own dir. Idempotent under replay by construction. Drain
+    * a document stream with it ([[StreamingFact.drain]]). */
   def admitBatch(batch: DataFrame, storeDir: String,
                  batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -61,20 +62,6 @@ object CorpusAdmission {
         Seq("digest"), "left_anti")
     admitted.select(col("digest"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$storeDir/b$batchId")
-  }
-
-  /** Run the admission stream to completion (bounded replays use
-    * AvailableNow; a production deployment drops the trigger). */
-  def admitStream(docs: DataFrame, storeDir: String,
-                  checkpoint: String): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        admitBatch(batch.toDF(), storeDir, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   /** The corpus as of now: every store dir unioned. */

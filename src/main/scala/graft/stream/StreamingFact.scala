@@ -1,10 +1,12 @@
 package graft.stream
 
+import graft.Scratch
 import graft.Scratch.ScratchOps
 import graft.sources.ControlFile
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface: the same engagement aggregation as the
   * batch fact build, expressed over an unbounded event stream.
@@ -66,45 +68,60 @@ object StreamingFact {
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
         case (user, evs, state: GroupState[SessionState]) =>
-          def close(s: SessionState) =
-            SessionOut(user, new java.sql.Timestamp(s.start),
-              new java.sql.Timestamp(s.lastSeen), s.nEvents, s.total)
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator.single(close(s))
+            Iterator.single(closeSession(user, s))
           } else {
-            val sorted = evs.toSeq.sortBy(_.ts.getTime)
-            val closed = scala.collection.mutable.ArrayBuffer[SessionOut]()
-            var cur = state.getOption.orNull
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              if (cur == null)
-                cur = SessionState(t, t, 1L, e.value)
-              else if (t - cur.lastSeen > gapMs) {
-                closed += close(cur) // gap inside the batch: emit now
-                cur = SessionState(t, t, 1L, e.value)
-              } else
-                cur = SessionState(cur.start, math.max(cur.lastSeen, t),
-                  cur.nEvents + 1, cur.total + e.value)
-            }
-            state.update(cur)
-            // timeout = idle close; clamp above the watermark (a batch
-            // of late events may carry lastSeen+gap below it, which
-            // setTimeoutTimestamp rejects). Known trade-off of the
-            // clamp: when lastSeen+gap is ALREADY below the watermark,
-            // the session closes at the very next watermark tick, so a
-            // late successor that lands within the gap starts a NEW
-            // session where the batch twin (session_batch) would have
-            // merged the two. Accepted: such events are later than the
-            // declared watermark tolerance, and holding state open past
-            // the watermark to maybe merge them would unbound state.
-            state.setTimeoutTimestamp(math.max(cur.lastSeen + gapMs,
-              state.getCurrentWatermarkMs() + 1))
+            val (closed, open) =
+              walkSessions(user, state.getOption, evs, gapMs)
+            state.update(open)
+            state.setTimeoutTimestamp(
+              idleClose(open, gapMs, state.getCurrentWatermarkMs()))
             closed.iterator
           }
       }
   }
+
+  private[stream] def closeSession(user: Long, s: SessionState) =
+    SessionOut(user, new java.sql.Timestamp(s.start),
+      new java.sql.Timestamp(s.lastSeen), s.nEvents, s.total)
+
+  /** The session walk both sessionizers share: `evs` (one user's
+    * micro-batch, any order) sorted by time and folded into the `open`
+    * session, a gap of more than `gapMs` closing it — intra-batch gaps
+    * included. Returns the sessions closed in this batch, in order, and
+    * the one left open. */
+  private[stream] def walkSessions(user: Long, open: Option[SessionState],
+                                   evs: Iterator[Ev], gapMs: Long)
+  : (Seq[SessionOut], SessionState) = {
+    val closed = Seq.newBuilder[SessionOut]
+    val last = evs.toSeq.sortBy(_.ts.getTime)
+      .foldLeft(open.orNull) { (cur, e) =>
+        val t = e.ts.getTime
+        if (cur == null) SessionState(t, t, 1L, e.value)
+        else if (t - cur.lastSeen > gapMs) {
+          closed += closeSession(user, cur)
+          SessionState(t, t, 1L, e.value)
+        } else SessionState(cur.start, math.max(cur.lastSeen, t),
+          cur.nEvents + 1, cur.total + e.value)
+      }
+    (closed.result(), last)
+  }
+
+  /** When the `open` session closes for idleness: last event + gap,
+    * clamped above the watermark (a batch of late events may carry
+    * lastSeen+gap below it, which `setTimeoutTimestamp` rejects).
+    * Known trade-off of the clamp: when lastSeen+gap is ALREADY below
+    * the watermark, the session closes at the very next watermark
+    * tick, so a late successor that lands within the gap starts a NEW
+    * session where the batch twin (session_batch) would have merged
+    * the two. Accepted: such events are later than the declared
+    * watermark tolerance, and holding state open past the watermark to
+    * maybe merge them would unbound state. */
+  private[stream] def idleClose(open: SessionState, gapMs: Long,
+                                watermarkMs: Long): Long =
+    math.max(open.lastSeen + gapMs, watermarkMs + 1)
 
   // --- transformWithState (Spark 4 arbitrary-state API) ----------------
 
@@ -139,31 +156,16 @@ object StreamingFact {
       session = getHandle.getValueState[SessionState]("session",
         org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
 
-    private def close(user: Long, s: SessionState) =
-      SessionOut(user, new java.sql.Timestamp(s.start),
-        new java.sql.Timestamp(s.lastSeen), s.nEvents, s.total)
-
     override def handleInputRows(user: Long, rows: Iterator[Ev],
         timers: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      val closed = scala.collection.mutable.ArrayBuffer[SessionOut]()
-      var cur = if (session.exists()) session.get() else null
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        if (cur == null) cur = SessionState(t, t, 1L, e.value)
-        else if (t - cur.lastSeen > gapMs) {
-          closed += close(user, cur) // gap inside the batch: emit now
-          cur = SessionState(t, t, 1L, e.value)
-        } else cur = SessionState(cur.start, math.max(cur.lastSeen, t),
-          cur.nEvents + 1, cur.total + e.value)
-      }
-      session.update(cur)
+      val (closed, open) = walkSessions(user,
+        Option.when(session.exists())(session.get()), rows, gapMs)
+      session.update(open)
       // explicit timer management replaces setTimeoutTimestamp: drop
-      // the superseded timer, arm the idle-close one (same watermark
-      // clamp and session-split trade-off as the fMGWS twin)
+      // the superseded timer, arm the idle-close one
       getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(math.max(cur.lastSeen + gapMs,
-        timers.getCurrentWatermarkInMs() + 1))
+      getHandle.registerTimer(
+        idleClose(open, gapMs, timers.getCurrentWatermarkInMs()))
       closed.iterator
     }
 
@@ -173,7 +175,7 @@ object StreamingFact {
       else {
         val s = session.get()
         session.clear()
-        Iterator.single(close(user, s))
+        Iterator.single(closeSession(user, s))
       }
   }
 
@@ -268,78 +270,113 @@ object StreamingFact {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** foreachBatch upsert into a silver parquet dir. Update mode emits
-    * only the keys that CHANGED in each micro-batch, so the merge has
-    * to be against what's already on disk — see [[upsertBatch]]. The
-    * write pattern still scales: only touched date partitions are read
-    * and rewritten, never the whole table, and replayed batches
-    * converge (key-dedup + anti-join make the merge idempotent). */
-  def upsertToSilver(spark: SparkSession, agg: DataFrame, path: String,
-                     checkpoint: String,
-                     keyCols: Seq[String] = Seq("user_id")): Unit = {
-    val q = agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsertBatch(batch, path, keyCols)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  // --- Draining a stream -------------------------------------------
+
+  /** The one way a stream runs here: a query named `name` (a stream
+    * row's name, so the ledger books its jobs as
+    * `<name> id = … batch = N`), checkpointed at `checkpoint`, drained
+    * with one AvailableNow run. This is the `foreachBatch` form:
+    * `batch` gets each micro-batch frame and its id. Every action on
+    * that frame re-runs the query's stateful plan, so a `batch` that
+    * reads the frame twice cuts it once first (as [[upsertBatch]]
+    * does). Bounded replays use AvailableNow; a production deployment
+    * drops the trigger. */
+  def drain(df: DataFrame, name: String, checkpoint: String,
+            mode: String = "append")(
+      batch: (DataFrame, Long) => Unit): Unit =
+    run(df.writeStream.outputMode(mode).foreachBatch(batch), name,
+      checkpoint)
+
+  /** [[drain]] into a parquet append sink at `$root/out` (checkpoint
+    * `$root/ckpt`), then read the sink back. The file sink's
+    * `_spark_metadata` log makes the append exactly-once, which a
+    * `foreachBatch` append would not be. */
+  def drainTo(df: DataFrame, name: String, root: String): DataFrame = {
+    run(df.writeStream.outputMode("append").format("parquet")
+      .option("path", s"$root/out"), name, s"$root/ckpt")
+    df.sparkSession.read.parquet(s"$root/out")
   }
 
-  /** One micro-batch of the silver upsert. An update-mode batch carries
-    * only changed keys, so overwriting a date partition with the batch
-    * alone would delete that date's unchanged rows landed by earlier
-    * batches. Instead: key-dedup the batch (a replayed batch can
-    * overlap itself), read back ONLY the touched partitions, anti-join
-    * out the keys this batch supersedes, and overwrite the touched
-    * partitions with the union
-    * ([[graft.sources.Sources.upsertByPartition]]). localCheckpoint materializes the merge
-    * before the overwrite deletes the files it was read from. The
-    * touched-date collect is bounded by dates-per-batch, not data. */
-  private[stream] def upsertBatch(batch: DataFrame, path: String,
-                                  keyCols: Seq[String]): Unit = {
-    val ss = batch.sparkSession
-    val fresh = batch
-      .withColumn("date", to_date(col("day.start")))
-      .drop("day")
-      .dropDuplicates("date" +: keyCols)
-    if (!fresh.isEmpty) {
-      val target = new org.apache.hadoop.fs.Path(path)
-      val fs = graft.sources.Sources.fileSystem(ss, target)
-      val merged =
-        if (!fs.exists(target)) fresh
-        else {
-          val touched = fresh.select("date").distinct()
-            .collect().map(_.getDate(0)).toSeq
-          val prior = ss.read.parquet(path)
-            .filter(col("date").isin(touched: _*))
-            .join(fresh.select("date", keyCols: _*),
-              "date" +: keyCols, "left_anti")
-          fresh.unionByName(prior)
-        }
-      // cluster the write by (date, small key-hash bucket): without
-      // this, every shuffle partition contributes a file to every
-      // touched date dir — the key-growth rehearsal measured the
-      // daily upsert at 68 s (vs 16 s at 10x) once 32 state
-      // partitions × touched dates amplified into thousands of tiny
-      // files. Hash-bucketing bounds files-per-date at 4 while
-      // keeping >1 writer per hot date (pure repartition('date')
-      // would serialize a skewed date through one task).
-      graft.sources.Sources.upsertByPartition(
-        merged.scratchCheckpoint(eager = true)
-          .repartition(col("date"),
+  private def run(w: DataStreamWriter[Row], name: String,
+                  checkpoint: String): Unit =
+    w.queryName(name).option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** One micro-batch of the silver upsert into the date-partitioned
+    * parquet dir at `path`; drain an update-mode aggregate with it.
+    * An update-mode batch carries only changed keys, so overwriting a
+    * date partition with the batch alone would delete that date's
+    * unchanged rows landed by earlier batches. Instead: key-dedup the
+    * batch (a replayed batch can overlap itself), read back ONLY the
+    * touched partitions, anti-join out the keys this batch supersedes,
+    * and overwrite the touched partitions with the union
+    * ([[graft.sources.Sources.upsertByPartition]]). Only touched date
+    * partitions are read and rewritten, never the whole table, and
+    * replayed batches converge (key-dedup + anti-join make the merge
+    * idempotent).
+    *
+    * The deduped batch is cut once, so the query's stateful plan runs
+    * once per batch. The cut is lazy: collecting the touched dates
+    * (bounded by dates-per-batch, not data) materializes it in the job
+    * that runs the stateful stage, since a micro-batch runs without
+    * AQE. An empty list is the empty batch, so a no-data watermark
+    * batch costs that one job. The merge with prior partitions is cut
+    * eagerly before the overwrite deletes the files it was read from.
+    * The scope frees both cuts. */
+  private[graft] def upsertBatch(batch: DataFrame, path: String,
+                                 keyCols: Seq[String]): Unit =
+    Scratch.scoped {
+      val ss = batch.sparkSession
+      val fresh = batch
+        .withColumn("date", to_date(col("day.start")))
+        .drop("day")
+        .dropDuplicates("date" +: keyCols)
+        .scratchCheckpoint(eager = false)
+      val touched = fresh.agg(collect_set(col("date"))).head()
+        .getSeq[java.sql.Date](0)
+      if (touched.nonEmpty) {
+        val target = new org.apache.hadoop.fs.Path(path)
+        val fs = graft.sources.Sources.fileSystem(ss, target)
+        val merged =
+          if (!fs.exists(target)) fresh
+          else fresh.unionByName(ss.read.parquet(path)
+              .filter(col("date").isin(touched: _*))
+              .join(fresh.select("date", keyCols: _*),
+                "date" +: keyCols, "left_anti"))
+            .scratchCheckpoint(eager = true)
+        // cluster the write by (date, small key-hash bucket): without
+        // this, every shuffle partition contributes a file to every
+        // touched date dir — the key-growth rehearsal measured the
+        // daily upsert at 68 s (vs 16 s at 10x) once 32 state
+        // partitions × touched dates amplified into thousands of tiny
+        // files. Hash-bucketing bounds files-per-date at 4 while
+        // keeping >1 writer per hot date (pure repartition('date')
+        // would serialize a skewed date through one task).
+        graft.sources.Sources.upsertByPartition(
+          merged.repartition(col("date"),
             pmod(xxhash64(keyCols.map(col): _*), lit(4))),
-        path, "date")
+          path, "date")
+      }
     }
-  }
 
-  /** STREAMING INCREMENTAL MV MAINTENANCE — the streaming twin of
-    * `mv_incremental_daily`: the stream stays STATELESS (no watermark,
-    * no state store — the aggregation state lives in the VIEW, not in
-    * streaming state), and every micro-batch folds its partial
-    * aggregates into a persisted view via
+  /** Latest committed view version, or -1 before the first commit. */
+  def committedMvBatch(mvDir: String): Long =
+    committedMvBatch(SparkSession.active, mvDir)
+
+  private def committedMvBatch(spark: SparkSession, mvDir: String): Long =
+    ControlFile.read(spark, s"$mvDir/_committed_batch")
+      .fold(-1L)(_.trim.toLong)
+
+  /** The committed view snapshot (empty-schema error before any
+    * commit — callers run after at least one batch). */
+  def readMv(spark: SparkSession, mvDir: String): DataFrame =
+    spark.read.parquet(s"$mvDir/v${committedMvBatch(spark, mvDir)}")
+
+  /** STREAMING INCREMENTAL MV MAINTENANCE, one micro-batch — the
+    * streaming twin of `mv_incremental_daily`: the stream stays
+    * STATELESS (no watermark, no state store — the aggregation state
+    * lives in the VIEW, not in streaming state), and every micro-batch
+    * folds its `partialsOf` aggregates into a persisted view via
     * [[graft.etl.Materialized.mergePartials]]. At 100 TB this
     * decouples state size from key cardinality entirely: the state
     * store holds nothing, the view is a parquet table sized by its key
@@ -355,35 +392,9 @@ object StreamingFact {
     * SAME base — idempotent; a replay after the swap is dropped by the
     * `id <= last` guard. foreachBatch alone is only at-least-once;
     * this marker is what upgrades it. */
-  def mergeToMv(raw: DataFrame, mvDir: String, checkpoint: String,
-                keys: Seq[String])(partialsOf: DataFrame => DataFrame): Unit = {
-    val q = raw.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        mergeMvBatch(batch.toDF(), id, mvDir, keys, partialsOf)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Latest committed view version, or -1 before the first commit. */
-  def committedMvBatch(mvDir: String): Long =
-    committedMvBatch(SparkSession.active, mvDir)
-
-  private def committedMvBatch(spark: SparkSession, mvDir: String): Long =
-    ControlFile.read(spark, s"$mvDir/_committed_batch")
-      .fold(-1L)(_.trim.toLong)
-
-  /** The committed view snapshot (empty-schema error before any
-    * commit — callers run after at least one batch). */
-  def readMv(spark: SparkSession, mvDir: String): DataFrame =
-    spark.read.parquet(s"$mvDir/v${committedMvBatch(spark, mvDir)}")
-
-  private[stream] def mergeMvBatch(batch: DataFrame, id: Long,
-                                   mvDir: String, keys: Seq[String],
-                                   partialsOf: DataFrame => DataFrame): Unit = {
+  private[graft] def mergeMvBatch(batch: DataFrame, id: Long,
+                                  mvDir: String, keys: Seq[String],
+                                  partialsOf: DataFrame => DataFrame): Unit = {
     val ss = batch.sparkSession
     val last = committedMvBatch(ss, mvDir)
     if (id <= last) return // replay of a committed batch: drop it

@@ -23,23 +23,34 @@ class QueriesSpec extends AnyFunSuite {
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   // Session hygiene, no allowlist: a row leaves the explicit session
-  // conf and the temp views as it found them, stops every stream it
-  // started, and keeps at most one new persisted RDD, its result cut
-  // (Scratch.scoped frees every other cut). Persistent catalog tables
-  // a Scratch.memo build stages once per JVM (bucketed_join's bucketed
-  // tables) are scratch artifacts, not checked here.
+  // conf, the temp views and ImageIO's process-wide cache setting as
+  // it found them, stops every stream it started, and keeps at most
+  // one new persisted RDD, its result cut (Scratch.scoped frees every
+  // other cut). Persistent catalog tables a Scratch.memo build stages
+  // once per JVM (bucketed_join's bucketed tables) are scratch
+  // artifacts, not checked here. Every stream a row drains is named
+  // after the row, so each streaming job is booked under its name.
   Queries.all.foreach { q =>
     test(s"query ${q.name} runs on sf0.001") {
       val (conf0, views0, rdds0) = (spark.conf.getAll, tempViews, persisted)
-      val df = q.run(spark, dir)
+      val imageCache0 = javax.imageio.ImageIO.getUseCache
+      val ((df, n), costs) = Ledger.measure(spark) {
+        val df = q.run(spark, dir)
+        (df, df.count())
+      }
       assert(df.columns.nonEmpty)
-      val n = df.count()
       if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows")
       val conf = spark.conf.getAll
       assert(conf == conf0, s"${q.name} changed session confs: " +
         s"${conf.toSet diff conf0.toSet}, was ${conf0.toSet diff conf.toSet}")
       assert(tempViews == views0,
         s"${q.name} left temp views: ${tempViews diff views0}")
+      assert(javax.imageio.ImageIO.getUseCache == imageCache0,
+        s"${q.name} changed ImageIO's process-wide cache setting")
+      val unnamed = costs.jobs.map(_.description)
+        .filter(d => d.contains("runId = ") && !d.startsWith(s"${q.name} "))
+      assert(unnamed.isEmpty, s"${q.name} ran streaming jobs not named " +
+        s"after the row: ${unnamed.distinct.mkString("; ")}")
       assert(spark.streams.active.isEmpty,
         s"${q.name} left streams running: " +
           spark.streams.active.map(_.name).mkString(","))

@@ -13,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * lineage cuts (outside the one-round-behind loops); only
   * [[graft.sources.ControlFile]] writes control files; only
   * [[Ledger]] registers Spark listeners; only `Sources.fileSystem`
-  * resolves a FileSystem; only CheckpointBridge persists and only
-  * [[Tables]] registers temp views. Plus the env parsing every main
-  * shares. */
+  * resolves a FileSystem; only CheckpointBridge persists, only
+  * [[Tables]] registers temp views and only
+  * [[graft.stream.StreamingFact]] starts a stream. Plus the env
+  * parsing every main shares. */
 class SessionSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -295,6 +296,34 @@ class SessionSpec extends AnyFunSuite {
     val cwd = Paths.get("").toAbsolutePath.normalize
     assert(wh.startsWith(tmp), s"$wh is not under $tmp")
     assert(!wh.startsWith(cwd), s"$wh is under the working directory")
+  }
+
+  // a stream is started and drained only by StreamingFact.drain and
+  // drainTo, which name the query after its row
+  private val streamOwners = Set("graft/stream/StreamingFact.scala")
+  private val streamStart = """\.writeStream\b|awaitTermination""".r
+
+  test("src/main starts and awaits streams only in StreamingFact") {
+    val found = strays(mainRoot, streamStart, streamOwners)
+    assert(found.isEmpty, "drain a stream with StreamingFact.drain or " +
+      s"drainTo, named after its row:\n${found.mkString("\n")}")
+  }
+
+  test("negative: the stream-drain guard flags planted strays, not its " +
+    "owner") {
+    val root = Files.createTempDirectory("graft_guard")
+    val owner = root.resolve("graft/stream/StreamingFact.scala")
+    Files.createDirectories(owner.getParent)
+    val start = "  df.writeStream.start().awaitTermination()\n"
+    Files.writeString(owner, "object P {\n" + start + "}\n")
+    try {
+      assert(strays(root, streamStart, streamOwners).isEmpty)
+      val stray = root.resolve("graft/QueriesPlanted.scala")
+      Files.writeString(stray, "object P {\n  val w = df\n    .writeStream\n" +
+        "  q.awaitTermination()\n}\n")
+      assert(strays(root, streamStart, streamOwners) ==
+        Seq(s"$stray:3", s"$stray:4"))
+    } finally Scratch.deleteTree(root)
   }
 
   // env vars are read only by the entry points; query code decides

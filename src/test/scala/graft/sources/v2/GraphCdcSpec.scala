@@ -1,11 +1,12 @@
 package graft.sources.v2
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.etl.Graph
 import graft.sources.ManifestTable
+import graft.stream.StreamingFact
 
 /** Kill-and-restart leg of the `graph_cdc_incremental` row: the CDC
   * feed (versioned manifest appends) driving
@@ -25,22 +26,15 @@ class GraphCdcSpec extends AnyFunSuite {
     * into the graph artifact. */
   private def runCdcFold(fact: String, graph: String,
                          ckpt: String): Unit = {
-    val q = spark.readStream.format("graft-manifest-cdc")
-      .option("path", fact).option("startingVersion", "1").load()
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row],
-                       _: Long) =>
-        val files = batch.select("file").distinct()
-          .collect().map(r => s"$fact/${r.getString(0)}")
-        if (files.nonEmpty)
-          Graph.appendEdges(spark, graph,
-            spark.read.parquet(files.toIndexedSeq: _*))
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamingFact.drain(spark.readStream.format("graft-manifest-cdc")
+      .option("path", fact).option("startingVersion", "1").load(),
+      "graph_cdc_fold", ckpt) { (batch, _) =>
+      val files = batch.select("file").distinct()
+        .collect().map(r => s"$fact/${r.getString(0)}")
+      if (files.nonEmpty)
+        Graph.appendEdges(spark, graph,
+          spark.read.parquet(files.toIndexedSeq: _*))
+    }
   }
 
   private def edgeSet(graph: String): Set[(Long, Long)] =

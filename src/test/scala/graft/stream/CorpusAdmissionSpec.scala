@@ -63,10 +63,11 @@ class CorpusAdmissionSpec extends AnyFunSuite {
       dst.setLastModified(1700000000000L + i * 60000L)
     }
     stage(0, Seq((10L, "alpha"), (11L, "beta")))   // dup vs base + novel
-    def run(): Unit = CorpusAdmission.admitStream(
+    def run(): Unit = StreamingFact.drain(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/in"),
-      store, s"$root/ckpt")
+        .parquet(s"$root/in"), "corpus_admission", s"$root/ckpt") {
+      (batch, id) => CorpusAdmission.admitBatch(batch, store, id)
+    }
     run() // first life: processes f0, then the "job dies"
     assert(corpus(store).keySet == Set(1L, 11L))
     stage(1, Seq((20L, "beta"), (21L, "gamma")))   // arrives while down

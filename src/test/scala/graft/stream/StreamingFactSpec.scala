@@ -60,6 +60,14 @@ class StreamingFactSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[Long]("event_id")).sorted.toSeq == Seq(1L, 2L))
   }
 
+  /** The silver upsert as the stream rows run it: an update-mode
+    * drain whose batches go through [[StreamingFact.upsertBatch]]. */
+  private def upsertToSilver(agg: org.apache.spark.sql.DataFrame,
+                             path: String, checkpoint: String): Unit =
+    StreamingFact.drain(agg, "upsert_to_silver", checkpoint, "update") {
+      (batch, _) => StreamingFact.upsertBatch(batch, path, Seq("user_id"))
+    }
+
   test("upsertToSilver: foreachBatch lands date-partitioned parquet") {
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft_upsert")
@@ -70,8 +78,7 @@ class StreamingFactSpec extends AnyFunSuite {
     mem.addData(
       (ts("2024-01-01 10:00:00"), 1L, "play", 10.0),
       (ts("2024-01-02 11:00:00"), 2L, "play", 20.0))
-    StreamingFact.upsertToSilver(spark, agg, s"$root/fact",
-      s"$root/ckpt")
+    upsertToSilver(agg, s"$root/fact", s"$root/ckpt")
     val back = spark.read.parquet(s"$root/fact")
     assert(back.count() == 2)
     assert(back.columns.contains("date"))
@@ -88,13 +95,13 @@ class StreamingFactSpec extends AnyFunSuite {
       "event_type", "value")
     // batch 1: user 1 on Jan-01
     mem.addData((ts("2024-01-01 10:00:00"), 1L, "play", 10.0))
-    StreamingFact.upsertToSilver(spark, agg, s"$root/fact", s"$root/ckpt")
+    upsertToSilver(agg, s"$root/fact", s"$root/ckpt")
     // batch 2 (resumed from checkpoint): user 2 on the SAME date, plus
     // an update for user 1 — update mode emits only these changed keys.
     mem.addData(
       (ts("2024-01-01 11:00:00"), 1L, "play", 5.0),
       (ts("2024-01-01 12:00:00"), 2L, "play", 20.0))
-    StreamingFact.upsertToSilver(spark, agg, s"$root/fact", s"$root/ckpt")
+    upsertToSilver(agg, s"$root/fact", s"$root/ckpt")
     val back = spark.read.parquet(s"$root/fact")
       .collect()
       .map(r => r.getAs[Long]("user_id") ->
@@ -118,6 +125,29 @@ class StreamingFactSpec extends AnyFunSuite {
     StreamingFact.upsertBatch(batch, s"$root/fact", Seq("user_id"))
     StreamingFact.upsertBatch(batch, s"$root/fact", Seq("user_id"))
     assert(spark.read.parquet(s"$root/fact").count() == 1)
+  }
+
+  test("upsertBatch evaluates its batch once") {
+    // every action on a foreachBatch frame re-runs the stream's
+    // stateful plan; a typed map that counts its rows stands in for it
+    val root = java.nio.file.Files.createTempDirectory("graft_upsert_once")
+    val evals = spark.sparkContext.longAccumulator("upsert_batch_evals")
+    val rows = Seq(
+      (ts("2024-01-01 00:00:00"), ts("2024-01-02 00:00:00"), 1L, 3L),
+      (ts("2024-01-02 00:00:00"), ts("2024-01-03 00:00:00"), 2L, 1L))
+    val batch = rows.toDS().map { r => evals.add(1); r }
+      .toDF("start", "end", "user_id", "play_count")
+      .select(struct(col("start"), col("end")).as("day"),
+        col("user_id"), col("play_count"))
+    // the first call lands a new table, the second merges into it
+    Seq("first", "second").foreach { call =>
+      val before = evals.value
+      StreamingFact.upsertBatch(batch, s"$root/fact", Seq("user_id"))
+      val evaluated = evals.value - before
+      assert(evaluated == rows.size, s"the $call call evaluated " +
+        s"$evaluated rows of a ${rows.size}-row batch")
+    }
+    assert(spark.read.parquet(s"$root/fact").count() == 2)
   }
 
   test("enrichWithDim: stream-static broadcast join enriches events") {
@@ -375,21 +405,15 @@ class StreamingFactSpec extends AnyFunSuite {
         .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
       val agg = StreamingFact.dailyEngagement(stream, "ts", "user_id",
         "event_type", "value")
-      val q = agg.writeStream.outputMode("update")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           id: Long) =>
-            StreamingFact.upsertBatch(b, s"$root/fact", Seq("user_id"))
-            // sink effects are ON DISK; the checkpoint commit for this
-            // batch now never happens → restart must replay it
-            if (crashAfterBatch0 && id == 0L &&
-                crashed.compareAndSet(false, true))
-              throw new RuntimeException("injected crash")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamingFact.drain(agg, "upsert_restart", s"$root/ckpt", "update") {
+        (b, id) =>
+          StreamingFact.upsertBatch(b, s"$root/fact", Seq("user_id"))
+          // sink effects are ON DISK; the checkpoint commit for this
+          // batch now never happens → restart must replay it
+          if (crashAfterBatch0 && id == 0L &&
+              crashed.compareAndSet(false, true))
+            throw new RuntimeException("injected crash")
+      }
     }
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       run(crashAfterBatch0 = true))
