@@ -97,13 +97,13 @@ object Debug {
     // warm: JIT, codegen cache, parquet footers — same as Bench's warmup
     try {
       spark.range(1000).selectExpr("sum(id)").collect()
-      Bench.drain(q.run(spark, dir))
+      Bench.drain(q.name, q.run(spark, dir))
     } catch { case e: Throwable =>
       System.err.println(s"[profile] warm attempt failed: $e") }
 
     val attempts = (1 to Bench.repeats()).map { _ =>
       Ledger.measure(spark) {
-        Bench.timeAttempts(q.name, 1)(Bench.drain(q.run(spark, dir)))
+        Bench.timeAttempts(q.name, 1)(Bench.drain(q.name, q.run(spark, dir)))
       }
     }
     val walls = attempts.collect { case (row, _) if row.ok => row.min }

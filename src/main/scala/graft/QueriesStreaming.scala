@@ -867,13 +867,7 @@ private[graft] object QueriesStreaming {
       }
       drain(s.readStream.format("graft-manifest-cdc")
           .option("path", fact).option("startingVersion", "1").load()) {
-        (batch, _) =>
-          // file entries are KB-scale driver metadata, never rows
-          val files = batch.select("file").distinct()
-            .collect().map(r => s"$fact/${r.getString(0)}")
-          if (files.nonEmpty)
-            graft.etl.Graph.appendEdges(s, graph,
-              s.read.parquet(files.toIndexedSeq: _*))
+        (batch, _) => graft.etl.Graph.appendCdcBatch(s, fact, graph, batch)
       }
       val latest = graft.etl.Graph.edgesFromManifest(s, graph)
       val deg = latest.groupBy("src").agg(count(lit(1)).as("d"))

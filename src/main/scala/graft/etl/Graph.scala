@@ -603,6 +603,20 @@ object Graph {
     }
   }
 
+  /** Fold one micro-batch of the manifest CDC feed on `fact` into the
+    * edge artifact at `graph`: read exactly the files the batch's
+    * entries name (KB-scale driver metadata, never rows; never the
+    * whole fact) and [[appendEdges]] them. The one fold of the
+    * `graph_cdc_incremental` row, which `GraphCdcSpec` restarts. */
+  def appendCdcBatch(spark: org.apache.spark.sql.SparkSession,
+                     fact: String, graph: String,
+                     batch: DataFrame): Unit = {
+    val files = batch.select("file").distinct()
+      .collect().map(r => s"$fact/${r.getString(0)}")
+    if (files.nonEmpty)
+      appendEdges(spark, graph, spark.read.parquet(files.toIndexedSeq: _*))
+  }
+
   /** INCREMENTAL edge-artifact DELETION — [[appendEdges]]'s CDC
     * sibling for retractions (the `op = delete` rows a change feed
     * like [[graft.sources.ManifestCdcSource]] carries): the doomed

@@ -14,7 +14,11 @@ import graft.sources.ControlFile
 object Ingest {
 
   /** Pluggable page fetcher (reference: GET stats/medias/{id}.json and
-    * …/visitors.json with per_page=100, page cap 100; nb02:141-168). */
+    * …/visitors.json with per_page=100, page cap 100; nb02:141-168).
+    * [[graft.Pipeline.ingest]] calls `fetchPage` concurrently for
+    * distinct media ids, and in page order within one id, so an
+    * implementation that keeps state across calls must be
+    * thread-safe. */
   trait Fetcher {
     /** One page of results; None when the API 404s or pages exhaust.
       * `since` is the incremental watermark (ISO-8601): when set, the
@@ -35,8 +39,8 @@ object Ingest {
     *     per_page=100[&since=…]` (nb02:141–168, since=nb02:247).
     *   - 200 with an empty JSON array body → None (the reference's
     *     `if not visitors: break`); any other 200 body passes through
-    *     verbatim (a top-level array is fine — `writeBronzeJson`'s
-    *     `spark.read.json` explodes it into rows).
+    *     verbatim (a top-level array is fine — `readBronzeJson`
+    *     explodes it into rows).
     *   - 429 → [[RateLimited]]: the RETRY POLICY stays in [[withRetry]]
     *     (same (2^attempt)*5 s schedule as nb02:112–116), so this class
     *     never sleeps and the backoff stays injectable for tests.
@@ -156,16 +160,38 @@ object Ingest {
           fetcher.fetchPage(mediaId, endpoint, p, since)).flatten)
       .takeWhile(_.isDefined).flatten.toSeq
 
-  /** Bronze write: JSON docs → DataFrame → overwrite JSON dir
-    * (nb02:170-188). The explicit schema replaces the reference's
-    * Row-field inference (sparse dicts → schema union; missing fields
-    * become nulls here, same effective behavior). */
-  def writeBronzeJson(spark: SparkSession, docs: Seq[String], path: String,
-                      schema: org.apache.spark.sql.types.StructType): Unit = {
-    import spark.implicits._
-    val df = spark.read.schema(schema).json(docs.toDS())
-    df.write.mode(SaveMode.Overwrite).json(path)
+  /** Bronze landing (nb02:170-188): the fetched docs as one JSON-lines
+    * `part-00000.json` in the dir at `path`, replacing whatever the
+    * dir held (the reference's overwrite). The file goes through
+    * [[graft.sources.ControlFile.replace]] on the driver, so a reader
+    * sees the whole page set or none of it, and landing a few-KB page
+    * set costs no Spark job. The schema applies on read
+    * ([[graft.sources.Sources.readBronzeJson]]): sparse docs read as
+    * nulls, unknown fields are dropped and a top-level array is one
+    * row per element, as when the docs went through a Spark JSON
+    * write. */
+  def writeBronzeJson(spark: SparkSession, docs: Seq[String],
+                      path: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    graft.sources.Sources.fileSystem(spark, dir).delete(dir, true)
+    ControlFile.replace(spark, s"$path/part-00000.json",
+      docs.map(oneLine).mkString("", "\n", "\n"))
   }
+
+  /** `doc` on one line. A doc that parses is re-serialized compactly:
+    * a file read keeps the text of a non-string value read into a
+    * string column exactly (`1.5e3`, an object with its spaces), and
+    * the compact form is the text the Spark JSON write gave it
+    * (`1500.0`, no spaces), so it reads back the same. A doc that does
+    * not parse lands verbatim with every CR and LF made a tab:
+    * whitespace between tokens and, like a raw newline, an illegal
+    * control character inside a string, so it stays as malformed. */
+  private def oneLine(doc: String): String =
+    try json.writeValueAsString(json.readTree(doc))
+    catch {
+      case _: com.fasterxml.jackson.core.JacksonException =>
+        doc.map { case '\r' | '\n' => '\t'; case c => c }
+    }
 
   // --- Incremental watermark (nb02:190-213) ---------------------------
 

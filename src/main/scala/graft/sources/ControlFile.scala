@@ -7,9 +7,10 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
 import org.apache.spark.sql.SparkSession
 
 /** The one owner of small control files: the ingest watermark
-  * (nb02:190-213), the run report, the manifest sync cursor and the
-  * streaming MV commit marker. Each is a few bytes that a later run
-  * (or an orchestrator) reads back, so a reader must see the previous
+  * (nb02:190-213), the run report, the manifest sync cursor, the
+  * streaming MV commit marker, and the few-KB bronze page sets ingest
+  * lands. Each is a few bytes to kilobytes that a later run (or an
+  * orchestrator) reads back, so a reader must see the previous
   * document or the new one, never an empty or truncated file.
   *
   * Everything goes through the Hadoop FS on the driver: no Spark job,

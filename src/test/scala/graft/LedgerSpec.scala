@@ -42,7 +42,7 @@ class LedgerSpec extends AnyFunSuite {
     // caller's local property and is booked too
     val t = table()
     val (_, c) = Ledger.measure(spark) {
-      Bench.drain(spark.read.parquet(t)
+      Bench.drain("agg", spark.read.parquet(t)
         .groupBy("k").agg(sum("id").as("s")))
     }
     assert(c.jobs.size >= 2, c)
@@ -81,9 +81,26 @@ class LedgerSpec extends AnyFunSuite {
       descriptions)
   }
 
+  test("every job of a drained row is booked under the row's name") {
+    val df = spark.read.parquet(table()).groupBy("k").agg(sum("id").as("s"))
+    val sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    val (_, c) =
+      try Ledger.measure(spark)(Bench.drain("kpi_by_k", df))
+      finally {
+        // the drain restored the caller's description
+        assert(sc.getLocalProperty("spark.job.description") == "outer")
+        sc.setJobDescription(null)
+      }
+    assert(c.jobs.size >= 2, c)
+    assert(c.jobs.forall(_.description.startsWith("kpi_by_k")),
+      c.jobs.map(_.description))
+  }
+
   test("a failing action is booked as a failed job") {
     val (r, c) = Ledger.measure(spark) {
-      Try(Bench.drain(spark.range(10).select(expr("assert_true(id < 5)"))))
+      Try(Bench.drain("assert",
+        spark.range(10).select(expr("assert_true(id < 5)"))))
     }
     assert(r.isFailure)
     assert(c.failedJobs.nonEmpty, c)

@@ -13,8 +13,9 @@ import graft.ingest.Ingest
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  // the chains call the fetcher concurrently
   private val sinceSeen =
-    scala.collection.mutable.Map[String, Option[String]]()
+    scala.collection.concurrent.TrieMap[String, Option[String]]()
   private val fetcher = new Ingest.Fetcher {
     def fetchPage(id: String, endpoint: String, page: Int,
                   since: Option[String]): Option[String] = {
@@ -136,6 +137,75 @@ class PipelineSpec extends AnyFunSuite {
       .isEmpty, "bronze media dirs survived the aborted run")
     assert(graft.sources.Sources.listDir(spark, s"$root/raw/visitors")
       .isEmpty, "bronze visitors dirs survived the aborted run")
+  }
+
+  test("a failure surfaces as itself and sweeps a slower clean id's " +
+    "dirs landed after it") {
+    // the race the sequential loop never had: bbb2 fails at once while
+    // abc1 is still fetching; abc1 lands AFTER the failure, and the
+    // sweep must still remove its dirs
+    val root = Files.createTempDirectory("graft_pipe_race").toString
+    val fetchedAfterFailure = new java.util.concurrent.CountDownLatch(1)
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val racy = new Ingest.Fetcher {
+      def fetchPage(id: String, endpoint: String, page: Int,
+                    since: Option[String]): Option[String] = {
+        if (id == "bbb2") {
+          failed.set(true)
+          throw new IllegalStateException("torn mid-run")
+        }
+        Thread.sleep(300)
+        if (endpoint == "visitors" && failed.get)
+          fetchedAfterFailure.countDown()
+        if (page > 1) None
+        else if (endpoint == "media")
+          Some(s"""{"hashed_id":"$id","name":"V","created":1700000000}""")
+        else
+          Some(s"""{"visitor_key":"v_$id","ip_address":"1.1.1.1","country":"DE","events":[]}""")
+      }
+    }
+    val conf = Pipeline.Conf(s"$root/raw", s"$root/silver",
+      mediaIds = Seq("abc1", "bbb2"))
+    val e = intercept[IllegalStateException] {
+      Pipeline.ingest(spark, conf, racy)
+    }
+    assert(e.getMessage == "torn mid-run")
+    // the clean chain ran on after the failure (no test of the race
+    // otherwise) and everything it landed was swept
+    assert(fetchedAfterFailure.getCount == 0)
+    assert(!graft.sources.Sources.exists(spark,
+      s"$root/raw/metadata/last_run"))
+    assert(graft.sources.Sources.listDir(spark, s"$root/raw/media")
+      .isEmpty, "bronze media dirs survived the aborted run")
+    assert(graft.sources.Sources.listDir(spark, s"$root/raw/visitors")
+      .isEmpty, "bronze visitors dirs survived the aborted run")
+  }
+
+  test("ingest fetches distinct media ids concurrently") {
+    val root = Files.createTempDirectory("graft_pipe_overlap").toString
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val slow = new Ingest.Fetcher {
+      def fetchPage(id: String, endpoint: String, page: Int,
+                    since: Option[String]): Option[String] = {
+        peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        calls.incrementAndGet()
+        try Thread.sleep(200) finally inFlight.decrementAndGet()
+        fetcher.fetchPage(id, endpoint, page, since)
+      }
+    }
+    val conf = Pipeline.Conf(s"$root/raw", s"$root/silver",
+      mediaIds = Seq("abc1", "def2", "ghi3", "jkl4"))
+    val t0 = System.nanoTime()
+    assert(Pipeline.ingest(spark, conf, slow))
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    val sequentialMs = calls.get * 200.0
+    assert(peak.get > 1, s"peak in-flight fetches ${peak.get}")
+    assert(wallMs < sequentialMs,
+      s"ingest took $wallMs ms, the fetches alone $sequentialMs ms")
+    assert(graft.sources.Sources.listDir(spark, s"$root/raw/visitors")
+      .size == 4)
   }
 
   test("a zombie stage past its budget never commits side effects") {
@@ -385,6 +455,37 @@ class PipelineSpec extends AnyFunSuite {
       assert(m(s"expect_${e.name}") == ce.getAs[Long](e.name),
         s"contract metric expect_${e.name} drifted from checkExpectations")
     }
+  }
+
+  test("transform books the dimension writes' jobs from their threads") {
+    val root = Files.createTempDirectory("graft_pipe_silver").toString
+    val conf = Pipeline.Conf(s"$root/raw", s"$root/silver",
+      mediaIds = Seq("abc1", "zzz9", "BADID"),
+      clock = Some(to_timestamp(lit("2024-06-01 00:00:00"))))
+    assert(Pipeline.ingest(spark, conf, fetcher))
+    val (res, costs) = Ledger.measure(spark)(Pipeline.transform(spark, conf))
+    // every row of the four silver writes is booked, the dimensions'
+    // included: their jobs run on threads transform made
+    val r = res.qualityReports
+    assert(costs.rowsWritten == Seq("dim_media", "dim_visitor", "fact",
+      "fact_quarantine").map(r(_)("total_rows").asInstanceOf[Long]).sum,
+      costs)
+    assert(costs.failedJobs.isEmpty, costs)
+    assert(r == Map(
+      "dim_media" -> Map("total_rows" -> 3L, "media_id_null_or_empty" -> 0L,
+        "approx_distinct_keys" -> 3L, "expect_url_has_prefix" -> 0L,
+        "expect_channel_known" -> 0L),
+      "dim_visitor" -> Map("total_rows" -> 3L,
+        "visitor_id_null_or_empty" -> 0L, "approx_distinct_keys" -> 3L,
+        "expect_country_present" -> 0L),
+      "fact" -> Map("total_rows" -> 2L, "media_id_null_or_empty" -> 0L,
+        "visitor_id_null_or_empty" -> 0L, "date_null_or_empty" -> 0L,
+        "approx_distinct_keys" -> 2L, "expect_play_count_positive" -> 0L,
+        "expect_watch_time_non_negative" -> 0L,
+        "expect_date_present" -> 0L),
+      "fact_quarantine" -> Map("total_rows" -> 1L,
+        "media_id_null_or_empty" -> 1L, "visitor_id_null_or_empty" -> 0L,
+        "approx_distinct_keys" -> 1L)), r)
   }
 
   test("a violated expectation reaches the report as contracts_status" +

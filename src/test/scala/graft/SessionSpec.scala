@@ -14,9 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.sources.ControlFile]] writes control files; only
   * [[Ledger]] registers Spark listeners; only `Sources.fileSystem`
   * resolves a FileSystem; only CheckpointBridge persists, only
-  * [[Tables]] registers temp views and only
-  * [[graft.stream.StreamingFact]] starts a stream. Plus the env
-  * parsing every main shares. */
+  * [[Tables]] registers temp views, only
+  * [[graft.stream.StreamingFact]] starts a stream and only [[Pipeline]]
+  * (plus Scratch's shutdown hook) makes threads. Plus the env parsing
+  * every main shares. */
 class SessionSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -296,6 +297,43 @@ class SessionSpec extends AnyFunSuite {
     val cwd = Paths.get("").toAbsolutePath.normalize
     assert(wh.startsWith(tmp), s"$wh is not under $tmp")
     assert(!wh.startsWith(cwd), s"$wh is under the working directory")
+  }
+
+  // threads have one owner: the pipeline makes its stage, reaper and
+  // chain threads per call (so they inherit the stage's flags and
+  // Spark's local properties), and Scratch its shutdown hook
+  private val threadOwners = Map("graft/Pipeline.scala" -> 3,
+    "graft/Scratch.scala" -> 1)
+  private val threadStart = """new Thread\(|Executors\.new""".r
+
+  test("src/main makes threads only in Pipeline and Scratch's shutdown " +
+    "hook") {
+    val found = drift(mainRoot, threadStart, threadOwners)
+    assert(found.isEmpty, "make threads per call from the stage's own " +
+      "thread, in graft.Pipeline; use no shared or global pool:\n" +
+      found.mkString("\n"))
+  }
+
+  test("negative: the thread guard flags a planted stray and an extra " +
+    "owner site") {
+    val root = Files.createTempDirectory("graft_guard")
+    val start = "  val t = new Thread(() => ())\n"
+    threadOwners.foreach { case (owner, n) =>
+      val f = root.resolve(owner)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, "object P {\n" + start * n + "}\n")
+    }
+    try {
+      assert(drift(root, threadStart, threadOwners).isEmpty)
+      val stray = root.resolve("graft/etl/Planted.scala")
+      Files.createDirectories(stray.getParent)
+      Files.writeString(stray, "object P {\n" +
+        "  val pool = Executors.newFixedThreadPool(4)\n}\n")
+      val scratch = root.resolve("graft/Scratch.scala")
+      Files.writeString(scratch, "object P {\n" + start * 2 + "}\n")
+      assert(drift(root, threadStart, threadOwners).toSet == Set(
+        "graft/Scratch.scala: 2 sites, expected 1", s"$stray:2"))
+    } finally Scratch.deleteTree(root)
   }
 
   // a stream is started and drained only by StreamingFact.drain and

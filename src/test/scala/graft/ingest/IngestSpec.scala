@@ -4,7 +4,11 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.types.StructType
+
 import graft.TestSpark
+import graft.model.Schemas
+import graft.sources.Sources
 
 class IngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -128,10 +132,80 @@ class IngestSpec extends AnyFunSuite {
     Ingest.writeBronzeJson(spark,
       Seq("""{"hashed_id":"a1","name":"x"}""",
         """{"hashed_id":"b2","created":"123"}"""),
-      dir, graft.model.Schemas.rawMedia)
+      dir)
     val back = spark.read.schema(graft.model.Schemas.rawMedia).json(dir)
     assert(back.count() == 2)
     assert(back.filter("name IS NULL").count() == 1)
+  }
+
+  /** The rows `readBronzeJson` returns for `docs` landed at a fresh
+    * dir by `land`, as sorted strings (a multiset). */
+  private def landedRows(docs: Seq[String], schema: StructType)
+      (land: String => Unit): Seq[String] = {
+    val root = Files.createTempDirectory("graft_land").toString
+    land(s"$root/m1_20240601_000000")
+    Sources.readBronzeJson(spark, s"$root/*/", schema, multiline = false)
+      .collect().map(_.toString).toSeq.sorted
+  }
+
+  test("driver landing reads back the rows a Spark JSON write did") {
+    import spark.implicits._
+    val media = Seq(
+      // pretty-printed, CRLF line ends, non-ASCII, number for a string
+      "{\r\n  \"hashed_id\": \"m1\",\r\n  \"name\": \"Vidéo — 東京 🎬\",\r\n" +
+        "  \"created\": 1700000000\r\n}",
+      // a top-level array: one row per element
+      """[{"hashed_id":"m2","play_count":3},{"hashed_id":"m3","duration":12.5,"created":1.5e3}]""",
+      // unknown fields are dropped by the schema
+      """{"hashed_id":"m4","stats":{"x":[1,2]},"tags":["a"],"name":"x"}""",
+      "[]",
+      // malformed: cut off mid-document, and a raw newline in a string
+      """{"hashed_id":"m9","name":""",
+      "{\"hashed_id\":\"m8\",\"name\":\"two\nlines\"}")
+    val visitors = Seq(
+      "{\n  \"visitor_key\": \"v1\",\n  \"country\": \"DE\",\n" +
+        "  \"events\": [\n    {\"type\": \"play\", \"time\": 1700000000,\n" +
+        "     \"duration_watched\": 5, \"percent_watched\": 50.5},\n" +
+        "    {\"type\": \"end\", \"percent_watched\": \"100\", \"extra\": true}\n  ]\n}",
+      """{"visitor_key":"v2","ip_address":"1.2.3.4","country":"Österreich","events":[]}""",
+      """{"visitor_key":"v3"}""")
+    Seq(media -> Schemas.rawMedia, visitors -> Schemas.rawVisitor)
+      .foreach { case (docs, schema) =>
+        // the bronze write this landing replaces: a Spark JSON job
+        val sparkWritten = landedRows(docs, schema)(
+          spark.read.schema(schema).json(docs.toDS()).write.json(_))
+        val landed = landedRows(docs, schema)(
+          Ingest.writeBronzeJson(spark, docs, _))
+        assert(landed == sparkWritten)
+      }
+    // the rows themselves: both malformed docs read as all-null rows,
+    // as they did through the Spark write
+    val landed = landedRows(media, Schemas.rawMedia)(
+      Ingest.writeBronzeJson(spark, media, _))
+    assert(landed == Seq(
+      "[m1,Vidéo — 東京 🎬,1700000000,null,null]",
+      "[m2,null,null,null,3]",
+      "[m3,null,1500.0,12.5,null]",
+      "[m4,x,null,null,null]",
+      "[null,null,null,null,null]", "[null,null,null,null,null]").sorted)
+  }
+
+  test("ingest lands bronze with no Spark job") {
+    val root = Files.createTempDirectory("graft_land_jobs").toString
+    val fetcher = new Ingest.Fetcher {
+      def fetchPage(id: String, ep: String, page: Int,
+                    since: Option[String]): Option[String] =
+        if (page > 1) None
+        else if (ep == "media") Some(s"""{"hashed_id":"$id"}""")
+        else Some(s"""{"visitor_key":"v_$id","events":[]}""")
+    }
+    val conf = graft.Pipeline.Conf(s"$root/raw", s"$root/silver",
+      mediaIds = Seq("abc1", "def2", "ghi3"))
+    val (clean, costs) =
+      graft.Ledger.measure(spark)(graft.Pipeline.ingest(spark, conf, fetcher))
+    assert(clean)
+    assert(costs.jobs.isEmpty, costs.jobs.map(_.description))
+    assert(Sources.listDir(spark, s"$root/raw/visitors").size == 3)
   }
 
   test("healthCheck round-trip") {

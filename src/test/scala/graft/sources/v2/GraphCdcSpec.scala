@@ -10,7 +10,7 @@ import graft.stream.StreamingFact
 
 /** Kill-and-restart leg of the `graph_cdc_incremental` row: the CDC
   * feed (versioned manifest appends) driving
-  * [[graft.etl.Graph.appendEdges]] through foreachBatch must deliver
+  * [[graft.etl.Graph.appendCdcBatch]] through foreachBatch must deliver
   * an EXACTLY-ONCE graph artifact across a mid-stream restart —
   * at-least-once redelivery from the checkpointed version offset,
   * made exactly-once by the anti-join's idempotent fold. */
@@ -22,18 +22,14 @@ class GraphCdcSpec extends AnyFunSuite {
     pairs.toDF("src", "dst")
 
   /** One AvailableNow CDC pass: consume every unprocessed fact
-    * version via the shared checkpoint, folding each batch's files
-    * into the graph artifact. */
+    * version via the shared checkpoint, folding each batch into the
+    * graph artifact with the row's own fold. */
   private def runCdcFold(fact: String, graph: String,
                          ckpt: String): Unit = {
     StreamingFact.drain(spark.readStream.format("graft-manifest-cdc")
       .option("path", fact).option("startingVersion", "1").load(),
       "graph_cdc_fold", ckpt) { (batch, _) =>
-      val files = batch.select("file").distinct()
-        .collect().map(r => s"$fact/${r.getString(0)}")
-      if (files.nonEmpty)
-        Graph.appendEdges(spark, graph,
-          spark.read.parquet(files.toIndexedSeq: _*))
+      Graph.appendCdcBatch(spark, fact, graph, batch)
     }
   }
 
