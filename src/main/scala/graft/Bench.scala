@@ -193,8 +193,8 @@ object Bench {
     finally sc.setLocalProperty("spark.job.description", prev)
   }
 
-  /** The one attempt timer (bench rows, canaries, `Debug profile`,
-    * `Microbench`): `repeats` attempts of `body`, each after a GC +
+  /** The one attempt timer (bench rows, canaries, `Debug profile`):
+    * `repeats` attempts of `body`, each after a GC +
     * settle that drains garbage from the PREVIOUS attempt so its
     * collection cost cannot land inside this timing window.
     *

@@ -901,14 +901,10 @@ private[graft] object QueriesDedupSim {
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      val scored = e.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos_sim", qcos(col("qq"), col("q")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"),
+      Similarity.topK(Similarity.probe(e, qs, "vec_id")
+          .withColumn("cos_sim", qcos(col("qq"), col("q"))),
+        5, "rank", col("cos_sim").desc, col("vec_id"))
+        .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("vec_id").as("neighbor_id"), col("cos_sim"))
         .orderBy("query_id", "rank")
     },
@@ -949,8 +945,7 @@ private[graft] object QueriesDedupSim {
       // pair space, a quadratic artifact no production range search has)
       val qs = e.filter(col("vec_id") < 5).dropDuplicates("vec_id")
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      e.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
+      Similarity.probe(e, qs, "vec_id")
         .withColumn("cos_sim", qcos(col("qq"), col("q")))
         .filter(col("cos_sim") >= 0.25)
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -983,8 +978,7 @@ private[graft] object QueriesDedupSim {
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      val scored = e.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
+      val scored = Similarity.probe(e, qs, "vec_id")
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           qcos(col("qq"), col("q")).as("cos_sim"))
         .as[(Long, Long, Double)]
@@ -1023,14 +1017,10 @@ private[graft] object QueriesDedupSim {
         .filter(col("q").isNotNull) // zero vector: scale 0, unindexable
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      val scored = e.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos_sim", qcos(col("qq"), col("q")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"),
+      Similarity.topK(Similarity.probe(e, qs, "vec_id")
+          .withColumn("cos_sim", qcos(col("qq"), col("q"))),
+        5, "rank", col("cos_sim").desc, col("vec_id"))
+        .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("vec_id").as("neighbor_id"), col("cos_sim"))
         .orderBy("query_id", "rank")
     },
@@ -1103,7 +1093,7 @@ private[graft] object QueriesDedupSim {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 5), "vec_id",
-        "embedding", k = 5, broadcastQueries = true) // 5-query batch
+        "embedding", k = 5)
         .orderBy("query_id", "rank")
     },
     Some("""SELECT * FROM (VALUES
@@ -1190,25 +1180,11 @@ private[graft] object QueriesDedupSim {
       val qs = e.filter(col("vec_id") < 5)
       val exact = Similarity.bruteForceTopK(e, qs, "vec_id",
         "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
       val lsh = Similarity.lshTopK(e, qs, "vec_id", "embedding",
         dim = 64, k = 5, numPlanes = 6, numTables = 8)
         .scratchCheckpoint(true) // feeds both the semi-join and the count
-      // eval sides are k × |queries| BY CONSTRUCTION — broadcast
-      // explicitly (checkpoint stats default to huge → SMJ fallback);
-      // the right-outer join builds its LEFT side, so that hint wraps
-      // the hits frame
-      val recall = broadcast(exact
-          .join(broadcast(lsh.select("query_id", "neighbor_id")),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("hits")))
-        .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
-          Seq("query_id"), "right")
-        .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
-          col("k").cast("double")).as("avg_recall"))
-      val ivf = Similarity.ivfTopK(e, qs, "vec_id", "embedding", k = 5,
-        broadcastQueries = true) // 5-query batch
-      recall
+      val ivf = Similarity.ivfTopK(e, qs, "vec_id", "embedding", k = 5)
+      Similarity.recall(exact, lsh)
         .crossJoin(lsh.agg(count(lit(1)).as("lsh_rows")))
         .crossJoin(ivf.agg(count(lit(1)).as("ivf_rows")))
         .select(
@@ -1287,20 +1263,10 @@ private[graft] object QueriesDedupSim {
       val qs = e.filter(col("vec_id") < 5)
       val exact = Similarity.bruteForceTopK(e, qs, "vec_id",
         "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
       val hi = Similarity.lshTopK(e, qs, "vec_id", "embedding",
         dim = 64, k = 5, numPlanes = 4, numTables = 16)
         .scratchCheckpoint(true) // feeds both the semi-join and the count
-      // broadcast the bounded eval sides — see simLshRecallGate
-      val recall = broadcast(exact
-          .join(broadcast(hi.select("query_id", "neighbor_id")),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("hits")))
-        .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
-          Seq("query_id"), "right")
-        .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
-          col("k").cast("double")).as("avg_recall"))
-      recall
+      Similarity.recall(exact, hi)
         .crossJoin(hi.agg(count(lit(1)).as("hi_rows")))
         .select(
           when(col("avg_recall") >= 0.8999, 0L).otherwise(1L)
@@ -1371,21 +1337,11 @@ private[graft] object QueriesDedupSim {
       val qs = e.filter(col("vec_id") < 5)
       val exact = Similarity.bruteForceTopK(e, qs, "vec_id",
         "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
       Scratch.scoped {
         val ivfpq = Similarity.ivfPqTopK(e, qs, "vec_id", "embedding",
           k = 5, rerankFactor = 10)
           .scratchCheckpoint(true) // feeds both the semi-join and the count
-        // broadcast the bounded eval sides — see simLshRecallGate
-        val recall = broadcast(exact
-            .join(broadcast(ivfpq.select("query_id", "neighbor_id")),
-              Seq("query_id", "neighbor_id"), "left_semi")
-            .groupBy("query_id").agg(count(lit(1)).as("hits")))
-          .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
-            Seq("query_id"), "right")
-          .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
-            col("k").cast("double")).as("avg_recall"))
-        recall
+        Similarity.recall(exact, ivfpq)
           .crossJoin(ivfpq.agg(count(lit(1)).as("ivfpq_rows")))
           .select(
             when(col("avg_recall") >= 0.8799, 0L).otherwise(1L)
@@ -1462,19 +1418,14 @@ private[graft] object QueriesDedupSim {
           col("label"))
       val qs = e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      val scored = e.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
+      val scored = Similarity.probe(e, qs, "vec_id")
         .select(col("query_id"), col("label"), col("vec_id"),
           qcos(col("qq"), col("q")).as("cos_sim"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      val nn = scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
+      val nn = Similarity.topK(scored, 5, "rk", col("cos_sim").desc,
+        col("vec_id"))
       val votes = nn.groupBy(col("query_id"), col("label"))
         .agg(count(lit(1)).as("votes"))
-      val vw = Window.partitionBy(col("query_id"))
-        .orderBy(col("votes").desc, col("label"))
-      votes.withColumn("r", row_number().over(vw)).filter(col("r") === 1)
+      Similarity.topK(votes, 1, "r", col("votes").desc, col("label"))
         .select(col("query_id"), col("label").as("predicted_label"),
           col("votes"))
         .orderBy("query_id")
@@ -1553,8 +1504,7 @@ private[graft] object QueriesDedupSim {
         Similarity.lshTopK(e, qs, "vec_id", "embedding", dim = 64, k = 5,
           numPlanes = 6, numTables = 8), "lsh_misscored")
         .crossJoin(violations(
-          Similarity.ivfTopK(e, qs, "vec_id", "embedding", k = 5,
-            broadcastQueries = true), // 5-query batch
+          Similarity.ivfTopK(e, qs, "vec_id", "embedding", k = 5),
           "ivf_misscored"))
     },
     Some("""SELECT CAST(0 AS BIGINT) AS lsh_misscored,
@@ -1872,20 +1822,8 @@ private[graft] object QueriesDedupSim {
     val exact = Similarity.bruteForceTopK(e, qs, "vec_id", "embedding",
       k = 5).select(col("query_id"), col("neighbor_id"))
       .scratchCheckpoint(true)
-    // both eval sides are k × |queries| rows BY CONSTRUCTION —
-    // broadcast explicitly (a localCheckpoint's stats default to
-    // "huge", so the planner would fall back to sort-merge). The
-    // right-outer join must build its LEFT side, so the hint wraps
-    // the hits frame, not the preserved k frame.
-    val recall = broadcast(exact
-        .join(broadcast(served.select("query_id", "neighbor_id")),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("hits")))
-      .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
-        Seq("query_id"), "right")
-      .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
-        col("k").cast("double")).as("avg_recall"))
-    recall.crossJoin(served.agg(count(lit(1)).as("served_rows")))
+    Similarity.recall(exact, served)
+      .crossJoin(served.agg(count(lit(1)).as("served_rows")))
       .select(lit(v).as("index_version"),
         when(col("avg_recall") >= 0.5199, 0L).otherwise(1L)
           .as("recall_below_floor"),
@@ -2034,16 +1972,6 @@ private[graft] object QueriesDedupSim {
         .scratchCheckpoint(true)
       val exact = Similarity.bruteForceTopK(e, qs, "vec_id",
         "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      // broadcast the bounded eval sides — see simLshRecallGate
-      val recall = broadcast(exact
-          .join(broadcast(pq.select("query_id", "neighbor_id")),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("hits")))
-        .join(exact.groupBy("query_id").agg(count(lit(1)).as("k")),
-          Seq("query_id"), "right")
-        .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
-          col("k").cast("double")).as("avg_recall"))
       // the fidelity probe joins k×queries pq rows against the CORPUS
       // vectors — broadcast the bounded pq side, never shuffle e
       val fidelity = broadcast(pq)
@@ -2055,7 +1983,7 @@ private[graft] object QueriesDedupSim {
           (Similarity.norm(col("qv")) * Similarity.norm(col("cv"))))
         .agg(sum(when(abs(col("cos_sim") - col("true_cos")) > 1e-9, 1L)
           .otherwise(0L)).as("score_mismatches"))
-      recall
+      Similarity.recall(exact, pq)
         .crossJoin(pq.agg(count(lit(1)).as("pq_rows")))
         .crossJoin(fidelity)
         .select(
@@ -2151,15 +2079,12 @@ private[graft] object QueriesDedupSim {
       val sigs = base.select(col("vec_id"), signPack.as("sig"))
       val qs = sigs.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("sig").as("qsig"))
-      val cand = sigs.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
+      val cand = Similarity.probe(sigs, qs, "vec_id")
         .select(col("query_id"), col("vec_id"),
           bit_count(col("sig").bitwiseXOR(col("qsig"))).cast("long")
             .as("hamming"))
-      val wH = Window.partitionBy(col("query_id"))
-        .orderBy(col("hamming"), col("vec_id"))
-      val top = cand.withColumn("crk", row_number().over(wH))
-        .filter(col("crk") <= 20).drop("crk")
+      val top = Similarity.topK(cand, 20, "crk", col("hamming"),
+        col("vec_id")).drop("crk")
       val qvec = base.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           quantize(col("embedding")).as("qq"))
@@ -2168,11 +2093,8 @@ private[graft] object QueriesDedupSim {
           quantize(col("embedding")).as("q")), "vec_id")
         .join(broadcast(qvec), "query_id")
         .withColumn("cos_sim", qcos(col("qq"), col("q")))
-      val wC = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      rer.withColumn("rank", row_number().over(wC).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"),
+      Similarity.topK(rer, 5, "rank", col("cos_sim").desc, col("vec_id"))
+        .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("vec_id").as("neighbor_id"), col("hamming"),
           col("cos_sim"))
         .orderBy("query_id", "rank")
@@ -2226,15 +2148,12 @@ private[graft] object QueriesDedupSim {
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      val scored = e.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
+      val scored = Similarity.probe(e, qs, "vec_id")
         .select(col("query_id"), col("vec_id"),
           qcos(col("qq"), col("q")).as("rel"))
-      val wRel = Window.partitionBy(col("query_id"))
-        .orderBy(col("rel").desc, col("vec_id"))
       Scratch.scoped {
-        val cand = scored.withColumn("crk", row_number().over(wRel))
-          .filter(col("crk") <= 20).drop("crk")
+        val cand = Similarity.topK(scored, 20, "crk", col("rel").desc,
+            col("vec_id")).drop("crk")
           .scratchCheckpoint(true)
         val ce = cand.join(e, cand("vec_id") === e("vec_id"))
           .select(cand("query_id"), cand("vec_id").as("id"), e("q"))
@@ -2245,8 +2164,8 @@ private[graft] object QueriesDedupSim {
             col("y.id").as("b"),
             qcos(col("x.q"), col("y.q")).as("simv"))
           .scratchCheckpoint(true)
-        var sel = cand.withColumn("rn", row_number().over(wRel))
-          .filter(col("rn") === 1)
+        var sel = Similarity.topK(cand, 1, "rn", col("rel").desc,
+            col("vec_id"))
           .select(col("query_id"), col("vec_id").as("id"),
             lit(1L).as("rank"), col("rel").as("score"))
           .scratchCheckpoint(true)
@@ -2265,10 +2184,8 @@ private[graft] object QueriesDedupSim {
             .select(rem("query_id"), rem("vec_id"),
               (lit(0.7) * col("rel") - lit(0.3) * col("mx"))
                 .as("score"))
-          val wk = Window.partitionBy(col("query_id"))
-            .orderBy(col("score").desc, col("vec_id"))
-          val pick = scoredK.withColumn("rn", row_number().over(wk))
-            .filter(col("rn") === 1)
+          val pick = Similarity.topK(scoredK, 1, "rn", col("score").desc,
+              col("vec_id"))
             .select(col("query_id"), col("vec_id").as("id"),
               lit(k.toLong).as("rank"), col("score"))
           sel = sel.union(pick).scratchCheckpoint(true)
@@ -2421,8 +2338,7 @@ private[graft] object QueriesDedupSim {
       // no production query batch has. Bounded: 5 ids survive.
       val dq = e.filter(col("vec_id") < 5).dropDuplicates("vec_id")
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      val dense = topk(e.crossJoin(broadcast(dq))
-        .filter(col("vec_id") =!= col("query_id"))
+      val dense = topk(Similarity.probe(e, dq, "vec_id")
         .select(col("query_id"), col("vec_id"),
           qcos(col("qq"), col("q")).as("cs"))
         .as[(Long, Long, Double)], "rank_dense")
@@ -2433,8 +2349,7 @@ private[graft] object QueriesDedupSim {
             .as("toks"))
       val sq = docs.filter(col("doc_id") < 5).dropDuplicates("doc_id")
         .select(col("doc_id").as("query_id"), col("toks").as("qtoks"))
-      val sparse = topk(docs.crossJoin(broadcast(sq))
-        .filter(col("doc_id") =!= col("query_id"))
+      val sparse = topk(Similarity.probe(docs, sq, "doc_id")
         .select(col("query_id"), col("doc_id"),
           (size(array_intersect(col("qtoks"), col("toks")))
             .cast("double") /
@@ -2450,12 +2365,11 @@ private[graft] object QueriesDedupSim {
             coalesce(lit(1.0) /
               (lit(60.0) + col("rank_sparse").cast("double")), lit(0.0)))
             .as("rrf_score"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("rrf_score").desc, col("neighbor_id"))
-      fused.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          col("rank_dense"), col("rank_sparse"), col("rrf_score"))
+      Similarity.topK(fused, 5, "rank", col("rrf_score").desc,
+          col("neighbor_id"))
+        .select(col("query_id"), col("rank").cast("long").as("rank"),
+          col("neighbor_id"), col("rank_dense"), col("rank_sparse"),
+          col("rrf_score"))
         .orderBy("query_id", "rank")
     },
     Some(raw"""WITH e AS (SELECT vec_id,
@@ -2643,19 +2557,14 @@ private[graft] object QueriesDedupSim {
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
       val qs = e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      val scoredAll = e.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
-      def top5(scored: DataFrame, simCol: Column): DataFrame =
-        scored.select(col("query_id"), col("vec_id"), simCol.as("sim"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("sim").desc, col("vec_id"))))
-          .filter(col("rk") <= 5)
-          .select(col("query_id"), col("vec_id"))
-      val truth = top5(scoredAll, qcos(col("qq"), col("q")))
+      val scoredAll = Similarity.probe(e, qs, "vec_id")
+      def top5(sim: Column): DataFrame = Similarity.topK(
+          scoredAll.select(col("query_id"), col("vec_id"), sim.as("sim")),
+          5, "rk", col("sim").desc, col("vec_id"))
+        .select(col("query_id"), col("vec_id"))
+      val truth = top5(qcos(col("qq"), col("q")))
       val perDim = Seq(8, 16, 32).map { d =>
-        val cand = top5(scoredAll,
-          qcos(slice(col("qq"), 1, d), slice(col("q"), 1, d)))
+        val cand = top5(qcos(slice(col("qq"), 1, d), slice(col("q"), 1, d)))
         cand.join(truth, Seq("query_id", "vec_id"))
           .agg(count(lit(1)).as("hits"))
           .select(lit(d).as("dims"), col("hits"))

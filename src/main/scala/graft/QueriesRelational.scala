@@ -368,7 +368,7 @@ private[graft] object QueriesRelational {
       GROUP BY 1 ORDER BY rows DESC, user_id LIMIT 20"""))
 
   /** The z-order (Morton) clustering key ([[graft.sources.Sources
-    * .zorder2]]) is pure integer bit arithmetic, so the interleave
+    * .zorderN]]) is pure integer bit arithmetic, so the interleave
     * itself is cross-engine verified: both engines compute the same
     * 16-bit×2 interleaved key for a deterministic (x, y) derivation of
     * part keys, hash-matched value by value. The LAYOUT effect (box
@@ -380,7 +380,7 @@ private[graft] object QueriesRelational {
       val y = (col("p_partkey") / lit(256)).cast("long") % 256
       t(s, dir, "part")
         .select(col("p_partkey"),
-          graft.sources.Sources.zorder2(x, y, bits = 8).as("zkey"))
+          graft.sources.Sources.zorderN(Seq(x, y), bits = 8).as("zkey"))
         .orderBy("p_partkey")
     },
     Some {

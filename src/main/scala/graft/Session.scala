@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one way this engine builds a Spark session: every main
-  * (`Bench`, `Verify`, `Debug`, `Microbench`) and the test suites get
+  * (`Bench`, `Verify`, `Debug`) and the test suites get
   * the same engine, so a profile, a bench row, a verify dump and a
   * spec all measure and check one configuration. Session-wide
   * settings live HERE and nowhere else — query code never sets a

@@ -250,9 +250,10 @@ object Graph {
     * histogram groupBy adds an exchange) bought for hub immunity and
     * histogram-sized shuffles; a typed map-buffer Aggregator was also
     * measured (7.5 s) and rejected — the object-hash path loses
-    * whole-stage codegen. The crossover is PINNED, not asserted
-    * (`graft.Microbench kcore`, hub-heavy fixture, 30 distinct
-    * scores, 2M background rows, local[8]): the window's edge holds
+    * whole-stage codegen. The crossover was MEASURED, not asserted
+    * (SCALE.md "k-core histogram-vs-window crossover": hub-heavy
+    * fixture, 30 distinct scores, 2M background rows, local[8],
+    * min-of-3): the window's edge holds
     * only up to hub degree ~3×10⁵ (≤20% there), the histogram wins
     * from 5×10⁵ up and the gap grows with the hub — 1.6× at 10⁶,
     * 5.6× at 8×10⁶ (2.4 s vs 13.5 s), because the window sorts a

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * and deliberately so — MEASURED, not assumed: a real `doGenCode`
   * for DotLong/CosineSim (loops inlined into the WholeStageCodegen
   * stage body) benchmarked 1.8× SLOWER at 1M rows × 128 dims
-  * (`graft.Microbench`: 0.27 s fallback vs 0.48 s inlined cosine) —
+  * (SCALE.md, "Codegen A/B": 0.27 s fallback vs 0.48 s inlined cosine) —
   * the d-iteration loops push the generated stage method past the
   * JIT's inline/compile budget, while the fallback keeps the loop in
   * a small monomorphic always-hot method and pays only one virtual

@@ -16,6 +16,14 @@ import org.apache.spark.sql.functions._
   * Scale path: LSH bucketing (random hyperplane signs) cuts the
   * scored pair space; see [[lshTopK]]. An IVF variant (coarse
   * centroids → probe nearest cells) is [[ivfTopK]].
+  *
+  * Every top-k path, here and in the retrieval rows, is built from
+  * four pieces written once: [[probe]] (corpus × broadcast query
+  * batch, self-match dropped), [[topK]] (per-`query_id` `row_number`
+  * over the caller's order, `≤ k`), `rerank` (the exact-cosine re-rank
+  * of ADC survivors) and [[recall]] (the one-row mean recall@k).
+  * Tie-break contract: every order ends on the neighbor id, so a rank
+  * is total and the same rows come back under any partitioning.
   */
 object Similarity {
 
@@ -35,22 +43,54 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.HashExprs.cosineF(a, b)
 
+  /** Corpus × the broadcast query batch (which carries `query_id`),
+    * minus the self-match on the corpus's `idCol`. The batch is
+    * bounded by contract, so the corpus never shuffles. */
+  def probe(corpus: DataFrame, queries: DataFrame, idCol: String)
+  : DataFrame =
+    corpus.crossJoin(broadcast(queries))
+      .filter(col(idCol) =!= col("query_id"))
+
+  /** Per-`query_id` top-k: a `row_number` (int) named `rank` over
+    * `order`, kept where `≤ k`. Spark plans the filter as a partial
+    * and a final window group limit (k up to
+    * `spark.sql.optimizer.windowGroupLimitThreshold`), so each task
+    * ships at most k rows per query into the shuffle. */
+  def topK(df: DataFrame, k: Int, rank: String, order: Column*)
+  : DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** Mean recall@k of `approx` against `exact` (both carry
+    * `query_id`, `neighbor_id`) as one `avg_recall` row. Both eval
+    * sides are k × |queries| rows by construction, so both are
+    * broadcast explicitly: a checkpoint's stats default to huge and
+    * the planner would fall back to sort-merge. The right-outer join
+    * builds its LEFT side, so that hint wraps the hits frame. */
+  def recall(exact: DataFrame, approx: DataFrame): DataFrame = {
+    val truth = exact.select("query_id", "neighbor_id")
+    broadcast(truth
+        .join(broadcast(approx.select("query_id", "neighbor_id")),
+          Seq("query_id", "neighbor_id"), "left_semi")
+        .groupBy("query_id").agg(count(lit(1)).as("hits")))
+      .join(truth.groupBy("query_id").agg(count(lit(1)).as("k")),
+        Seq("query_id"), "right")
+      .agg(avg(coalesce(col("hits"), lit(0L)).cast("double") /
+        col("k").cast("double")).as("avg_recall"))
+  }
+
   /** Brute-force cosine top-k: for each query vector, the k nearest
-    * corpus vectors (self-match excluded). Rank ties broken by corpus
-    * id so results are deterministic. */
+    * corpus vectors (self-match excluded). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(probe(c, q, "neighbor_id")
+        .withColumn("cos_sim", cosine(col("qv"), col("cv"))),
+      k, "rank", col("cos_sim").desc, col("neighbor_id"))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cos_sim"))
   }
@@ -81,11 +121,8 @@ object Similarity {
       // dedup on the id pair only: dropDuplicates hashes two longs,
       // distinct() would hash and compare the vector payloads
       .dropDuplicates("query_id", "neighbor_id")
-    val scored = cand.withColumn("cos_sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(cand.withColumn("cos_sim", cosine(col("qv"), col("cv"))),
+      k, "rank", col("cos_sim").desc, col("neighbor_id"))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cos_sim"))
   }
@@ -188,44 +225,28 @@ object Similarity {
     * coarse centroid (k-means codebook, see [[trainCodebook]]), then
     * search only the query's `nProbe` nearest cells.
     * The centroid assignment is a broadcast nested-loop over numCells
-    * rows; the search join is an equi-join on cell id. */
-  /** `broadcastQueries` is OPT-IN for the library API: the hint is
-    * right for the documented shape (a bounded query batch against a
-    * large corpus — the corpus then never shuffles by cell; the
-    * registry's 5-query rows all pass true), but a default-on
-    * broadcast would change behavior under every existing caller's
-    * feet: a near-corpus-sized probe batch that completes fine via
-    * sort-merge would instead collect to the driver and can fail at
-    * Spark's 8 GB broadcast-relation limit or OOM. The caller knows
-    * its batch size; the library must not guess it. */
+    * rows; the search join is an equi-join on cell id against the
+    * broadcast probe side (queries × nProbe rows, a bounded batch as
+    * in [[bruteForceTopK]]): its window-over-crossJoin lineage gives
+    * the planner no usable size estimate, so without the hint it would
+    * sort-merge and shuffle the corpus by cell_id. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, numCells: Int = 16,
-              nProbe: Int = 2, kmeansIterations: Int = 1,
-              broadcastQueries: Boolean = false): DataFrame = {
+              nProbe: Int = 2, kmeansIterations: Int = 1): DataFrame = {
     val cents = trainCodebook(corpus, idCol, vecCol, numCells,
       kmeansIterations)
     val corpusCells = assignCells(corpus.select(
       col(idCol).as("neighbor_id"), col(vecCol).as("cv")), cents,
       "neighbor_id", "cv", 1)
-    val queryCells0 = assignCells(queries.select(
+    val queryCells = assignCells(queries.select(
       col(idCol).as("query_id"), col(vecCol).as("qv")), cents,
       "query_id", "qv", nProbe)
-    // the probe join: queries × nProbe rows against the cell-keyed
-    // corpus — the hint matters for bounded batches because the probe
-    // side's window-over-crossJoin lineage gives the planner no usable
-    // size estimate, so it would sort-merge and shuffle the corpus by
-    // cell_id instead
-    val queryCells =
-      if (broadcastQueries) broadcast(queryCells0) else queryCells0
-    val scored = queryCells.join(corpusCells, Seq("cell_id"))
+    val scored = broadcast(queryCells).join(corpusCells, Seq("cell_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "qv", "neighbor_id", "cv")
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("cos_sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, "rank", col("cos_sim").desc, col("neighbor_id"))
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cos_sim"))
   }
@@ -881,23 +902,7 @@ object Similarity {
       // qc repeats identically across a (query, vid) pair's m code
       // rows: first() folds it back to one constant term
       .agg((sum(col("pdot")) + first(col("qc"))).as("adc"))
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("vid"))
-    val survivors = approx
-      .withColumn("ar", row_number().over(wApprox))
-      .filter(col("ar") <= k * rerankFactor)
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cv = corpus.select(col(idCol).as("vid"), col(vecCol).as("cv"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vid"))
-    survivors
-      .join(cv, Seq("vid"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vid").as("neighbor_id"),
-        col("cos_sim"))
+    rerank(approx, corpus, queries, idCol, vecCol, k, rerankFactor)
   }
 
   /** Product-quantization approximate top-k with asymmetric-distance
@@ -950,21 +955,25 @@ object Similarity {
       .filter(col("vid") =!= col("query_id"))
       .groupBy(col("query_id"), col("vid"))
       .agg(sum(col("pdot")).as("adc"))
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("vid"))
-    val survivors = approx
-      .withColumn("ar", row_number().over(wApprox))
-      .filter(col("ar") <= k * rerankFactor)
+    rerank(approx, corpus, queries, idCol, vecCol, k, rerankFactor)
+  }
+
+  /** Exact-cosine re-rank of ADC survivors, shared by [[pqServe]] and
+    * [[ivfPqTopK]]: the top `rerankFactor`·k of `approx` (query_id,
+    * vid, adc) per query re-join their full corpus vectors and the
+    * broadcast query batch, and the exact cosine ranks the final k. */
+  private def rerank(approx: DataFrame, corpus: DataFrame,
+                     queries: DataFrame, idCol: String, vecCol: String,
+                     k: Int, rerankFactor: Int): DataFrame = {
+    val survivors = topK(approx, k * rerankFactor, "ar", col("adc").desc,
+      col("vid"))
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val cv = corpus.select(col(idCol).as("vid"), col(vecCol).as("cv"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vid"))
-    survivors
-      .join(cv, Seq("vid"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos_sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
+    topK(survivors
+        .join(cv, Seq("vid"))
+        .join(broadcast(qv), Seq("query_id"))
+        .withColumn("cos_sim", cosine(col("qv"), col("cv"))),
+      k, "rank", col("cos_sim").desc, col("vid"))
       .select(col("query_id"), col("rank"), col("vid").as("neighbor_id"),
         col("cos_sim"))
   }

@@ -376,47 +376,26 @@ object Sources {
         clusterCols.map(org.apache.spark.sql.functions.col): _*)
       .write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** Z-order (Morton) interleave of two non-negative integer columns,
-    * `bits` low bits each (32 total max — stays well inside a long, so
-    * ANSI overflow cannot trip). Range-clustering on this value gives
-    * BALANCED file pruning on both dimensions, where lexicographic
-    * range clustering prunes only on the leading column: a filter on
-    * the second dimension alone touches every lexicographic file but
-    * only ~sqrt-fraction of z-ordered ones. Pure codegen'd bit
-    * arithmetic (the 2·bits shift-mask terms are disjoint, so plain
-    * addition assembles the value).
-    *
-    * Inputs are taken modulo 2^bits — the mask makes that explicit
-    * (only the low `bits` bits ever reach the interleave). Callers
-    * must pre-bucket values into [0, 2^bits): out-of-range or negative
-    * inputs WRAP, which keeps query results correct (pruning uses the
-    * original columns' footer stats, never this key) but scatters the
-    * clustering so the layout silently loses its pruning benefit. */
-  def zorder2(a: org.apache.spark.sql.Column,
-              b: org.apache.spark.sql.Column,
-              bits: Int = 16): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, shiftleft, shiftright}
-    require(bits >= 1 && bits <= 31, s"bits out of range: $bits")
-    val mask = lit((1L << bits) - 1L)
-    val al = a.cast("long").bitwiseAND(mask)
-    val bl = b.cast("long").bitwiseAND(mask)
-    (0 until bits).map { i =>
-      shiftleft(shiftright(al, i).bitwiseAND(lit(1L)), 2 * i) +
-        shiftleft(shiftright(bl, i).bitwiseAND(lit(1L)), 2 * i + 1)
-    }.reduce(_ + _)
-  }
-
-  /** N-column Morton interleave — [[zorder2]] generalized. `bits` low
-    * bits from each of the k columns, bit j of column i landing at
+  /** Z-order (Morton) interleave of k ≥ 2 non-negative integer
+    * columns: `bits` low bits from each, bit j of column i landing at
     * output position `j*k + i`; k·bits ≤ 63 keeps the key in a long
-    * (ANSI-safe). Same caller contract as zorder2: values are masked
-    * to the declared width, out-of-range or negative inputs WRAP and
-    * silently forfeit the clustering benefit (never correctness —
-    * pruning uses the original columns' footer stats). Three or four
-    * dims is the practical ceiling: each added dimension dilutes
-    * every dimension's pruning power (a k-dim z-curve gives
-    * ~N^((k-1)/k) of files for a single-dim slice), which is why
-    * zorder2 stays the default. */
+    * (ANSI-safe). Range-clustering on this value gives BALANCED file
+    * pruning on every dimension, where lexicographic range clustering
+    * prunes only on the leading column: a filter on the second
+    * dimension alone touches every lexicographic file but only
+    * ~sqrt-fraction of 2-D z-ordered ones. Pure codegen'd bit
+    * arithmetic (the shift-mask terms are disjoint, so plain addition
+    * assembles the value).
+    *
+    * Inputs are taken modulo 2^bits — the mask makes that explicit.
+    * Callers must pre-bucket values into [0, 2^bits): out-of-range or
+    * negative inputs WRAP, which keeps query results correct (pruning
+    * uses the original columns' footer stats, never this key) but
+    * scatters the clustering so the layout silently loses its pruning
+    * benefit. Two dims is the default layout ([[writeZOrdered]]);
+    * three or four is the practical ceiling: each added dimension
+    * dilutes every dimension's pruning power (a k-dim z-curve gives
+    * ~N^((k-1)/k) of files for a single-dim slice). */
   def zorderN(cols: Seq[org.apache.spark.sql.Column],
               bits: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{lit, shiftleft, shiftright}
@@ -444,7 +423,7 @@ object Sources {
                     colB: String, numFiles: Int,
                     bits: Int = 16): Unit = {
     import org.apache.spark.sql.functions.col
-    df.withColumn("__z", zorder2(col(colA), col(colB), bits))
+    df.withColumn("__z", zorderN(Seq(col(colA), col(colB)), bits))
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")

@@ -40,16 +40,14 @@ class DeterminismSpec extends AnyFunSuite {
   targets.foreach { name =>
     test(s"$name is shuffle-partitioning independent") {
       val q = Queries.all.find(_.name == name).get
-      val before = spark.conf.get("spark.sql.shuffle.partitions")
-      def rows() = q.run(spark, dir).collect().map(_.toString).toSeq
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        val a = rows()
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        val b = rows()
-        assert(a.nonEmpty)
-        assert(a == b, s"$name output changed under repartitioning")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      def rows(partitions: String) =
+        Session.withConf(spark, "spark.sql.shuffle.partitions", partitions) {
+          q.run(spark, dir).collect().map(_.toString).toSeq
+        }
+      val a = rows("32")
+      val b = rows("7")
+      assert(a.nonEmpty)
+      assert(a == b, s"$name output changed under repartitioning")
     }
   }
 }

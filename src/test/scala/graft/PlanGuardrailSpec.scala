@@ -18,6 +18,11 @@ class PlanGuardrailSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** `body` planned with AQE off, so the physical tree is inspectable
+    * before execution. */
+  private def aqeOff[T](body: => T): T =
+    Session.withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
+
   /** Bounded-id crossJoin oracle demos (doc_id/vec_id-filtered), each
     * documented in Queries.scala with its LSH/banded scale path. */
   private val cartesianOk = Set("dedup_ngram_jaccard", "dedup_corpus",
@@ -181,9 +186,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
     // column-level NDV/min/max must land in LogicalPlan.stats, or
     // every CBO decision silently degrades to size-only heuristics.
     import spark.implicits._
-    val prev = spark.conf.get("spark.sql.cbo.enabled")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try {
+    Session.withConf(spark, "spark.sql.cbo.enabled", "true") {
       (1 to 500).map(i => (i.toLong, s"s$i")).toDF("k", "s")
         .write.mode("overwrite").saveAsTable("cbo_probe")
       spark.sql(
@@ -200,7 +203,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
         d >= BigInt(450) && d <= BigInt(550))),
         s"k NDV missing/wrong: $kStats")
       assert(kStats.exists(_.max.contains(500L)), s"k max: $kStats")
-    } finally spark.conf.set("spark.sql.cbo.enabled", prev)
+    }
   }
 
   test("runtime bloom-filter pruning engages for selective shuffle joins") {
@@ -219,9 +222,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    TestSpark.withConfs(spark, confs) {
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
       val pt = spark.read.parquet(s"$dir/part.parquet")
         .filter(col("p_retailprice") > 1500)
@@ -230,7 +231,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
       val plan = j.queryExecution.optimizedPlan.toString
       assert(plan.contains("might_contain"),
         s"no runtime bloom filter injected:\n${plan.take(2000)}")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("text_decontaminate probes a broadcast test-gram set — train " +
@@ -244,9 +245,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "text_decontaminate").get
         .run(spark, dir)
       val plan = df.queryExecution.executedPlan
@@ -259,7 +258,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
         s"train-gram explode not on the streamed side:\n$streamed")
       assert(streamed.collect { case e: ShuffleExchangeExec => e }.isEmpty,
         s"an Exchange crept above the train-gram Generate:\n$streamed")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("decontaminate_semantic broadcasts the TEST side — corpus " +
@@ -272,9 +271,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
     // pins out. AQE off so the physical tree is inspectable.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "decontaminate_semantic").get
         .run(spark, dir)
       val plan = df.queryExecution.executedPlan
@@ -289,7 +286,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
         assert(side.collect { case e: ShuffleExchangeExec => e }.isEmpty,
           s"an Exchange crept below the broadcast join:\n$side")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("bucketed_join: join AND aggregate run with ZERO Exchange") {
@@ -314,9 +311,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
     // narrow per-row transform; at 100 TB it runs as a map over the
     // scan with no data movement. AQE off so exchanges are countable.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "chunk_documents").get
         .run(spark, dir)
       val shuffles = df.queryExecution.executedPlan.collect {
@@ -324,16 +319,14 @@ class PlanGuardrailSpec extends AnyFunSuite {
       assert(shuffles.length == 1,
         s"chunking grew a shuffle beyond the contract orderBy:\n" +
           df.queryExecution.executedPlan)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("stratified_sample joins the rate table broadcast — zero " +
     "shuffles before the contract orderBy") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "stratified_sample").get
         .run(spark, dir)
       val plan = df.queryExecution.executedPlan
@@ -343,7 +336,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
       assert(plan.collect {
         case e: ShuffleExchangeExec => e }.length == 1,
         s"sampling shuffled data before the contract orderBy:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("session_paths reuses ONE user shuffle for window + aggregate") {
@@ -351,9 +344,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
     // session_id), so the path aggregate inherits the window's
     // partitioning — rows shuffle once, plus the contract orderBy.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "session_paths").get
         .run(spark, dir)
       val shuffles = df.queryExecution.executedPlan.collect {
@@ -361,7 +352,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
       assert(shuffles.length <= 2,
         s"session paths re-shuffled between window and aggregate:\n" +
           df.queryExecution.executedPlan)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("fuzzy_match_blocked hashes on the blocking key — levenshtein " +
@@ -376,24 +367,20 @@ class PlanGuardrailSpec extends AnyFunSuite {
 
   test("winsorize_clip broadcasts the fence table back onto the fact") {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "winsorize_clip").get
         .run(spark, dir)
       assert(df.queryExecution.executedPlan.collectFirst {
         case j: BroadcastHashJoinExec => j }.nonEmpty,
         s"fence table lost its broadcast:\n" +
           df.queryExecution.executedPlan)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("text_bm25 probes a BROADCAST query-term table — corpus tokens " +
     "never shuffle for the semi join") {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "text_bm25").get.run(spark, dir)
       val bhj = df.queryExecution.executedPlan.collect {
         case j: BroadcastHashJoinExec => j }
@@ -403,22 +390,20 @@ class PlanGuardrailSpec extends AnyFunSuite {
       assert(bhj.exists(_.leftKeys.exists(_.toString.contains("term"))),
         s"query-term probe lost its broadcast:\n" +
           df.queryExecution.executedPlan)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("anomaly_mad broadcasts both percentile tables back onto the " +
     "fact — the value stream never joins shuffle-side") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "anomaly_mad").get.run(spark, dir)
       val plan = df.queryExecution.executedPlan
       assert(plan.collect { case j: BroadcastHashJoinExec => j }
         .length >= 2, s"median/MAD table lost its broadcast:\n$plan")
       assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty,
         s"a per-type stats table grew a sort-merge join:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("event_cooccurrence pair enumeration is an equi join — the only " +
@@ -437,9 +422,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
     // an unexecuted ADAPTIVE plan reports 0 codegen subtrees (stages
     // are compiled lazily) — plan the probe with AQE off to see the
     // codegen structure the stages will actually run with
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    aqeOff {
       val df = Queries.all.find(_.name == "fact_engagement").get
         .run(spark, dir)
       val codegen = df.queryExecution.explainString(
@@ -447,7 +430,7 @@ class PlanGuardrailSpec extends AnyFunSuite {
       assert(codegen.contains("WholeStageCodegen subtrees"))
       assert(!codegen.startsWith("Found 0 WholeStageCodegen"),
         codegen.take(200))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("sample_weighted samples scan-side: no Exchange below the filter, " +

@@ -22,6 +22,10 @@ class ScratchSpec extends AnyFunSuite {
     (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L),
     (6L, 7L)).toDF("src", "dst")
 
+  /** `body` with the scratch checkpoint mode set to `mode`. */
+  private def reliable[T](mode: String)(body: => T): T =
+    Session.withConf(spark, Scratch.ReliableConf, mode)(body)
+
   /** RDDs persisted by `body` and still persisted after it. */
   private def leftPersisted(body: => Unit): Set[Int] = {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -89,14 +93,10 @@ class ScratchSpec extends AnyFunSuite {
     def run(): Map[Long, Long] =
       graft.etl.Graph.coreness(edges, iterations = 4)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set(Scratch.ReliableConf, "false")
-    val local = run()
-    try {
-      spark.conf.set(Scratch.ReliableConf, "true")
-      val reliable = run()
-      assert(reliable == local,
-        "reliable scratch checkpoints changed kernel results")
-    } finally spark.conf.set(Scratch.ReliableConf, "false")
+    val local = reliable("false")(run())
+    val viaFiles = reliable("true")(run())
+    assert(viaFiles == local,
+      "reliable scratch checkpoints changed kernel results")
   }
 
   test("reliable mode writes through the checkpoint dir (the blocks a " +
@@ -108,24 +108,23 @@ class ScratchSpec extends AnyFunSuite {
       try s.filter(java.nio.file.Files.isRegularFile(_)).count()
       finally s.close()
     }
-    spark.conf.set(Scratch.ReliableConf, "false")
     val base = ckptFiles()
-    edges.scratchCheckpoint(eager = true).count()
-    assert(ckptFiles() == base, "local mode wrote checkpoint files")
-    try {
-      spark.conf.set(Scratch.ReliableConf, "true")
+    reliable("false") {
+      edges.scratchCheckpoint(eager = true).count()
+      assert(ckptFiles() == base, "local mode wrote checkpoint files")
+    }
+    reliable("true") {
       val df = edges.scratchCheckpoint(eager = true)
       assert(df.count() == 7)
       assert(ckptFiles() > base,
         "reliable mode did not write through the checkpoint dir")
-    } finally spark.conf.set(Scratch.ReliableConf, "false")
+    }
   }
 
   test("a LAZY reliable cut's spillable cache is freed by release — " +
     "iterative kernels must not pin one cache entry per round for the " +
     "session lifetime") {
-    spark.conf.set(Scratch.ReliableConf, "true")
-    try {
+    reliable("true") {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val cut = edges.scratchCheckpoint(eager = false)
       assert(cut.count() == 7) // materialize: cache fills, files write
@@ -138,7 +137,7 @@ class ScratchSpec extends AnyFunSuite {
         spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
       assert(after.isEmpty,
         s"release left ${after.size} reliable-mode cache entries pinned")
-    } finally spark.conf.set(Scratch.ReliableConf, "false")
+    }
   }
 
   test("release deletes a reliable cut's checkpoint FILES — a " +
@@ -151,8 +150,7 @@ class ScratchSpec extends AnyFunSuite {
         java.nio.file.Files.list(dir).findFirst().get()) // context uuid
       try s.count() finally s.close()
     }
-    spark.conf.set(Scratch.ReliableConf, "true")
-    try {
+    reliable("true") {
       // simulate 5 kernel rounds, releasing one-behind as the kernels do
       var prev: org.apache.spark.sql.DataFrame = null
       (1 to 5).foreach { _ =>
@@ -179,7 +177,7 @@ class ScratchSpec extends AnyFunSuite {
       assert(n == 4)
       assert(ckptDirs() == 0,
         s"scope exit left ${ckptDirs()} rdd checkpoint dirs")
-    } finally spark.conf.set(Scratch.ReliableConf, "false")
+    }
   }
 
   test("scratchCheckpoint must not evict a caller's independently " +
@@ -195,13 +193,12 @@ class ScratchSpec extends AnyFunSuite {
     try {
       assert(callerCached.count() == 7)
       assert(cacheHit())
-      spark.conf.set(Scratch.ReliableConf, "true")
-      try {
+      reliable("true") {
         val cut = edges.select(col("src"), col("dst"))
           .scratchCheckpoint(eager = true)
         assert(cut.count() == 7)
         org.apache.spark.sql.graft.CheckpointBridge.release(cut)
-      } finally spark.conf.set(Scratch.ReliableConf, "false")
+      }
       assert(cacheHit(),
         "reliable scratch checkpoint evicted the caller's cache entry")
     } finally callerCached.unpersist()
@@ -212,11 +209,10 @@ class ScratchSpec extends AnyFunSuite {
     // a FRESH context would have no checkpoint dir; here one may exist
     // from the prior test, so assert the non-destructive side: the call
     // succeeds and the dir remains set afterwards
-    spark.conf.set(Scratch.ReliableConf, "true")
-    try {
+    reliable("true") {
       assert(edges.scratchCheckpoint(eager = false).count() == 7)
       assert(spark.sparkContext.getCheckpointDir.nonEmpty)
-    } finally spark.conf.set(Scratch.ReliableConf, "false")
+    }
   }
 
   test("cleanup drops every memo and dir; staged rows re-stage") {

@@ -336,6 +336,37 @@ class SessionSpec extends AnyFunSuite {
     } finally Scratch.deleteTree(root)
   }
 
+  // the per-query top-k window has one owner, Similarity.topK; every
+  // ANN path broadcasts its bounded query batch, with no opt-out knob
+  private val topKOwners = Map("graft/llmops/Similarity.scala" -> 1)
+  private val topKWindow = Regex.quote("""partitionBy(col("query_id"))""").r
+
+  test("src/main ranks per query only in Similarity.topK and has no " +
+    "broadcastQueries knob") {
+    val found = drift(mainRoot, topKWindow, topKOwners)
+    assert(found.isEmpty, "rank per query with Similarity.topK:\n" +
+      found.mkString("\n"))
+    val knob = sites(mainRoot, "broadcastQueries")
+    assert(knob.isEmpty, knob.mkString("\n"))
+  }
+
+  test("negative: the top-k guard flags a planted stray and an extra " +
+    "owner site") {
+    val root = Files.createTempDirectory("graft_guard")
+    val window = "  val w = Window.partitionBy(col(\"query_id\"))\n"
+    val owner = root.resolve("graft/llmops/Similarity.scala")
+    Files.createDirectories(owner.getParent)
+    Files.writeString(owner, "object P {\n" + window + "}\n")
+    try {
+      assert(drift(root, topKWindow, topKOwners).isEmpty)
+      val stray = root.resolve("graft/Planted.scala")
+      Files.writeString(stray, "object P {\n" + window + "}\n")
+      Files.writeString(owner, "object P {\n" + window * 2 + "}\n")
+      assert(drift(root, topKWindow, topKOwners).toSet == Set(
+        "graft/llmops/Similarity.scala: 2 sites, expected 1", s"$stray:2"))
+    } finally Scratch.deleteTree(root)
+  }
+
   // a stream is started and drained only by StreamingFact.drain and
   // drainTo, which name the query after its row
   private val streamOwners = Set("graft/stream/StreamingFact.scala")

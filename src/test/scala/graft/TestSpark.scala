@@ -11,4 +11,12 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** `body` with every conf of `confs` set, one nested
+    * [[Session.withConf]] scope per key. */
+  def withConfs[T](s: SparkSession, confs: Seq[(String, String)])(
+      body: => T): T = confs match {
+    case (k, v) +: rest => Session.withConf(s, k, v)(withConfs(s, rest)(body))
+    case _ => body
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Session, TestSpark}
 
 /** The library-level cartesian guardrail: refuses un-hinted
   * condition-less joins, allows broadcast composes and the explicit
@@ -32,9 +32,9 @@ class CartesianGuardSpec extends AnyFunSuite {
     val ej = big.join(small, col("a") === col("b")).queryExecution.optimizedPlan
     assert(guard(ej) eq ej)
     // explicit opt-in
-    spark.conf.set("spark.graft.allowCartesian", "true")
-    try assert(guard(bad) eq bad)
-    finally spark.conf.unset("spark.graft.allowCartesian")
+    Session.withConf(spark, "spark.graft.allowCartesian", "true") {
+      assert(guard(bad) eq bad)
+    }
   }
 
   test("provably-1-row sides are exempt (scalar-aggregate compose)") {

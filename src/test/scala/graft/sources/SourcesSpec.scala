@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Session, TestSpark}
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -14,15 +14,13 @@ class SourcesSpec extends AnyFunSuite {
     val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
     Sources.writeBucketedTable(a, "bkt_a", "k", 8, "k")
     Sources.writeBucketedTable(b, "bkt_b", "k", 8, "k")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
       val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"bucketed join must not shuffle:\n$plan")
       assert(joined.count() == 1000)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("rebucketTable rescales bucket count; joins stay zero-Exchange") {
@@ -34,9 +32,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(Sources.rebucketTable(spark, "rbk_b", 8) == 8)
     // data survived the rewrite intact
     assert(spark.table("rbk_a").count() == 1000)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
       val joined = spark.table("rbk_a").join(spark.table("rbk_b"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
@@ -46,7 +42,7 @@ class SourcesSpec extends AnyFunSuite {
       // metadata: with zero Exchange the join's parallelism IS the
       // bucket count (a bare table scan would coalesce by file size)
       assert(joined.rdd.getNumPartitions == 8)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
     // a non-bucketed table is refused
     (1 to 10).map(i => (i, i)).toDF("k", "v")
       .write.mode("overwrite").saveAsTable("rbk_plain")
@@ -235,13 +231,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 10000)
   }
 
-  test("zorderN: k=2 equals zorder2 bit-for-bit; k=3 matches hand interleave") {
-    val d = (0 until 256).map(i => (i.toLong * 37 % 64,
-      i.toLong * 53 % 64, i.toLong * 11 % 64)).toDF("a", "b", "c")
-    val two = d.select(
-      Sources.zorder2(col("a"), col("b"), bits = 6).as("z2"),
-      Sources.zorderN(Seq(col("a"), col("b")), bits = 6).as("zn"))
-    assert(two.filter(col("z2") =!= col("zn")).count() == 0)
+  test("zorderN: k=3 matches hand interleave") {
     // hand-computed 3-dim interleave: bits=2, (a,b,c)=(3,0,1):
     //   pos j*3+i → a bits at 0,3 (both 1), c bit0 at 2 → 1+8+4 = 13
     val h = Seq((3L, 0L, 1L)).toDF("a", "b", "c")
@@ -266,11 +256,12 @@ class SourcesSpec extends AnyFunSuite {
     : Long = spark.read.parquet(path).filter(pred)
       .select(col("_metadata.file_path")).distinct().count()
     // z-value interleave is correct: row (3, 5) → 100110 etc.
-    val z = grid.select(Sources.zorder2(col("x"), col("y"), 7).as("z"),
-      col("x"), col("y"))
+    val z = grid.select(
+      Sources.zorderN(Seq(col("x"), col("y")), 7).as("z"), col("x"),
+      col("y"))
       .filter(col("x") === 3 && col("y") === 5).head().getLong(0)
     // x=3 sets positions 0,2; y=5 sets positions 1,5 → 1+2+4+32 = 39
-    assert(z == 39L, s"zorder2(3,5) = $z")
+    assert(z == 39L, s"zorderN(3,5) = $z")
     // a filter on the SECOND dimension only: lexicographic files each
     // span all y — every file matches; z-order keeps y-locality
     val yOnly = col("y") < 16
@@ -484,9 +475,8 @@ class SourcesSpec extends AnyFunSuite {
     val confs = Map(
       s"fs.viewfs.mounttable.$mount.link./data" -> dir.toUri.toString,
       "fs.viewfs.impl.disable.cache" -> "true")
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try Seq(s"$dir/tbl", s"viewfs://$mount/data/tbl_viewfs").foreach {
-      root =>
+    TestSpark.withConfs(spark, confs.toSeq) {
+      Seq(s"$dir/tbl", s"viewfs://$mount/data/tbl_viewfs").foreach { root =>
         val rows = Seq(
           ("2024-01-05", 1L), ("2024-01-09", 2L), ("2024-01-10", 3L),
           ("2024-02-01", 4L), (null: String, 5L))
@@ -502,7 +492,8 @@ class SourcesSpec extends AnyFunSuite {
         // idempotent: nothing left to expire
         assert(Sources.expirePartitions(spark, root, "date",
           "2024-01-10").isEmpty, root)
-    } finally confs.keys.foreach(spark.conf.unset)
+      }
+    }
   }
 }
 

@@ -222,11 +222,7 @@ class StreamingFactSpec extends AnyFunSuite {
 
   test("transformWithState sessionizer matches the fMGWS twin row-for-row") {
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    StreamingFact.withTwsStore(spark) {
       def run(name: String,
               f: org.apache.spark.sql.Dataset[StreamingFact.Ev] =>
                 org.apache.spark.sql.Dataset[StreamingFact.SessionOut])
@@ -261,11 +257,6 @@ class StreamingFactSpec extends AnyFunSuite {
       assert(tws == fmgws)
       assert(tws.map(_._1) == Set(1L, 2L)) // user 3 still open
       assert(tws.size == 3) // user 1 × 2 sessions + user 2 × 1
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -368,18 +359,9 @@ class StreamingFactSpec extends AnyFunSuite {
 
   test("kill-and-restart (a, RocksDB): same exactly-once contract on " +
     "the state backend a 100TB deployment runs") {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try killRestartJoinScenario(java.nio.file.Files
-      .createTempDirectory("graft_recover_join_rocks").toString)
-    finally prev match {
-      case Some(p) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
-    }
+    StreamingFact.withTwsStore(spark)(killRestartJoinScenario(
+      java.nio.file.Files.createTempDirectory("graft_recover_join_rocks")
+        .toString))
   }
 
   test("kill-and-restart (b): crash AFTER sink write replays the " +
